@@ -1059,19 +1059,6 @@ object SnapshotTable {
     throw new IllegalStateException(s"unreachable: $what")
   }
 
-  /** Write `df` as new data files under `data/` and return their
-    * entries (with per-file stats for `statsCols`, which must be
-    * integral columns). One extra Spark job computes rows + min/max
-    * per file — the cost real formats pay by scraping footers.
-    *
-    * Column mapping: when the table's recorded schema carries renamed
-    * columns, `df`'s (logical) columns are written under their FROZEN
-    * physical names, and stats/bloom manifest keys are physical too —
-    * uniform with every pre-rename file, so readers and skipping
-    * resolve one canonical key. `applyMapping = false` is for
-    * overwrite-shaped writes, whose commit replaces the schema (and
-    * with it any mapping). One extra small log read per stage,
-    * nothing when the table has no mapping. */
   /** The table's DECLARED hash-bucket layout (`bucketBy`/`buckets`
     * TBLPROPERTIES) as (CURRENT logical column name, n) — None when
     * undeclared, when the column no longer exists, or when its type
@@ -1105,7 +1092,22 @@ object SnapshotTable {
     case _ => None
   }
 
-  /** `bucketize = Some((col, n))` repartitions the frame by Spark's
+  /** Write `df` as new data files under `data/` and return their
+    * entries (with per-file stats for `statsCols`, which must be
+    * integral or string columns). Rows and min/max come from the
+    * staged files' parquet footers — no Spark job re-reads the batch;
+    * declared bloom/NDV sketches add one column-pruned aggregation.
+    *
+    * Column mapping: when the table's recorded schema carries renamed
+    * columns, `df`'s (logical) columns are written under their FROZEN
+    * physical names, and stats/bloom manifest keys are physical too —
+    * uniform with every pre-rename file, so readers and skipping
+    * resolve one canonical key. `applyMapping = false` is for
+    * overwrite-shaped writes, whose commit replaces the schema (and
+    * with it any mapping). One extra small log read per stage,
+    * nothing when the table has no mapping.
+    *
+    * `bucketize = Some((col, n))` repartitions the frame by Spark's
     * own hash on `col` into exactly n partitions — partition id IS
     * the [[graft.sources.connector.GraftBucket]] id by construction —
     * and tags each staged entry with its bucket (parsed from the part
@@ -1503,6 +1505,26 @@ object SnapshotTable {
   private def readSetOf(files: Seq[FileEntry]): Map[String, Option[String]] =
     files.map(fe => fe.path -> changeToken(fe)).toMap
 
+  /** `files` as a plain parquet read, NO masking: against `schema`
+    * when known (physical names aliased back to logical under column
+    * mapping), else the files' merged footer schema. */
+  private def readPlain(spark: SparkSession, dir: String, files: Seq[FileEntry],
+                        schema: Option[org.apache.spark.sql.types.StructType])
+      : DataFrame = {
+    val paths = files.map(fe => resolvePath(dir, fe.path))
+    schema match {
+      case Some(s) if hasMapping(s) =>
+        // column mapping: files store PHYSICAL names; read those and
+        // alias back to the logical schema (metadata columns still
+        // resolve through the projection — Project propagates them)
+        spark.read.schema(toPhysical(s)).parquet(paths: _*)
+          .select(s.fields.map(f =>
+            col(s"`${physicalName(f)}`").as(f.name)).toIndexedSeq: _*)
+      case Some(s) => spark.read.schema(s).parquet(paths: _*)
+      case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
+    }
+  }
+
   /** Read `files` with deletion vectors applied (merge-on-read) and,
     * when `keepPos`, the per-row provenance columns `__graft_file`
     * (data file basename) and `__graft_pos` (row position within it)
@@ -1526,22 +1548,6 @@ object SnapshotTable {
                         knownSchema: Option[org.apache.spark.sql.types.StructType] = None,
                         version: Option[Long] = None)
       : DataFrame = {
-    def read(fs: Seq[FileEntry], schema: Option[org.apache.spark.sql.types.StructType]) =
-      schema match {
-        case Some(s) if hasMapping(s) =>
-          // column mapping: files store PHYSICAL names; read those and
-          // alias back to the logical schema (metadata columns still
-          // resolve through the projection — Project propagates them)
-          spark.read.schema(toPhysical(s))
-            .parquet(fs.map(fe => resolvePath(dir, fe.path)): _*)
-            .select(s.fields.map(f =>
-              col(s"`${physicalName(f)}`").as(f.name)).toIndexedSeq: _*)
-        case Some(s) =>
-          spark.read.schema(s).parquet(fs.map(fe => resolvePath(dir, fe.path)): _*)
-        case None =>
-          spark.read.option("mergeSchema", "true")
-            .parquet(fs.map(fe => resolvePath(dir, fe.path)): _*)
-      }
     def withPos(df: DataFrame) = df
       .withColumn("__graft_file",
         element_at(split(col("_metadata.file_path"), "/"), -1))
@@ -1551,22 +1557,27 @@ object SnapshotTable {
     val (dvd, plainFiles) = files.partition(fe =>
       fe.dv.isDefined || fe.eqDv.nonEmpty)
     if (dvd.isEmpty)
-      return if (!keepPos) read(files, knownSchema)
-      else withPos(read(files, knownSchema))
+      return if (!keepPos) readPlain(spark, dir, files, knownSchema)
+      else withPos(readPlain(spark, dir, files, knownSchema))
     // the log-recorded schema plans the mixed read directly; absent
     // (legacy / union conflict), one driver-side footer pass fixes the
     // merged schema both legs share
-    val schema = knownSchema.getOrElse(read(files, None).schema)
-    // dv-carrying files: preferred path is the V2 connector's
-    // vectorized readers, which apply the vector IN-READER as a
-    // per-batch position mask — no broadcast build, no per-row
-    // `_metadata` materialization, the real-format bitmap-skip shape.
-    // Requires a pinned version (manifest-immutable file subset), a
-    // log-recorded schema, and the connector's primitive type surface;
-    // position-keeping callers (DML staging) and legacy chains stay on
-    // the anti-join below.
+    val schema = knownSchema.getOrElse(readPlain(spark, dir, files, None).schema)
+    // masked files: preferred path is the V2 connector's vectorized
+    // readers, which apply a deletion vector IN-READER as a per-batch
+    // position mask and pending equality deletes against ONE memoized
+    // key-set broadcast per scan — one leg however many ref groups the
+    // files span, no broadcast join, no per-row `_metadata`
+    // materialization. Requires a pinned version (manifest-immutable
+    // file subset), a log-recorded schema, the connector's primitive
+    // type surface, and pending keys within the connector's read-time
+    // cap. Pinned callers: the reads (scan, readRange, readIn,
+    // readEquals) and the maintenance rewrites (purgeDeletes, compact,
+    // rebucketBroken, reclusterDecayed).
     if (!keepPos && version.isDefined && knownSchema.isDefined &&
-        graft.sources.connector.GraftSnapshotSource.isReadable(schema)) {
+        graft.sources.connector.GraftSnapshotSource.isReadable(schema) &&
+        graft.sources.connector.SnapshotPartitions.EqSidecars
+          .withinCap(dir, dvd)) {
       val dvLeg = spark.read.format("graft_snapshot")
         .option("versionAsOf", version.get)
         .option("graft.fileSubset", dvd.map(_.path).mkString(","))
@@ -1575,11 +1586,17 @@ object SnapshotTable {
         // name as a nested field path
         .select(schema.fieldNames.map(n => col(s"`$n`")).toIndexedSeq: _*)
       return if (plainFiles.isEmpty) dvLeg
-      else read(plainFiles, Some(schema)).unionByName(dvLeg)
+      else readPlain(spark, dir, plainFiles, Some(schema)).unionByName(dvLeg)
     }
-    // the fallback anti-join leg groups the masked files by their
-    // equality-delete ref set (heterogeneous sets arise when appends
-    // interleave with deleteByKey epochs): each group dv-masks, then
+    // the fallback anti-join leg serves everything else: position-
+    // keeping callers (DML staging needs `__graft_file`/`__graft_pos`),
+    // schema-less legacy chains, non-connector column types, over-cap
+    // files the connector refuses (the folds must still read them), and
+    // the unpinned copy-on-write reads (deleteOnce's kept rows, the merge
+    // rewrite, constraint checks, the change feed's pre/post images).
+    // It groups the masked files by their equality-delete ref set
+    // (heterogeneous sets arise when appends interleave with
+    // deleteByKey epochs): each group dv-masks, then
     // anti-joins the broadcast union of its sidecars' keys — over ALL
     // the sidecar's key columns (composite keys anti-join on the
     // whole tuple; a null member never matches, the === condition's
@@ -1602,7 +1619,7 @@ object SnapshotTable {
     val maskedDvd = dvd.groupBy(_.eqDv.sorted).toSeq.sortBy(_._1.mkString(","))
       .map { case (eqs, fs2) =>
         val dvPaths = fs2.flatMap(_.dv.map(_._1)).distinct
-        val wp = withPos(read(fs2, Some(schema)))
+        val wp = withPos(readPlain(spark, dir, fs2, Some(schema)))
         val dvMasked =
           if (dvPaths.isEmpty) wp
           else {
@@ -1621,9 +1638,9 @@ object SnapshotTable {
       }.reduce(_ unionByName _)
     val out =
       if (plainFiles.isEmpty) maskedDvd
-      else if (keepPos) withPos(read(plainFiles, Some(schema)))
+      else if (keepPos) withPos(readPlain(spark, dir, plainFiles, Some(schema)))
         .unionByName(maskedDvd)
-      else read(plainFiles, Some(schema))
+      else readPlain(spark, dir, plainFiles, Some(schema))
         .unionByName(maskedDvd.drop("__graft_file", "__graft_pos"))
     if (keepPos) out else out.drop("__graft_file", "__graft_pos")
   }
@@ -3459,21 +3476,23 @@ object SnapshotTable {
       }
     }
 
-  /** Fold every live deletion vector into its files: dv-carrying
-    * files are rewritten with only their live rows, the new entries
-    * reference no vector, and the sidecar becomes vacuum-reclaimable.
-    * Delta's `REORG TABLE ... APPLY (PURGE)`. A no-op (no version
-    * burned) when nothing carries a vector. */
+  /** Fold every live deletion vector and pending equality delete into
+    * its files: masked files are rewritten with only their live rows,
+    * the new entries reference no vector or eq ref, and the sidecars
+    * become vacuum-reclaimable. Delta's `REORG TABLE ... APPLY (PURGE)`.
+    * The fold reads through the V2 connector's in-reader mask — one
+    * scan per bucket group, one key-set broadcast, whatever the number
+    * of ref groups. A no-op (no version burned) when nothing is
+    * masked. */
   def purgeDeletes(spark: SparkSession, dir: String,
                    statsCols: Seq[String] = Nil): Long =
     retryOnConflict(s"purge deletes of $dir") {
       val v = latestVersion(spark, dir).getOrElse(
         throw new IllegalStateException(s"cannot purge empty table $dir"))
       val m = readManifest(spark, dir, v)
-      // pending EQUALITY deletes fold here too: the rewrite reads
-      // through the merge-on-read mask, so the fresh files hold only
-      // live rows and carry no eqDv ref — restoring metadata-exact
-      // counts and vectorized reads
+      // the rewrite reads through the merge-on-read mask, so the fresh
+      // files hold only live rows and carry no eqDv ref — restoring
+      // metadata-exact counts
       val dvd = m.files.filter(fe => fe.dv.isDefined || fe.eqDv.nonEmpty)
       if (dvd.isEmpty) v
       else {
@@ -3486,7 +3505,13 @@ object SnapshotTable {
         val sortKey = bucketLayout(spark, dir).map(_._1)
         val fresh = dvd.groupBy(fe => (fe.bucket, fe.bucketN)).toSeq.flatMap {
           case ((bucket, bucketN), files) =>
-            val df0 = readFiles(spark, dir, files, knownSchema = known)
+            // the connector plans one partition per file; coalescing to
+            // the split count Spark's own file packing gives the same
+            // files (planned from a plain read, no job runs) keeps the
+            // fold from writing one small file per input file
+            val splits = readPlain(spark, dir, files, known).rdd.getNumPartitions
+            val df0 = readFiles(spark, dir, files, knownSchema = known,
+              version = Some(v)).coalesce(splits)
             val key = sortKey.filter(k =>
               bucket.isDefined && df0.columns.contains(k))
             val df = key.fold(df0)(k => df0.sortWithinPartitions(col(s"`$k`")))
@@ -3560,7 +3585,8 @@ object SnapshotTable {
           val known = tableSchema(spark, dir, v)
           val props = graft.sources.connector.GraftTableProps.read(
             spark.sparkContext.hadoopConfiguration, dir)
-          val df = readFiles(spark, dir, broken, knownSchema = known)
+          val df = readFiles(spark, dir, broken, knownSchema = known,
+            version = Some(v))
           def csv(k: String): Seq[String] = props.get(k)
             .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
             .getOrElse(Nil)
@@ -3646,7 +3672,8 @@ object SnapshotTable {
         .map(pc => known.flatMap(_.fields.find(f => physicalName(f) == pc)
           .map(_.name)).getOrElse(pc))
       val fresh = decayed.flatMap { case ((bucket, bucketN), comp) =>
-        val df = readFiles(spark, dir, comp, knownSchema = known)
+        val df = readFiles(spark, dir, comp, knownSchema = known,
+          version = Some(v))
         val nOut = math.max(1,
           math.ceil(comp.map(_.liveRows).sum.toDouble / targetRows).toInt)
         val packed = df
@@ -4509,7 +4536,8 @@ object SnapshotTable {
     val fresh = groups.flatMap { case ((bucket, bucketN), files) =>
       // dv-masked: compacting a dv-carrying file PURGES its deletion
       // vector (the rewrite materializes only live rows)
-      val df = readFiles(spark, dir, files, knownSchema = known)
+      val df = readFiles(spark, dir, files, knownSchema = known,
+        version = Some(v))
       val nOut = math.max(1,
         math.ceil(files.map(_.liveRows).sum.toDouble / targetRows).toInt)
       // bucketed groups compact KEY-SORTED (zorder would scatter the

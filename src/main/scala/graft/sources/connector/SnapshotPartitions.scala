@@ -837,46 +837,63 @@ private[graft] object SnapshotPartitions {
       * scan's files reference — the executor-side lookup behind
       * [[SnapshotReaderFactory.eqFor]]. None when nothing is pending
       * (the overwhelmingly common case — zero broadcast overhead).
-      * Re-checks the per-file key cap: attach-time enforcement
-      * (deleteByKey) owns the bound, but a legacy table may predate
-      * it. */
+      * Re-checks the per-file key cap ([[overCap]]) and refuses loudly
+      * past it. */
     def broadcastFor(dir: String, files: Seq[FileEntry])
         : Option[org.apache.spark.broadcast.Broadcast[Map[String, EqSidecar]]] = {
       val withRefs = files.filter(_.eqDv.nonEmpty)
       if (withRefs.isEmpty) return None
-      val data: Map[String, EqSidecar] = withRefs.flatMap(_.eqDv).distinct
-        .map { p =>
-          val uri = SnapshotTable.resolvePath(dir, p)
-          uri -> load(uri)
-        }.toMap
-      // cap re-check on the SUM of the refs' sizes — the same upper
-      // bound attach-time enforcement maintains, so every engine-
-      // written table passes identically. The exact merged count used
-      // here previously re-unioned every file's full key sets on the
-      // driver per scan — O(files × keys) string hashing that profiled
-      // at ~15% of a CDC query's driver time (round-18, guide §7.3),
-      // for a number only compared against the cap. When the cheap sum
-      // DOES exceed the cap (overlap-heavy refs from a legacy/external
-      // writer — engine attach-time enforcement bounds the sum, so its
-      // own tables never get here), fall back to the exact merged
-      // count before refusing, so the optimization can never reject a
-      // table the slow path could read (round-19, pinned by
-      // EqualityDeleteSpec "overlapping refs", the round-18 advisor's
-      // edge).
-      withRefs.foreach { fe =>
-        val uris = fe.eqDv.map(p => SnapshotTable.resolvePath(dir, p))
-        val total = uris.map(u => data(u).keys.size.toLong).sum
-        if (total > MaxPendingKeys) {
-          val exact = mergedFor(uris, data).map(_.keys.size.toLong).sum
-          require(exact <= MaxPendingKeys,
-            s"${fe.path} carries $exact pending equality-delete keys — " +
-              "too many to mask at read; run purge_deletes (or compact) " +
-              "to fold them into the files")
-        }
+      val data = loadAll(dir, withRefs)
+      overCap(dir, withRefs, data).foreach { case (fe, exact) =>
+        throw new IllegalArgumentException(
+          s"${fe.path} carries $exact pending equality-delete keys — " +
+            "too many to mask at read; run purge_deletes (or compact) " +
+            "to fold them into the files")
       }
       Some(org.apache.spark.sql.SparkSession.active.sparkContext
         .broadcast(data))
     }
+
+    /** True when [[broadcastFor]] would accept `files`: no file's
+      * pending keys exceed the cap. Loads (and caches) the sidecars a
+      * scan of them broadcasts. `SnapshotTable.readFiles` asks before
+      * routing a read through the connector, so the folds the refusal
+      * names (purge, compact) still read an over-cap file. */
+    def withinCap(dir: String, files: Seq[FileEntry]): Boolean = {
+      val withRefs = files.filter(_.eqDv.nonEmpty)
+      withRefs.isEmpty || overCap(dir, withRefs, loadAll(dir, withRefs)).isEmpty
+    }
+
+    private def loadAll(dir: String, withRefs: Seq[FileEntry])
+        : Map[String, EqSidecar] =
+      withRefs.flatMap(_.eqDv).distinct.map { p =>
+        val uri = SnapshotTable.resolvePath(dir, p)
+        uri -> load(uri)
+      }.toMap
+
+    /** The first file whose pending keys exceed [[MaxPendingKeys]],
+      * with its exact merged count. The check sums the refs' sizes —
+      * the same upper bound attach-time enforcement maintains, so
+      * every engine-written table passes identically. The exact merged
+      * count used here previously re-unioned every file's full key
+      * sets on the driver per scan — O(files × keys) string hashing
+      * that profiled at ~15% of a CDC query's driver time (round-18,
+      * guide §7.3), for a number only compared against the cap. When
+      * the cheap sum DOES exceed the cap (overlap-heavy refs from a
+      * legacy/external writer — engine attach-time enforcement bounds
+      * the sum, so its own tables never get here), fall back to the
+      * exact merged count before refusing, so the optimization can
+      * never reject a table the slow path could read (round-19, pinned
+      * by EqualityDeleteSpec "overlapping refs", the round-18
+      * advisor's edge). */
+    private def overCap(dir: String, withRefs: Seq[FileEntry],
+                        data: Map[String, EqSidecar]): Option[(FileEntry, Long)] =
+      withRefs.iterator.map { fe =>
+        val uris = fe.eqDv.map(p => SnapshotTable.resolvePath(dir, p))
+        val total = uris.map(u => data(u).keys.size.toLong).sum
+        fe -> (if (total <= MaxPendingKeys) total
+               else mergedFor(uris, data).map(_.keys.size.toLong).sum)
+      }.find(_._2 > MaxPendingKeys)
 
     /** [[broadcastFor]] from already-resolved sidecar URIs — the
       * change-feed surfaces collect refs off their planned partitions

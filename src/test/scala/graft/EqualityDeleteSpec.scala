@@ -789,6 +789,25 @@ class EqualityDeleteSpec extends SparkTestBase {
       .select($"v").as[Long].head() == 444L)
   }
 
+  /** Just over half the read-time pending-key cap: two disjoint
+    * sidecars of this size overflow it. */
+  private val halfCap = (graft.sources.connector.SnapshotPartitions
+    .MaxPendingKeys / 2 + 100000).toInt
+
+  /** Hand-place an equality-delete sidecar of keys `k` in
+    * [lo, lo + halfCap) under `dir`/data; returns its manifest path. */
+  private def writeHalfCapSidecar(dir: String, name: String, lo: Long): String = {
+    val tmp = Files.createTempDirectory("graft-eqcap").toString
+    spark.range(lo, lo + halfCap).select($"id".as("k"))
+      .coalesce(1).write.mode("overwrite").parquet(tmp)
+    val f = new org.apache.hadoop.fs.Path(tmp)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val part = f.listStatus(new org.apache.hadoop.fs.Path(tmp))
+      .map(_.getPath).find(_.getName.endsWith(".parquet")).get
+    f.rename(part, new org.apache.hadoop.fs.Path(dir, s"data/$name"))
+    s"data/$name"
+  }
+
   test("scan-time pending-key cap: overlapping refs fall back to the exact merged count") {
     // round-19 pin of the round-18 cap-semantics change: the cheap
     // re-check sums the refs' sizes (the bound attach-time enforcement
@@ -797,22 +816,11 @@ class EqualityDeleteSpec extends SparkTestBase {
     // the exact merged count and still read, never newly refuse.
     val dir = freshDir()
     new java.io.File(dir, "data").mkdirs()
-    val half = (graft.sources.connector.SnapshotPartitions
-      .MaxPendingKeys / 2 + 100000).toInt
-    def writeSidecar(name: String, lo: Long): String = {
-      val tmp = Files.createTempDirectory("graft-eqcap").toString
-      spark.range(lo, lo + half).select($"id".as("k"))
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val f = new org.apache.hadoop.fs.Path(tmp)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val part = f.listStatus(new org.apache.hadoop.fs.Path(tmp))
-        .map(_.getPath).find(_.getName.endsWith(".parquet")).get
-      f.rename(part, new org.apache.hadoop.fs.Path(dir, s"data/$name"))
-      s"data/$name"
-    }
-    val a = writeSidecar("a-eq.parquet", 0L)
-    val aCopy = writeSidecar("acopy-eq.parquet", 0L) // same keys, new uri
-    val b = writeSidecar("b-eq.parquet", half.toLong) // disjoint keys
+    val a = writeHalfCapSidecar(dir, "a-eq.parquet", 0L)
+    // same keys, new uri
+    val aCopy = writeHalfCapSidecar(dir, "acopy-eq.parquet", 0L)
+    // disjoint keys
+    val b = writeHalfCapSidecar(dir, "b-eq.parquet", halfCap.toLong)
     import graft.sources.SnapshotTable.FileEntry
     val EqSidecars = graft.sources.connector.SnapshotPartitions.EqSidecars
     // overlap-heavy: sum 2x over the cap, merged distinct under it —
@@ -830,5 +838,153 @@ class EqualityDeleteSpec extends SparkTestBase {
     val ex2 = intercept[IllegalArgumentException](
       EqSidecars.broadcastFor(dir, Seq(over)))
     assert(ex2.getMessage.contains("purge_deletes"))
+  }
+
+  test("a file over the read-time cap still folds: purge reads it past the connector") {
+    // hand-built (a legacy or external writer): one data file whose two
+    // DISJOINT refs sum past the cap — the connector refuses to mask
+    // it and names purge_deletes, so the fold must not read through
+    // the connector
+    val dir = freshDir()
+    SnapshotTable.write(spark,
+      spark.range(0, 10).select(($"id" * 500000L).as("k"), $"id".as("v"))
+        .coalesce(1),
+      dir, "overwrite", Seq("k"))
+    val v = SnapshotTable.latestVersion(spark, dir).get
+    val fe = manifest(dir).files.head
+    val refs = Seq(writeHalfCapSidecar(dir, "lo-eq.parquet", 0L),
+      writeHalfCapSidecar(dir, "hi-eq.parquet", halfCap.toLong))
+    SnapshotTable.commitAdded(spark, dir, "delete-eq",
+      Seq(fe.copy(eqDv = refs)), carry = false,
+      schemaJson = SnapshotTable.tableSchema(spark, dir, v).map(_.json))
+    val ex = intercept[Exception](
+      spark.read.format("graft_snapshot").load(dir).count())
+    assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("purge_deletes")))
+    // keys 0, 500k and 1M fall in the first ref, 1.5M and 2M in the second
+    val live = (5L until 10L).map(_ * 500000L)
+    assert(SnapshotTable.scan(spark, dir).select($"k").as[Long].collect()
+      .sorted.toSeq == live)
+    SnapshotTable.purgeDeletes(spark, dir)
+    assert(manifest(dir).files.forall(_.eqDv.isEmpty))
+    assert(spark.read.format("graft_snapshot").load(dir).select($"k")
+      .as[Long].collect().sorted.toSeq == live)
+  }
+
+  /** Spark jobs `body` launches, counted by a listener (the bus is
+    * drained first, so earlier jobs' queued events are not counted). */
+  private def jobsOf(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val drain = () => org.apache.spark.sql.graftbridge.Bridge
+      .drainListenerBus(spark.sparkContext)
+    drain()
+    spark.sparkContext.addSparkListener(listener)
+    try { body; drain() }
+    finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get
+  }
+
+  private def rowsAndSum(dir: String): (Long, Long) =
+    SnapshotTable.scan(spark, dir).agg(count(lit(1)), sum($"v"))
+      .as[(Long, Long)].head()
+
+  test("purge folds interleaved eq-delete epochs in a job count independent of N") {
+    // each epoch appends a file, then deletes keys of the base files
+    // and of that append: files accrue DIFFERENT ref sets, so the ref
+    // groups (and the sum of their refs) grow with N. The fold reads
+    // through the connector's in-reader mask — one scan, one key-set
+    // broadcast — so its job count must not track the pending refs.
+    def foldJobs(n: Int): Int = {
+      val dir = freshDir()
+      SnapshotTable.write(spark,
+        spark.range(0, 6000).select(
+          (($"id" * 2654435761L) % 6000).as("k"), $"id".as("v"))
+          .repartition(3),
+        dir, "overwrite", Seq("k"))
+      (0 until n).foreach { i =>
+        val lo = 10000L + i * 100
+        SnapshotTable.write(spark,
+          spark.range(lo, lo + 100).select($"id".as("k"), ($"id" * 3).as("v"))
+            .coalesce(1),
+          dir, "append", Seq("k"))
+        SnapshotTable.deleteByKey(spark, dir, "k",
+          spark.range(i * 40L, i * 40L + 30).union(spark.range(lo, lo + 5))
+            .toDF("k"))
+      }
+      val groups = manifest(dir).files.map(_.eqDv.sorted).distinct.size
+      assert(groups >= n, s"only $groups ref groups after $n epochs")
+      val before = rowsAndSum(dir)
+      val jobs = jobsOf(SnapshotTable.purgeDeletes(spark, dir, Seq("k")))
+      assert(manifest(dir).files.forall(fe => fe.eqDv.isEmpty && fe.dv.isEmpty))
+      assert(rowsAndSum(dir) == before)
+      jobs
+    }
+    val two = foldJobs(2)
+    val six = foldJobs(6)
+    assert(two == six,
+      s"purge launched $two jobs at N=2 but $six at N=6 — the fold's " +
+        "cost tracks the pending refs again")
+  }
+
+  test("purge keeps Spark's file packing: many small eq-pending files fold into few") {
+    val dir = freshDir()
+    SnapshotTable.write(spark,
+      spark.range(0, 4800).select(
+        (($"id" * 2654435761L) % 4800).as("k"), $"id".as("v"))
+        .repartition(24),
+      dir, "overwrite", Seq("k"))
+    // keys spread over the whole domain: every file's range admits some
+    SnapshotTable.deleteByKey(spark, dir, "k",
+      spark.range(0, 4800, 48).toDF("k"))
+    val pending = manifest(dir).files
+    assert(pending.size == 24 && pending.forall(_.eqDv.nonEmpty))
+    // the split count Spark's own file packing gives the replaced files
+    val splits = spark.read
+      .parquet(pending.map(fe => SnapshotTable.resolvePath(dir, fe.path)): _*)
+      .rdd.getNumPartitions
+    assert(splits < pending.size, s"$splits splits: nothing to pack")
+    val before = rowsAndSum(dir)
+    SnapshotTable.purgeDeletes(spark, dir)
+    val written = manifest(dir).files
+    assert(written.size <= pending.size && written.size <= splits,
+      s"the fold wrote ${written.size} files for ${pending.size} inputs " +
+        s"($splits splits) — one file per input, not Spark's packing")
+    assert(written.forall(fe => fe.eqDv.isEmpty && fe.dv.isEmpty))
+    assert(rowsAndSum(dir) == before)
+  }
+
+  test("compact over eq-pending files from several ref groups keeps the rows") {
+    val dir = freshDir()
+    SnapshotTable.write(spark,
+      spark.range(0, 3000).select(
+        (($"id" * 2654435761L) % 3000).as("k"), $"id".as("v"))
+        .repartition(3),
+      dir, "overwrite", Seq("k"))
+    SnapshotTable.deleteByKey(spark, dir, "k", spark.range(0, 40).toDF("k"))
+    SnapshotTable.write(spark,
+      spark.range(5000, 5300).select($"id".as("k"), ($"id" * 3).as("v"))
+        .repartition(2),
+      dir, "append", Seq("k"))
+    // the base files carry both refs, the appended files only the
+    // second; a deletion vector rides along on one base file
+    SnapshotTable.deleteByKey(spark, dir, "k",
+      spark.range(100, 140).union(spark.range(5000, 5010)).toDF("k"))
+    SnapshotTable.deleteVectors(spark, dir, $"v" === 2999)
+    val m = manifest(dir)
+    assert(m.files.map(_.eqDv.sorted).distinct.size >= 2)
+    val before = SnapshotTable.scan(spark, dir).as[(Long, Long)].collect().sorted
+    assert(before.length == 3000 - 80 - 1 + 300 - 10)
+    SnapshotTable.compact(spark, dir, smallRows = 10000L, targetRows = 10000L,
+      statsCols = Seq("k"))
+    val after = manifest(dir)
+    assert(after.files.size < m.files.size)
+    assert(after.files.forall(fe => fe.eqDv.isEmpty && fe.dv.isEmpty))
+    assert(SnapshotTable.scan(spark, dir).as[(Long, Long)].collect().sorted
+      .sameElements(before))
   }
 }
