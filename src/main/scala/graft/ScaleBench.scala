@@ -278,8 +278,8 @@ object ScaleBench {
     *   - [[graft.sources.SnapshotTable.deleteVectors]] writes one
     *     (file, pos) sidecar — bytes written ≈ KBs — and leaves every
     *     data file untouched.
-    * Also timed: the masked scan vs the plain scan (the broadcast
-    * anti-join's read-side toll), and the purge that folds the
+    * Also timed: the masked scan vs the plain scan (the in-reader
+    * position mask's read-side toll), and the purge that folds the
     * vector in. At 100 TB the bytes column is the whole story: a
     * GDPR-style removal of a few thousand rows must not rewrite
     * terabytes. */

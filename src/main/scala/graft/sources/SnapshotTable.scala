@@ -1407,7 +1407,7 @@ object SnapshotTable {
         k.stripPrefix("constraint.") -> sql
       }.toSeq.sortBy(_._1)
     if (checks.isEmpty) return
-    val df = readFiles(spark, dir, entries, knownSchema = known)
+    val df = readPlain(spark, dir, entries, known)
     val aggs = checks.map { case (name, sql) =>
       sum(when(coalesce(expr(sql), lit(true)) === false, 1L)
         .otherwise(0L)).as(name)
@@ -1515,8 +1515,7 @@ object SnapshotTable {
     schema match {
       case Some(s) if hasMapping(s) =>
         // column mapping: files store PHYSICAL names; read those and
-        // alias back to the logical schema (metadata columns still
-        // resolve through the projection — Project propagates them)
+        // alias back to the logical schema
         spark.read.schema(toPhysical(s)).parquet(paths: _*)
           .select(s.fields.map(f =>
             col(s"`${physicalName(f)}`").as(f.name)).toIndexedSeq: _*)
@@ -1525,124 +1524,38 @@ object SnapshotTable {
     }
   }
 
-  /** Read `files` with deletion vectors applied (merge-on-read) and,
-    * when `keepPos`, the per-row provenance columns `__graft_file`
-    * (data file basename) and `__graft_pos` (row position within it)
-    * retained for callers that build NEW deletion vectors.
-    *
-    * Shape at scale: the dv sidecars are tiny relative to data (they
-    * hold positions of DELETED rows only), so the mask is a broadcast
-    * anti-join on (file, pos) — the corpus never shuffles. The
-    * per-row cost of materializing `_metadata` + probing the join is
-    * paid ONLY by the files that actually carry a vector: the read
-    * splits into a plain scan of vector-free files unioned with the
-    * masked scan of the dv-carrying subset (both against the same
-    * merged schema, so schema evolution behaves exactly like the
-    * single mergeSchema read). A dv-free read (the common case) is
-    * the untouched plain scan with its pushdown/pruning intact.
-    * `_metadata.row_index` gives the in-file position without any
-    * row-number window (Spark keeps it file-absolute under row-group
-    * pruning). */
+  /** Read `files` — entries of `version` — merge-on-read. Files with
+    * no deletion vector and no pending equality deletes are a plain
+    * parquet scan ([[readPlain]], pushdown and pruning intact); every
+    * masked file, and every file of a `keepPos` read, reads through
+    * the V2 connector at `version` (`graft.fileSubset`), whose readers
+    * mask deletion vectors and pending equality deletes in-reader —
+    * the table's one masking implementation. `keepPos` keeps the
+    * connector's `_file`/`_pos` metadata columns as `__graft_file`
+    * (data file basename) and `__graft_pos` (file-absolute row index)
+    * for callers that build NEW deletion vectors. */
   private def readFiles(spark: SparkSession, dir: String, files: Seq[FileEntry],
-                        keepPos: Boolean = false,
-                        knownSchema: Option[org.apache.spark.sql.types.StructType] = None,
-                        version: Option[Long] = None)
+                        version: Long, keepPos: Boolean = false,
+                        knownSchema: Option[org.apache.spark.sql.types.StructType] = None)
       : DataFrame = {
-    def withPos(df: DataFrame) = df
-      .withColumn("__graft_file",
-        element_at(split(col("_metadata.file_path"), "/"), -1))
-      .withColumn("__graft_pos", col("_metadata.row_index"))
-    // masked leg = deletion-vector positions AND/OR pending equality
-    // deletes; both apply merge-on-read
-    val (dvd, plainFiles) = files.partition(fe =>
-      fe.dv.isDefined || fe.eqDv.nonEmpty)
-    if (dvd.isEmpty)
-      return if (!keepPos) readPlain(spark, dir, files, knownSchema)
-      else withPos(readPlain(spark, dir, files, knownSchema))
-    // the log-recorded schema plans the mixed read directly; absent
-    // (legacy / union conflict), one driver-side footer pass fixes the
-    // merged schema both legs share
-    val schema = knownSchema.getOrElse(readPlain(spark, dir, files, None).schema)
-    // masked files: preferred path is the V2 connector's vectorized
-    // readers, which apply a deletion vector IN-READER as a per-batch
-    // position mask and pending equality deletes against ONE memoized
-    // key-set broadcast per scan — one leg however many ref groups the
-    // files span, no broadcast join, no per-row `_metadata`
-    // materialization. Requires a pinned version (manifest-immutable
-    // file subset), a log-recorded schema, the connector's primitive
-    // type surface, and pending keys within the connector's read-time
-    // cap. Pinned callers: the reads (scan, readRange, readIn,
-    // readEquals) and the maintenance rewrites (purgeDeletes, compact,
-    // rebucketBroken, reclusterDecayed).
-    if (!keepPos && version.isDefined && knownSchema.isDefined &&
-        graft.sources.connector.GraftSnapshotSource.isReadable(schema) &&
-        graft.sources.connector.SnapshotPartitions.EqSidecars
-          .withinCap(dir, dvd)) {
-      val dvLeg = spark.read.format("graft_snapshot")
-        .option("versionAsOf", version.get)
-        .option("graft.fileSubset", dvd.map(_.path).mkString(","))
-        .load(dir)
-        // literal name references: col() would parse a dotted column
-        // name as a nested field path
-        .select(schema.fieldNames.map(n => col(s"`$n`")).toIndexedSeq: _*)
-      return if (plainFiles.isEmpty) dvLeg
-      else readPlain(spark, dir, plainFiles, Some(schema)).unionByName(dvLeg)
-    }
-    // the fallback anti-join leg serves everything else: position-
-    // keeping callers (DML staging needs `__graft_file`/`__graft_pos`),
-    // schema-less legacy chains, non-connector column types, over-cap
-    // files the connector refuses (the folds must still read them), and
-    // the unpinned copy-on-write reads (deleteOnce's kept rows, the merge
-    // rewrite, constraint checks, the change feed's pre/post images).
-    // It groups the masked files by their equality-delete ref set
-    // (heterogeneous sets arise when appends interleave with
-    // deleteByKey epochs): each group dv-masks, then
-    // anti-joins the broadcast union of its sidecars' keys — over ALL
-    // the sidecar's key columns (composite keys anti-join on the
-    // whole tuple; a null member never matches, the === condition's
-    // null verdict). Key columns resolve by the sidecar's own
-    // (physical) column names.
-    def eqMask(leg0: DataFrame, eqs: Seq[String]): DataFrame =
-      eqs.foldLeft(leg0) { (leg, pth) =>
-        val ks = spark.read.parquet(resolvePath(dir, pth))
-        val cond = ks.columns.toSeq.zipWithIndex.map { case (kc, i) =>
-          val legCol =
-            if (leg.columns.contains(kc)) kc
-            else schema.fields.find(f => physicalName(f) == kc)
-              .map(_.name).getOrElse(kc)
-          leg(s"`$legCol`") === col(s"__eq_key_$i")
-        }.reduce(_ && _)
-        leg.join(broadcast(ks.select(ks.columns.toSeq.zipWithIndex.map {
-            case (kc, i) => col(s"`$kc`").as(s"__eq_key_$i") }: _*)),
-          cond, "left_anti")
-      }
-    val maskedDvd = dvd.groupBy(_.eqDv.sorted).toSeq.sortBy(_._1.mkString(","))
-      .map { case (eqs, fs2) =>
-        val dvPaths = fs2.flatMap(_.dv.map(_._1)).distinct
-        val wp = withPos(readPlain(spark, dir, fs2, Some(schema)))
-        val dvMasked =
-          if (dvPaths.isEmpty) wp
-          else {
-            // a shared dv sidecar may carry positions for files outside
-            // this read set (or since rewritten under a new name); the
-            // anti-join ignores them by construction
-            val dv = spark.read
-              .parquet(dvPaths.map(p => resolvePath(dir, p)): _*)
-              .select(col("file").as("__dv_file"), col("pos").as("__dv_pos"))
-            wp.join(broadcast(dv),
-              wp("__graft_file") === dv("__dv_file") &&
-                wp("__graft_pos") === dv("__dv_pos"),
-              "left_anti")
-          }
-        eqMask(dvMasked, eqs)
-      }.reduce(_ unionByName _)
-    val out =
-      if (plainFiles.isEmpty) maskedDvd
-      else if (keepPos) withPos(readPlain(spark, dir, plainFiles, Some(schema)))
-        .unionByName(maskedDvd)
-      else readPlain(spark, dir, plainFiles, Some(schema))
-        .unionByName(maskedDvd.drop("__graft_file", "__graft_pos"))
-    if (keepPos) out else out.drop("__graft_file", "__graft_pos")
+    import graft.sources.connector.{GraftSnapshotSource, SnapshotV2Table}
+    val (viaConnector, plain) =
+      files.partition(fe => keepPos || fe.dv.isDefined || fe.eqDv.nonEmpty)
+    if (viaConnector.isEmpty) return readPlain(spark, dir, files, knownSchema)
+    val leg = spark.read.format("graft_snapshot")
+      .option("versionAsOf", version)
+      .option(GraftSnapshotSource.FileSubsetOption,
+        viaConnector.map(_.path).mkString(","))
+      .load(dir)
+    val schema = knownSchema.getOrElse(leg.schema)
+    // literal name references: col() would parse a dotted column name
+    // as a nested field path
+    val data = schema.fieldNames.toSeq.map(n => col(s"`$n`"))
+    val masked = leg.select((if (!keepPos) data else data ++ Seq(
+      leg.metadataColumn(SnapshotV2Table.FileCol).as("__graft_file"),
+      leg.metadataColumn(SnapshotV2Table.PosCol).as("__graft_pos"))): _*)
+    if (plain.isEmpty) masked
+    else readPlain(spark, dir, plain, Some(schema)).unionByName(masked)
   }
 
   /** The table as of `version` (default: newest). Plans from the
@@ -1661,7 +1574,7 @@ object SnapshotTable {
           s"version $v of $dir is empty and records no schema; cannot infer"))
     // mergeSchema: appends may add columns over the table's life
     // (schema evolution); older files surface the new columns as null.
-    readFiles(spark, dir, m.files, knownSchema = known, version = Some(v))
+    readFiles(spark, dir, m.files, v, knownSchema = known)
   }
 
   /** Range read with stats-based data skipping: only files whose
@@ -1679,7 +1592,7 @@ object SnapshotTable {
       fe.stats.get(pk).forall { case (mn, mx) => mx >= lo && mn <= hi })
     if (hit.isEmpty)
       return scan(spark, dir, Some(v)).filter(lit(false)) // keep the schema
-    readFiles(spark, dir, hit, knownSchema = known, version = Some(v))
+    readFiles(spark, dir, hit, v, knownSchema = known)
       .filter(col(keyCol).between(lo, hi))
   }
 
@@ -1703,7 +1616,7 @@ object SnapshotTable {
     })
     if (hit.isEmpty)
       return scan(spark, dir, Some(v)).filter(lit(false)) // keep the schema
-    readFiles(spark, dir, hit, knownSchema = known, version = Some(v))
+    readFiles(spark, dir, hit, v, knownSchema = known)
       .filter(col(keyCol).isin(sorted: _*))
   }
 
@@ -1757,7 +1670,7 @@ object SnapshotTable {
     val hit = pointCandidates(m, physicalFor(known, keyCol), value)
     if (hit.isEmpty)
       return scan(spark, dir, Some(v)).filter(lit(false)) // keep the schema
-    readFiles(spark, dir, hit, knownSchema = known, version = Some(v))
+    readFiles(spark, dir, hit, v, knownSchema = known)
       .filter(col(keyCol).cast("string") === value)
   }
 
@@ -1846,7 +1759,7 @@ object SnapshotTable {
     } else {
       // dv-masked read: a merge rewrite must not resurrect rows a
       // deletion vector already removed (the rewrite purges the dv)
-      val base = readFiles(spark, dir, rewrite,
+      val base = readFiles(spark, dir, rewrite, v,
         knownSchema = tableSchema(spark, dir, v))
       val markedU = updates.withColumn("__isu", lit(true))
       val joined = base.alias("t").join(
@@ -1897,7 +1810,7 @@ object SnapshotTable {
       throw new IllegalStateException(s"cannot delete from empty table $dir"))
     val m = readManifest(spark, dir, v)
     val knownDel = tableSchema(spark, dir, v)
-    val touched = readFiles(spark, dir, m.files, keepPos = true,
+    val touched = readFiles(spark, dir, m.files, v, keepPos = true,
         knownSchema = knownDel)
       .filter(predicate)
       .select(col("__graft_file"))
@@ -1905,7 +1818,7 @@ object SnapshotTable {
       .map(r => r.getString(0)).toSet
     if (touched.isEmpty) return v
     val rewrite = m.files.filter(fe => touched.contains(fileKey(fe.path)))
-    val kept = readFiles(spark, dir, rewrite, knownSchema = knownDel)
+    val kept = readFiles(spark, dir, rewrite, v, knownSchema = knownDel)
       .filter(!coalesce(predicate, lit(false)))
     val fresh = stageFiles(spark, kept, dir, statsCols,
       bucketize = bucketLayout(spark, dir))
@@ -1998,9 +1911,10 @@ object SnapshotTable {
   /** DELETE WHERE via DELETION VECTORS (merge-on-read): instead of
     * rewriting every file that contains a matching row ([[delete]]'s
     * copy-on-write), commit a tiny sidecar parquet of (file, pos)
-    * row positions and leave the data files untouched. Readers
-    * subtract the positions with a broadcast anti-join
-    * ([[readFiles]]). This is the Delta/Iceberg deletion-vector /
+    * row positions and leave the data files untouched. The
+    * connector's readers subtract the positions in-reader, as a
+    * per-batch position mask ([[readFiles]]). This is the Delta/Iceberg
+    * deletion-vector /
     * positional-delete design, and it changes the cost class of
     * small deletes at scale: removing 0.01% of rows scattered over a
     * 100 TB table costs O(matched rows) bytes written instead of
@@ -2018,7 +1932,7 @@ object SnapshotTable {
     * version references at most one dv file and read-side masking is
     * a single tiny scan. Consolidation prices the commit at
     * O(total deleted rows); when that stops being small relative to
-    * the data — the read-side anti-join degrades with it — run
+    * the data — every reader loads its file's positions — run
     * [[purgeDeletes]] (or [[compact]], which purges as it packs) to
     * fold the vectors into the files. */
   def deleteVectors(spark: SparkSession, dir: String,
@@ -2027,19 +1941,6 @@ object SnapshotTable {
       deleteVectorsOnce(spark, dir, predicate)
     }
 
-  /** Stage the consolidated deletion-vector sidecar for `predicate`'s
-    * matches against snapshot `m` (see [[stageDvSidecarFrom]]).
-    * `known` routes the scan through column mapping so the (logical)
-    * predicate resolves. */
-  private def stageDvSidecar(spark: SparkSession, dir: String, m: Manifest,
-                             predicate: org.apache.spark.sql.Column,
-                             known: Option[org.apache.spark.sql.types.StructType]):
-      Option[(String, Seq[FileEntry])] =
-    stageDvSidecarFrom(spark, dir, m,
-      readFiles(spark, dir, m.files, keepPos = true, knownSchema = known)
-        .filter(predicate)
-        .select(col("__graft_file").as("file"), col("__graft_pos").as("pos")))
-
   /** Stage the consolidated deletion-vector sidecar for the given
     * `matched` (file, pos) position rows against snapshot `m`:
     * publishes a new sidecar holding the matched positions plus every
@@ -2047,7 +1948,11 @@ object SnapshotTable {
     * dv-carrying replacement entries). None — with the sidecar
     * already cleaned up — when nothing new matched. `matched` must be
     * derived from a keepPos masked read of `m`, which makes it
-    * disjoint from already-deleted positions by construction. */
+    * disjoint from already-deleted positions by construction.
+    * Each position is written once. With `failOnDuplicate`, a position
+    * `matched` holds twice (one target row, two source images) is a
+    * MERGE cardinality error; a duplicate only the prior vectors hold
+    * (a historical sidecar) is not. */
   private def stageDvSidecarFrom(spark: SparkSession, dir: String, m: Manifest,
                                  matched: DataFrame,
                                  failOnDuplicate: Boolean = false):
@@ -2081,30 +1986,42 @@ object SnapshotTable {
     // are ADJACENT in the sort, so detection is one comparison per
     // row. The counts accumulator collapses through toMap, so a rare
     // duplicated successful attempt (speculation) cannot double-count;
-    // the dup flag is only ever read as "> 0".
+    // the dup and fresh counters are only ever read as "> 0".
     val dupAcc = spark.sparkContext.longAccumulator("graft.dv.dupPositions")
+    val freshAcc = spark.sparkContext.longAccumulator("graft.dv.freshPositions")
     val countsAcc = spark.sparkContext
       .collectionAccumulator[(String, Long)]("graft.dv.fileCounts")
-    val sortedChecked = matched.unionByName(prior)
+    // rows are tagged fresh (matched now) or prior before the union, so
+    // a duplicate run knows whether this statement took part in it
+    val sortedChecked = matched.withColumn("__fresh", lit(true))
+      .unionByName(prior.withColumn("__fresh", lit(false)))
       .repartition(1).sortWithinPartitions("file", "pos")
-      .as[(String, Long)]
+      .as[(String, Long, Boolean)]
       .mapPartitions { it =>
         var prevF: String = null
         var prevP = Long.MinValue
-        var runRows = 0L
-        val checked = it.map { case (f0, p0) =>
-          if (f0 == prevF) {
-            if (p0 == prevP) dupAcc.add(1)
-            runRows += 1
+        var runFresh = false // the current (file, pos) run holds a fresh row
+        var fileRows = 0L
+        val written = it.flatMap { case (f0, p0, fresh) =>
+          if (f0 == prevF && p0 == prevP) { // a repeat: written once
+            if (fresh || runFresh) dupAcc.add(1)
+            if (fresh && !runFresh) freshAcc.add(1)
+            runFresh ||= fresh
+            Iterator.empty
           } else {
-            if (prevF != null) countsAcc.add((prevF, runRows))
-            runRows = 1
+            if (f0 != prevF) {
+              if (prevF != null) countsAcc.add((prevF, fileRows))
+              fileRows = 0
+            }
+            fileRows += 1
+            if (fresh) freshAcc.add(1)
+            runFresh = fresh
+            prevF = f0; prevP = p0
+            Iterator.single((f0, p0))
           }
-          prevF = f0; prevP = p0
-          (f0, p0)
         }
-        checked ++ {
-          if (prevF != null) countsAcc.add((prevF, runRows))
+        written ++ {
+          if (prevF != null) countsAcc.add((prevF, fileRows))
           Iterator.empty
         }
       }
@@ -2139,8 +2056,9 @@ object SnapshotTable {
           s"${counts.values.sum} rows, the published sidecar holds " +
           s"$writtenRows — the single-sorted-task write invariant broke")
     }
-    val oldTotal = m.files.flatMap(_.dv.map(_._2)).sum
-    if (counts.values.sum == oldTotal) { // nothing newly matched
+    // counted, not inferred from totals: a prior duplicate written once
+    // would otherwise hide one new match
+    if (freshAcc.value == 0) { // nothing newly matched
       f.delete(new Path(dir, name), false)
       return None
     }
@@ -2512,7 +2430,7 @@ object SnapshotTable {
       import org.apache.spark.sql.functions.{coalesce, lit, not}
       val known = latestVersion(spark, dir)
         .flatMap(v => tableSchema(spark, dir, v))
-      val bad = readFiles(spark, dir, added, knownSchema = known)
+      val bad = readPlain(spark, dir, added, known)
         .filter(not(coalesce(predicate, lit(false))))
         .limit(1).count()
       require(bad == 0L,
@@ -2565,7 +2483,7 @@ object SnapshotTable {
     // candidates): prior sidecar rows of scan-skipped files must carry
     // into the new vector so a version keeps referencing ONE sidecar;
     // dropped files' prior rows vanish with their files
-    val matched = readFiles(spark, dir, candidates, keepPos = true,
+    val matched = readFiles(spark, dir, candidates, v, keepPos = true,
       knownSchema = known)
       .filter(predicate)
       .select(col("__graft_file").as("file"), col("__graft_pos").as("pos"))
@@ -2593,16 +2511,17 @@ object SnapshotTable {
     * writes the distinct keys as one tiny sidecar parquet and attaches
     * its ref to the affected manifest entries — O(batch) bytes and
     * O(files) metadata per epoch, ZERO data reads. Readers subtract
-    * matching rows (merge-on-read: the V2 readers mask in-flight, the
-    * programmatic path anti-joins); [[purgeDeletes]] and [[compact]]
-    * fold pending equality deletes into the files, restoring
-    * metadata-exact counts and vectorized reads.
+    * matching rows (merge-on-read: the connector's readers mask
+    * in-flight, for `scan` and the DML position scans too);
+    * [[purgeDeletes]] and [[compact]] fold pending equality deletes
+    * into the files, restoring metadata-exact counts.
     *
     * Trades, stated plainly: while equality deletes are pending,
     * COUNT cannot answer from metadata for affected files, per-file
-    * liveRows is an upper bound, and affected scans run the row-based
-    * readers. That is the right trade exactly when deletes are
-    * frequent and reads are batched — fold on a maintenance cadence.
+    * liveRows is an upper bound, and every read of an affected file
+    * probes the pending key set. That is the right trade exactly when
+    * deletes are frequent and reads are batched — fold on a
+    * maintenance cadence.
     *
     * Files whose stats range refutes the whole key batch are skipped
     * at attach time (metadata-level pruning), so on a CLUSTERED key
@@ -3005,9 +2924,9 @@ object SnapshotTable {
       val candidates = m.files.filterNot(refutesAllRows(uexpr, _, known))
       val matched0 =
         if (candidates.isEmpty)
-          readFiles(spark, dir, m.files, keepPos = true, knownSchema = known)
+          readFiles(spark, dir, m.files, v, keepPos = true, knownSchema = known)
             .limit(0)
-        else readFiles(spark, dir, candidates, keepPos = true,
+        else readFiles(spark, dir, candidates, v, keepPos = true,
           knownSchema = known)
       stageDvSidecarFrom(spark, dir, m, matched0.filter(predicate)
         .select(col("__graft_file").as("file"),
@@ -3018,7 +2937,7 @@ object SnapshotTable {
           try {
             // second predicate-pruned pass stages the post-images
             val updated = readFiles(spark, dir,
-              if (candidates.isEmpty) m.files else candidates,
+              if (candidates.isEmpty) m.files else candidates, v,
               knownSchema = known)
               .filter(predicate)
               .select(cols.map(c =>
@@ -3115,7 +3034,8 @@ object SnapshotTable {
     val cand = candidateFiles(spark, m, keyCol, keys,
       statsKey = Some(physicalFor(known, keyCol)))
     if (cand.isEmpty) Seq.empty[(String, Long)].toDF("file", "pos")
-    else readFiles(spark, dir, cand, keepPos = true, knownSchema = known)
+    else readFiles(spark, dir, cand, m.version, keepPos = true,
+      knownSchema = known)
       .join(keys, Seq(keyCol), "left_semi")
       .select(col("__graft_file").as("file"), col("__graft_pos").as("pos"))
   }
@@ -3295,7 +3215,7 @@ object SnapshotTable {
         if (candidates.isEmpty)
           spark.createDataFrame(
             spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], posSchema)
-        else readFiles(spark, dir, candidates, keepPos = true,
+        else readFiles(spark, dir, candidates, v, keepPos = true,
           knownSchema = known)
       // evolution columns: every existing target row reads them null
       val tgt = extraColumns.foldLeft(tgt0)((d, f) =>
@@ -3380,10 +3300,11 @@ object SnapshotTable {
         // row is ambiguous (which image wins?) — raise, don't guess.
         // Detection rides the sidecar write's sorted single task
         // (duplicates are adjacent there), replacing what used to be
-        // a separate groupBy-count job per merge (round-18): prior
-        // vectors can never collide with fresh positions (the scan
-        // masks dv-deleted rows), so any adjacent duplicate IS a
-        // source-cardinality violation.
+        // a separate groupBy-count job per merge (round-18). Only a
+        // duplicate run holding a FRESH position is a violation: the
+        // scan masks dv-deleted rows, so fresh positions never meet
+        // prior ones, and a duplicate inside a historical sidecar is
+        // written once, not raised.
         val staged = stageDvSidecarFrom(spark, dir, m, positions,
           failOnDuplicate = matched.nonEmpty)
         val f = fs(spark, new Path(dir))
@@ -3454,7 +3375,7 @@ object SnapshotTable {
             s"table $dir lacks merge key $keyCol")
           // staged files carry physical names on a mapped table — the
           // knownSchema read aliases them back to logical
-          val keys = readFiles(spark, dir, staged, knownSchema = known)
+          val keys = readPlain(spark, dir, staged, known)
             .select(col(keyCol)).distinct()
           val matched = matchedPositions(spark, dir, m, keyCol, keys, known)
           stageDvSidecarFrom(spark, dir, m, matched) match {
@@ -3510,8 +3431,8 @@ object SnapshotTable {
             // files (planned from a plain read, no job runs) keeps the
             // fold from writing one small file per input file
             val splits = readPlain(spark, dir, files, known).rdd.getNumPartitions
-            val df0 = readFiles(spark, dir, files, knownSchema = known,
-              version = Some(v)).coalesce(splits)
+            val df0 = readFiles(spark, dir, files, v, knownSchema = known)
+              .coalesce(splits)
             val key = sortKey.filter(k =>
               bucket.isDefined && df0.columns.contains(k))
             val df = key.fold(df0)(k => df0.sortWithinPartitions(col(s"`$k`")))
@@ -3585,8 +3506,7 @@ object SnapshotTable {
           val known = tableSchema(spark, dir, v)
           val props = graft.sources.connector.GraftTableProps.read(
             spark.sparkContext.hadoopConfiguration, dir)
-          val df = readFiles(spark, dir, broken, knownSchema = known,
-            version = Some(v))
+          val df = readFiles(spark, dir, broken, v, knownSchema = known)
           def csv(k: String): Seq[String] = props.get(k)
             .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
             .getOrElse(Nil)
@@ -3672,8 +3592,7 @@ object SnapshotTable {
         .map(pc => known.flatMap(_.fields.find(f => physicalName(f) == pc)
           .map(_.name)).getOrElse(pc))
       val fresh = decayed.flatMap { case ((bucket, bucketN), comp) =>
-        val df = readFiles(spark, dir, comp, knownSchema = known,
-          version = Some(v))
+        val df = readFiles(spark, dir, comp, v, knownSchema = known)
         val nOut = math.max(1,
           math.ceil(comp.map(_.liveRows).sum.toDouble / targetRows).toInt)
         val packed = df
@@ -4536,8 +4455,7 @@ object SnapshotTable {
     val fresh = groups.flatMap { case ((bucket, bucketN), files) =>
       // dv-masked: compacting a dv-carrying file PURGES its deletion
       // vector (the rewrite materializes only live rows)
-      val df = readFiles(spark, dir, files, knownSchema = known,
-        version = Some(v))
+      val df = readFiles(spark, dir, files, v, knownSchema = known)
       val nOut = math.max(1,
         math.ceil(files.map(_.liveRows).sum.toDouble / targetRows).toInt)
       // bucketed groups compact KEY-SORTED (zorder would scatter the
@@ -4598,8 +4516,8 @@ object SnapshotTable {
     // Single-key-COLUMN deltas ride the fast path; a multi-signature
     // delta (distinct key columns across epochs in one range) or a
     // COMPOSITE-key delta would need per-row tuple semantics across
-    // its semi-joins, so both keep the general diff (which masks
-    // composite refs correctly through readFiles' tuple anti-join).
+    // its semi-joins, so both keep the general diff (whose reads mask
+    // composite refs as tuples in the connector's readers).
     val fromByPathDv = from.files.map(fe => (fe.path, fe.dv.map(_._1)) -> fe).toMap
     val (eqPairs, _) = to.files.flatMap { cur =>
       fromByPathDv.get((cur.path, cur.dv.map(_._1)))
@@ -4633,15 +4551,18 @@ object SnapshotTable {
     val general: Option[DataFrame] =
       if (removed.isEmpty && added.isEmpty) None
       else {
-        def readOr(files: Seq[FileEntry], other: Seq[FileEntry],
-                   atV: Long): DataFrame = {
-          val use = if (files.nonEmpty) files else other
-          val df = readFiles(spark, dir, use,
-            knownSchema = tableSchema(spark, dir, atV))
-          if (files.nonEmpty) df else df.filter(lit(false))
+        // an empty side is its version's schema with no rows (a legacy
+        // chain records none: the other side's columns stand in)
+        def readOr(files: Seq[FileEntry], atV: Long,
+                   other: Seq[FileEntry], otherV: Long): DataFrame = {
+          val known = tableSchema(spark, dir, atV)
+          if (files.nonEmpty) readFiles(spark, dir, files, atV, knownSchema = known)
+          else known.map(s => spark.createDataFrame(
+              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s))
+            .getOrElse(readFiles(spark, dir, other, otherV).filter(lit(false)))
         }
-        val pre0 = readOr(removed, added, fromV)
-        val post0 = readOr(added, removed, toV)
+        val pre0 = readOr(removed, fromV, added, toV)
+        val post0 = readOr(added, toV, removed, fromV)
         val post = align(post0, pre0)
         val pre = align(pre0, post0).select(post.columns.map(col): _*)
         val cols = post.columns.toSeq
@@ -4673,7 +4594,7 @@ object SnapshotTable {
         val logical = preSchema
           .flatMap(_.fields.find(f => physicalName(f) == c).map(_.name))
           .getOrElse(c)
-        val pre = readFiles(spark, dir, pairs.map(_._1),
+        val pre = readFiles(spark, dir, pairs.map(_._1), fromV,
           knownSchema = preSchema)
         Seq(pre.join(broadcast(fresh),
           pre(s"`$logical`") === fresh("__graft_eqkey"), "left_semi"))
@@ -4850,8 +4771,8 @@ object SnapshotTable {
     * purge/compact/vacuum per table:
     *
     *  1. PURGE when deletion vectors mask more than `maxDeletedRatio`
-    *     of the physical rows (the read-side anti-join toll and the
-    *     dead bytes both grow with the ratio);
+    *     of the physical rows (the readers' position-mask work and
+    *     the dead bytes both grow with the ratio);
     *  2. HEAL the declared bucket layout ([[rebucketBroken]]) when any
     *     file breaks it — the only way a production table's
     *     storage-partitioned joins come back after a stray unbucketed

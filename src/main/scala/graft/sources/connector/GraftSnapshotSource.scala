@@ -49,13 +49,17 @@ import graft.sources.SnapshotTable.{FileEntry, Manifest}
   *    set of files a range of versions APPENDED — the Delta-style
   *    "table as an exactly-once stream source".
   *
-  * The row readers ([[SnapshotPartitions]]) are self-contained
-  * parquet-hadoop readers (no nested Spark jobs), apply deletion
-  * vectors, and prune columns at the parquet projection level. They
-  * support primitive column types only; `SnapshotTable.scan` remains
-  * the full-fidelity (and vectorized) path — the connector is the
-  * declarative surface, with planning-time pruning the programmatic
-  * path cannot get from Catalyst.
+  * The readers ([[SnapshotPartitions]]) are self-contained (no nested
+  * Spark jobs), mask deletion vectors and pending equality deletes
+  * in-reader, and prune columns at the parquet projection level. Batch
+  * scans read vectorized and take every column type Spark's parquet
+  * reader decodes (decimal, struct, map, nested arrays, variant); the
+  * change-feed and micro-batch row readers keep to primitive and
+  * primitive-array columns. This is the table's ONE masking
+  * implementation: `SnapshotTable.scan` and the DML position scans
+  * read masked files through it, the latter selecting the metadata
+  * columns `_file` (data-file basename) and `_pos` (file-absolute row
+  * index) that new deletion vectors are built from.
   */
 class GraftSnapshotSource extends TableProvider with DataSourceRegister {
 
@@ -148,24 +152,28 @@ object GraftSnapshotSource {
     Option(options.get("path")).getOrElse(throw new IllegalArgumentException(
       "graft_snapshot requires a path: spark.read.format(\"graft_snapshot\").load(tableRoot)"))
 
+  /** The internal file-subset option ([[resolveManifest]]). */
+  private[graft] val FileSubsetOption = "graft.fileSubset"
+
   /** The manifest a read resolves against: `versionAsOf` or newest.
     * The INTERNAL `graft.fileSubset` option (comma-separated
     * manifest-relative data-file PATHS — full paths, not basenames:
     * two manifest entries in distinct subdirectories could share a
     * basename, and a basename match would then fail a legitimate
     * subset read or silently include the twin) restricts the read to
-    * a subset of the version's files — [[SnapshotTable]]'s own split
-    * read uses it to route the dv-carrying leg through the
-    * connector's vectorized in-reader masking; manifests are
-    * immutable, so a (version, subset) read is exactly as
-    * well-defined as the whole version. */
+    * a subset of the version's files — [[SnapshotTable]]'s own reads
+    * use it to route masked files (and position scans) through the
+    * connector's in-reader masking; manifests are immutable, so a
+    * (version, subset) read is exactly as well-defined as the whole
+    * version. Such a read also skips the read-time pending-key cap
+    * (see [[SnapshotScan.createReaderFactory]]). */
   private[connector] def resolveManifest(spark: SparkSession, dir: String,
                                          options: CaseInsensitiveStringMap): Manifest = {
     val v = requestedVersion(spark, dir, options)
       .orElse(SnapshotTable.latestVersion(spark, dir))
       .getOrElse(throw new IllegalStateException(s"no committed version under $dir"))
     val m = SnapshotTable.readManifest(spark, dir, v)
-    Option(options.get("graft.fileSubset")) match {
+    Option(options.get(FileSubsetOption)) match {
       case None => m
       case Some(s) =>
         val keep = s.split(",").map(_.trim).filter(_.nonEmpty).toSet
@@ -177,30 +185,28 @@ object GraftSnapshotSource {
     }
   }
 
-  /** Column types the connector's readers materialize: primitives and
-    * ARRAYS of primitives (an embedding corpus is a first-class
-    * connector table). Everything else (structs, maps, decimal,
-    * interval) reads via `SnapshotTable.scan`. */
+  /** Column types the ROW readers (change feed, micro-batch stream)
+    * materialize: primitives and ARRAYS of primitives (an embedding
+    * corpus is a first-class connector table). The batch scan reads
+    * vectorized, so it takes every type Spark's parquet reader
+    * decodes. */
   private def readablePrimitive(dt: DataType): Boolean = dt match {
     case BooleanType | ByteType | ShortType | IntegerType | LongType |
          FloatType | DoubleType | StringType | BinaryType | DateType |
          TimestampType | TimestampNTZType => true
     case _ => false
   }
-  private[sources] def isReadable(schema: StructType): Boolean =
-    schema.fields.forall(_.dataType match {
-      case ArrayType(et, _) => readablePrimitive(et)
-      case dt => readablePrimitive(dt)
-    })
 
   private[connector] def validateReadable(schema: StructType): Unit =
     schema.fields.foreach { f =>
-      if (!isReadable(StructType(Seq(f))))
+      if (!(f.dataType match {
+            case ArrayType(et, _) => readablePrimitive(et)
+            case dt => readablePrimitive(dt)
+          }))
         throw new UnsupportedOperationException(
-          s"graft_snapshot reads primitive and primitive-array columns " +
-            s"only; column '${f.name}' has type ${f.dataType.simpleString} " +
-            "— select it away, or read via SnapshotTable.scan for " +
-            "full-fidelity types")
+          s"graft_snapshot's row readers (change feed, streaming) take " +
+            s"primitive and primitive-array columns only; column " +
+            s"'${f.name}' has type ${f.dataType.simpleString} — select it away")
     }
 }
 
@@ -214,9 +220,25 @@ final class SnapshotV2Table(schema: StructType, dir: String,
                             tableProps: Map[String, String] = Map.empty)
   extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite
-    with org.apache.spark.sql.connector.catalog.SupportsDelete {
+    with org.apache.spark.sql.connector.catalog.SupportsDelete
+    with org.apache.spark.sql.connector.catalog.SupportsMetadataColumns {
 
   override def name(): String = s"graft_snapshot($dir)"
+
+  /** `_file` and `_pos`: each row's deletion-vector coordinate. */
+  override def metadataColumns()
+      : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
+    Array(SnapshotV2Table.FileCol -> StringType, SnapshotV2Table.PosCol -> LongType)
+      .map { case (n, t) => new org.apache.spark.sql.connector.catalog.MetadataColumn {
+        override def name(): String = n
+        override def dataType(): DataType = t
+        override def isNullable(): Boolean = false
+      } }
+
+  /** A data column named `_file`/`_pos` renames the metadata column
+    * instead of hiding it: `Dataset.metadataColumn` still finds it, so
+    * position scans work on any schema. */
+  override def canRenameConflictingMetadataColumns(): Boolean = true
 
   /** Catalog-persisted layout defaults (`statsCols`, `bloomCols`,
     * `clusterBy`, `clusterPartitions`): SQL `INSERT INTO` has no
@@ -399,6 +421,14 @@ final class SnapshotV2Table(schema: StructType, dir: String,
 }
 
 object SnapshotV2Table {
+  /** Metadata columns: the data-file basename (the key a deletion
+    * vector records) and the file-absolute row index. */
+  val FileCol = "_file"
+  val PosCol = "_pos"
+  /** Spark's marker on a metadata column: its logical name. */
+  private[connector] val MetaKey =
+    org.apache.spark.sql.catalyst.util.METADATA_COL_ATTR_KEY
+
   /** Table properties that act as write-layout defaults. */
   val LayoutProps: Seq[String] =
     Seq("statsCols", "bloomCols", "clusterBy", "clusterPartitions",
@@ -514,6 +544,10 @@ final class SnapshotScanBuilder(tableSchema: StructType, dir: String,
     GraftSnapshotSource.resolveManifest(spark, dir, options)
 
   private var required: StructType = tableSchema
+  /** Requested metadata columns, as Spark passed them (they trail the
+    * data columns in the scan's output). Spark marks each with its
+    * logical name, which a name conflict does not change. */
+  private var meta: Seq[StructField] = Nil
   private var skipping: Array[Filter] = Array.empty
   private var agg: Option[(StructType, Array[Any])] = None
 
@@ -536,8 +570,12 @@ final class SnapshotScanBuilder(tableSchema: StructType, dir: String,
 
   override def pushedFilters(): Array[Filter] = skipping
 
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
+  override def pruneColumns(requiredSchema: StructType): Unit = {
+    val (m, data) = requiredSchema.fields.toSeq.partition(
+      _.metadata.contains(SnapshotV2Table.MetaKey))
+    required = StructType(data)
+    meta = m
+  }
 
   override def supportCompletePushDown(aggregation: Aggregation): Boolean =
     planMetadataAgg(aggregation).isDefined
@@ -617,9 +655,8 @@ final class SnapshotScanBuilder(tableSchema: StructType, dir: String,
   }
 
   override def build(): Scan = {
-    if (agg.isEmpty) GraftSnapshotSource.validateReadable(required)
     new SnapshotScan(dir, () => manifest, required, skipping, agg, options,
-      physMap, bucketSpec)
+      physMap, bucketSpec, meta)
   }
 }
 
@@ -641,13 +678,15 @@ final class SnapshotScan(private val dir: String, manifestF: () => Manifest,
                          private val agg: Option[(StructType, Array[Any])],
                          options: CaseInsensitiveStringMap,
                          physMap: Map[String, String] = Map.empty,
-                         bucketSpec: Option[(String, DataType, Int)] = None)
+                         bucketSpec: Option[(String, DataType, Int)] = None,
+                         private val meta: Seq[StructField] = Nil)
   extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering
     with org.apache.spark.sql.connector.read.SupportsReportPartitioning
     with org.apache.spark.sql.connector.read.SupportsReportOrdering {
 
   private lazy val manifest = manifestF()
+  private val fileSubset = Option(options.get(GraftSnapshotSource.FileSubsetOption))
 
   private def phys(c: String): String = physMap.getOrElse(c, c)
 
@@ -780,7 +819,8 @@ final class SnapshotScan(private val dir: String, manifestF: () => Manifest,
       case _ => Array.empty
     }
 
-  override def readSchema(): StructType = agg.map(_._1).getOrElse(required)
+  override def readSchema(): StructType =
+    agg.map(_._1).getOrElse(StructType(required.fields ++ meta))
 
   override def description(): String = agg match {
     case Some((schema, _)) =>
@@ -842,7 +882,7 @@ final class SnapshotScan(private val dir: String, manifestF: () => Manifest,
 
   override def createReaderFactory(): PartitionReaderFactory =
     new SnapshotReaderFactory(
-      if (agg.isDefined) readSchema() else physSchema(readSchema()),
+      if (agg.isDefined) readSchema() else physSchema(required),
       // in-file row-group/page pruning rides the same skipping
       // filters, rewritten to the files' physical column names
       (skipping ++ runtimeSkipping).toSeq.map(SnapshotScan.mapAttrs(_, phys)),
@@ -852,11 +892,16 @@ final class SnapshotScan(private val dir: String, manifestF: () => Manifest,
       // whole-stage codegen. The key sets ship as ONE broadcast per
       // scan (tasks carry sidecar refs only); built over the STATIC
       // pruned set, a superset of anything runtime filters later keep
-      // (a metadata-agg scan refuses eq-pending files up front).
+      // (a metadata-agg scan refuses eq-pending files up front). The
+      // engine's own file-subset reads skip the read-time cap: the
+      // folds its refusal names (purge, compact) must still read an
+      // over-cap file.
       eqBc =
         if (agg.isDefined) None
         else SnapshotPartitions.EqSidecars.broadcastFor(dir, manifest.files
-          .filter(fe => skipping.forall(SnapshotScan.keeps(fe, _, phys)))))
+          .filter(fe => skipping.forall(SnapshotScan.keeps(fe, _, phys))),
+          enforceCap = fileSubset.isEmpty),
+      meta = meta.map(_.metadata.getString(SnapshotV2Table.MetaKey)))
 
   /** Post-skipping logical rows from the manifest; size is rows ×
     * the read schema's fixed-width estimate (the manifest stores row
@@ -918,20 +963,23 @@ final class SnapshotScan(private val dir: String, manifestF: () => Manifest,
     }
   }
 
-  /** Identity EXCLUDES runtime filters: the planner must recognize the
-    * runtime-filtered scan as "the same scan" for exchange reuse (the
-    * SupportsRuntimeFiltering contract). */
+  /** Identity includes the file subset (two subset reads of one
+    * version are different scans) and EXCLUDES runtime filters: the
+    * planner must recognize the runtime-filtered scan as "the same
+    * scan" for exchange reuse (the SupportsRuntimeFiltering
+    * contract). */
   override def equals(other: Any): Boolean = other match {
     case o: SnapshotScan =>
       dir == o.dir && manifest.version == o.manifest.version &&
-        required == o.required && skipping.toSeq == o.skipping.toSeq &&
+        required == o.required && meta == o.meta &&
+        fileSubset == o.fileSubset && skipping.toSeq == o.skipping.toSeq &&
         agg.map { case (s, v) => (s, v.toSeq) } ==
           o.agg.map { case (s, v) => (s, v.toSeq) }
     case _ => false
   }
 
   override def hashCode(): Int =
-    (dir, manifest.version, required, skipping.toSeq).hashCode()
+    (dir, manifest.version, required, meta, skipping.toSeq).hashCode()
 }
 
 /** Driver-side planning telemetry: the (planned, total) file counts of

@@ -52,12 +52,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * key columns join the requested schema, each row's vector value
   * probes a typed key set, and the same live-index map carries both
   * verdicts. The columnar verdict is now scan-invariant.
+  *
+  * Requested metadata columns (`meta`) trail the data columns: `_pos`
+  * is the generated row-index vector (masked like any column), `_file`
+  * one constant vector per file reader — so each reader a bucket
+  * partition chains emits its own file's name.
   */
 private final class SnapshotColumnarFileReader(p: SnapshotFilePartition,
                                                schema: StructType,
                                                sessionConf: Map[String, String],
                                                filters: Seq[Filter],
-                                               eq: Seq[EqSidecar] = Nil)
+                                               eq: Seq[EqSidecar] = Nil,
+                                               meta: Seq[String] = Nil)
   extends org.apache.spark.sql.connector.read.PartitionReader[ColumnarBatch] {
 
   private val conf = new Configuration()
@@ -97,8 +103,9 @@ private final class SnapshotColumnarFileReader(p: SnapshotFilePartition,
     * `VectorizedParquetRecordReader` emit the exact file row index per
     * row (the `_metadata.row_index` mechanism), valid under any
     * skipping. The column is generated, not read — zero extra I/O —
-    * and is stripped before the batch leaves this reader. */
-  private val needPos = !deleted.isEmpty
+    * and is stripped before the batch leaves this reader unless the
+    * scan asked for `_pos`. */
+  private val needPos = !deleted.isEmpty || meta.contains(SnapshotV2Table.PosCol)
   private val posIdx = schema.length + eqAppend.length
   private val requested: StructType = {
     val withEq = eqAppend.foldLeft(schema)(_ add _)
@@ -319,42 +326,60 @@ private final class SnapshotColumnarFileReader(p: SnapshotFilePartition,
   }
 
   private var current: ColumnarBatch = _
-  private val needMask = needPos || eqChecks.nonEmpty
+  private val dvMask = !deleted.isEmpty
+  private val needMask = dvMask || eqChecks.nonEmpty
+  // `_file`: one value for every row (the row count only sizes
+  // struct children, so 1 serves any batch)
+  private val fileVec = new org.apache.spark.sql.execution.vectorized
+    .ConstantColumnVector(1, StringType)
+  fileVec.setUtf8String(UTF8String.fromString(p.baseName))
 
   override def next(): Boolean = {
     if (!reader.nextBatch()) return false
     val raw = reader.resultBatch()
     val n = raw.numRows()
     SnapshotPartitions.columnarRowsDecoded.add(n)
-    current = if (!needMask) raw else mask(raw, n)
+    current = if (!needMask && meta.isEmpty) raw else mask(raw, n)
     true
   }
 
   private def mask(raw: ColumnarBatch, n: Int): ColumnarBatch = {
-    val pos = if (needPos) raw.column(posIdx) else null // generated row index
+    if (!needMask) return emit(raw, identity, n)
+    val pos = if (dvMask) raw.column(posIdx) else null // generated row index
     var j = 0
     while (j < eqChecks.length) { eqChecks(j).bind(raw); j += 1 }
     var live = 0
     val map = new Array[Int](n)
     var i = 0
     while (i < n) {
-      val dead = (needPos && deleted.contains(pos.getLong(i))) ||
+      val dead = (dvMask && deleted.contains(pos.getLong(i))) ||
         (eqChecks.length != 0 && eqDeletes(i))
       if (!dead) { map(live) = i; live += 1 }
       i += 1
     }
-    if (live == n) // nothing deleted in range: just strip the extra cols
-      return new ColumnarBatch(
-        Array.tabulate[ColumnVector](schema.length)(raw.column), n)
-    val vecs = Array.tabulate[ColumnVector](schema.length)(c =>
-      new PositionMaskedColumnVector(raw.column(c), map, live))
+    if (live == n) emit(raw, identity, n) // nothing deleted in range
     // a fully-deleted batch legally emits 0 rows; consumers skip it
-    new ColumnarBatch(vecs, live)
+    else emit(raw, new PositionMaskedColumnVector(_, map, live), live)
+  }
+
+  /** The output batch: the data columns and `_pos` seen through
+    * `view`, `_file` as the file's constant — appended key and
+    * row-index columns the scan did not ask for are stripped. */
+  private def emit(raw: ColumnarBatch, view: ColumnVector => ColumnVector,
+                   rows: Int): ColumnarBatch = {
+    val vecs = new Array[ColumnVector](schema.length + meta.length)
+    var c = 0
+    while (c < schema.length) { vecs(c) = view(raw.column(c)); c += 1 }
+    meta.zipWithIndex.foreach { case (m, j) =>
+      vecs(schema.length + j) =
+        if (m == SnapshotV2Table.FileCol) fileVec else view(raw.column(posIdx))
+    }
+    new ColumnarBatch(vecs, rows)
   }
 
   override def get(): ColumnarBatch = current
 
-  override def close(): Unit = reader.close()
+  override def close(): Unit = { reader.close(); fileVec.close() }
 }
 
 private object SnapshotColumnarFileReader {

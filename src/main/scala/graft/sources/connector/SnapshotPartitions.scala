@@ -27,20 +27,17 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.sources.SnapshotTable.FileEntry
 
 /** Executor-side row production for the V2 connector: one partition
-  * per manifest file, each read with a self-contained parquet-hadoop
-  * reader (record-assembly API — no nested Spark job, no driver
-  * round-trip). Column pruning reaches the parquet layer as a
-  * projection `MessageType`, so unrequested columns are never
-  * decoded; columns a file predates (schema evolution) surface as
-  * null; deletion-vector positions are subtracted row-by-row exactly
-  * as `SnapshotTable.scan`'s anti-join does.
-  *
-  * The readers deliberately trade the vectorized reader's throughput
-  * for zero dependence on Spark's internal parquet classes — the
-  * connector is the declarative/planning surface; bulk reads go
-  * through `SnapshotTable.scan`. Scale shape is unchanged either way:
-  * partitions = files, no shuffle, dv sidecars are tiny and loaded
-  * per-file (positions of DELETED rows only).
+  * per manifest file. Projections with data columns read vectorized
+  * ([[SnapshotColumnarFileReader]]); the row reader here — a
+  * self-contained parquet-hadoop reader (record-assembly API, no
+  * nested Spark job, no driver round-trip) — serves empty and
+  * metadata-only projections, the change feed and streaming. Column
+  * pruning reaches the parquet layer as a projection `MessageType`, so
+  * unrequested columns are never decoded; columns a file predates
+  * (schema evolution) surface as null; deletion-vector positions are
+  * subtracted row-by-row. Scale shape: partitions = files, no shuffle,
+  * dv sidecars are tiny and loaded per-file (positions of DELETED rows
+  * only).
   */
 /** `eqDvUris`: pending EQUALITY-delete sidecars (resolved URIs). The
   * partition carries only the REFERENCES — the key sets themselves
@@ -130,10 +127,14 @@ final case class SnapshotBucketPartition(bucket: Int,
     new GenericInternalRow(Array[Any](bucket))
 }
 
+/** `schema` holds the requested DATA columns; `meta` names the
+  * requested metadata columns (`_file`/`_pos`), which every reader
+  * appends after them. */
 final class SnapshotReaderFactory(schema: StructType,
                                   filters: Seq[org.apache.spark.sql.sources.Filter] = Nil,
                                   eqBc: Option[org.apache.spark.broadcast
-                                    .Broadcast[Map[String, EqSidecar]]] = None)
+                                    .Broadcast[Map[String, EqSidecar]]] = None,
+                                  meta: Seq[String] = Nil)
   extends PartitionReaderFactory {
 
   /** SQLConf-derived parquet settings PLUS the driver's runtime
@@ -171,10 +172,11 @@ final class SnapshotReaderFactory(schema: StructType,
     p match {
       case m: MetadataAggPartition => new MetadataAggReader(m)
       case f: SnapshotFilePartition => new SnapshotFileReader(f, schema,
-        eqSkipOverride = Some(eqFor(f)), confExtra = sessionConf)
+        eqSkipOverride = Some(eqFor(f)), confExtra = sessionConf, meta = meta)
       case b: SnapshotBucketPartition => new ChainedPartitionReader(
         b.files.map(f => () => new SnapshotFileReader(f, schema,
-          eqSkipOverride = Some(eqFor(f)), confExtra = sessionConf)))
+          eqSkipOverride = Some(eqFor(f)), confExtra = sessionConf,
+          meta = meta)))
     }
 
   /** File partitions with a non-empty projection read VECTORIZED
@@ -183,9 +185,10 @@ final class SnapshotReaderFactory(schema: StructType,
     * pending EQUALITY deletes test the (appended) key columns'
     * vector values — the columnar verdict never flips on eq-pending
     * files, so a full scan mid-CDC keeps whole-stage codegen.
-    * An empty projection (pure row counting) stays on the row reader,
-    * which replays `liveRows` without opening the file at all (and,
-    * with eq refs pending, decodes just the key columns) — and a
+    * A projection without data columns (pure row counting, or only
+    * `_file`/`_pos`) stays on the row reader, which walks the live
+    * positions without opening the file at all (and, with eq refs
+    * pending, decodes just the key columns) — and a
     * metadata-agg scan plans exactly one [[MetadataAggPartition]], so
     * the all-or-nothing columnar contract holds per scan. */
   override def supportColumnarReads(p: InputPartition): Boolean = p match {
@@ -198,11 +201,12 @@ final class SnapshotReaderFactory(schema: StructType,
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     p match {
       case f: SnapshotFilePartition =>
-        new SnapshotColumnarFileReader(f, schema, sessionConf, filters, eqFor(f))
+        new SnapshotColumnarFileReader(f, schema, sessionConf, filters,
+          eqFor(f), meta)
       case b: SnapshotBucketPartition =>
         new ChainedPartitionReader(b.files.map(f =>
           () => new SnapshotColumnarFileReader(f, schema, sessionConf,
-            filters, eqFor(f))))
+            filters, eqFor(f), meta)))
       case other => throw new IllegalStateException(
         s"no columnar reader for $other")
     }
@@ -272,8 +276,9 @@ private object SnapshotFileReader {
   * the masking: `skipOverride` replaces the dv-derived skip set, and
   * `keepOnly` inverts the contract to "emit ONLY these positions"
   * (how a dv DELTA between two versions replays just the newly
-  * deleted/restored rows). `extra` values are appended verbatim to
-  * every emitted row (the feed's change_type / commit_version). */
+  * deleted/restored rows). `meta` metadata columns (`_file`, `_pos`)
+  * follow the data columns, and `extra` values are appended verbatim
+  * to every emitted row (the feed's change_type / commit_version). */
 private[connector] final class SnapshotFileReader(
     p: SnapshotFilePartition, schema: StructType,
     skipOverride: Option[java.util.HashSet[java.lang.Long]] = None,
@@ -281,7 +286,8 @@ private[connector] final class SnapshotFileReader(
     extra: Array[Any] = Array.empty,
     eqSkipOverride: Option[Seq[EqSidecar]] = None,
     eqKeepOnly: Option[(Seq[String], Seq[String])] = None,
-    confExtra: Map[String, String] = Map.empty)
+    confExtra: Map[String, String] = Map.empty,
+    meta: Seq[String] = Nil)
   extends PartitionReader[InternalRow] {
 
   // classpath defaults plus the factory's driver-captured overlay
@@ -327,9 +333,6 @@ private[connector] final class SnapshotFileReader(
       ks.foreach(s.add)
       cs -> s
     }
-
-  private val liveRows =
-    keepOnly.map(_.size.toLong).getOrElse(p.rows - deleted.size)
 
   /** (projection index or -1, converter) per requested field, bound
     * against this file's actual schema — -1 (column added after this
@@ -447,16 +450,17 @@ private[connector] final class SnapshotFileReader(
       .existenceDefaultValues(schema)
 
   private var pos = -1L // physical row index, dv positions' coordinate
-  private var emitted = 0L
   private var current: Group = _
+  private val fileName = UTF8String.fromString(p.baseName)
 
   override def next(): Boolean = reader match {
-    case None => // nothing to decode; emit liveRows empty/null rows
+    case None => // nothing to decode: walk the live positions
       // keep-only over a projectionless read (the keyed column — and
       // every requested one — predates this file): nothing can match
       if (eqKeepChecker.contains(None)) return false
-      if (emitted >= liveRows) false
-      else { emitted += 1; true }
+      pos += 1
+      while (pos < p.rows && !emits(pos)) pos += 1
+      pos < p.rows
     case Some(r) =>
       var g = r.read()
       pos += 1
@@ -473,7 +477,8 @@ private[connector] final class SnapshotFileReader(
         if (idx < 0 || current == null) existsDefaults(i)
         else if (current.getFieldRepetitionCount(idx) == 0) null
         else conv(current, idx)
-    } ++ extra)
+    } ++ meta.map[Any](m => if (m == SnapshotV2Table.FileCol) fileName else pos)
+      ++ extra)
 
   override def close(): Unit = reader.foreach(_.close())
 
@@ -512,7 +517,7 @@ private[connector] final class SnapshotFileReader(
       val inner = gt.getType(0).asGroupType() // the repeated "list" group
       require(inner.getFieldCount == 1,
         s"graft_snapshot: array column '$name' is not a standard " +
-          "3-level parquet LIST; read via SnapshotTable.scan")
+          "3-level parquet LIST; read it with a batch scan")
       val elemConv = converter(et, inner.getType(0).asPrimitiveType(),
         s"$name.element")
       (g, i) => {
@@ -531,8 +536,8 @@ private[connector] final class SnapshotFileReader(
     case (d, pt: PrimitiveType) => converter(d, pt, name)
     case (d, other) => throw new UnsupportedOperationException(
       s"graft_snapshot: column '$name' ${d.simpleString} stored as " +
-        s"$other is outside the connector's type surface; read via " +
-        "SnapshotTable.scan")
+        s"$other is outside the row readers' type surface; read it with " +
+        "a batch scan")
   }
 
   /** Physical parquet value → Spark internal value for one primitive
@@ -576,7 +581,7 @@ private[connector] final class SnapshotFileReader(
         }
       case (d, phys) => throw new UnsupportedOperationException(
         s"graft_snapshot: column '$name' ${d.simpleString} stored as $phys " +
-          "is outside the connector's type surface; read via SnapshotTable.scan")
+          "is outside the row readers' type surface; read it with a batch scan")
     }
   }
 }
@@ -837,14 +842,17 @@ private[graft] object SnapshotPartitions {
       * scan's files reference — the executor-side lookup behind
       * [[SnapshotReaderFactory.eqFor]]. None when nothing is pending
       * (the overwhelmingly common case — zero broadcast overhead).
-      * Re-checks the per-file key cap ([[overCap]]) and refuses loudly
-      * past it. */
-    def broadcastFor(dir: String, files: Seq[FileEntry])
+      * With `enforceCap`, re-checks the per-file key cap ([[overCap]])
+      * and refuses loudly past it. */
+    def broadcastFor(dir: String, files: Seq[FileEntry], enforceCap: Boolean = true)
         : Option[org.apache.spark.broadcast.Broadcast[Map[String, EqSidecar]]] = {
       val withRefs = files.filter(_.eqDv.nonEmpty)
       if (withRefs.isEmpty) return None
-      val data = loadAll(dir, withRefs)
-      overCap(dir, withRefs, data).foreach { case (fe, exact) =>
+      val data = withRefs.flatMap(_.eqDv).distinct.map { p =>
+        val uri = SnapshotTable.resolvePath(dir, p)
+        uri -> load(uri)
+      }.toMap
+      if (enforceCap) overCap(dir, withRefs, data).foreach { case (fe, exact) =>
         throw new IllegalArgumentException(
           s"${fe.path} carries $exact pending equality-delete keys — " +
             "too many to mask at read; run purge_deletes (or compact) " +
@@ -853,23 +861,6 @@ private[graft] object SnapshotPartitions {
       Some(org.apache.spark.sql.SparkSession.active.sparkContext
         .broadcast(data))
     }
-
-    /** True when [[broadcastFor]] would accept `files`: no file's
-      * pending keys exceed the cap. Loads (and caches) the sidecars a
-      * scan of them broadcasts. `SnapshotTable.readFiles` asks before
-      * routing a read through the connector, so the folds the refusal
-      * names (purge, compact) still read an over-cap file. */
-    def withinCap(dir: String, files: Seq[FileEntry]): Boolean = {
-      val withRefs = files.filter(_.eqDv.nonEmpty)
-      withRefs.isEmpty || overCap(dir, withRefs, loadAll(dir, withRefs)).isEmpty
-    }
-
-    private def loadAll(dir: String, withRefs: Seq[FileEntry])
-        : Map[String, EqSidecar] =
-      withRefs.flatMap(_.eqDv).distinct.map { p =>
-        val uri = SnapshotTable.resolvePath(dir, p)
-        uri -> load(uri)
-      }.toMap
 
     /** The first file whose pending keys exceed [[MaxPendingKeys]],
       * with its exact merged count. The check sums the refs' sizes —

@@ -198,21 +198,33 @@ class ConnectorSpec extends SparkTestBase {
     assert(joined.count() == 200000)
   }
 
-  test("projection prunes away columns the readers cannot materialize") {
+  test("batch scans read structs; stream readers refuse them") {
     val dir = freshDir()
-    // STRUCT columns stay outside the readable surface (primitive
-    // ARRAYS joined it in round 16)
+    // STRUCT columns stay outside the streaming (row) readers' surface;
+    // the batch scan reads them vectorized (primitive ARRAYS joined
+    // both in round 16)
     SnapshotTable.write(spark,
       spark.range(0, 10).select($"id",
         struct($"id".as("a"), ($"id" + 1).as("b")).as("st")),
       dir, "overwrite")
-    // full read trips the type whitelist...
-    val e = intercept[UnsupportedOperationException](load(dir).collect())
-    assert(e.getMessage.contains("st"))
-    // ...but pruning to readable columns never touches the struct
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    val e = intercept[Exception] {
+      spark.readStream.format("graft_snapshot").load(dir)
+        .writeStream.format("memory").queryName("conn_st_stream")
+        .option("checkpointLocation",
+          Files.createTempDirectory("graft-conn-ckpt").toString)
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    }
+    assert(msgs(e).exists(m => m.contains("'st'") && m.contains("primitive")),
+      msgs(e))
+    // pruning to primitive columns never touches the struct
     assert(load(dir).select("id").as[Long].collect().sorted.toSeq ==
       (0L until 10L))
-    // empty projection still counts rows (per-partition liveRows replay)
+    // the batch scan reads the struct whole
+    assert(load(dir).select(sum($"st.b")).as[Long].collect().head ==
+      (1L to 10L).sum)
+    // empty projection still counts rows (the row reader walks positions)
     assert(load(dir).select(lit(1).as("one")).agg(sum("one")).as[Long]
       .collect().head == 10L)
     // primitive arrays are INSIDE the surface now — full read works
@@ -1306,6 +1318,160 @@ class ConnectorSpec extends SparkTestBase {
     SnapshotTable.mergeVectors(spark, dir,
       Seq((3L, 30L), (7L, 70L)).toDF("id", "v"), "id")
     assert(SnapshotTable.scan(spark, dir).filter($"v" >= 30).count() == 2)
+  }
+
+  test("a duplicate position in a historical dv sidecar does not fail later MERGEs") {
+    import SnapshotTable.{MergeRowAction, MergeWhenClause}
+    val dir = freshDir()
+    SnapshotTable.write(spark,
+      spark.range(0, 10).select($"id", ($"id" * 10).as("v")).coalesce(1),
+      dir, "overwrite")
+    val v1 = SnapshotTable.latestVersion(spark, dir).get
+    val fe = SnapshotTable.readManifest(spark, dir, v1).files.head
+    val base = new org.apache.hadoop.fs.Path(fe.path).getName
+    // a hand-written sidecar (an older or external writer) holding
+    // position 2 twice; one file, so position = id
+    val fsPath = new org.apache.hadoop.fs.Path(dir)
+    val fs = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = s"$dir/.handmade-dv"
+    Seq((base, 2L), (base, 2L), (base, 5L)).toDF("file", "pos").coalesce(1)
+      .write.parquet(tmp)
+    val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp)).map(_.getPath)
+      .find(_.getName.endsWith(".parquet")).get
+    val rel = "data/dv-handmade.parquet"
+    assert(fs.rename(part, new org.apache.hadoop.fs.Path(dir, rel)))
+    SnapshotTable.commitAdded(spark, dir, "delete-dv",
+      Seq(fe.copy(dv = Some((rel, 2L)))), carry = false,
+      schemaJson = SnapshotTable.tableSchema(spark, dir, v1).map(_.json))
+    assert(SnapshotTable.scan(spark, dir).count() == 8)
+    def update(src: DataFrame): Long =
+      SnapshotTable.mergeClauses(spark, dir, src, "id", $"k",
+        matched = Seq(MergeWhenClause(None,
+          MergeRowAction.Update(Seq("v" -> $"nv")))),
+        notMatched = Nil)
+    // a MERGE matching one other row succeeds...
+    update(Seq((7L, 700L)).toDF("k", "nv"))
+    val m = SnapshotTable.readManifest(spark, dir,
+      SnapshotTable.latestVersion(spark, dir).get)
+    val dv = m.files.find(_.path == fe.path).flatMap(_.dv).get
+    // ...and writes each deleted position once: 2, 5 and 7
+    assert(dv._2 == 3L)
+    assert(spark.read.parquet(s"$dir/${dv._1}").as[(String, Long)].collect()
+      .sortBy(_._2).toSeq == Seq((base, 2L), (base, 5L), (base, 7L)))
+    assert(SnapshotTable.scan(spark, dir).as[(Long, Long)].collect()
+      .sortBy(_._1).toSeq ==
+      Seq(0L, 1L, 3L, 4L, 6L, 7L, 8L, 9L).map(i => (i, if (i == 7) 700L else i * 10)))
+    // two source images of one key still raise
+    val e = intercept[IllegalArgumentException](
+      update(Seq((8L, 1L), (8L, 2L)).toDF("k", "nv")))
+    assert(e.getMessage.contains("cardinality"))
+    assert(SnapshotTable.scan(spark, dir).filter($"id" === 8).as[(Long, Long)]
+      .collect().toSeq == Seq((8L, 80L)))
+  }
+
+  test("metadata columns: _file/_pos are Spark's file basename and row index, DV-masked") {
+    val dir = freshDir()
+    SnapshotTable.write(spark,
+      spark.range(0, 3000).select($"id", ($"id" % 7).as("m")).repartition(3),
+      dir, "overwrite")
+    val paths = SnapshotTable.readManifest(spark, dir,
+      SnapshotTable.latestVersion(spark, dir).get).files
+      .map(fe => SnapshotTable.resolvePath(dir, fe.path))
+    // Spark's own coordinates for every row (no vector yet)
+    val spark0 = spark.read.parquet(paths: _*).select($"id",
+      element_at(split($"_metadata.file_path", "/"), -1).as("f"),
+      $"_metadata.row_index".as("p")).as[(Long, String, Long)].collect()
+    val coord = spark0.map(r => r._1 -> (r._2, r._3)).toMap
+    def triples(df: DataFrame) =
+      df.select($"id", $"_file", $"_pos").as[(Long, String, Long)].collect()
+    assert(triples(load(dir)).sortBy(_._1).toSeq == spark0.sortBy(_._1).toSeq)
+    // dv-deleted positions never appear; the rest keep their coordinates
+    SnapshotTable.deleteVectors(spark, dir, $"m" === 3)
+    val after = triples(load(dir))
+    assert(after.length == spark0.count(_._1 % 7 != 3))
+    assert(after.forall(t => t._1 % 7 != 3 && coord(t._1) == (t._2, t._3)))
+    // a projection of only the metadata columns reads on the row reader
+    val metaOnly = load(dir).select($"_file", $"_pos")
+    val f = scanOf(metaOnly).createReaderFactory()
+    assert(!scanOf(metaOnly).planInputPartitions().exists(f.supportColumnarReads))
+    assert(metaOnly.as[(String, Long)].collect().sorted.toSeq ==
+      after.map(t => (t._2, t._3)).sorted.toSeq)
+    // a data column named _pos keeps its name; the metadata column is
+    // renamed and metadataColumn still finds it, so DML works there too
+    val sdir = freshDir()
+    SnapshotTable.write(spark,
+      spark.range(0, 3).select($"id", ($"id" + 10).as("_pos")).coalesce(1),
+      sdir, "overwrite")
+    val shadowed = load(sdir)
+    assert(shadowed.select($"_pos", shadowed.metadataColumn("_pos"))
+      .as[(Long, Long)].collect().sorted.toSeq == Seq((10L, 0L), (11L, 1L), (12L, 2L)))
+    SnapshotTable.deleteVectors(spark, sdir, $"id" === 1)
+    assert(SnapshotTable.scan(spark, sdir).select($"_pos").as[Long].collect()
+      .sorted.toSeq == Seq(10L, 12L))
+  }
+
+  test("metadata columns on a bucketed table: each chained file reader names its own file") {
+    val root = Files.createTempDirectory("graft-catmeta").toString
+    spark.conf.set("spark.sql.catalog.graftcatmeta",
+      classOf[graft.sources.connector.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graftcatmeta.root", root)
+    spark.sql("CREATE TABLE graftcatmeta.t (k BIGINT, v BIGINT) " +
+      "PARTITIONED BY (bucket(4, k))")
+    spark.sql("INSERT INTO graftcatmeta.t SELECT id, id * 3 FROM range(0, 400)")
+    spark.sql("INSERT INTO graftcatmeta.t SELECT id, id * 3 FROM range(400, 600)")
+    val dir = s"$root/t"
+    SnapshotTable.deleteVectors(spark, dir, $"v" % 10 === 0)
+    val files = SnapshotTable.readManifest(spark, dir,
+      SnapshotTable.latestVersion(spark, dir).get).files
+    val coord = spark.read.parquet(
+        files.map(fe => SnapshotTable.resolvePath(dir, fe.path)): _*)
+      .select($"k", element_at(split($"_metadata.file_path", "/"), -1).as("f"),
+        $"_metadata.row_index".as("p"))
+      .as[(Long, String, Long)].collect().map(r => r._1 -> (r._2, r._3)).toMap
+    withSQLConf("spark.sql.sources.v2.bucketing.enabled" -> "true") {
+      val full = load(dir).select($"k", $"_file", $"_pos")
+      // key-grouped partitions chain several files each
+      assert(scanOf(full).planInputPartitions().exists {
+        case b: graft.sources.connector.SnapshotBucketPartition => b.files.size > 1
+        case _ => false
+      })
+      val rows = full.as[(Long, String, Long)].collect()
+      assert(rows.length == 540)
+      assert(rows.forall(r => r._1 * 3 % 10 != 0 && coord(r._1) == (r._2, r._3)))
+      assert(rows.map(_._2).distinct.length == files.size)
+      // the row reader chains the same way
+      assert(load(dir).select($"_file", $"_pos").as[(String, Long)].collect()
+        .sorted.toSeq == rows.map(r => (r._2, r._3)).sorted.toSeq)
+    }
+  }
+
+  test("the deleteVectors position scan reads through the connector, no anti-join") {
+    val dir = freshDir()
+    SnapshotTable.write(spark,
+      spark.range(0, 2000).select($"id", ($"id" % 5).as("m")).repartition(2),
+      dir, "overwrite")
+    // a prior vector: the masked files' scan is what a second delete runs
+    SnapshotTable.deleteVectors(spark, dir, $"m" === 1)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(fn: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(fn: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    val drain = () => org.apache.spark.sql.graftbridge.Bridge
+      .drainListenerBus(spark.sparkContext)
+    drain()
+    spark.listenerManager.register(listener)
+    try { SnapshotTable.deleteVectors(spark, dir, $"m" === 2); drain() }
+    finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    val all = plans.asScala.toSeq
+    assert(all.exists(p => p.contains("BatchScan graft_snapshot")),
+      all.mkString("\n----\n"))
+    assert(!all.exists(_.contains("LeftAnti")), all.mkString("\n----\n"))
+    assert(SnapshotTable.scan(spark, dir).count() == 1200)
   }
 
   test("by-name writes get the same type gate as positional ones") {

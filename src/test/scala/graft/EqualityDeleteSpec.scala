@@ -449,8 +449,8 @@ class EqualityDeleteSpec extends SparkTestBase {
       "per-column masking over-deleted a tuple sibling")
     // ROW family (empty projection — pure count decodes only keys)
     assert(v2.count() == 4900)
-    // ANTI-JOIN family (the programmatic change feed's general diff
-    // reads masked files through readFiles' tuple anti-join)
+    // programmatic change feed (its general diff reads masked files
+    // through the connector's tuple mask at the pinned version)
     val head = SnapshotTable.latestVersion(spark, dir).get
     val feed = SnapshotTable.changes(spark, dir, preV, head)
     assert(feed.filter($"change_type" === "upsert").count() == 0)
@@ -571,7 +571,7 @@ class EqualityDeleteSpec extends SparkTestBase {
     // DAYS (what executor readers see in the parquet INT32), not the
     // yyyy-MM-dd string cast; a mismatch would silently un-delete
     // through one family and mask through another. Pin all of them:
-    // columnar (projection), row (pure count), anti-join (scan), and
+    // columnar (projection), row (pure count), scan (subset read), and
     // the composite (date, int) tuple.
     val dir = freshDir()
     val rows = spark.range(0, 1200).select(
@@ -587,7 +587,7 @@ class EqualityDeleteSpec extends SparkTestBase {
     assert(v2.select("day", "slot", "v")
       .filter($"day" === "2024-01-03").count() == 0) // columnar family
     assert(v2.count() == 1000)                        // row family
-    assert(SnapshotTable.scan(spark, dir).count() == 1000) // anti-join
+    assert(SnapshotTable.scan(spark, dir).count() == 1000) // scan
     // composite (date, int) tuple: only the exact tuple dies
     SnapshotTable.deleteByKeys(spark, dir, Seq("day", "slot"),
       Seq((java.sql.Date.valueOf("2024-01-01"), 4L)).toDF("day", "slot"))
