@@ -202,8 +202,8 @@ object ScaleBench {
     *     the runtime In-filter must execution-plan only the candidate
     *     files;
     *   - HONESTY ROW: the same full read through `SnapshotTable.scan`
-    *     (Spark's vectorized parquet path) vs the connector's
-    *     record-assembly readers — the connector is the
+    *     (Spark's own parquet scan for unmasked files) vs the
+    *     connector's vectorized file reader — the connector is the
     *     planning/declarative surface, not the bulk-throughput path. */
   private[graft] def connectorFamily(spark: SparkSession): String = {
     import graft.sources.SnapshotTable

@@ -1021,8 +1021,8 @@ object ParityQueries {
     // Snapshot table through the DataSource V2 CONNECTOR
     // (spark.read.format("graft_snapshot")): Catalyst pushes the range
     // filter into the scan, where manifest (min,max) stats skip whole
-    // files at planning time, and the connector's own row readers
-    // apply the deletion vector — this gate hash-checks that the
+    // files at planning time, and the connector's own file reader
+    // applies the deletion vector — this gate hash-checks that the
     // declarative path returns exactly what SQL says (ConnectorSpec
     // asserts the skipping/planning effects).
     "q6E_connector_scan" -> QueryDef(

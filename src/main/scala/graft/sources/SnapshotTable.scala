@@ -4496,7 +4496,7 @@ object SnapshotTable {
     * exactly the newly-deleted pre-images. That is O(one masked read
     * + key join) instead of the general two-sided whole-row EXCEPT
     * ALL — the same replay the SQL `.changes` surface does with its
-    * keepOnly readers. Every other difference (rewrites, dv changes,
+    * eqKeep reads. Every other difference (rewrites, dv changes,
     * multi-key-column eq deltas) goes through the general diff. */
   def changes(spark: SparkSession, dir: String, fromV: Long, toV: Long): DataFrame = {
     val from = readManifest(spark, dir, fromV)

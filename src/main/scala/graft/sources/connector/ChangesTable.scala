@@ -1,12 +1,14 @@
 package graft.sources.connector
 
-import org.apache.hadoop.conf.Configuration
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sources.SnapshotTable
@@ -59,7 +61,6 @@ object ChangesTable {
       throw new IllegalStateException(
         s"the change feed needs a schema-recording log under $dir " +
           "(legacy chain: rewrite via overwrite first)"))
-    GraftSnapshotSource.validateReadable(SnapshotTable.toPhysical(tableSchema))
     new SnapshotChangesTable(dir, tableSchema)
   }
 
@@ -89,40 +90,34 @@ object ChangesTable {
           // like its dv does. Partitions carry the sidecar REFS only —
           // readers resolve the merged key sets off the factory's one
           // broadcast per read (the same shape as the main scan); the
-          // keepOnly sets stay inline because they are epoch-sized
+          // eqKeep sets stay inline because they are epoch-sized
           // fresh-key deltas by construction.
-          def eqOf(fe: FileEntry): Seq[String] =
-            fe.eqDv.map(p => SnapshotTable.resolvePath(dir, p))
-          def part(fe: FileEntry, tpe: String,
-                   skipDv: Option[String],
+          def whole(fe: FileEntry) = SnapshotPartitions.partitionFor(dir, fe)
+          def part(file: SnapshotFilePartition, tpe: String,
                    keepFrom: Option[String] = None,
                    keepMinus: Option[String] = None,
-                   eqSkip: Seq[String] = Nil,
-                   eqKeepOnly: Option[(Seq[String], Seq[String])] = None) =
-            ChangeFilePartition(SnapshotTable.resolvePath(dir, fe.path),
-              new org.apache.hadoop.fs.Path(fe.path).getName, fe.rows,
-              skipDv.map(p => SnapshotTable.resolvePath(dir, p)),
+                   eqKeep: Option[EqSidecar] = None) =
+            ChangeFilePartition(file,
               keepFrom.map(p => SnapshotTable.resolvePath(dir, p)),
               keepMinus.map(p => SnapshotTable.resolvePath(dir, p)), tpe, v,
-              eqSkip, eqKeepOnly)
+              eqKeep)
           m.files.filterNot(fe => prevByPath.contains(fe.path)).foreach(fe =>
-            out += part(fe, "upsert", fe.dv.map(_._1), eqSkip = eqOf(fe)))
+            out += part(whole(fe), "upsert"))
           prev.filterNot(fe => curByPath.contains(fe.path)).foreach(fe =>
-            out += part(fe, "delete", fe.dv.map(_._1), eqSkip = eqOf(fe)))
+            out += part(whole(fe), "delete"))
           // same path, different vector: replay only the delta (rows
           // already equality-deleted at the PREVIOUS version never
           // re-emit — they were deleted then, not now)
           m.files.foreach { cur =>
             prevByPath.get(cur.path).foreach { old =>
               if (old.dv.map(_._1) != cur.dv.map(_._1)) {
+                val unvectored = whole(old).copy(dvUri = None)
                 if (cur.dv.isDefined) // newly-deleted = curDv \ oldDv
-                  out += part(cur, "delete", None,
-                    keepFrom = cur.dv.map(_._1), keepMinus = old.dv.map(_._1),
-                    eqSkip = eqOf(old))
+                  out += part(unvectored, "delete",
+                    keepFrom = cur.dv.map(_._1), keepMinus = old.dv.map(_._1))
                 if (old.dv.isDefined) // restored = oldDv \ curDv
-                  out += part(cur, "upsert", None,
-                    keepFrom = old.dv.map(_._1), keepMinus = cur.dv.map(_._1),
-                    eqSkip = eqOf(old))
+                  out += part(unvectored, "upsert",
+                    keepFrom = old.dv.map(_._1), keepMinus = cur.dv.map(_._1))
               }
               // same path, new equality-delete refs: the commit deleted
               // the rows matching the NEW keys (minus keys already
@@ -140,12 +135,12 @@ object ChangesTable {
                     .load(SnapshotTable.resolvePath(dir, pp)))
                   .groupBy(_.colNames)
                   .map { case (cs, ss) =>
-                    cs -> ss.flatMap(_.keys).distinct
-                      .filterNot(oldKeys.getOrElse(cs, Set.empty))
-                  }.filter(_._2.nonEmpty)
-                fresh.toSeq.sortBy(_._1.mkString(",")).foreach { case (cs, ks) =>
-                  out += part(cur, "delete", cur.dv.map(_._1),
-                    eqSkip = eqOf(old), eqKeepOnly = Some((cs, ks)))
+                    EqSidecar(ss.head.cols, ss.flatMap(_.keys).distinct
+                      .filterNot(oldKeys.getOrElse(cs, Set.empty)))
+                  }.filter(_.keys.nonEmpty)
+                fresh.toSeq.sortBy(_.colNames.mkString(",")).foreach { e =>
+                  out += part(whole(cur).copy(eqDvUris = whole(old).eqDvUris),
+                    "delete", eqKeep = Some(e))
                 }
               }
             }
@@ -157,20 +152,20 @@ object ChangesTable {
   }
 }
 
-/** One change-feed read unit: a data file replayed under a masking
-  * mode ([[SnapshotFileReader]]'s `skipOverride`/`keepOnly`) with the
-  * change metadata appended to every row. `eqSkipRefs` are pending
-  * equality-delete sidecar URIs — key sets resolve executor-side (off
-  * the batch scan's one broadcast, or loaded per partition in the
-  * streaming factory), never the task closure. */
-final case class ChangeFilePartition(fileUri: String, baseName: String,
-                                     rows: Long,
-                                     skipDvUri: Option[String],
+/** One change-feed read unit: a data file replayed through the
+  * connector's file reader ([[SnapshotColumnarFileReader]]) with the
+  * change metadata appended to every row. `file` names the vector and
+  * the pending equality-delete refs to SKIP, exactly as a table scan's
+  * partition does (key sets resolve executor-side — off the batch
+  * feed's one broadcast, or loaded per partition in the streaming
+  * factory — never the task closure); `keepFromUri` minus
+  * `keepMinusUri` (vector sidecars) and `eqKeep` (a commit's fresh
+  * keys) narrow the replay to just the rows a commit changed. */
+final case class ChangeFilePartition(file: SnapshotFilePartition,
                                      keepFromUri: Option[String],
                                      keepMinusUri: Option[String],
                                      changeType: String, version: Long,
-                                     eqSkipRefs: Seq[String] = Nil,
-                                     eqKeepOnly: Option[(Seq[String], Seq[String])] = None)
+                                     eqKeep: Option[EqSidecar] = None)
   extends InputPartition
 
 final class SnapshotChangesTable(dir: String, tableSchema: StructType)
@@ -285,7 +280,7 @@ final class ChangesScan(dir: String, tableSchema: StructType,
     // over cached manifests, so re-planning here to collect the
     // pending sidecar refs for the broadcast costs metadata only.
     val refs = ChangesTable.planChanges(SparkSession.active, dir, loV, hiV)
-      .flatMap(_.eqSkipRefs)
+      .flatMap(_.file.eqDvUris)
     new ChangesReaderFactory(SnapshotTable.toPhysical(tableSchema),
       SnapshotPartitions.EqSidecars.broadcastForUris(refs))
   }
@@ -394,52 +389,30 @@ final class ChangesMicroBatchStream(dir: String, tableSchema: StructType,
 }
 
 final class ChangesReaderFactory(physSchema: StructType,
-                                 eqBc: Option[org.apache.spark.broadcast
-                                   .Broadcast[Map[String, EqSidecar]]] = None)
+                                 eqBc: Option[Broadcast[Map[String, EqSidecar]]] = None)
   extends PartitionReaderFactory {
 
-  /** Driver-captured runtime hadoop-conf delta (round-18): the
-    * executor-side sidecar/dv loads below see object-store creds and
-    * custom fs impls applied to the session at runtime, same as the
-    * table scan factory — the factory is built on the driver. */
-  private val confExtra: Map[String, String] =
-    SnapshotPartitions.hadoopConfDelta().toMap
+  private val sessionConf = SnapshotPartitions.readerConf()
 
-  override def createReader(p: InputPartition): PartitionReader[org.apache.spark.sql.catalyst.InternalRow] = {
+  override def supportColumnarReads(p: InputPartition): Boolean = true
+
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    throw new IllegalStateException(s"no row reader for $p")
+
+  override def createColumnarReader(p: InputPartition): PartitionReader[ColumnarBatch] = {
     val c = p.asInstanceOf[ChangeFilePartition]
-    val conf = new Configuration()
-    confExtra.foreach { case (k, v) => conf.set(k, v) }
-    val skip = c.skipDvUri.map(u =>
-      SnapshotPartitions.positionsOf(conf, Some(u), c.baseName))
     val keep = c.keepFromUri.map { u =>
-      val s = SnapshotPartitions.positionsOf(conf, Some(u), c.baseName)
+      val conf = SnapshotPartitions.hadoopConf(sessionConf)
+      val s = SnapshotPartitions.positionsOf(conf, Some(u), c.file.baseName)
       c.keepMinusUri.foreach { m =>
-        s.removeAll(SnapshotPartitions.positionsOf(conf, Some(m), c.baseName))
+        s.removeAll(SnapshotPartitions.positionsOf(conf, Some(m), c.file.baseName))
       }
       s
     }
-    val eqSkip: Seq[EqSidecar] =
-      if (c.eqSkipRefs.isEmpty) Nil
-      else SnapshotPartitions.EqSidecars.mergedFor(c.eqSkipRefs, eqBc match {
-        // batch scans ship ONE broadcast (loud on a missed ref —
-        // silence would un-delete rows); streaming factories ship
-        // none and load per partition, executor-side and JVM-cached
-        case Some(bc) =>
-          val data = bc.value
-          u => data.getOrElse(u,
-            throw new IllegalStateException(
-              s"equality-delete sidecar $u is not in the feed's broadcast"))
-        case None =>
-          u => SnapshotPartitions.EqSidecars.loadLocal(conf, u)
-      })
-    new SnapshotFileReader(
-      SnapshotFilePartition(c.fileUri, c.baseName, c.rows, None),
-      physSchema,
-      skipOverride = skip.orElse(Some(new java.util.HashSet[java.lang.Long]())),
-      keepOnly = keep,
-      extra = Array(UTF8String.fromString(c.changeType), c.version),
-      eqSkipOverride = Some(eqSkip),
-      eqKeepOnly = c.eqKeepOnly,
-      confExtra = confExtra)
+    new SnapshotColumnarFileReader(c.file, physSchema, sessionConf, Nil,
+      SnapshotPartitions.EqSidecars.resolve(c.file.eqDvUris, eqBc, sessionConf),
+      keep = keep, eqKeep = c.eqKeep,
+      extra = Seq(StringType -> UTF8String.fromString(c.changeType),
+        LongType -> c.version))
   }
 }

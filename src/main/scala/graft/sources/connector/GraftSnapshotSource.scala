@@ -49,13 +49,13 @@ import graft.sources.SnapshotTable.{FileEntry, Manifest}
   *    set of files a range of versions APPENDED — the Delta-style
   *    "table as an exactly-once stream source".
   *
-  * The readers ([[SnapshotPartitions]]) are self-contained (no nested
-  * Spark jobs), mask deletion vectors and pending equality deletes
-  * in-reader, and prune columns at the parquet projection level. Batch
-  * scans read vectorized and take every column type Spark's parquet
-  * reader decodes (decimal, struct, map, nested arrays, variant); the
-  * change-feed and micro-batch row readers keep to primitive and
-  * primitive-array columns. This is the table's ONE masking
+  * The one file reader ([[SnapshotColumnarFileReader]]) is
+  * self-contained (no nested Spark jobs), masks deletion vectors and
+  * pending equality deletes in-reader, and prunes columns at the
+  * parquet level. Batch scans, micro-batch streams and the change feed
+  * all read vectorized through it, so each takes every column type
+  * Spark's parquet reader decodes (decimal, struct, map, nested
+  * arrays, variant). This is the table's ONE masking
   * implementation: `SnapshotTable.scan` and the DML position scans
   * read masked files through it, the latter selecting the metadata
   * columns `_file` (data-file basename) and `_pos` (file-absolute row
@@ -184,30 +184,6 @@ object GraftSnapshotSource {
         m.copy(files = hit)
     }
   }
-
-  /** Column types the ROW readers (change feed, micro-batch stream)
-    * materialize: primitives and ARRAYS of primitives (an embedding
-    * corpus is a first-class connector table). The batch scan reads
-    * vectorized, so it takes every type Spark's parquet reader
-    * decodes. */
-  private def readablePrimitive(dt: DataType): Boolean = dt match {
-    case BooleanType | ByteType | ShortType | IntegerType | LongType |
-         FloatType | DoubleType | StringType | BinaryType | DateType |
-         TimestampType | TimestampNTZType => true
-    case _ => false
-  }
-
-  private[connector] def validateReadable(schema: StructType): Unit =
-    schema.fields.foreach { f =>
-      if (!(f.dataType match {
-            case ArrayType(et, _) => readablePrimitive(et)
-            case dt => readablePrimitive(dt)
-          }))
-        throw new UnsupportedOperationException(
-          s"graft_snapshot's row readers (change feed, streaming) take " +
-            s"primitive and primitive-array columns only; column " +
-            s"'${f.name}' has type ${f.dataType.simpleString} — select it away")
-    }
 }
 
 /** One snapshot table root exposed to the V2 catalog plumbing.
@@ -380,7 +356,6 @@ final class SnapshotV2Table(schema: StructType, dir: String,
         throw new IllegalStateException(
           s"the change feed needs a schema-recording log under $dir " +
             "(legacy chain: rewrite via overwrite first)"))
-      GraftSnapshotSource.validateReadable(SnapshotTable.toPhysical(tableSchema))
       return new ChangesScanBuilder(dir, tableSchema, options)
     }
     // catalog time travel (`VERSION AS OF` / `TIMESTAMP AS OF`) pins
@@ -836,10 +811,8 @@ final class SnapshotScan(private val dir: String, manifestF: () => Manifest,
 
   override def toBatch: Batch = this
 
-  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
-    GraftSnapshotSource.validateReadable(required)
+  override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
     new SnapshotMicroBatchStream(dir, physSchema(required), options)
-  }
 
   override def planInputPartitions(): Array[InputPartition] = agg match {
     case Some((schema, values)) =>
@@ -886,9 +859,8 @@ final class SnapshotScan(private val dir: String, manifestF: () => Manifest,
       // in-file row-group/page pruning rides the same skipping
       // filters, rewritten to the files' physical column names
       (skipping ++ runtimeSkipping).toSeq.map(SnapshotScan.mapAttrs(_, phys)),
-      // pending equality deletes mask inside BOTH reader families —
-      // the columnar readers test appended key-column vectors, so the
-      // columnar verdict never flips and a full scan mid-CDC keeps
+      // pending equality deletes mask in-reader — the reader tests
+      // appended key-column vectors, so a full scan mid-CDC keeps
       // whole-stage codegen. The key sets ship as ONE broadcast per
       // scan (tasks carry sidecar refs only); built over the STATIC
       // pruned set, a superset of anything runtime filters later keep

@@ -1,37 +1,34 @@
 package graft.sources.connector
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.TaskAttemptID
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFilters, ParquetReadSupport, VectorizedParquetRecordReader}
+import org.apache.spark.sql.execution.vectorized.{ColumnVectorUtils, ConstantColumnVector}
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarArray, ColumnarBatch, ColumnarMap}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Vectorized (ColumnarBatch-emitting) read path for the V2 connector:
-  * one [[VectorizedParquetRecordReader]] — Spark's own whole-stage-
-  * codegen-feeding parquet machinery — per manifest file, with the
-  * file's deletion vector applied IN-READER as a per-batch position
-  * mask. This retires the two measured tolls of round 11:
-  *
-  *  - the record-assembly row readers paid 1.31× over the vectorized
-  *    `SnapshotTable.scan` on a full read (SCALE_r11 "connector");
-  *    batches + codegen close that gap — the connector becomes the
-  *    full-fidelity-speed path, not just the planning surface.
-  *  - dv masking cost O(batch) bookkeeping inside the reader instead
-  *    of a per-query broadcast anti-join build — the real-format
-  *    "position bitmap skip" shape (cf. Delta deletion vectors,
-  *    Iceberg positional deletes, both of which filter inside the
-  *    vectorized batch).
+/** The V2 connector's one file reader — table scans, micro-batch
+  * streams and the change feed all read through it: one
+  * [[VectorizedParquetRecordReader]] — Spark's own whole-stage-
+  * codegen-feeding parquet machinery — per manifest file, so every
+  * column type Spark's parquet reader decodes (decimal, struct, map,
+  * nested arrays, variant, every timestamp encoding) reads here, with
+  * the file's deletion vector applied IN-READER as a per-batch
+  * position mask — O(batch) bookkeeping instead of a per-query
+  * broadcast anti-join build, the real-format "position bitmap skip"
+  * shape (cf. Delta deletion vectors, Iceberg positional deletes, both
+  * of which filter inside the vectorized batch).
   *
   * Schema evolution rides Spark's own clipping: the requested Spark
   * schema goes in via `ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA`,
-  * and columns a file predates surface as constant-null vectors —
-  * identical semantics to the row readers and to `mergeSchema`.
+  * and columns a file predates surface as constant-null vectors (or
+  * their exists-default) — the same semantics as `mergeSchema`.
   *
   * Masking strategy per batch of `n` rows: if no deleted position
   * falls in the batch's row-index range the batch passes through with
@@ -46,49 +43,53 @@ import org.apache.spark.unsafe.types.UTF8String
   * (round-13; previously the dv leg read every row group because a
   * running position counter demanded sequential reads).
   *
-  * Pending EQUALITY deletes mask here too (round-16; previously any
-  * eq-carrying file in the scan parked the WHOLE scan on row readers
-  * — the measured ~4.8× toll on "SELECT * while CDC is in flight"):
-  * key columns join the requested schema, each row's vector value
-  * probes a typed key set, and the same live-index map carries both
-  * verdicts. The columnar verdict is now scan-invariant.
+  * Pending EQUALITY deletes mask here too (round-16): key columns join
+  * the requested schema, each row's vector value probes a typed key
+  * set, and the same live-index map carries both verdicts.
+  *
+  * The change feed narrows the same mask with two KEEP predicates:
+  * `keep` emits only the listed positions (a vector delta between two
+  * versions), `eqKeep` only the rows matching one sidecar's keys (a
+  * commit's fresh equality deletes).
   *
   * Requested metadata columns (`meta`) trail the data columns: `_pos`
   * is the generated row-index vector (masked like any column), `_file`
   * one constant vector per file reader — so each reader a bucket
-  * partition chains emits its own file's name.
+  * partition chains emits its own file's name. `extra` constants (the
+  * feed's change_type / commit_version) trail those, the same way.
   */
 private final class SnapshotColumnarFileReader(p: SnapshotFilePartition,
                                                schema: StructType,
                                                sessionConf: Map[String, String],
                                                filters: Seq[Filter],
                                                eq: Seq[EqSidecar] = Nil,
-                                               meta: Seq[String] = Nil)
+                                               meta: Seq[String] = Nil,
+                                               keep: Option[java.util.HashSet[java.lang.Long]] = None,
+                                               eqKeep: Option[EqSidecar] = None,
+                                               extra: Seq[(DataType, Any)] = Nil)
   extends org.apache.spark.sql.connector.read.PartitionReader[ColumnarBatch] {
 
-  private val conf = new Configuration()
-  sessionConf.foreach { case (k, v) => conf.set(k, v) }
+  private val conf = SnapshotPartitions.hadoopConf(sessionConf)
   private val path = new Path(p.fileUri)
 
   /** Deleted row positions of THIS file (shared-sidecar entries for
-    * other files are filtered out) — same loading as the row reader. */
-  private val deleted = SnapshotPartitions.deletedPositions(conf, p)
+    * other files are filtered out). */
+  private val deleted = SnapshotPartitions.positionsOf(conf, p.dvUri, p.baseName)
 
-  /** Pending EQUALITY deletes: key columns not already in the output
-    * projection are APPENDED to the requested schema (typed from the
-    * sidecar, which records the table's key type at delete time) so
-    * their vectors are decodable for the mask, then stripped before
-    * the batch leaves — the same shape as the row reader's appended
-    * projection columns. A file that PREDATES a key column surfaces
-    * it as constant-null vectors, and null never matches a delete
-    * key. Composite sidecars append every member column; a column
+  /** Equality-delete key columns (pending deletes and the feed's keep
+    * sidecar) not already in the output projection are APPENDED to
+    * the requested schema (typed from the sidecar, which records the
+    * table's key type at delete time) so their vectors are decodable
+    * for the mask, then stripped before the batch leaves. A file that
+    * PREDATES a key column surfaces it as constant-null vectors, and
+    * null never matches a delete key. Composite sidecars append every member column; a column
     * shared by two sidecar signatures appends once (if their recorded
     * types differ — widening between delete epochs — the request uses
     * the first and the matcher binds to the DECODED vector type
     * anyway). */
   private val eqAppend: Seq[StructField] = {
     val seen = scala.collection.mutable.LinkedHashMap[String, String]()
-    eq.flatMap(_.cols).foreach { case (c, dtJson) =>
+    (eq ++ eqKeep).flatMap(_.cols).foreach { case (c, dtJson) =>
       if (!schema.fieldNames.contains(c) && !seen.contains(c))
         seen(c) = dtJson
     }
@@ -105,7 +106,8 @@ private final class SnapshotColumnarFileReader(p: SnapshotFilePartition,
     * skipping. The column is generated, not read — zero extra I/O —
     * and is stripped before the batch leaves this reader unless the
     * scan asked for `_pos`. */
-  private val needPos = !deleted.isEmpty || meta.contains(SnapshotV2Table.PosCol)
+  private val posMask = !deleted.isEmpty || keep.isDefined
+  private val needPos = posMask || meta.contains(SnapshotV2Table.PosCol)
   private val posIdx = schema.length + eqAppend.length
   private val requested: StructType = {
     val withEq = eqAppend.foldLeft(schema)(_ add _)
@@ -118,9 +120,9 @@ private final class SnapshotColumnarFileReader(p: SnapshotFilePartition,
     * vector indexes in the decoded batch. Single-column sidecars keep
     * the typed fast path: the key set converts ONCE (strings →
     * UTF8String / Long), so the per-row test is a hash probe on the
-    * vector's native value — no per-row stringification like the row
-    * readers pay. Matchers bind LAZILY to the DECODED vector's type,
-    * not the sidecar's attach-time dtJson: a lossless ALTER COLUMN
+    * vector's native value — no per-row stringification. Matchers
+    * bind LAZILY to the DECODED vector's type, not the sidecar's
+    * attach-time dtJson: a lossless ALTER COLUMN
     * widening after the delete (INT key → BIGINT) makes the projected
     * vector LongType while dtJson still says int — typing the probe
     * from dtJson would getInt a long vector (garbage / NPE, i.e.
@@ -140,7 +142,7 @@ private final class SnapshotColumnarFileReader(p: SnapshotFilePartition,
 
   private sealed trait EqBatchCheck {
     def bind(raw: ColumnarBatch): Unit
-    def dead(i: Int): Boolean
+    def matches(i: Int): Boolean
   }
 
   private final class SingleEqCheck(idx: Int, e: EqSidecar)
@@ -159,7 +161,7 @@ private final class SnapshotColumnarFileReader(p: SnapshotFilePartition,
           _ => EqVectorMatcher.of(v.dataType(), e.keys, e.cols.head._1))
           .asInstanceOf[EqVectorMatcher]
     }
-    def dead(i: Int): Boolean = !v.isNullAt(i) && m.matches(v, i)
+    def matches(i: Int): Boolean = !v.isNullAt(i) && m.matches(v, i)
   }
 
   private final class CompositeEqCheck(idxs: Array[Int], e: EqSidecar)
@@ -249,7 +251,7 @@ private final class SnapshotColumnarFileReader(p: SnapshotFilePartition,
         }
       }
     }
-    def dead(i: Int): Boolean = {
+    def matches(i: Int): Boolean = {
       var j = 0
       while (j < vs.length) {
         if (vs(j).isNullAt(i)) return false // null never matches a tuple
@@ -267,15 +269,17 @@ private final class SnapshotColumnarFileReader(p: SnapshotFilePartition,
     }
   }
 
-  private val eqChecks: Array[EqBatchCheck] = eq.map { e =>
-    if (e.single) new SingleEqCheck(idxOf(e.cols.head._1), e): EqBatchCheck
+  private def checkOf(e: EqSidecar): EqBatchCheck =
+    if (e.single) new SingleEqCheck(idxOf(e.cols.head._1), e)
     else new CompositeEqCheck(e.colNames.map(idxOf).toArray, e)
-  }.toArray
+
+  private val eqChecks: Array[EqBatchCheck] = eq.map(checkOf).toArray
+  private val keepCheck: EqBatchCheck = eqKeep.map(checkOf).orNull
 
   private def eqDeletes(i: Int): Boolean = {
     var j = 0
     while (j < eqChecks.length) {
-      if (eqChecks(j).dead(i)) return true
+      if (eqChecks(j).matches(i)) return true
       j += 1
     }
     false
@@ -311,7 +315,7 @@ private final class SnapshotColumnarFileReader(p: SnapshotFilePartition,
     val len = path.getFileSystem(conf).getFileStatus(path).getLen
     // rebase CORRECTED on both calendars: every snapshot-table file is
     // written by this engine (Spark 3+ proleptic Gregorian); convertTz
-    // null = no session-local shifting, matching the row readers
+    // null = no session-local shifting, as `spark.read.parquet` reads
     val r = new VectorizedParquetRecordReader(
       null, "CORRECTED", "UTC", "CORRECTED", "UTC", false, 4096)
     try {
@@ -326,34 +330,40 @@ private final class SnapshotColumnarFileReader(p: SnapshotFilePartition,
   }
 
   private var current: ColumnarBatch = _
-  private val dvMask = !deleted.isEmpty
-  private val needMask = dvMask || eqChecks.nonEmpty
-  // `_file`: one value for every row (the row count only sizes
-  // struct children, so 1 serves any batch)
-  private val fileVec = new org.apache.spark.sql.execution.vectorized
-    .ConstantColumnVector(1, StringType)
-  fileVec.setUtf8String(UTF8String.fromString(p.baseName))
+  private val needMask = posMask || eqChecks.nonEmpty || keepCheck != null
+  // `_file` and the `extra` constants: one value for every row (the
+  // row count only sizes struct children, so 1 serves any batch)
+  private def constant(dt: DataType, v: Any): ConstantColumnVector = {
+    val c = new ConstantColumnVector(1, dt)
+    ColumnVectorUtils.populate(c, new GenericInternalRow(Array(v)), 0)
+    c
+  }
+  private val fileVec = constant(StringType, UTF8String.fromString(p.baseName))
+  private val extraVecs = extra.map { case (dt, v) => constant(dt, v) }.toArray
 
   override def next(): Boolean = {
     if (!reader.nextBatch()) return false
     val raw = reader.resultBatch()
     val n = raw.numRows()
     SnapshotPartitions.columnarRowsDecoded.add(n)
-    current = if (!needMask && meta.isEmpty) raw else mask(raw, n)
+    current =
+      if (!needMask && meta.isEmpty && extraVecs.isEmpty) raw else mask(raw, n)
     true
   }
 
   private def mask(raw: ColumnarBatch, n: Int): ColumnarBatch = {
     if (!needMask) return emit(raw, identity, n)
-    val pos = if (dvMask) raw.column(posIdx) else null // generated row index
+    val pos = if (posMask) raw.column(posIdx) else null // generated row index
     var j = 0
     while (j < eqChecks.length) { eqChecks(j).bind(raw); j += 1 }
+    if (keepCheck != null) keepCheck.bind(raw)
     var live = 0
     val map = new Array[Int](n)
     var i = 0
     while (i < n) {
-      val dead = (dvMask && deleted.contains(pos.getLong(i))) ||
-        (eqChecks.length != 0 && eqDeletes(i))
+      val dead = (posMask && !livePos(pos.getLong(i))) ||
+        (eqChecks.length != 0 && eqDeletes(i)) ||
+        (keepCheck != null && !keepCheck.matches(i))
       if (!dead) { map(live) = i; live += 1 }
       i += 1
     }
@@ -362,24 +372,31 @@ private final class SnapshotColumnarFileReader(p: SnapshotFilePartition,
     else emit(raw, new PositionMaskedColumnVector(_, map, live), live)
   }
 
+  private val keepSet = keep.orNull
+  private def livePos(pos: Long): Boolean =
+    !deleted.contains(pos) && (keepSet == null || keepSet.contains(pos))
+
   /** The output batch: the data columns and `_pos` seen through
-    * `view`, `_file` as the file's constant — appended key and
-    * row-index columns the scan did not ask for are stripped. */
+    * `view`, `_file` and the `extra` values as constants — appended
+    * key and row-index columns the scan did not ask for are stripped. */
   private def emit(raw: ColumnarBatch, view: ColumnVector => ColumnVector,
                    rows: Int): ColumnarBatch = {
-    val vecs = new Array[ColumnVector](schema.length + meta.length)
+    val vecs = new Array[ColumnVector](schema.length + meta.length + extraVecs.length)
     var c = 0
     while (c < schema.length) { vecs(c) = view(raw.column(c)); c += 1 }
     meta.zipWithIndex.foreach { case (m, j) =>
       vecs(schema.length + j) =
         if (m == SnapshotV2Table.FileCol) fileVec else view(raw.column(posIdx))
     }
+    System.arraycopy(extraVecs, 0, vecs, schema.length + meta.length, extraVecs.length)
     new ColumnarBatch(vecs, rows)
   }
 
   override def get(): ColumnarBatch = current
 
-  override def close(): Unit = { reader.close(); fileVec.close() }
+  override def close(): Unit = {
+    reader.close(); fileVec.close(); extraVecs.foreach(_.close())
+  }
 }
 
 private object SnapshotColumnarFileReader {

@@ -835,7 +835,7 @@ private[sources] object SnapshotWriteSupport {
 
   def validate(schema: StructType, statsCols: Seq[String],
                bloomCols: Seq[String], ndvCols: Seq[String] = Nil): Unit = {
-    GraftSnapshotSource.validateReadable(schema)
+    messageTypeFor(schema) // refuses a type the writer cannot encode
     (statsCols.map(("statsCols", _)) ++ ndvCols.map(("ndvCols", _)))
       .foreach { case (what, c) =>
         val dt = schema.fields.find(_.name == c).map(_.dataType).getOrElse(

@@ -8,9 +8,9 @@ import graft.sources.SnapshotTable
 
 /** Primitive-array columns as first-class CONNECTOR types (round 16):
   * an embedding corpus reads and writes through the V2 surface — SQL
-  * CREATE TABLE ... ARRAY<FLOAT>, INSERT, batch scan (columnar AND
-  * row readers), dv/eq masking over array-carrying tables, and the
-  * change-feed stream that drives streaming ANN maintenance. */
+  * CREATE TABLE ... ARRAY<FLOAT>, INSERT, batch scan (with data
+  * columns and with none), dv/eq masking over array-carrying tables,
+  * and the change-feed stream that drives streaming ANN maintenance. */
 class ArraySurfaceSpec extends SparkTestBase {
   import spark.implicits._
 

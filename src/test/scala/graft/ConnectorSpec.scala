@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -198,36 +198,42 @@ class ConnectorSpec extends SparkTestBase {
     assert(joined.count() == 200000)
   }
 
-  test("batch scans read structs; stream readers refuse them") {
+  test("batch scans and streams read structs") {
     val dir = freshDir()
-    // STRUCT columns stay outside the streaming (row) readers' surface;
-    // the batch scan reads them vectorized (primitive ARRAYS joined
-    // both in round 16)
+    // STRUCT and DECIMAL columns read vectorized on every surface (the
+    // batch scan, and the micro-batch stream, which Spark builds
+    // without column pruning); primitive ARRAYS joined in round 16
     SnapshotTable.write(spark,
       spark.range(0, 10).select($"id",
+        ($"id" / 4).cast("decimal(18,4)").as("d"),
         struct($"id".as("a"), ($"id" + 1).as("b")).as("st")),
       dir, "overwrite")
-    def msgs(t: Throwable): Seq[String] =
-      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-    val e = intercept[Exception] {
-      spark.readStream.format("graft_snapshot").load(dir)
-        .writeStream.format("memory").queryName("conn_st_stream")
-        .option("checkpointLocation",
-          Files.createTempDirectory("graft-conn-ckpt").toString)
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
-    }
-    assert(msgs(e).exists(m => m.contains("'st'") && m.contains("primitive")),
-      msgs(e))
     // pruning to primitive columns never touches the struct
     assert(load(dir).select("id").as[Long].collect().sorted.toSeq ==
       (0L until 10L))
     // the batch scan reads the struct whole
     assert(load(dir).select(sum($"st.b")).as[Long].collect().head ==
       (1L to 10L).sum)
-    // empty projection still counts rows (the row reader walks positions)
+    // empty projection still counts rows (no data column decoded)
     assert(load(dir).select(lit(1).as("one")).agg(sum("one")).as[Long]
       .collect().head == 10L)
-    // primitive arrays are INSIDE the surface now — full read works
+    // a stream over the DV-masked table emits exactly the batch scan's
+    // live rows, on a selected column and on the full row
+    SnapshotTable.deleteVectors(spark, dir, $"st.a" % 3 === 0)
+    val live = load(dir).collect().sortBy(_.getLong(0)).toSeq
+    assert(live.map(_.getLong(0)) == Seq(1L, 2L, 4L, 5L, 7L, 8L))
+    def streamed(name: String, f: DataFrame => DataFrame): Seq[Row] = {
+      f(spark.readStream.format("graft_snapshot").load(dir))
+        .writeStream.format("memory").queryName(name)
+        .option("checkpointLocation",
+          Files.createTempDirectory("graft-conn-ckpt").toString)
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      spark.table(name).collect().toSeq.sortBy(_.getLong(0))
+    }
+    assert(streamed("conn_st_ids", _.select("id")).map(_.getLong(0)) ==
+      live.map(_.getLong(0)))
+    assert(streamed("conn_st_rows", identity) == live)
+    // primitive arrays read the same way
     val adir = freshDir()
     SnapshotTable.write(spark,
       spark.range(0, 10).select($"id", array($"id", $"id" + 1).as("arr")),
@@ -1390,10 +1396,11 @@ class ConnectorSpec extends SparkTestBase {
     val after = triples(load(dir))
     assert(after.length == spark0.count(_._1 % 7 != 3))
     assert(after.forall(t => t._1 % 7 != 3 && coord(t._1) == (t._2, t._3)))
-    // a projection of only the metadata columns reads on the row reader
+    // a projection of only the metadata columns reads columnar too,
+    // decoding no data column
     val metaOnly = load(dir).select($"_file", $"_pos")
     val f = scanOf(metaOnly).createReaderFactory()
-    assert(!scanOf(metaOnly).planInputPartitions().exists(f.supportColumnarReads))
+    assert(scanOf(metaOnly).planInputPartitions().forall(f.supportColumnarReads))
     assert(metaOnly.as[(String, Long)].collect().sorted.toSeq ==
       after.map(t => (t._2, t._3)).sorted.toSeq)
     // a data column named _pos keeps its name; the metadata column is
@@ -1439,7 +1446,7 @@ class ConnectorSpec extends SparkTestBase {
       assert(rows.length == 540)
       assert(rows.forall(r => r._1 * 3 % 10 != 0 && coord(r._1) == (r._2, r._3)))
       assert(rows.map(_._2).distinct.length == files.size)
-      // the row reader chains the same way
+      // a metadata-only projection chains the same way
       assert(load(dir).select($"_file", $"_pos").as[(String, Long)].collect()
         .sorted.toSeq == rows.map(r => (r._2, r._3)).sorted.toSeq)
     }
@@ -1491,6 +1498,40 @@ class ConnectorSpec extends SparkTestBase {
     spark.range(5, 8).select($"id".cast("double").as("v"), $"id")
       .write.format("graft_snapshot").mode("append").save(dir)
     assert(load(dir).count() == 8)
+  }
+
+  test("connector appends refuse struct and decimal columns before any task runs") {
+    val dir = freshDir()
+    SnapshotTable.write(spark, spark.range(0, 5).toDF(), dir, "overwrite")
+    val v0 = SnapshotTable.latestVersion(spark, dir)
+    val dataDir = new java.io.File(dir, "data")
+    def dataFiles = Option(dataDir.list()).map(_.toSet).getOrElse(Set.empty)
+    val files0 = dataFiles
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    Seq("st" -> struct($"id".as("a")), "d" -> $"id".cast("decimal(18,4)"))
+      .foreach { case (c, e) =>
+        val tasks = new java.util.concurrent.atomic.AtomicInteger(0)
+        val listener = new org.apache.spark.scheduler.SparkListener {
+          override def onTaskStart(
+              t: org.apache.spark.scheduler.SparkListenerTaskStart): Unit =
+            tasks.incrementAndGet()
+        }
+        val drain = () => org.apache.spark.sql.graftbridge.Bridge
+          .drainListenerBus(spark.sparkContext)
+        drain()
+        spark.sparkContext.addSparkListener(listener)
+        val err = try intercept[Exception](
+            spark.range(5, 8).select($"id", e.as(c))
+              .write.format("graft_snapshot").mode("append").save(dir))
+          finally { drain(); spark.sparkContext.removeSparkListener(listener) }
+        assert(msgs(err).exists(m => m.contains(s"'$c'") &&
+          m.contains("primitive")), msgs(err))
+        assert(tasks.get == 0, s"appending '$c' ran ${tasks.get} task(s)")
+        assert(dataFiles == files0, s"appending '$c' left files under data/")
+        assert(SnapshotTable.latestVersion(spark, dir) == v0)
+      }
+    assert(load(dir).count() == 5)
   }
 
   test("batch abort tolerates empty-partition messages and cleans staged files") {
@@ -2742,7 +2783,7 @@ class ConnectorSpec extends SparkTestBase {
       .map(r => (r.getLong(0), r.getLong(1))).toSeq ==
       Seq((1L, 7L), (2L, 7L), (3L, 30L)))
     // ADD COLUMNS … DEFAULT: rows in files that PREDATE the column
-    // read the exists-default, not null — across the row reader, the
+    // read the exists-default, not null — across the plain read, the
     // dv-masked path, and time travel
     spark.sql("CREATE TABLE graftdflt.e (k BIGINT)")
     spark.sql("INSERT INTO graftdflt.e SELECT id FROM range(0, 100)")

@@ -692,11 +692,14 @@ class EqualityDeleteSpec extends SparkTestBase {
     val kIdx = schema.fieldIndex("k")
     var n = 0L
     parts.foreach { p =>
-      val r = factory.createReader(p)
+      val r = factory.createColumnarReader(p)
       try while (r.next()) {
-        val k = r.get().getLong(kIdx)
-        assert(k >= 100, s"masked key $k leaked through the factory")
-        n += 1
+        val rows = r.get().rowIterator()
+        while (rows.hasNext) {
+          val k = rows.next().getLong(kIdx)
+          assert(k >= 100, s"masked key $k leaked through the factory")
+          n += 1
+        }
       } finally r.close()
     }
     assert(n == 1900, s"initial-load batch emitted $n rows, want 1900")
