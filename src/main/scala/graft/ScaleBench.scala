@@ -210,8 +210,8 @@ object ScaleBench {
     import graft.sources.connector.ScanTelemetry
     val nFiles = sys.env.getOrElse("SPARK_GRAFT_CONN_FILES", "2048").toInt
     val rows = nFiles * 1000L
-    // v2 staging: the table records its schema in the log (a pre-schema
-    // staging would mask the planning-cost fix with the footer fallback)
+    // v2 staging: the table records its schema in the log, as every
+    // version must (a pre-schema staging refuses reads until upgrade)
     val dir = s"/tmp/graft-scale/connector2-$nFiles"
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     def timeSec(body: => Unit): Double = {
@@ -224,8 +224,9 @@ object ScaleBench {
         dir, "overwrite", Seq("id"))
     def conn = spark.read.format("graft_snapshot").load(dir)
 
-    // planning cost: the log-recorded schema vs the footer pass a
-    // schema-less log would force on every planned query
+    // planning cost: the log-recorded schema vs the footer pass
+    // `SnapshotTable.upgrade` pays ONCE on a pre-schema table (the
+    // `legacy_footer_plan_sec` row)
     val planSec = timeSec(conn.schema)
     val footerPassSec = timeSec {
       val m = SnapshotTable.readManifest(spark, dir,

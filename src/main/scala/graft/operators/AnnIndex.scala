@@ -94,15 +94,13 @@ object AnnIndex {
     * and only then deletes the older files, so a crash at ANY point
     * leaves at least one readable meta: the delete-then-rename window
     * of the old single-file scheme (crash ⇒ no meta at all ⇒ every
-    * refresh/search fails until a full rebuild) is gone. The legacy
-    * un-suffixed `_ann_meta.json` reads as seq 0. */
+    * refresh/search fails until a full rebuild) is gone. */
   private def metaCandidates(f: org.apache.hadoop.fs.FileSystem,
                              indexDir: String): Seq[(Long, Path)] = {
     val root = new Path(indexDir)
     if (!f.exists(root)) return Nil
     f.listStatus(root).toSeq.map(_.getPath).flatMap { p =>
       p.getName match {
-        case "_ann_meta.json" => Some((0L, p))
         case n if n.startsWith("_ann_meta-") && n.endsWith(".json") =>
           n.stripPrefix("_ann_meta-").stripSuffix(".json")
             .toLongOption.map((_, p))
@@ -199,8 +197,8 @@ object AnnIndex {
           node.get("idCol").asText(), node.get("vecCol").asText(),
           if (node.get("pqM") == null) None
           else Some((node.get("pqM").asInt(), node.get("pqKs").asInt()))))
-      } catch { // torn/garbage CONTENT (a writer died mid-write under a
-        // legacy un-suffixed name): fall through to the older candidate
+      } catch { // torn/garbage CONTENT (a writer died mid-create at its
+        // seq slot): fall through to the older candidate
         case _: com.fasterxml.jackson.core.JacksonException => None
         case _: NullPointerException => None // readable JSON, wrong shape
       }

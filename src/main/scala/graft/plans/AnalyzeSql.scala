@@ -71,7 +71,7 @@ case class AnalyzeSnapshotCommand(dir: String, noscan: Boolean,
       if (allColumns) {
         val v = SnapshotTable.latestVersion(spark, dir).get
         import org.apache.spark.sql.types._
-        SnapshotTable.tableSchema(spark, dir, v).toSeq.flatMap(_.fields)
+        SnapshotTable.tableSchema(spark, dir, v).fields.toSeq
           .filter(f => Seq(ByteType, ShortType, IntegerType, LongType,
             StringType).contains(f.dataType))
           .map(_.name)

@@ -439,17 +439,18 @@ object SnapshotTable {
 
   /** One commit file. `kind` "full": `files` IS the table. `kind`
     * "delta": the table is the previous version's list minus `remove`
-    * plus `files`. Pre-delta-log manifests carry no kind and parse as
-    * full. */
-  /** `schema` is the TABLE's logical schema (Spark StructType JSON)
-    * as of this version — stored on every commit like Delta's
+    * plus `files`.
+    *
+    * `schema` is the TABLE's logical schema (Spark StructType JSON)
+    * as of this version — recorded on every commit like Delta's
     * metaData action, so readers plan without a footer pass over the
     * file list (at 2k files that pass costs seconds of driver time
-    * PER QUERY; at 100 TB it is a non-starter). Append commits store
-    * the union of the previous schema and the batch's (evolution);
-    * absent on pre-schema manifests and on any union conflict, where
-    * readers fall back to the mergeSchema footer pass — the fallback
-    * is never wrong, only slower. */
+    * PER QUERY). Append commits store the union of the previous
+    * schema and the batch's (evolution); a same-name type conflict
+    * refuses the commit. It is an Option only because
+    * [[readManifest]] still parses entries written before schemas
+    * were recorded: [[tableSchemaJson]] refuses such a version, and
+    * [[upgrade]] re-commits the latest one with its footers' schema. */
   private[graft] final case class LogEntry(version: Long, op: String, ts: Long,
                                            kind: String, files: Seq[FileEntry],
                                            remove: Seq[String],
@@ -618,7 +619,9 @@ object SnapshotTable {
     val sn = root.path("schema") // absent on pre-schema manifests
     LogEntry(root.get("version").asLong, root.get("op").asText,
       root.path("ts").asLong(0L), // absent on pre-ts manifests
-      root.path("kind").asText("full"), // absent on pre-delta-log manifests
+      // absent only on pre-delta-log chains, which [[upgrade]] reads
+      // through readManifest
+      root.path("kind").asText("full"),
       parseFiles(root.get("files")), remove.result(),
       if (sn.isMissingNode) None else Some(sn.toString))
   }
@@ -762,42 +765,59 @@ object SnapshotTable {
     won
   }
 
-  /** Rebase-validate-publish commit (see protocol in the object doc).
-    * `added` are the txn's staged files; `removed` is the txn's
-    * file-level READ SET — each live file whose content the txn read
-    * and replaced, mapped to the deletion-vector ref the txn SAW on
-    * it (None = no vector; empty map for appends); `carry` says
-    * whether the rest of the current snapshot flows into the new
-    * manifest (false for overwrite/restore, which replace the whole
-    * list). Each attempt rebases onto the CURRENT newest manifest, so
-    * concurrent commits to disjoint files interleave losslessly. A
-    * conflict is a read-set entry whose file is now GONE from the
-    * snapshot **or carries a different dv ref** than the txn read —
-    * the dv check matters because a deletion-vector commit changes a
-    * file's logical content while keeping its path, so a path-only
-    * check would let a concurrent rewrite/dv-commit silently drop
-    * those deletions (a lost update). Throws
-    * [[CommitConflictException]]; returns the committed version. */
-  /** The table schema recorded in `version`'s commit entry, if that
-    * commit (and its union chain) recorded one. One small-file read —
-    * NO footer pass, no manifest resolution. */
-  private[graft] def tableSchemaJson(spark: SparkSession, dir: String,
-                                     version: Long): Option[String] = {
+  /** `version`'s commit entry's schema field, as written (None on an
+    * entry that predates recorded schemas). */
+  private def recordedSchemaJson(spark: SparkSession, dir: String,
+                                 version: Long): Option[String] = {
     val p = new Path(logDir(dir), manifestName(version))
     val f = fs(spark, p)
-    if (!f.exists(p)) None else parseEntry(readBytes(f, p)).schema
+    require(f.exists(p), s"no version $version under $dir")
+    parseEntry(readBytes(f, p)).schema
   }
+
+  /** The table schema recorded in `version`'s commit entry. One
+    * small-file read — NO footer pass, no manifest resolution. A
+    * version written before every commit recorded its schema refuses,
+    * naming [[upgrade]]. */
+  private[graft] def tableSchemaJson(spark: SparkSession, dir: String,
+                                     version: Long): String =
+    recordedSchemaJson(spark, dir, version).getOrElse(
+      throw new IllegalStateException(
+        s"version $version of $dir records no schema (it predates " +
+          "schema-recording commits): run CALL <catalog>.system.upgrade(" +
+          "'<table>') or SnapshotTable.upgrade(spark, dir) once, then retry"))
 
   /** [[tableSchemaJson]] as a StructType, every field forced nullable
     * (schema evolution surfaces missing columns as null, and reads
     * must never promise more than the files deliver). */
   private[graft] def tableSchema(spark: SparkSession, dir: String,
-                                 version: Long): Option[org.apache.spark.sql.types.StructType] =
-    tableSchemaJson(spark, dir, version).map { j =>
-      val st = org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      org.apache.spark.sql.types.StructType(st.fields.map(_.copy(nullable = true)))
-    }
+                                 version: Long): org.apache.spark.sql.types.StructType = {
+    val st = org.apache.spark.sql.types.DataType.fromJson(
+      tableSchemaJson(spark, dir, version))
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    org.apache.spark.sql.types.StructType(st.fields.map(_.copy(nullable = true)))
+  }
+
+  /** UPGRADE a table written before every commit recorded its schema:
+    * one mergeSchema footer pass over the latest version's files
+    * yields the schema, and the same file entries — deletion vectors
+    * and equality-delete refs untouched — re-commit as one full
+    * "upgrade" version that records it. Older versions keep refusing
+    * reads. A no-op returning the latest version when that version
+    * already records a schema. */
+  def upgrade(spark: SparkSession, dir: String): Long = {
+    val v = latestVersion(spark, dir).getOrElse(
+      throw new IllegalStateException(s"no committed version under $dir"))
+    if (recordedSchemaJson(spark, dir, v).isDefined) return v
+    val files = readManifest(spark, dir, v).files
+    // no files, no footers: the empty version records no columns
+    val schema =
+      if (files.isEmpty) new org.apache.spark.sql.types.StructType()
+      else spark.read.option("mergeSchema", "true")
+        .parquet(files.map(fe => resolvePath(dir, fe.path)): _*).schema
+    commit(spark, dir, "upgrade", files, schemaJson = Some(schema.json),
+      keepMapping = true, expectLatest = Some(v))
+  }
 
   /** Column mapping (RENAME COLUMN support): a renamed column's
     * StructField carries its PHYSICAL (as-written) name in metadata
@@ -818,11 +838,10 @@ object SnapshotTable {
     s.fields.exists(f => physicalName(f) != f.name)
 
   /** logical → physical column name per `schema` (identity when the
-    * column is unmapped or the schema unknown). */
-  private[graft] def physicalFor(schema: Option[org.apache.spark.sql.types.StructType],
+    * column is unmapped or absent). */
+  private[graft] def physicalFor(schema: org.apache.spark.sql.types.StructType,
                                  colName: String): String =
-    schema.flatMap(_.fields.find(_.name == colName)).map(physicalName)
-      .getOrElse(colName)
+    schema.fields.find(_.name == colName).map(physicalName).getOrElse(colName)
 
   /** The schema with every field renamed to its physical name — what
     * the data files actually contain. */
@@ -870,13 +889,11 @@ object SnapshotTable {
     * bucket/cluster/stats layout silently stops applying to every
     * later write (and `bucketLayout` would resolve to None). */
   private def followPropsAfterMappingDrop(
-      spark: SparkSession, dir: String,
-      prevSchemaJson: Option[String]): Unit = {
+      spark: SparkSession, dir: String, prevSchemaJson: String): Unit = {
     import org.apache.spark.sql.types.{DataType, StructType}
-    val prev = prevSchemaJson.map(j =>
-      DataType.fromJson(j).asInstanceOf[StructType])
-    if (!prev.exists(hasMapping)) return
-    val logicalFor: Map[String, String] = prev.get.fields
+    val prev = DataType.fromJson(prevSchemaJson).asInstanceOf[StructType]
+    if (!hasMapping(prev)) return
+    val logicalFor: Map[String, String] = prev.fields
       .map(f => physicalName(f) -> f.name).filter(p => p._1 != p._2).toMap
     val hconf = spark.sparkContext.hadoopConfiguration
     val props = graft.sources.connector.GraftTableProps.read(hconf, dir)
@@ -892,34 +909,54 @@ object SnapshotTable {
 
   /** Union-by-name for append-time schema evolution: previous fields
     * keep their order (they are the files read first), new-only
-    * fields append — the same order mergeSchema produces. A same-name
-    * type conflict returns None: the entry stores no schema and
-    * readers take the footer-pass fallback, which is authoritative.
-    * A new field whose name collides with a RENAMED column's physical
-    * name throws instead: files still carry data under that physical
-    * name, so the "new" column would silently resurrect the renamed
-    * column's old values in every pre-rename file. */
-  private def unionSchemaJson(prevJson: String, newJson: String): Option[String] = {
+    * fields append — the order a merged footer schema has. A same-name
+    * type conflict throws, naming the column: no recorded schema
+    * could describe both the old files and the new ones. A new field
+    * whose name collides with a RENAMED column's physical name throws
+    * too: files still carry data under that physical name, so the
+    * "new" column would silently resurrect the renamed column's old
+    * values in every pre-rename file. */
+  private def unionSchemaJson(prevJson: String, newJson: String): String = {
     import org.apache.spark.sql.types.{DataType, StructType}
     val prev = DataType.fromJson(prevJson).asInstanceOf[StructType]
     val next = DataType.fromJson(newJson).asInstanceOf[StructType]
     val prevByName = prev.fields.map(f => f.name -> f.dataType).toMap
-    val conflict = next.fields.exists(f =>
-      prevByName.get(f.name).exists(_ != f.dataType))
-    if (conflict) None
-    else {
-      val newFields = next.fields.filterNot(f => prevByName.contains(f.name))
-      val prevPhysical = prev.fields.map(physicalName).toSet -- prevByName.keySet
-      val clash = newFields.map(_.name).filter(prevPhysical.contains)
-      if (clash.nonEmpty) throw new IllegalArgumentException(
-        s"cannot add column(s) ${clash.mkString(", ")}: the name is the " +
-          "PHYSICAL name of a renamed column and existing files still " +
-          "carry its data — pick a different name (or add it via ALTER " +
-          "TABLE, which assigns a fresh physical name)")
-      Some(StructType(prev.fields ++ newFields).json)
-    }
+    val conflicts = next.fields.toSeq.flatMap(f =>
+      prevByName.get(f.name).filter(_ != f.dataType).map(t =>
+        s"'${f.name}' is ${t.simpleString} in the table but " +
+          s"${f.dataType.simpleString} in this write"))
+    if (conflicts.nonEmpty) throw new IllegalArgumentException(
+      s"schema conflict: column ${conflicts.mkString("; ")} — add an " +
+        "explicit CAST, or overwrite the table")
+    val newFields = next.fields.filterNot(f => prevByName.contains(f.name))
+    val prevPhysical = prev.fields.map(physicalName).toSet -- prevByName.keySet
+    val clash = newFields.map(_.name).filter(prevPhysical.contains)
+    if (clash.nonEmpty) throw new IllegalArgumentException(
+      s"cannot add column(s) ${clash.mkString(", ")}: the name is the " +
+        "PHYSICAL name of a renamed column and existing files still " +
+        "carry its data — pick a different name (or add it via ALTER " +
+        "TABLE, which assigns a fresh physical name)")
+    StructType(prev.fields ++ newFields).json
   }
 
+  /** Rebase-validate-publish commit (see protocol in the object doc).
+    * `added` are the txn's staged files; `removed` is the txn's
+    * file-level READ SET — each live file whose content the txn read
+    * and replaced, mapped to the deletion-vector ref the txn SAW on
+    * it (None = no vector; empty map for appends); `carry` says
+    * whether the rest of the current snapshot flows into the new
+    * manifest (false for overwrite/restore, which replace the whole
+    * list). Each attempt rebases onto the CURRENT newest manifest, so
+    * concurrent commits to disjoint files interleave losslessly. A
+    * conflict is a read-set entry whose file is now GONE from the
+    * snapshot **or carries a different dv ref** than the txn read —
+    * the dv check matters because a deletion-vector commit changes a
+    * file's logical content while keeping its path, so a path-only
+    * check would let a concurrent rewrite/dv-commit silently drop
+    * those deletions (a lost update). Throws
+    * [[CommitConflictException]]; returns the committed version.
+    * Every entry records a schema: a commit with none to record, or
+    * whose union with the previous one conflicts, refuses. */
   private def commit(spark: SparkSession, dir: String, op: String,
                      added: Seq[FileEntry],
                      removed: Map[String, Option[String]] = Map.empty,
@@ -965,27 +1002,28 @@ object SnapshotTable {
             s"${gone.mkString(", ")} after this $op read them")
       }
       val v = latest.getOrElse(0L) + 1
-      // schema chain: a fresh/overwritten table records the writer's
-      // schema; a carrying commit unions it with (or just carries) the
-      // previous version's — except replaceSchema commits (ALTER
-      // DROP/RENAME COLUMN), whose schema REPLACES the chain's (a
-      // union can only widen). A legacy previous entry (no schema)
-      // keeps the chain legacy — a stored schema must describe EVERY
-      // file.
-      val entrySchema: Option[String] =
+      // schema chain: every version records one. A fresh/overwritten
+      // table records the writer's schema; a carrying commit unions it
+      // with (or just carries) the previous version's — except
+      // replaceSchema commits (ALTER DROP/RENAME COLUMN), whose schema
+      // REPLACES the chain's (a union can only widen).
+      val entrySchema: String =
         if (replaceSchema) {
-          require(carry && incomingSchema.isDefined &&
-            latest.flatMap(tableSchemaJson(spark, dir, _)).isDefined,
-            "replaceSchema needs a carrying commit over a schema-recording chain")
-          incomingSchema
-        } else if (!carry || latest.isEmpty) incomingSchema
-        else latest.flatMap(tableSchemaJson(spark, dir, _)) match {
-          case None => None
-          case prev @ Some(p) => incomingSchema match {
-            case None => prev
-            case Some(n) => unionSchemaJson(p, n)
-          }
+          require(carry && incomingSchema.isDefined,
+            "replaceSchema needs a carrying commit with a schema")
+          incomingSchema.get
+        } else if (!carry || latest.isEmpty) incomingSchema.getOrElse(
+          throw new IllegalArgumentException(
+            s"$op on $dir records no schema: every version must record one"))
+        else {
+          val prev = tableSchemaJson(spark, dir, latest.get)
+          incomingSchema.fold(prev)(unionSchemaJson(prev, _))
         }
+      // an overwrite retires the previous schema's rename mapping; read
+      // it BEFORE publishing, so a pre-schema table refuses untouched
+      val retiredSchema =
+        if (carry || replaceSchema || keepMapping) None
+        else latest.map(tableSchemaJson(spark, dir, _))
       // overwrite/restore replace the whole list (naturally full), and
       // every CheckpointInterval-th version anchors the log so a cold
       // reader's backward fold is bounded; everything else commits the
@@ -994,18 +1032,16 @@ object SnapshotTable {
         if (!carry || v % CheckpointInterval == 0) {
           val outFiles = current.filterNot(fe => removed.contains(fe.path)) ++ added
           LogEntry(v, op, System.currentTimeMillis(), "full", outFiles, Nil,
-            entrySchema)
+            Some(entrySchema))
         } else
           LogEntry(v, op, System.currentTimeMillis(), "delta", added,
-            removed.keys.toSeq.sorted, entrySchema)
+            removed.keys.toSeq.sorted, Some(entrySchema))
       if (tryPublish(f, ld, entry)) {
         if (entry.kind == "full" && entry.files.size >= parquetAnchorMinFiles)
           writeParquetAnchor(spark, dir, entry)
         // a mapping-dropping overwrite retires the physical names; the
         // layout props that referenced them follow the rename
-        if (!carry && !replaceSchema && !keepMapping)
-          followPropsAfterMappingDrop(spark, dir,
-            latest.flatMap(tableSchemaJson(spark, dir, _)))
+        retiredSchema.foreach(followPropsAfterMappingDrop(spark, dir, _))
         return v
       }
       attempts += 1 // lost the slot race; rebase onto the winner and retry
@@ -1074,11 +1110,9 @@ object SnapshotTable {
       n <- props.get("buckets").map(_.toInt) if n > 0
       // bucketBy records the create-time (physical) name; resolve the
       // CURRENT logical field through the recorded schema
-      f <- latestVersion(spark, dir).flatMap(v => tableSchema(spark, dir, v))
-        .map(s => s.fields.find(x => physicalName(x) == c)
-          .orElse(s.fields.find(_.name == c)))
-        .getOrElse(Some(org.apache.spark.sql.types.StructField(c,
-          org.apache.spark.sql.types.NullType))) // schema-less: type unknowable
+      s <- latestVersion(spark, dir).map(v => tableSchema(spark, dir, v))
+      f <- s.fields.find(x => physicalName(x) == c)
+        .orElse(s.fields.find(_.name == c))
       if graft.sources.connector.GraftBucket.supports(f.dataType)
     } yield (f.name, n)
   }
@@ -1147,7 +1181,7 @@ object SnapshotTable {
     }
     val mapping: Map[String, String] =
       if (!applyMapping) Map.empty
-      else latestVersion(spark, dir).flatMap(v => tableSchema(spark, dir, v))
+      else latestVersion(spark, dir).map(v => tableSchema(spark, dir, v))
         .filter(hasMapping)
         .map(_.fields.map(f => f.name -> physicalName(f)).toMap
           .filter { case (l, p) => l != p })
@@ -1377,11 +1411,11 @@ object SnapshotTable {
       applyMapping = carry, bucketize = bucketLayout(spark, dir))
     // appends stage under the table's physical names (mapping from the
     // recorded schema); overwrites stage the writer's own (logical)
-    // names, so constraints bind without a mapping
+    // names, so constraints bind against the writer's schema
     enforceCheckConstraints(spark, dir, fresh,
-      if (carry) latestVersion(spark, dir)
-        .flatMap(v => tableSchema(spark, dir, v))
-      else None)
+      (if (carry) latestVersion(spark, dir) else None)
+        .map(v => tableSchema(spark, dir, v))
+        .getOrElse(stripMapping(df.schema)))
     commit(spark, dir, opTag.getOrElse(mode), fresh, carry = carry,
       schemaJson = Some(df.schema.json))
   }
@@ -1399,7 +1433,7 @@ object SnapshotTable {
     * physical-named staged files. */
   private def enforceCheckConstraints(
       spark: SparkSession, dir: String, entries: Seq[FileEntry],
-      known: Option[org.apache.spark.sql.types.StructType]): Unit = {
+      known: org.apache.spark.sql.types.StructType): Unit = {
     if (entries.isEmpty) return
     val checks = graft.sources.connector.GraftTableProps
       .read(spark.sparkContext.hadoopConfiguration, dir)
@@ -1446,7 +1480,7 @@ object SnapshotTable {
       val raw = spark.read.parquet(fresh.map(fe => resolvePath(dir, fe.path)): _*)
       val staged =
         if (mode != "append") raw
-        else latestVersion(spark, dir).flatMap(v => tableSchema(spark, dir, v))
+        else latestVersion(spark, dir).map(v => tableSchema(spark, dir, v))
           .filter(hasMapping)
           .map(s => raw.select(raw.columns.map { c =>
             val logical = s.fields.find(f => physicalName(f) == c)
@@ -1505,23 +1539,19 @@ object SnapshotTable {
   private def readSetOf(files: Seq[FileEntry]): Map[String, Option[String]] =
     files.map(fe => fe.path -> changeToken(fe)).toMap
 
-  /** `files` as a plain parquet read, NO masking: against `schema`
-    * when known (physical names aliased back to logical under column
-    * mapping), else the files' merged footer schema. */
+  /** `files` as a plain parquet read against the recorded `schema`,
+    * NO masking (physical names aliased back to logical under column
+    * mapping; columns a file lacks read as null). */
   private def readPlain(spark: SparkSession, dir: String, files: Seq[FileEntry],
-                        schema: Option[org.apache.spark.sql.types.StructType])
+                        schema: org.apache.spark.sql.types.StructType)
       : DataFrame = {
     val paths = files.map(fe => resolvePath(dir, fe.path))
-    schema match {
-      case Some(s) if hasMapping(s) =>
-        // column mapping: files store PHYSICAL names; read those and
-        // alias back to the logical schema
-        spark.read.schema(toPhysical(s)).parquet(paths: _*)
-          .select(s.fields.map(f =>
-            col(s"`${physicalName(f)}`").as(f.name)).toIndexedSeq: _*)
-      case Some(s) => spark.read.schema(s).parquet(paths: _*)
-      case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
-    }
+    if (!hasMapping(schema)) spark.read.schema(schema).parquet(paths: _*)
+    else // column mapping: files store PHYSICAL names; read those and
+      // alias back to the logical schema
+      spark.read.schema(toPhysical(schema)).parquet(paths: _*)
+        .select(schema.fields.map(f =>
+          col(s"`${physicalName(f)}`").as(f.name)).toIndexedSeq: _*)
   }
 
   /** Read `files` — entries of `version` — merge-on-read. Files with
@@ -1535,8 +1565,8 @@ object SnapshotTable {
     * (data file basename) and `__graft_pos` (file-absolute row index)
     * for callers that build NEW deletion vectors. */
   private def readFiles(spark: SparkSession, dir: String, files: Seq[FileEntry],
-                        version: Long, keepPos: Boolean = false,
-                        knownSchema: Option[org.apache.spark.sql.types.StructType] = None)
+                        version: Long, knownSchema: org.apache.spark.sql.types.StructType,
+                        keepPos: Boolean = false)
       : DataFrame = {
     import graft.sources.connector.{GraftSnapshotSource, SnapshotV2Table}
     val (viaConnector, plain) =
@@ -1547,34 +1577,28 @@ object SnapshotTable {
       .option(GraftSnapshotSource.FileSubsetOption,
         viaConnector.map(_.path).mkString(","))
       .load(dir)
-    val schema = knownSchema.getOrElse(leg.schema)
     // literal name references: col() would parse a dotted column name
     // as a nested field path
-    val data = schema.fieldNames.toSeq.map(n => col(s"`$n`"))
+    val data = knownSchema.fieldNames.toSeq.map(n => col(s"`$n`"))
     val masked = leg.select((if (!keepPos) data else data ++ Seq(
       leg.metadataColumn(SnapshotV2Table.FileCol).as("__graft_file"),
       leg.metadataColumn(SnapshotV2Table.PosCol).as("__graft_pos"))): _*)
     if (plain.isEmpty) masked
-    else readPlain(spark, dir, plain, Some(schema)).unionByName(masked)
+    else readPlain(spark, dir, plain, knownSchema).unionByName(masked)
   }
 
-  /** The table as of `version` (default: newest). Plans from the
-    * log-recorded schema when the commit chain carries one (no footer
-    * pass); an EMPTY version with a recorded schema reads as an empty
-    * typed DataFrame instead of erroring. */
+  /** The table as of `version` (default: newest), planned from the
+    * log-recorded schema (no footer pass): appends may add columns over
+    * the table's life, and older files surface them as null. An EMPTY
+    * version reads as an empty typed DataFrame. */
   def scan(spark: SparkSession, dir: String, version: Option[Long] = None): DataFrame = {
     val v = version.orElse(latestVersion(spark, dir)).getOrElse(
       throw new IllegalStateException(s"no committed version under $dir"))
     val m = readManifest(spark, dir, v)
     val known = tableSchema(spark, dir, v)
-    if (m.files.isEmpty)
-      return known.map(s => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s))
-        .getOrElse(throw new IllegalStateException(
-          s"version $v of $dir is empty and records no schema; cannot infer"))
-    // mergeSchema: appends may add columns over the table's life
-    // (schema evolution); older files surface the new columns as null.
-    readFiles(spark, dir, m.files, v, knownSchema = known)
+    if (m.files.isEmpty) spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], known)
+    else readFiles(spark, dir, m.files, v, knownSchema = known)
   }
 
   /** Range read with stats-based data skipping: only files whose
@@ -1692,8 +1716,8 @@ object SnapshotTable {
     * files rebase in and interleave losslessly.
     *
     * Schema evolution (`allowSchemaEvolution = true`): columns only in
-    * `updates` WIDEN the table (carried files surface them as null via
-    * the reader's mergeSchema); columns the updates lack keep the
+    * `updates` WIDEN the table (carried files read them as null under
+    * the recorded union schema); columns the updates lack keep the
     * target's value on matched rows — an update updates the columns it
     * carries, the `UPDATE SET *` semantics Delta's autoMerge gives.
     * Off by default: a misspelled column name should fail, not fork
@@ -1738,8 +1762,8 @@ object SnapshotTable {
     val rewrite = m.files.filter(fe => touched.contains(fe.path))
 
     // Schema evolution (opt-in): columns only in `updates` widen the
-    // table — carried files surface them as null through the reader's
-    // mergeSchema; columns the updates LACK keep the target's value on
+    // table — carried files read them as null under the recorded union
+    // schema; columns the updates LACK keep the target's value on
     // matched rows (an update updates the columns it carries — the
     // same semantics Delta's autoMerge gives UPDATE SET *).
     val tSchema = scan(spark, dir, Some(v)).schema
@@ -2288,13 +2312,13 @@ object SnapshotTable {
     * `e` ([[normCmp]]'s doc: needs no-null evidence). */
   private def provesAllRows(e: org.apache.spark.sql.catalyst.expressions.Expression,
                             fe: FileEntry,
-                            known: Option[org.apache.spark.sql.types.StructType])
+                            known: org.apache.spark.sql.types.StructType)
       : Boolean = {
     import org.apache.spark.sql.catalyst.expressions.Literal
     // nulls cannot lurk when the schema declares the column
     // non-nullable OR the file's writer recorded zero nulls in it
     def nonNull(name: String): Boolean =
-      known.exists(_.fields.exists(f => f.name == name && !f.nullable)) ||
+      known.fields.exists(f => f.name == name && !f.nullable) ||
         fe.noNulls.contains(physicalFor(known, name))
     def cmpAll(x: org.apache.spark.sql.catalyst.expressions.Expression): Boolean =
       normCmp(x).exists { nc =>
@@ -2334,7 +2358,7 @@ object SnapshotTable {
     * null evidence: null rows never satisfy a comparison). */
   private def refutesAllRows(e: org.apache.spark.sql.catalyst.expressions.Expression,
                              fe: FileEntry,
-                             known: Option[org.apache.spark.sql.types.StructType])
+                             known: org.apache.spark.sql.types.StructType)
       : Boolean = {
     import org.apache.spark.sql.catalyst.expressions.Literal
     def cmpNone(x: org.apache.spark.sql.catalyst.expressions.Expression): Boolean =
@@ -2416,7 +2440,7 @@ object SnapshotTable {
   private[graft] def replaceWhere(spark: SparkSession, dir: String,
                                   added: Seq[FileEntry],
                                   predicate: org.apache.spark.sql.Column,
-                                  schemaJson: Option[String],
+                                  schemaJson: String,
                                   validate: Boolean = false): Long = {
     // opt-in (round-18, Delta's replaceWhere constraint check): reject
     // the WHOLE write if any staged row does not satisfy the predicate
@@ -2428,8 +2452,11 @@ object SnapshotTable {
     // write path deletes the staged files.
     if (validate && added.nonEmpty) {
       import org.apache.spark.sql.functions.{coalesce, lit, not}
-      val known = latestVersion(spark, dir)
-        .flatMap(v => tableSchema(spark, dir, v))
+      import org.apache.spark.sql.types.{DataType, StructType}
+      // a first commit's staged files carry the writer's own names
+      val known = latestVersion(spark, dir).map(v => tableSchema(spark, dir, v))
+        .getOrElse(stripMapping(DataType.fromJson(schemaJson)
+          .asInstanceOf[StructType]))
       val bad = readPlain(spark, dir, added, known)
         .filter(not(coalesce(predicate, lit(false))))
         .limit(1).count()
@@ -2442,10 +2469,10 @@ object SnapshotTable {
     latestVersion(spark, dir) match {
       case None => // first commit: nothing to replace
         commitAdded(spark, dir, "overwrite", added, carry = false,
-          schemaJson = schemaJson)
+          schemaJson = Some(schemaJson))
       case Some(_) => retryOnConflict(s"replace-where on $dir") {
         deleteVectorsOnce(spark, dir, predicate, alsoAdd = added,
-          opName = "replace-where", schemaJson = schemaJson)
+          opName = "replace-where", schemaJson = Some(schemaJson))
       }
     }
   }
@@ -2596,7 +2623,8 @@ object SnapshotTable {
       applyMapping = true, bucketize = bucketLayout(spark, dir),
       rebalance = rebalance)
     enforceCheckConstraints(spark, dir, fresh,
-      latestVersion(spark, dir).flatMap(v => tableSchema(spark, dir, v)))
+      tableSchema(spark, dir, latestVersion(spark, dir).getOrElse(
+        throw new IllegalStateException(s"cannot delete from empty table $dir"))))
     deleteByKeysCore(spark, dir, keyCols, keys, alsoAdd = fresh,
       op = "cdc-eq", schemaJson = Some(appends.schema.json))
   }
@@ -2675,25 +2703,24 @@ object SnapshotTable {
       require(keys.columns.length == keyCols.length,
         s"deleteByKeys wants a ${keyCols.length}-column key frame for " +
           s"${keyCols.mkString(",")}, got ${keys.columns.toSeq}")
-      // (logical, physical, declared type) per member; types from the
-      // CURRENT schema so the sidecar parquet is table-typed
-      val members: Seq[(String, Option[org.apache.spark.sql.types.DataType])] =
+      // (physical, declared type) per member; types from the CURRENT
+      // schema so the sidecar parquet is table-typed
+      val members: Seq[(String, org.apache.spark.sql.types.DataType)] =
         keyCols.map { kc =>
-          val field = known.flatMap(_.fields.find(_.name == kc))
-          val dt = field.map(_.dataType)
-          dt.foreach { d =>
-            import org.apache.spark.sql.types._
-            // DateType (round-18): the canonical sidecar/masking form
-            // is DAYS-SINCE-EPOCH digits — what the parquet INT32
-            // physically stores, so every reader family (row stringer,
-            // columnar vector getInt, executor loadLocal) agrees for
-            // free; only the DRIVER-side canonical load must convert
-            require(Seq(ByteType, ShortType, IntegerType, LongType,
-              StringType, DateType).contains(d),
-              s"deleteByKey key '$kc' must be integral, string, or date, " +
-                s"got ${d.simpleString}")
-          }
-          (field.map(physicalName).getOrElse(kc), dt)
+          val field = known.fields.find(_.name == kc).getOrElse(
+            throw new IllegalArgumentException(
+              s"deleteByKey key '$kc' is not a column of $dir"))
+          import org.apache.spark.sql.types._
+          // DateType (round-18): the canonical sidecar/masking form
+          // is DAYS-SINCE-EPOCH digits — what the parquet INT32
+          // physically stores, so every reader family (row stringer,
+          // columnar vector getInt, executor loadLocal) agrees for
+          // free; only the DRIVER-side canonical load must convert
+          require(Seq(ByteType, ShortType, IntegerType, LongType,
+            StringType, DateType).contains(field.dataType),
+            s"deleteByKey key '$kc' must be integral, string, or date, " +
+              s"got ${field.dataType.simpleString}")
+          (physicalName(field), field.dataType)
         }
       val physCols = members.map(_._1)
       // binding: BY NAME when the frame carries exactly the key
@@ -2706,8 +2733,7 @@ object SnapshotTable {
       val keyDf = keys
         .select(members.zipWithIndex.map { case ((phys, dt), i) =>
           val src = if (byName) keyCols(i) else keys.columns(i)
-          dt.fold(col(s"`$src`"))(d =>
-            col(s"`$src`").cast(d)).as(phys) }: _*)
+          col(s"`$src`").cast(dt).as(phys) }: _*)
         .na.drop("any").distinct()
       // tiny jobs over the BATCH (not the table): its per-member
       // bounds refute whole files through the manifest ranges —
@@ -2721,8 +2747,7 @@ object SnapshotTable {
       // aggregate PLUS, for wide batches, a third count job), and only
       // a wide batch pays one aggregate folding bounds and count
       // together.
-      val isString = members.map(_._2
-        .contains(org.apache.spark.sql.types.StringType))
+      val isString = members.map(_._2 == org.apache.spark.sql.types.StringType)
       try {
       val typedRows = keyDf.limit(1025).collect()
       if (typedRows.isEmpty) return addsOnly(v) // empty batch
@@ -2759,7 +2784,7 @@ object SnapshotTable {
       val (bounds, strBounds, batchKeys) = smallKeys match {
         case Some(tuples) =>
           val b: Seq[Option[(Long, Long)]] = physCols.indices.map { i =>
-            if (isString(i) || members(i)._2.isEmpty) None
+            if (isString(i)) None
             else {
               val vs = typedRows.map(r => boundForm(r.get(i)))
               Some((vs.min, vs.max))
@@ -2777,13 +2802,11 @@ object SnapshotTable {
         case None =>
           val aggExprs = members.zipWithIndex.flatMap { case ((phys, dt), i) =>
             if (isString(i)) Seq(min(col(s"`$phys`")), max(col(s"`$phys`")))
-            else if (dt.isEmpty) // legacy chain without a recorded schema:
-              Seq(max(lit(null)), max(lit(null))) // no bound, no refutation
             else {
               // DATE → days since epoch (a date cannot CAST to long; the
               // days number is also the physical stats coordinate)
               val num =
-                if (dt.contains(org.apache.spark.sql.types.DateType))
+                if (dt == org.apache.spark.sql.types.DateType)
                   datediff(col(s"`$phys`"), lit("1970-01-01").cast("date"))
                 else col(s"`$phys`")
               Seq(min(num).cast("long"), max(num).cast("long"))
@@ -2791,8 +2814,7 @@ object SnapshotTable {
           } :+ count(lit(1)) // the wide batch's key count, same job
           val boundsRow = keyDf.agg(aggExprs.head, aggExprs.tail: _*).head
           val b: Seq[Option[(Long, Long)]] = physCols.indices.map { i =>
-            if (isString(i) || members(i)._2.isEmpty || boundsRow.isNullAt(2 * i))
-              None
+            if (isString(i) || boundsRow.isNullAt(2 * i)) None
             else Some((boundsRow.getLong(2 * i), boundsRow.getLong(2 * i + 1)))
           }
           val sb: Seq[Option[(String, String)]] = physCols.indices.map { i =>
@@ -2854,32 +2876,24 @@ object SnapshotTable {
         // (round-18): canonical forms replicate EqSidecars.load —
         // integrals/strings via toString (== the string cast), dates
         // as DAYS-SINCE-EPOCH digits (== the datediff canonical);
-        // typedRows are distinct + null-free already (keyDf), and
-        // messageTypeFor round-trips every member type, so the seeded
+        // typedRows are distinct + null-free already (keyDf), every
+        // member passed the key-type whitelist above, and
+        // messageTypeFor round-trips each of those types, so the seeded
         // (name, dtype-json) columns equal the read-back schema's.
-        // ONLY when every member's declared type is known (round-19,
-        // the round-18 advisor's edge): the legacy arm with no
-        // recorded schema skips the type whitelist, and canon()'s
-        // toString fallback could then diverge from load()'s
-        // canonical (e.g. a timestamp's '... 00:00:00.0') — an
-        // unseeded cache just re-reads the sidecar it would have
-        // skipped; a wrongly-seeded one silently un-deletes rows.
         val fields = keyDf.schema.fields
-        if (members.forall(_._2.isDefined)) {
-          def canon(x: Any): String = x match {
-            case d: java.sql.Date => d.toLocalDate.toEpochDay.toString
-            case d: java.time.LocalDate => d.toEpochDay.toString
-            case other => other.toString
-          }
-          val canonKeys = typedRows.toVector.map { r =>
-            val parts = fields.indices.map(i => canon(r.get(i)))
-            if (fields.length == 1) parts.head
-            else graft.sources.connector.EqSidecar.encode(parts)
-          }
-          graft.sources.connector.SnapshotPartitions.EqSidecars.seed(
-            resolvePath(dir, rel),
-            fields.toSeq.map(f => (f.name, f.dataType.json)), canonKeys)
+        def canon(x: Any): String = x match {
+          case d: java.sql.Date => d.toLocalDate.toEpochDay.toString
+          case d: java.time.LocalDate => d.toEpochDay.toString
+          case other => other.toString
         }
+        val canonKeys = typedRows.toVector.map { r =>
+          val parts = fields.indices.map(i => canon(r.get(i)))
+          if (fields.length == 1) parts.head
+          else graft.sources.connector.EqSidecar.encode(parts)
+        }
+        graft.sources.connector.SnapshotPartitions.EqSidecars.seed(
+          resolvePath(dir, rel),
+          fields.toSeq.map(f => (f.name, f.dataType.json)), canonKeys)
       }
       else writeSingleParquet(spark, dir, keyDf, rel)
       val updated = affected.map(fe => fe.copy(eqDv = (fe.eqDv :+ rel).distinct))
@@ -3028,7 +3042,7 @@ object SnapshotTable {
     * resolves the physical stats key. */
   private def matchedPositions(spark: SparkSession, dir: String, m: Manifest,
                                keyCol: String, keys: DataFrame,
-                               known: Option[org.apache.spark.sql.types.StructType])
+                               known: org.apache.spark.sql.types.StructType)
       : DataFrame = {
     import spark.implicits._
     val cand = candidateFiles(spark, m, keyCol, keys,
@@ -3464,11 +3478,9 @@ object SnapshotTable {
     // props may name columns by their retired PHYSICAL names on a
     // rename-mapped table; resolve to logical before matching the
     // (logical-named) scan frame
-    val logicalFor: Map[String, String] = latestVersion(spark, dir)
-      .flatMap(v => tableSchema(spark, dir, v))
-      .map(_.fields.map(f => physicalName(f) -> f.name)
-        .filter(p => p._1 != p._2).toMap)
-      .getOrElse(Map.empty)
+    val logicalFor: Map[String, String] = tableSchema(spark, dir,
+      latestVersion(spark, dir).get).fields
+      .map(f => physicalName(f) -> f.name).filter(p => p._1 != p._2).toMap
     def csv(k: String): Seq[String] = props.get(k)
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
       .map(c => logicalFor.getOrElse(c, c))
@@ -3510,8 +3522,8 @@ object SnapshotTable {
           def csv(k: String): Seq[String] = props.get(k)
             .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
             .getOrElse(Nil)
-            .map(pc => known.flatMap(_.fields.find(f => physicalName(f) == pc)
-              .map(_.name)).getOrElse(pc))
+            .map(pc => known.fields.find(f => physicalName(f) == pc)
+              .map(_.name).getOrElse(pc))
             .filter(df.columns.contains)
           val fresh = stageFiles(spark, df, dir, csv("statsCols"),
             csv("bloomCols"), bucketize = Some((c, n)))
@@ -3551,10 +3563,9 @@ object SnapshotTable {
       val m = readManifest(spark, dir, v)
       val known = tableSchema(spark, dir, v)
       // the key as stats record it (create-time physical name)
-      val physKey = known.flatMap(_.fields.find(_.name == key))
-        .map(physicalName).getOrElse(key)
-      val logicalKey = known.flatMap(_.fields.find(f =>
-        physicalName(f) == physKey).map(_.name)).getOrElse(key)
+      val physKey = physicalFor(known, key)
+      val logicalKey = known.fields.find(f => physicalName(f) == physKey)
+        .map(_.name).getOrElse(key)
       // components per bucket group: a mixed identity+bucket layout
       // decays within buckets, and the rewrite must stay bucket-pure
       val decayed: Seq[((Option[Int], Option[Int]), Seq[FileEntry])] =
@@ -3589,8 +3600,8 @@ object SnapshotTable {
         spark.sparkContext.hadoopConfiguration, dir)
       def csv(k: String): Seq[String] = props.get(k)
         .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).getOrElse(Nil)
-        .map(pc => known.flatMap(_.fields.find(f => physicalName(f) == pc)
-          .map(_.name)).getOrElse(pc))
+        .map(pc => known.fields.find(f => physicalName(f) == pc)
+          .map(_.name).getOrElse(pc))
       val fresh = decayed.flatMap { case ((bucket, bucketN), comp) =>
         val df = readFiles(spark, dir, comp, v, knownSchema = known)
         val nOut = math.max(1,
@@ -3618,7 +3629,7 @@ object SnapshotTable {
     // named) bytes, so the restored schema's rename mapping must
     // survive the re-record — unlike a writer's overwrite
     commit(spark, dir, "restore", readManifest(spark, dir, toVersion).files,
-      schemaJson = tableSchemaJson(spark, dir, toVersion),
+      schemaJson = Some(tableSchemaJson(spark, dir, toVersion)),
       carry = false, keepMapping = true)
 
   /** Data files younger than this survive [[vacuum]] even when no kept
@@ -4057,7 +4068,7 @@ object SnapshotTable {
     // keepMapping: the cloned entries are the SOURCE's physical bytes,
     // so a rename-mapped source schema must survive the re-record
     commit(spark, dstDir, if (deep) "clone-deep" else "clone", entries,
-      carry = false, schemaJson = schemaJson, keepMapping = true)
+      carry = false, schemaJson = Some(schemaJson), keepMapping = true)
   }
 
   /** The vacuum-pin tag a shallow clone (or branch) of `dstDir`
@@ -4178,7 +4189,7 @@ object SnapshotTable {
     * head absolutizes to main's files, its recorded base and vacuum
     * pin follow. Idempotent — safe to run again from recovery. */
   private def repointBranch(spark: SparkSession, dir: String, bdir: String,
-                            newV: Long, schemaJson: Option[String]): Unit = {
+                            newV: Long, schemaJson: String): Unit = {
     val f = fs(spark, new Path(dir))
     val mainRoot = f.makeQualified(new Path(dir)).toString
     def isAbs(p: String) = p.startsWith("/") || p.contains(":/")
@@ -4189,7 +4200,7 @@ object SnapshotTable {
         (if (isAbs(p)) p else s"$mainRoot/$p", n) },
       eqDv = fe.eqDv.map(p => if (isAbs(p)) p else s"$mainRoot/$p")))
     commit(spark, bdir, "fast_forward", bEntries, carry = false,
-      schemaJson = schemaJson, keepMapping = true)
+      schemaJson = Some(schemaJson), keepMapping = true)
     maybeCrash("mid-repoint")
     val hconf = spark.sparkContext.hadoopConfiguration
     graft.sources.connector.GraftTableProps.write(hconf, bdir,
@@ -4372,7 +4383,7 @@ object SnapshotTable {
         }
         maybeCrash("after-renames")
         commit(spark, dir, "fast_forward", entries, carry = false,
-          schemaJson = schemaJson, keepMapping = true,
+          schemaJson = Some(schemaJson), keepMapping = true,
           expectLatest = Some(base))
       } catch {
         case e: SimulatedCrash => throw e // a real crash runs no rollback
@@ -4551,18 +4562,15 @@ object SnapshotTable {
     val general: Option[DataFrame] =
       if (removed.isEmpty && added.isEmpty) None
       else {
-        // an empty side is its version's schema with no rows (a legacy
-        // chain records none: the other side's columns stand in)
-        def readOr(files: Seq[FileEntry], atV: Long,
-                   other: Seq[FileEntry], otherV: Long): DataFrame = {
+        // an empty side is its version's schema with no rows
+        def read(files: Seq[FileEntry], atV: Long): DataFrame = {
           val known = tableSchema(spark, dir, atV)
           if (files.nonEmpty) readFiles(spark, dir, files, atV, knownSchema = known)
-          else known.map(s => spark.createDataFrame(
-              spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s))
-            .getOrElse(readFiles(spark, dir, other, otherV).filter(lit(false)))
+          else spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], known)
         }
-        val pre0 = readOr(removed, fromV, added, toV)
-        val post0 = readOr(added, toV, removed, fromV)
+        val pre0 = read(removed, fromV)
+        val post0 = read(added, toV)
         val post = align(post0, pre0)
         val pre = align(pre0, post0).select(post.columns.map(col): _*)
         val cols = post.columns.toSeq
@@ -4591,9 +4599,8 @@ object SnapshotTable {
             spark.read.parquet(oldSameCol.map(resolvePath(dir, _)): _*)
               .select(col(s"`$c`").as("__graft_eqkey")).distinct(),
             Seq("__graft_eqkey"), "left_anti")
-        val logical = preSchema
-          .flatMap(_.fields.find(f => physicalName(f) == c).map(_.name))
-          .getOrElse(c)
+        val logical = preSchema.fields.find(f => physicalName(f) == c)
+          .map(_.name).getOrElse(c)
         val pre = readFiles(spark, dir, pairs.map(_._1), fromV,
           knownSchema = preSchema)
         Seq(pre.join(broadcast(fresh),
@@ -4663,7 +4670,7 @@ object SnapshotTable {
       val m = readManifest(spark, dir, v)
       val known = tableSchema(spark, dir, v)
       cols.foreach { c =>
-        val fld = known.flatMap(_.fields.find(_.name == c)).getOrElse(
+        val fld = known.fields.find(_.name == c).getOrElse(
           throw new IllegalArgumentException(
             s"ANALYZE: no column '$c' in $dir"))
         import org.apache.spark.sql.types._

@@ -57,11 +57,7 @@ object ChangesTable {
   private[connector] def apply(spark: SparkSession, dir: String): Table = {
     val v = SnapshotTable.latestVersion(spark, dir).getOrElse(
       throw new IllegalStateException(s"no committed version under $dir"))
-    val tableSchema = SnapshotTable.tableSchema(spark, dir, v).getOrElse(
-      throw new IllegalStateException(
-        s"the change feed needs a schema-recording log under $dir " +
-          "(legacy chain: rewrite via overwrite first)"))
-    new SnapshotChangesTable(dir, tableSchema)
+    new SnapshotChangesTable(dir, SnapshotTable.tableSchema(spark, dir, v))
   }
 
   private[connector] def feedSchema(tableSchema: StructType): StructType =
@@ -329,7 +325,7 @@ final class ChangesMicroBatchStream(dir: String, tableSchema: StructType,
     require(from >= vs.head,
       s"startingVersion $from predates the earliest available version " +
         s"${vs.head} of $dir (vacuumed?)")
-    VersionOffset(from - 1, Some(true))
+    VersionOffset(from - 1, initial = true)
   }
 
   override def prepareForTriggerAvailableNow(): Unit =
@@ -342,7 +338,7 @@ final class ChangesMicroBatchStream(dir: String, tableSchema: StructType,
     val from = start.asInstanceOf[VersionOffset]
     val end = maxVersionsPerTrigger
       .fold(target)(n => math.min(target, from.v + n))
-    VersionOffset(end, if (end == from.v) from.initial else Some(false))
+    VersionOffset(end, end == from.v && from.initial)
   }
 
   override def latestOffset(): Offset =
@@ -361,8 +357,7 @@ final class ChangesMicroBatchStream(dir: String, tableSchema: StructType,
     // version means vacuum expired the manifests the diff needs —
     // fail like the table stream does (a silent full-snapshot replay
     // would emit every surviving row as duplicate upserts)
-    val startIsInitial = off.initial.getOrElse(a == earliest - 1)
-    if (a >= 0 && (a < earliest - 1 || (a == earliest - 1 && !startIsInitial)))
+    if (a >= 0 && (a < earliest - 1 || (a == earliest - 1 && !off.initial)))
       throw new IllegalStateException(
         s"change-feed checkpoint offset $a predates the earliest " +
           s"retained version $earliest of $dir (vacuumed past the " +

@@ -89,17 +89,11 @@ final class GraftCatalog extends TableCatalog with StagingTableCatalog
   private def tableExistsAt(dir: String): Boolean =
     SnapshotTable.latestVersion(spark, dir).isDefined
 
-  /** Latest (or pinned) schema — the log-recorded one, footer-pass
-    * fallback for legacy chains. */
+  /** Latest (or pinned) version's log-recorded schema. */
   private def schemaOf(dir: String, version: Option[Long]): StructType = {
     val v = version.orElse(SnapshotTable.latestVersion(spark, dir)).getOrElse(
       throw new IllegalStateException(s"no committed version under $dir"))
-    SnapshotTable.tableSchema(spark, dir, v).getOrElse {
-      val m = SnapshotTable.readManifest(spark, dir, v)
-      if (m.files.isEmpty) new StructType()
-      else spark.read.option("mergeSchema", "true")
-        .parquet(m.files.map(fe => SnapshotTable.resolvePath(dir, fe.path)): _*).schema
-    }
+    SnapshotTable.tableSchema(spark, dir, v)
   }
 
   // --- tables ---
@@ -453,10 +447,11 @@ final class GraftCatalog extends TableCatalog with StagingTableCatalog
   /** `ALTER TABLE … ADD COLUMNS | DROP COLUMN | RENAME COLUMN` — all
     * metadata-only schema commits; no data file is touched.
     *
-    *  - ADD: new fields read as null in existing rows (the mergeSchema
-    *    contract). A name that ever existed physically (retired, or a
-    *    live column's physical name) gets a FRESH physical name so old
-    *    files can't leak the previous column's values into it.
+    *  - ADD: new fields read as null in existing rows (the schema
+    *    evolution contract). A name that ever existed physically
+    *    (retired, or a live column's physical name) gets a FRESH
+    *    physical name so old files can't leak the previous column's
+    *    values into it.
     *  - DROP: the recorded schema shrinks (replaceSchema commit — a
     *    union can only widen); files keep the bytes, time travel to a
     *    pre-drop version still reads them, and the physical name is
@@ -539,9 +534,7 @@ final class GraftCatalog extends TableCatalog with StagingTableCatalog
     if (rest.nonEmpty) {
       import org.apache.spark.sql.types.{MetadataBuilder, StructField}
       val v = SnapshotTable.latestVersion(spark, dir).get
-      val current = SnapshotTable.tableSchema(spark, dir, v).getOrElse(
-        throw new IllegalStateException("ALTER TABLE needs a " +
-          "schema-recording log (legacy chain: rewrite via overwrite first)"))
+      val current = SnapshotTable.tableSchema(spark, dir, v)
       def single(names: Array[String], what: String): String = {
         require(names.length == 1,
           s"nested $what is not supported: ${names.mkString(".")}")

@@ -25,6 +25,9 @@ import graft.sources.SnapshotTable
   *  - `compact(table, small_rows, target_rows)` — bin-pack small
   *    files (content-neutral).
   *  - `purge_deletes(table)` — fold deletion vectors into files.
+  *  - `upgrade(table)` — record the schema of a table written before
+  *    every commit recorded one ([[SnapshotTable.upgrade]]); returns
+  *    the version that records it (a no-op on a current table).
   *  - `rebucket(table)` — rewrite through the declared bucket layout
   *    (restores storage-partitioned-join capability after unbucketed
   *    writes; folds deletion vectors in).
@@ -55,8 +58,8 @@ object GraftProcedures {
 
   /** Every procedure name [[load]] serves. */
   val Names: Seq[String] = Seq("restore", "vacuum", "compact", "rebucket",
-    "purge_deletes", "maintain", "create_tag", "drop_tag", "clone",
-    "create_branch", "fast_forward", "drop_branch", "recluster",
+    "purge_deletes", "upgrade", "maintain", "create_tag", "drop_tag",
+    "clone", "create_branch", "fast_forward", "drop_branch", "recluster",
     "ann_build", "ann_build_pq", "ann_refresh", "ann_search",
     "delete_by_key")
 
@@ -155,6 +158,14 @@ object GraftProcedures {
         (spark, args) =>
           val dir = dirOfTable(args.getUTF8String(0).toString)
           val v = SnapshotTable.purgeDeletes(spark, dir)
+          Seq(new GenericInternalRow(Array[Any](v)))
+      })
+      case "upgrade" => Some(proc("upgrade",
+        Array(in("table", StringType)),
+        StructType(Seq(StructField("version", LongType, nullable = false)))) {
+        (spark, args) =>
+          val dir = dirOfTable(args.getUTF8String(0).toString)
+          val v = SnapshotTable.upgrade(spark, dir)
           Seq(new GenericInternalRow(Array[Any](v)))
       })
       case "maintain" => Some(proc("maintain",

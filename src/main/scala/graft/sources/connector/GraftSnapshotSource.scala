@@ -70,7 +70,7 @@ class GraftSnapshotSource extends TableProvider with DataSourceRegister {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
     val spark = SparkSession.active
     val dir = GraftSnapshotSource.tableDir(options)
-    // a not-yet-existing (or empty) table infers an EMPTY schema: the
+    // a not-yet-existing table infers an EMPTY schema: the
     // write path creates version 1 from the query schema
     // (ACCEPT_ANY_SCHEMA); the read path rejects an empty schema with
     // a precise error in newScanBuilder
@@ -79,15 +79,8 @@ class GraftSnapshotSource extends TableProvider with DataSourceRegister {
         options.get("timestampAsOf") == null) return new StructType()
     val v = GraftSnapshotSource.requestedVersion(spark, dir, options)
       .orElse(SnapshotTable.latestVersion(spark, dir)).get
-    // the log-recorded schema is one small-file read — the footer
-    // pass below is the legacy fallback only (at 2k files it costs
-    // seconds of driver time per planned query)
-    val table = SnapshotTable.tableSchema(spark, dir, v).getOrElse {
-      val m = SnapshotTable.readManifest(spark, dir, v)
-      if (m.files.isEmpty) new StructType()
-      else spark.read.option("mergeSchema", "true")
-        .parquet(m.files.map(fe => SnapshotTable.resolvePath(dir, fe.path)): _*).schema
-    }
+    // the log-recorded schema: one small-file read, no footer pass
+    val table = SnapshotTable.tableSchema(spark, dir, v)
     // `readChangeFeed=true` reads the CHANGE FEED (row-level diffs
     // with change_type/commit_version) instead of the table — the
     // path-based twin of `cat.ns.t.changes`, batch AND streaming
@@ -188,9 +181,9 @@ object GraftSnapshotSource {
 
 /** One snapshot table root exposed to the V2 catalog plumbing.
   * ACCEPT_ANY_SCHEMA: appends may widen the schema (snapshot reads
-  * are mergeSchema — older files surface new columns as null), so
-  * Spark's output resolution is skipped and the table's own write
-  * path validates. */
+  * plan from the recorded union — older files surface new columns as
+  * null), so Spark's output resolution is skipped and the table's own
+  * write path validates. */
 final class SnapshotV2Table(schema: StructType, dir: String,
                             pinnedVersion: Option[Long] = None,
                             tableProps: Map[String, String] = Map.empty)
@@ -315,13 +308,13 @@ final class SnapshotV2Table(schema: StructType, dir: String,
   override def truncateTable(): Boolean = {
     val spark = SparkSession.active
     val schemaJson = SnapshotTable.latestVersion(spark, dir)
-      .flatMap(v => SnapshotTable.tableSchemaJson(spark, dir, v))
-      .orElse(Some(schema.json))
+      .map(v => SnapshotTable.tableSchemaJson(spark, dir, v))
+      .getOrElse(schema.json)
     // keepMapping: truncation removes rows, not the rename history —
     // later appends keep writing the frozen physical names, uniform
     // with any pre-truncate (time-travel-readable) files
     SnapshotTable.commitAdded(spark, dir, "truncate", Nil, carry = false,
-      schemaJson = schemaJson, keepMapping = true)
+      schemaJson = Some(schemaJson), keepMapping = true)
     true
   }
 
@@ -352,11 +345,8 @@ final class SnapshotV2Table(schema: StructType, dir: String,
       val spark = SparkSession.active
       val v = SnapshotTable.latestVersion(spark, dir).getOrElse(
         throw new IllegalStateException(s"no committed version under $dir"))
-      val tableSchema = SnapshotTable.tableSchema(spark, dir, v).getOrElse(
-        throw new IllegalStateException(
-          s"the change feed needs a schema-recording log under $dir " +
-            "(legacy chain: rewrite via overwrite first)"))
-      return new ChangesScanBuilder(dir, tableSchema, options)
+      return new ChangesScanBuilder(dir,
+        SnapshotTable.tableSchema(spark, dir, v), options)
     }
     // catalog time travel (`VERSION AS OF` / `TIMESTAMP AS OF`) pins
     // the version at table-resolution time; a per-read option wins

@@ -161,9 +161,7 @@ object MetadataTables {
     val v = SnapshotTable.latestVersion(spark, dir).getOrElse(
       throw new IllegalStateException(s"no committed version under $dir"))
     val m = SnapshotTable.readManifest(spark, dir, v)
-    val known = SnapshotTable.tableSchema(spark, dir, v).getOrElse(
-      throw new IllegalStateException(
-        s"the stats table needs a schema-recording log under $dir"))
+    val known = SnapshotTable.tableSchema(spark, dir, v)
     val total = m.totalRows
     val eqPending = m.files.exists(_.eqDv.nonEmpty)
     val n = m.files.size

@@ -28,7 +28,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Schema evolution rides Spark's own clipping: the requested Spark
   * schema goes in via `ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA`,
   * and columns a file predates surface as constant-null vectors (or
-  * their exists-default) — the same semantics as `mergeSchema`.
+  * their exists-default) — the same semantics as a merged footer schema.
   *
   * Masking strategy per batch of `n` rows: if no deleted position
   * falls in the batch's row-index range the batch passes through with

@@ -15,26 +15,20 @@ import graft.sources.SnapshotTable
   * fresh start (base legitimately empty) or a real checkpoint whose
   * base manifest vacuum just expired, where treating the base as
   * empty re-emits every surviving file as duplicates (Delta records
-  * `isStartingVersion` in its offset for exactly this reason).
-  * `None` = a legacy bare-long checkpoint predating the flag, which
-  * keeps the old lenient reading (earliest-1 treated as initial). */
-final case class VersionOffset(v: Long, initial: Option[Boolean])
-  extends Offset {
-  override def json: String = initial match {
-    case None => v.toString // legacy shape, kept round-trippable
-    case Some(i) => s"""{"v":$v,"initial":$i}"""
-  }
+  * `isStartingVersion` in its offset for exactly this reason). */
+final case class VersionOffset(v: Long, initial: Boolean) extends Offset {
+  override def json: String = s"""{"v":$v,"initial":$initial}"""
 }
 
 object VersionOffset {
   def parse(json: String): VersionOffset = {
     val t = json.trim
-    if (!t.startsWith("{")) VersionOffset(t.toLong, None)
-    else {
-      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(t)
-      VersionOffset(node.get("v").asLong(),
-        Some(node.get("initial").asBoolean()))
-    }
+    if (!t.startsWith("{")) throw new IllegalStateException(
+      s"stream checkpoint offset '$t' predates the initial-marker offset " +
+        "format and cannot be resumed exactly-once — restart from a " +
+        "fresh checkpoint")
+    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(t)
+    VersionOffset(node.get("v").asLong(), node.get("initial").asBoolean())
   }
 }
 
@@ -108,7 +102,7 @@ final class SnapshotMicroBatchStream(dir: String, schema: StructType,
       .getOrElse(vs.head)
     require(from >= vs.head,
       s"startingVersion $from predates the earliest available version ${vs.head} of $dir (vacuumed?)")
-    VersionOffset(from - 1, Some(true))
+    VersionOffset(from - 1, initial = true)
   }
 
   override def prepareForTriggerAvailableNow(): Unit =
@@ -125,7 +119,7 @@ final class SnapshotMicroBatchStream(dir: String, schema: StructType,
     // must keep the start's initial marker — overwriting it with
     // "progress" would make a still-unstarted stream unresumable after
     // a vacuum to exactly its version+1
-    VersionOffset(end, if (end == from.v) from.initial else Some(false))
+    VersionOffset(end, end == from.v && from.initial)
   }
 
   override def latestOffset(): Offset =
@@ -146,10 +140,8 @@ final class SnapshotMicroBatchStream(dir: String, schema: StructType,
     // manifest the diff needs; treating the base as empty would
     // re-emit every surviving file as duplicates. Fail like a
     // vacuumed startingVersion does in initialOffset (Delta's
-    // contract; legacy bare-long checkpoints keep the lenient
-    // earliest-1-is-initial reading, the pre-marker behavior).
-    val startIsInitial = off.initial.getOrElse(a == earliest - 1)
-    if (a >= 0 && (a < earliest - 1 || (a == earliest - 1 && !startIsInitial)))
+    // contract).
+    if (a >= 0 && (a < earliest - 1 || (a == earliest - 1 && !off.initial)))
       throw new IllegalStateException(
         s"stream checkpoint offset $a predates the earliest retained " +
           s"version $earliest of $dir (vacuumed past the checkpoint); " +

@@ -44,8 +44,8 @@ import graft.sources.SnapshotTable.FileEntry
   * default lets AQE size it).
   *
   * The table reports `ACCEPT_ANY_SCHEMA`: appends may widen the
-  * schema (the snapshot reader's mergeSchema surfaces missing columns
-  * as null — same contract as the programmatic path), and writes to a
+  * schema (the snapshot reader surfaces columns a file lacks as null
+  * — same contract as the programmatic path), and writes to a
   * not-yet-existing table root create version 1.
   */
 final class SnapshotWriteBuilder(dir: String, info: LogicalWriteInfo,
@@ -503,7 +503,7 @@ final class SnapshotBatchWrite(dir: String, schema: StructType,
           // + dv boundary scan) and append the staged files, one commit
           case (None, Some(cond)) =>
             SnapshotTable.replaceWhere(SparkSession.active, dir, entries,
-              cond, Some(schema.json), validate = replaceWhereValidate)
+              cond, schema.json, validate = replaceWhereValidate)
           case (None, None) =>
             SnapshotTable.commitAdded(SparkSession.active, dir,
               if (overwrite) "overwrite" else "append", entries,
@@ -773,9 +773,9 @@ private[sources] object SnapshotWriteSupport {
   def align(dir: String, incoming: StructType): StructType = {
     val spark = SparkSession.active
     val table = SnapshotTable.latestVersion(spark, dir)
-      .flatMap(v => SnapshotTable.tableSchema(spark, dir, v))
+      .map(v => SnapshotTable.tableSchema(spark, dir, v))
     table match {
-      case None => incoming // fresh root or legacy chain: as declared
+      case None => incoming // fresh root: as declared
       case Some(t) =>
         val tNames = t.fieldNames.toSet
         val inNames = incoming.fieldNames.toSet
@@ -819,11 +819,11 @@ private[sources] object SnapshotWriteSupport {
   }
 
   /** logical → physical column renames of the table's CURRENT recorded
-    * schema (empty when unmapped / fresh root / legacy chain). */
+    * schema (empty when unmapped or a fresh root). */
   def physicalMap(dir: String): Map[String, String] = {
     val spark = SparkSession.active
     SnapshotTable.latestVersion(spark, dir)
-      .flatMap(v => SnapshotTable.tableSchema(spark, dir, v))
+      .map(v => SnapshotTable.tableSchema(spark, dir, v))
       .map(_.fields.map(f => f.name -> SnapshotTable.physicalName(f))
         .filter { case (l, p) => l != p }.toMap)
       .getOrElse(Map.empty)

@@ -421,48 +421,82 @@ class ConnectorSpec extends SparkTestBase {
     val dir = freshDir()
     spark.range(0, 10).select($"id", lit("a").as("s"))
       .write.format("graft_snapshot").mode("overwrite").save(dir)
-    assert(SnapshotTable.tableSchema(spark, dir, 1).map(_.fieldNames.toSeq)
-      .contains(Seq("id", "s")))
+    assert(SnapshotTable.tableSchema(spark, dir, 1).fieldNames.toSeq ==
+      Seq("id", "s"))
     // evolution append: recorded schema unions (old fields first)
     SnapshotTable.write(spark,
       spark.range(10, 12).select($"id", lit("b").as("s"), lit(1.5).as("w")),
       dir, "append")
-    assert(SnapshotTable.tableSchema(spark, dir, 2).map(_.fieldNames.toSeq)
-      .contains(Seq("id", "s", "w")))
+    assert(SnapshotTable.tableSchema(spark, dir, 2).fieldNames.toSeq ==
+      Seq("id", "s", "w"))
     // a dv commit carries the chain
     SnapshotTable.deleteVectors(spark, dir, $"id" === 3)
-    assert(SnapshotTable.tableSchema(spark, dir, 3).map(_.fieldNames.toSeq)
-      .contains(Seq("id", "s", "w")))
+    assert(SnapshotTable.tableSchema(spark, dir, 3).fieldNames.toSeq ==
+      Seq("id", "s", "w"))
     assert(load(dir).count() == 11)
     // restore records the restored version's schema
     SnapshotTable.restore(spark, dir, 1)
-    assert(SnapshotTable.tableSchema(spark, dir, 4).map(_.fieldNames.toSeq)
-      .contains(Seq("id", "s")))
+    assert(SnapshotTable.tableSchema(spark, dir, 4).fieldNames.toSeq ==
+      Seq("id", "s"))
   }
 
-  test("legacy entries without a recorded schema fall back to the footer pass") {
-    val dir = freshDir()
+  test("a pre-schema table refuses until CALL upgrade records its schema") {
+    val root = Files.createTempDirectory("graft-catup").toString
+    spark.conf.set("spark.sql.catalog.graftcatup",
+      classOf[graft.sources.connector.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graftcatup.root", root)
+    val dir = s"$root/t"
     spark.range(0, 10).select($"id", lit("a").as("s"))
       .write.format("graft_snapshot").mode("overwrite").save(dir)
-    // strip the schema field from the commit entry (a pre-schema log)
-    val entry = java.nio.file.Paths.get(dir, "_log", "v0000000001.json")
-    val json = new String(java.nio.file.Files.readAllBytes(entry), "UTF-8")
-    assert(json.contains("\"schema\""))
+    SnapshotTable.deleteVectors(spark, dir, $"id" === 3)
+    // strip the schema field from both commit entries (a pre-schema log)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.readTree(json)
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    node.remove("schema")
-    java.nio.file.Files.write(entry, mapper.writeValueAsBytes(node))
+    Seq(1, 2).foreach { v =>
+      val entry = java.nio.file.Paths.get(dir, "_log", f"v$v%010d.json")
+      val node = mapper.readTree(java.nio.file.Files.readAllBytes(entry))
+        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      assert(node.has("schema"))
+      node.remove("schema")
+      java.nio.file.Files.write(entry, mapper.writeValueAsBytes(node))
+    }
     SnapshotTable.invalidateResolveCache()
-    assert(SnapshotTable.tableSchema(spark, dir, 1).isEmpty)
-    assert(load(dir).count() == 10) // connector footer-pass fallback
-    assert(SnapshotTable.scan(spark, dir).count() == 10)
-    // an append onto a legacy chain stays legacy (a recorded schema
-    // must describe every file, including the schema-less history)
-    SnapshotTable.write(spark, spark.range(10, 12).toDF()
-      .select($"id", lit("b").as("s")), dir, "append")
-    assert(SnapshotTable.tableSchema(spark, dir, 2).isEmpty)
-    assert(load(dir).count() == 12)
+    def refusesNamingUpgrade(body: => Any): Unit = {
+      val ex = intercept[Exception](body)
+      assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+        .exists(e => String.valueOf(e.getMessage).contains("upgrade")), ex)
+    }
+    refusesNamingUpgrade(load(dir).count())
+    refusesNamingUpgrade(SnapshotTable.scan(spark, dir).count())
+    refusesNamingUpgrade(SnapshotTable.write(spark,
+      spark.range(10, 12).select($"id", lit("b").as("s")), dir, "append"))
+    assert(SnapshotTable.latestVersion(spark, dir).contains(2L))
+    // one footer pass; the same entries, deletion vector included,
+    // re-commit as v3 recording the schema
+    assert(spark.sql("CALL graftcatup.system.upgrade('t')").as[Long].head == 3L)
+    assert(SnapshotTable.tableSchema(spark, dir, 3).fieldNames.toSeq ==
+      Seq("id", "s"))
+    assert(load(dir).count() == 9)
+    assert(SnapshotTable.scan(spark, dir).count() == 9)
+    // history before the upgrade stays schema-less
+    refusesNamingUpgrade(spark.read.format("graft_snapshot")
+      .option("versionAsOf", 2).load(dir).count())
+    // a second upgrade adds no version
+    assert(spark.sql("CALL graftcatup.system.upgrade('t')").as[Long].head == 3L)
+    assert(SnapshotTable.latestVersion(spark, dir).contains(3L))
+  }
+
+  test("an append whose column type conflicts with the table's refuses at commit") {
+    val dir = freshDir()
+    SnapshotTable.write(spark, spark.range(0, 5).select($"id", lit("a").as("s")),
+      dir, "overwrite")
+    val v = SnapshotTable.latestVersion(spark, dir).get
+    val ex = intercept[IllegalArgumentException](SnapshotTable.write(spark,
+      spark.range(5, 7).select($"id".cast("string").as("id"), lit("b").as("s")),
+      dir, "append"))
+    assert(ex.getMessage.contains("'id'"), ex.getMessage)
+    assert(SnapshotTable.latestVersion(spark, dir).contains(v))
+    assert(SnapshotTable.scan(spark, dir).select($"id").as[Long].collect()
+      .sorted.toSeq == (0L until 5L))
   }
 
   test("an empty version with a recorded schema reads as an empty typed frame") {
@@ -1226,6 +1260,11 @@ class ConnectorSpec extends SparkTestBase {
     assert(spark.read.parquet(out2).count() == 30)
   }
 
+  test("a bare-long stream offset refuses to parse") {
+    intercept[IllegalStateException](
+      graft.sources.connector.VersionOffset.parse("3"))
+  }
+
   test("MERGE WITH SCHEMA EVOLUTION widens the table with assigned columns") {
     val root = Files.createTempDirectory("graft-catD").toString
     spark.conf.set("spark.sql.catalog.graftcatd",
@@ -1348,7 +1387,7 @@ class ConnectorSpec extends SparkTestBase {
     assert(fs.rename(part, new org.apache.hadoop.fs.Path(dir, rel)))
     SnapshotTable.commitAdded(spark, dir, "delete-dv",
       Seq(fe.copy(dv = Some((rel, 2L)))), carry = false,
-      schemaJson = SnapshotTable.tableSchema(spark, dir, v1).map(_.json))
+      schemaJson = Some(SnapshotTable.tableSchema(spark, dir, v1).json))
     assert(SnapshotTable.scan(spark, dir).count() == 8)
     def update(src: DataFrame): Long =
       SnapshotTable.mergeClauses(spark, dir, src, "id", $"k",

@@ -859,7 +859,7 @@ class EqualityDeleteSpec extends SparkTestBase {
       writeHalfCapSidecar(dir, "hi-eq.parquet", halfCap.toLong))
     SnapshotTable.commitAdded(spark, dir, "delete-eq",
       Seq(fe.copy(eqDv = refs)), carry = false,
-      schemaJson = SnapshotTable.tableSchema(spark, dir, v).map(_.json))
+      schemaJson = Some(SnapshotTable.tableSchema(spark, dir, v).json))
     val ex = intercept[Exception](
       spark.read.format("graft_snapshot").load(dir).count())
     assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)

@@ -19,10 +19,13 @@ from pathlib import Path
 import duckdb
 import pandas as pd
 
+# the checkout this script lives in (tools/..), so a copy verifies itself
+REPO_ROOT = Path(__file__).resolve().parent.parent
+
 
 def run_spark(sf_dir: str, out_dir: str) -> None:
     cmd = ["sbt", "-batch", f'runMain graft.Verify {sf_dir} {out_dir}']
-    r = subprocess.run(cmd, cwd="/root/repo", capture_output=True, text=True, timeout=1800)
+    r = subprocess.run(cmd, cwd=REPO_ROOT, capture_output=True, text=True, timeout=1800)
     tail = (r.stdout + r.stderr)[-4000:]
     if r.returncode != 0:
         print(tail)
