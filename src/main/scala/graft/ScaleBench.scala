@@ -147,48 +147,6 @@ object ScaleBench {
       s""""versions_after":$vacLeft}}"""
   }
 
-  /** Anchor-format family (r11): cold manifest resolution from a
-    * parquet anchor vs the JSON entry at file counts real local
-    * staging can't reach (default 10k and 200k synthetic entries,
-    * each with one stats column; AnchorFormatProbe extends to 2M).
-    * Measured result — the honest version of the claim behind
-    * [[graft.sources.SnapshotTable.parquetAnchorMinFiles]]: the
-    * parquet anchor is 6.2-6.4× smaller at every size, which is the
-    * decisive number on object-store storage where the cold path is
-    * anchor-fetch-bound; on local warm-cache disk the jackson parse
-    * stays competitive with the parquet job + collect even at 2M
-    * entries, which is why small tables skip the anchor entirely. */
-  private[graft] def manifestFormat(spark: SparkSession): String = {
-    import graft.sources.SnapshotTable
-    def timeSec(body: => Unit): Double = {
-      val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
-    }
-    val sizes = sys.env.getOrElse("SPARK_GRAFT_ANCHOR_FILES", "10000,200000")
-      .split(",").map(_.trim.toInt).toSeq
-    val out = sizes.map { n =>
-      val dir = s"/tmp/graft-scale/anchorfmt-$n-${System.currentTimeMillis()}"
-      val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val files = (0 until n).map(i => SnapshotTable.FileEntry(
-        f"data/$i%08d-p00000.parquet", 1000L,
-        Map("id" -> (i * 1000L, i * 1000L + 999L))))
-      val v = SnapshotTable.debugPublishFull(spark, dir, files,
-        withParquetAnchor = true)
-      val pqPath = SnapshotTable.parquetAnchorPath(dir, v)
-      val pqBytes = fs.getFileStatus(pqPath).getLen
-      SnapshotTable.invalidateResolveCache()
-      val pqSec = timeSec(SnapshotTable.readManifest(spark, dir, v))
-      fs.delete(pqPath, false) // force the JSON fallback
-      val jsonPath = new Path(s"$dir/_log", f"v$v%010d.json")
-      val jsonBytes = fs.getFileStatus(jsonPath).getLen
-      SnapshotTable.invalidateResolveCache()
-      val jsonSec = timeSec(SnapshotTable.readManifest(spark, dir, v))
-      fs.delete(new Path(dir), true)
-      s""""files_$n":{"parquet_sec":$pqSec,"json_sec":$jsonSec,""" +
-        s""""parquet_bytes":$pqBytes,"json_bytes":$jsonBytes}"""
-    }
-    out.mkString("{", ",", "}")
-  }
-
   /** Connector family (r11 wave 3): the V2 scan's planning-time file
     * skipping and join-driven dynamic file pruning at a file count the
     * small fixtures never reach (default 2,048 files / 2M rows).
@@ -205,7 +163,7 @@ object ScaleBench {
     *     (Spark's own parquet scan for unmasked files) vs the
     *     connector's vectorized file reader — the connector is the
     *     planning/declarative surface, not the bulk-throughput path. */
-  private[graft] def connectorFamily(spark: SparkSession): String = {
+  private def connectorFamily(spark: SparkSession): String = {
     import graft.sources.SnapshotTable
     import graft.sources.connector.ScanTelemetry
     val nFiles = sys.env.getOrElse("SPARK_GRAFT_CONN_FILES", "2048").toInt
@@ -284,7 +242,7 @@ object ScaleBench {
     * vector in. At 100 TB the bytes column is the whole story: a
     * GDPR-style removal of a few thousand rows must not rewrite
     * terabytes. */
-  private[graft] def deletionVectorFamily(spark: SparkSession): String = {
+  private def deletionVectorFamily(spark: SparkSession): String = {
     import org.apache.spark.sql.functions._
     import graft.sources.SnapshotTable
     val rows = sys.env.getOrElse("SPARK_GRAFT_DV_ROWS", "2000000").toLong
@@ -422,20 +380,9 @@ object ScaleBench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val factor = sys.env.getOrElse("SPARK_GRAFT_SCALE", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.envCores
+    val spark = GraftSession.local(cpus)
+    GraftSession.BenchJoinConfs.foreach { case (k, v) => spark.conf.set(k, v) }
 
     val scaleDir = s"/tmp/graft-scale/${new java.io.File(sfDir).getName}_x$factor"
     val fs = new Path(scaleDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -450,7 +397,7 @@ object ScaleBench {
         // picking up accidental cross-replica date collisions
         .withColumn("l_shipdate", date_add(col("l_shipdate"), (col("rep") * 3000).cast("int")))
         .drop("rep")
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(liPath.toString)
     }
     val docPath = new Path(s"$scaleDir/documents.parquet")
@@ -465,7 +412,7 @@ object ScaleBench {
             concat(lit("r"), col("rep"), lit("_$1"))))
         .withColumn("n_chars", length(col("text")))
         .drop("rep")
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(docPath.toString)
     }
     val embPath = new Path(s"$scaleDir/embeddings.parquet")
@@ -482,7 +429,7 @@ object ScaleBench {
           (x + col("rep").cast("float") * lit(1e-4f) *
             ((i % 5) - lit(2)).cast("float")).cast("float")))
         .drop("rep")
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(embPath.toString)
     }
     val custPath = new Path(s"$scaleDir/customer.parquet")
@@ -500,7 +447,7 @@ object ScaleBench {
         .withColumn("c_name",
           concat(repeat(col("rep").cast("string"), 3), lit("_"), col("c_name")))
         .drop("rep")
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(custPath.toString)
     }
     val triDir = s"$scaleDir/tri"
@@ -511,7 +458,7 @@ object ScaleBench {
         .withColumn("l_orderkey", col("l_orderkey") + col("rep") * lit(1000000000L))
         .withColumn("l_partkey", col("l_partkey") + col("rep") * lit(1000000000L))
         .drop("rep")
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(triPath.toString)
     }
     val rowsIn = spark.read.parquet(liPath.toString).count()
@@ -605,7 +552,6 @@ object ScaleBench {
     } :+ s""""q4X_triangles":{"sec_1x":$tri1s,"rows_1x":$tri1r,"sec_${factor}x":$triFs,"rows_${factor}x":$triFr}""")
       .mkString("{", ",", "}")
     val snapJson = snapshotLogDepth(spark)
-    val anchorJson = manifestFormat(spark)
     val dvJson = deletionVectorFamily(spark)
     val connJson = connectorFamily(spark)
     val upsertJson = upsertFamily(spark)
@@ -616,7 +562,7 @@ object ScaleBench {
         s""""factor":$factor,"rows_in":$rowsIn,"rows_out":$rowsOut,"docs_in":$docsIn,""" +
         s""""vecs_in":$vecsIn,"dedup":$dedupJson,"ann":$annJson,"fuzzy":$fuzzyJson,""" +
         s""""stats":$statsJson,"tok":$tokJson,"snapshot":$snapJson,""" +
-        s""""anchor_format":$anchorJson,"deletion_vectors":$dvJson,""" +
+        s""""deletion_vectors":$dvJson,""" +
         s""""connector":$connJson,"upsert":$upsertJson,""" +
         s""""loadavg":$load,"sf":"$sfDir"}"""
     // versioned artifact (like Bench's bench_out.json): the per-family

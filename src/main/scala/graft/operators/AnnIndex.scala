@@ -38,7 +38,8 @@ import graft.sources.SnapshotTable
   * `assign` with ONE equality delete (zero data reads), assigns just
   * the upserted batch against the frozen centroids, and appends.
   * That is the same cost class as the eq-CDC table apply: per-batch
-  * work stays flat as the corpus grows (AnnIndexProbe measures it).
+  * work stays flat as the corpus grows (`ann_index` in SCALE_r16.json
+  * and `ann_index_pq` in SCALE_r17.json measure it at N and 8N).
   *
   * Search through the index never re-assigns the corpus: queries
   * rank the (driver-cached, vocabulary-sized) centroid set, probe

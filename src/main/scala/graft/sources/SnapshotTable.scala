@@ -234,9 +234,9 @@ object SnapshotTable {
   private def dataDir(dir: String) = new Path(dir, "data")
   private def manifestName(v: Long) = f"v$v%010d.json"
   private def ckptName(v: Long) = f"v$v%010d.ckpt.json"
-  private def parquetAnchorName(v: Long) = f"v$v%010d.ckpt.parquet"
 
   private val ManifestRe = "v(\\d{10})\\.json".r
+  private val VersionFileRe = "v(\\d{10})\\..*".r
 
   /** Every this-many versions a commit writes a full entry even when a
     * delta would do — the anchor that bounds a cold reader's backward
@@ -247,179 +247,6 @@ object SnapshotTable {
   /** Schemes whose `rename` is known atomic-and-fails-if-present
     * (the property [[tryPublish]]'s non-`file` branch depends on). */
   private val AtomicRenameSchemes = Set("hdfs", "viewfs", "webhdfs")
-
-  /** Above this live-file count, a full anchor ALSO materializes as a
-    * parquet checkpoint (`v*.ckpt.parquet`) that readers prefer over
-    * the JSON entry — Delta's checkpoint.parquet move. The JSON commit
-    * file remains the commit-protocol source of truth (atomic publish,
-    * OCC); the parquet anchor is DERIVED, written best-effort after
-    * the version wins its slot, and a reader that doesn't find one
-    * falls back to the JSON — so a crash between publish and anchor
-    * write costs speed, never correctness.
-    *
-    * What the format buys, per the measured anchor-format family
-    * (ScaleBench / AnchorFormatProbe, local NVMe): BYTES — 6.2-6.4×
-    * smaller at every size (2M entries: 28 MB vs 180 MB). On the
-    * object stores where 10^5+-file tables actually live, the cold
-    * path is dominated by fetching the anchor, so the byte reduction
-    * is the win; reading 180 MB of JSON through ~100 MB/s of S3
-    * bandwidth costs more than everything else combined. On LOCAL
-    * warm-cache disk the single-threaded jackson parse is actually
-    * competitive at every measured size (2M entries: 8.5 s JSON vs
-    * 10.1 s for the parquet job + collect), which is why the
-    * threshold stays high instead of "always": below it the ~0.1 s
-    * Spark-job round trip is pure overhead on the small tables local
-    * deployments have. Tunable for tests/benches via the system
-    * property. */
-  def parquetAnchorMinFiles: Int =
-    sys.props.get("graft.snapshot.parquetAnchorMinFiles")
-      .map(_.toInt).getOrElse(100000)
-
-  /** Row shape of a parquet anchor: one row per live file; `stats`
-    * values are [min,max]; `op`/`ts` repeat the version's metadata on
-    * every row (RLE/dictionary encoding makes the repetition free,
-    * and it lets a reader skip the JSON entry entirely). Explicit
-    * schema + Row (not a case-class encoder): the class would be
-    * private to this object, which knocks the deserializer out of
-    * codegen with a noisy Janino access error on every read. */
-  private val AnchorSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("path",
-      org.apache.spark.sql.types.StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("rows",
-      org.apache.spark.sql.types.LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("stats",
-      org.apache.spark.sql.types.MapType(
-        org.apache.spark.sql.types.StringType,
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType, containsNull = false)),
-      nullable = false),
-    org.apache.spark.sql.types.StructField("bloom",
-      org.apache.spark.sql.types.MapType(
-        org.apache.spark.sql.types.StringType,
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType, containsNull = false)),
-      nullable = false),
-    org.apache.spark.sql.types.StructField("op",
-      org.apache.spark.sql.types.StringType, nullable = false),
-    org.apache.spark.sql.types.StructField("ts",
-      org.apache.spark.sql.types.LongType, nullable = false),
-    // deletion-vector ref; nulls on dv-less entries AND on anchors
-    // written before the field existed (schema merge reads them null)
-    org.apache.spark.sql.types.StructField("dv_path",
-      org.apache.spark.sql.types.StringType, nullable = true),
-    org.apache.spark.sql.types.StructField("dv_rows",
-      org.apache.spark.sql.types.LongType, nullable = true),
-    // hash-bucket id; null on unbucketed entries AND on anchors
-    // written before the field existed (explicit-schema read → null)
-    org.apache.spark.sql.types.StructField("bucket",
-      org.apache.spark.sql.types.IntegerType, nullable = true),
-    // ascending-sort column of the file's rows (physical name); same
-    // null contract as `bucket`
-    org.apache.spark.sql.types.StructField("sorted_by",
-      org.apache.spark.sql.types.StringType, nullable = true),
-    // bucket COUNT the file was written under (see
-    // [[FileEntry.bucketedUnder]]); same null contract as `bucket`
-    org.apache.spark.sql.types.StructField("bucket_n",
-      org.apache.spark.sql.types.IntegerType, nullable = true),
-    // stats columns with zero nulls in this file (see
-    // [[FileEntry.noNulls]]); null on pre-noNulls anchors
-    org.apache.spark.sql.types.StructField("no_nulls",
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.StringType, containsNull = false),
-      nullable = true),
-    // string zone maps [lower, upper] (see [[FileEntry.strStats]]);
-    // null on pre-strStats anchors
-    org.apache.spark.sql.types.StructField("sstats",
-      org.apache.spark.sql.types.MapType(
-        org.apache.spark.sql.types.StringType,
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.StringType, containsNull = false)),
-      nullable = true),
-    // per-column KMV NDV sketches (see [[FileEntry.ndv]]); null on
-    // pre-NDV anchors
-    org.apache.spark.sql.types.StructField("ndv",
-      org.apache.spark.sql.types.MapType(
-        org.apache.spark.sql.types.StringType,
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.LongType, containsNull = false)),
-      nullable = true),
-    // equality-delete sidecar paths (see [[FileEntry.eqDv]]); null on
-    // pre-equality-delete anchors
-    org.apache.spark.sql.types.StructField("eq_dv",
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.StringType, containsNull = false),
-      nullable = true)))
-
-  /** Best-effort derived parquet anchor for a just-published full
-    * version: single-file write (temp dir + rename of the part file),
-    * so readers see a complete anchor or nothing. Failures log and
-    * fall through — the JSON entry stays authoritative. */
-  private def writeParquetAnchor(spark: SparkSession, dir: String,
-                                 e: LogEntry): Unit =
-    try {
-      val rows: java.util.List[org.apache.spark.sql.Row] =
-        java.util.Arrays.asList(e.files.map(fe => org.apache.spark.sql.Row(
-          fe.path, fe.rows,
-          fe.stats.map { case (c, (lo, hi)) => c -> Seq(lo, hi) },
-          fe.bloom.map { case (c, ws) => c -> ws },
-          e.op, e.ts,
-          fe.dv.map(_._1).orNull,
-          fe.dv.map(d => java.lang.Long.valueOf(d._2)).orNull,
-          fe.bucket.map(java.lang.Integer.valueOf).orNull,
-          fe.sortedBy.orNull,
-          fe.bucketN.map(java.lang.Integer.valueOf).orNull,
-          if (fe.noNulls.isEmpty) null else fe.noNulls,
-          if (fe.strStats.isEmpty) null
-          else fe.strStats.map { case (c, (lo, hi)) => c -> Seq(lo, hi) },
-          if (fe.ndv.isEmpty) null else fe.ndv,
-          if (fe.eqDv.isEmpty) null else fe.eqDv)): _*)
-      val tmp = new Path(logDir(dir), s".ckpt-pq-${java.util.UUID.randomUUID}")
-      val f = fs(spark, tmp)
-      spark.createDataFrame(rows, AnchorSchema).coalesce(1)
-        .write.mode("overwrite").parquet(tmp.toString)
-      val part = f.listStatus(tmp).map(_.getPath)
-        .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException("no part file written"))
-      val target = new Path(logDir(dir), parquetAnchorName(e.version))
-      f.delete(target, false) // concurrent re-write: content deterministic
-      if (!f.rename(part, target) && !f.exists(target))
-        throw new IllegalStateException(s"could not publish $target")
-      f.delete(tmp, true)
-    } catch {
-      case t: Throwable => // derived artifact: never fail the commit
-        System.err.println(s"[snapshot] parquet anchor for v${e.version} " +
-          s"of $dir not written (reader falls back to JSON): ${t.getMessage}")
-    }
-
-  /** Read a parquet anchor back as a resolved [[Manifest]]. */
-  private def readParquetAnchor(spark: SparkSession, dir: String,
-                                version: Long): Manifest = {
-    val p = new Path(logDir(dir), parquetAnchorName(version))
-    val rows = spark.read.schema(AnchorSchema).parquet(p.toString).collect()
-    val files = rows.toSeq.map { r =>
-      val stats = r.getMap[String, scala.collection.Seq[Long]](2)
-      val bloom = r.getMap[String, scala.collection.Seq[Long]](3)
-      val dv =
-        if (r.isNullAt(6) || r.isNullAt(7)) None
-        else Some((r.getString(6), r.getLong(7)))
-      FileEntry(r.getString(0), r.getLong(1),
-        stats.map { case (c, a) => c -> (a(0), a(1)) }.toMap,
-        bloom.map { case (c, a) => c -> (a.toVector: Seq[Long]) }.toMap,
-        dv, if (r.isNullAt(8)) None else Some(r.getInt(8)),
-        if (r.isNullAt(9)) None else Some(r.getString(9)),
-        if (r.isNullAt(10)) None else Some(r.getInt(10)),
-        if (r.isNullAt(11)) Nil else r.getSeq[String](11),
-        if (r.isNullAt(12)) Map.empty
-        else r.getMap[String, scala.collection.Seq[String]](12)
-          .map { case (c, a) => c -> (a(0), a(1)) }.toMap,
-        if (r.isNullAt(13)) Map.empty
-        else r.getMap[String, scala.collection.Seq[Long]](13)
-          .map { case (c, a) => c -> (a.toVector: Seq[Long]) }.toMap,
-        if (r.isNullAt(14)) Nil else r.getSeq[String](14))
-    }
-    Manifest(version, rows.headOption.map(_.getString(4)).getOrElse("anchor"),
-      files, rows.headOption.map(_.getLong(5)).getOrElse(0L))
-  }
 
   /** Versions with a committed manifest, ascending. */
   def versions(spark: SparkSession, dir: String): Seq[Long] = {
@@ -649,29 +476,6 @@ object SnapshotTable {
   private[graft] def invalidateResolveCache(): Unit =
     resolveCache.synchronized(resolveCache.clear())
 
-  /** Bench hook: publish a synthetic FULL version (entries reference
-    * no real data files) with or without its parquet anchor — lets
-    * ScaleBench measure cold anchor-parse cost at file counts (10^5+)
-    * no local staging could create for real. Metadata-plane only;
-    * scanning such a version would fail, by design. */
-  private[graft] def debugPublishFull(spark: SparkSession, dir: String,
-                                      files: Seq[FileEntry],
-                                      withParquetAnchor: Boolean): Long = {
-    val ld = logDir(dir)
-    val f = fs(spark, ld)
-    f.mkdirs(ld)
-    val v = latestVersion(spark, dir).getOrElse(0L) + 1
-    val e = LogEntry(v, "bench", System.currentTimeMillis(), "full", files, Nil)
-    require(tryPublish(f, ld, e), s"bench publish lost the v$v slot under $dir")
-    if (withParquetAnchor) writeParquetAnchor(spark, dir, e)
-    v
-  }
-
-  /** Bench/test hook: the derived parquet anchor's path (delete it to
-    * force the JSON fallback). */
-  private[graft] def parquetAnchorPath(dir: String, v: Long): Path =
-    new Path(logDir(dir), parquetAnchorName(v))
-
   /** The resolved manifest of `version`: walks backward through delta
     * entries to the nearest full anchor (a full commit, or a vacuum
     * checkpoint at this version) and folds forward. Warm calls are
@@ -688,30 +492,25 @@ object SnapshotTable {
       if (hit != null && hit._1 == st.getModificationTime && hit._2 == st.getLen)
         return hit._3
     }
-    // a parquet anchor (commit-time or vacuum-promoted) IS the resolved
-    // list — prefer it and skip the JSON entry parse entirely
-    val pqa = new Path(logDir(dir), parquetAnchorName(version))
-    val m: Manifest =
-      if (f.exists(pqa)) readParquetAnchor(spark, dir, version)
-      else parseEntry(readBytes(f, p)) match {
-        case entry if entry.kind == "full" =>
-          Manifest(entry.version, entry.op, entry.files, entry.ts)
-        case entry if entry.kind == "delta" =>
-          val ckpt = new Path(logDir(dir), ckptName(version))
-          if (f.exists(ckpt)) { // vacuum promoted this version to an anchor
-            val full = parseEntry(readBytes(f, ckpt))
-            Manifest(entry.version, entry.op, full.files, entry.ts)
-          } else {
-            val base: Seq[FileEntry] =
-              if (version <= 1) Nil // delta against an empty table
-              else readManifest(spark, dir, version - 1).files
-            val gone = entry.remove.toSet
-            Manifest(entry.version, entry.op,
-              base.filterNot(fe => gone.contains(fe.path)) ++ entry.files, entry.ts)
-          }
-        case entry => throw new IllegalStateException(
-          s"unknown log entry kind '${entry.kind}' at version $version of $dir")
-      }
+    val m: Manifest = parseEntry(readBytes(f, p)) match {
+      case entry if entry.kind == "full" =>
+        Manifest(entry.version, entry.op, entry.files, entry.ts)
+      case entry if entry.kind == "delta" =>
+        val ckpt = new Path(logDir(dir), ckptName(version))
+        if (f.exists(ckpt)) { // vacuum promoted this version to an anchor
+          val full = parseEntry(readBytes(f, ckpt))
+          Manifest(entry.version, entry.op, full.files, entry.ts)
+        } else {
+          val base: Seq[FileEntry] =
+            if (version <= 1) Nil // delta against an empty table
+            else readManifest(spark, dir, version - 1).files
+          val gone = entry.remove.toSet
+          Manifest(entry.version, entry.op,
+            base.filterNot(fe => gone.contains(fe.path)) ++ entry.files, entry.ts)
+        }
+      case entry => throw new IllegalStateException(
+        s"unknown log entry kind '${entry.kind}' at version $version of $dir")
+    }
     resolveCache.synchronized {
       resolveCache.put(key, (st.getModificationTime, st.getLen, m))
     }
@@ -956,7 +755,11 @@ object SnapshotTable {
     * those deletions (a lost update). Throws
     * [[CommitConflictException]]; returns the committed version.
     * Every entry records a schema: a commit with none to record, or
-    * whose union with the previous one conflicts, refuses. */
+    * whose union with the previous one conflicts, refuses.
+    * `staged`: the caller staged `added` for this commit alone, so a
+    * refusal raised before the publish attempt deletes them (no
+    * version references them); nothing is deleted once a publish may
+    * have won. */
   private def commit(spark: SparkSession, dir: String, op: String,
                      added: Seq[FileEntry],
                      removed: Map[String, Option[String]] = Map.empty,
@@ -964,7 +767,8 @@ object SnapshotTable {
                      schemaJson: Option[String] = None,
                      replaceSchema: Boolean = false,
                      keepMapping: Boolean = false,
-                     expectLatest: Option[Long] = None): Long = {
+                     expectLatest: Option[Long] = None,
+                     staged: Boolean = false): Long = {
     val ld = logDir(dir)
     val f = fs(spark, ld)
     f.mkdirs(ld)
@@ -975,80 +779,87 @@ object SnapshotTable {
     val incomingSchema: Option[String] =
       if (replaceSchema || keepMapping) schemaJson
       else schemaJson.map(stripMappingJson)
-    var attempts = 0
-    while (true) {
-      val latest = latestVersion(spark, dir)
-      // linear-history guard (fast-forward, staged REPLACE): the
-      // commit must land DIRECTLY on `expectLatest` — losing the slot
-      // race means someone advanced the table first, and replacing
-      // their state would silently drop their commit. Conflict, never
-      // clobber. `-1` encodes "expect NO version yet" (atomic CTAS:
-      // a concurrent creation must conflict, not be overwritten).
-      expectLatest.foreach(e => if (latest.getOrElse(-1L) != e)
-        throw new CommitConflictException(
-          s"$op expected $dir at version ${if (e < 0) "<none>" else e} " +
-            s"but found ${latest.getOrElse(-1L)}: a concurrent commit " +
-            "advanced the table"))
-      val current: Seq[FileEntry] =
-        if (carry) latest.map(readManifest(spark, dir, _).files).getOrElse(Nil)
-        else Nil
-      if (removed.nonEmpty) {
-        val currentDv = current.map(fe => fe.path -> changeToken(fe)).toMap
-        val gone = removed.filter { case (p, sawDv) =>
-          !currentDv.get(p).contains(sawDv)
-        }.keys
-        if (gone.nonEmpty) throw new CommitConflictException(
-          s"write-write conflict under $dir: concurrent commit changed " +
-            s"${gone.mkString(", ")} after this $op read them")
-      }
-      val v = latest.getOrElse(0L) + 1
-      // schema chain: every version records one. A fresh/overwritten
-      // table records the writer's schema; a carrying commit unions it
-      // with (or just carries) the previous version's — except
-      // replaceSchema commits (ALTER DROP/RENAME COLUMN), whose schema
-      // REPLACES the chain's (a union can only widen).
-      val entrySchema: String =
-        if (replaceSchema) {
-          require(carry && incomingSchema.isDefined,
-            "replaceSchema needs a carrying commit with a schema")
-          incomingSchema.get
-        } else if (!carry || latest.isEmpty) incomingSchema.getOrElse(
-          throw new IllegalArgumentException(
-            s"$op on $dir records no schema: every version must record one"))
-        else {
-          val prev = tableSchemaJson(spark, dir, latest.get)
-          incomingSchema.fold(prev)(unionSchemaJson(prev, _))
+    var publishing = false // past this point a publish may have won
+    try {
+      var attempts = 0
+      while (true) {
+        val latest = latestVersion(spark, dir)
+        // linear-history guard (fast-forward, staged REPLACE): the
+        // commit must land DIRECTLY on `expectLatest` — losing the slot
+        // race means someone advanced the table first, and replacing
+        // their state would silently drop their commit. Conflict, never
+        // clobber. `-1` encodes "expect NO version yet" (atomic CTAS:
+        // a concurrent creation must conflict, not be overwritten).
+        expectLatest.foreach(e => if (latest.getOrElse(-1L) != e)
+          throw new CommitConflictException(
+            s"$op expected $dir at version ${if (e < 0) "<none>" else e} " +
+              s"but found ${latest.getOrElse(-1L)}: a concurrent commit " +
+              "advanced the table"))
+        val current: Seq[FileEntry] =
+          if (carry) latest.map(readManifest(spark, dir, _).files).getOrElse(Nil)
+          else Nil
+        if (removed.nonEmpty) {
+          val currentDv = current.map(fe => fe.path -> changeToken(fe)).toMap
+          val gone = removed.filter { case (p, sawDv) =>
+            !currentDv.get(p).contains(sawDv)
+          }.keys
+          if (gone.nonEmpty) throw new CommitConflictException(
+            s"write-write conflict under $dir: concurrent commit changed " +
+              s"${gone.mkString(", ")} after this $op read them")
         }
-      // an overwrite retires the previous schema's rename mapping; read
-      // it BEFORE publishing, so a pre-schema table refuses untouched
-      val retiredSchema =
-        if (carry || replaceSchema || keepMapping) None
-        else latest.map(tableSchemaJson(spark, dir, _))
-      // overwrite/restore replace the whole list (naturally full), and
-      // every CheckpointInterval-th version anchors the log so a cold
-      // reader's backward fold is bounded; everything else commits the
-      // O(changed-files) delta.
-      val entry =
-        if (!carry || v % CheckpointInterval == 0) {
-          val outFiles = current.filterNot(fe => removed.contains(fe.path)) ++ added
-          LogEntry(v, op, System.currentTimeMillis(), "full", outFiles, Nil,
-            Some(entrySchema))
-        } else
-          LogEntry(v, op, System.currentTimeMillis(), "delta", added,
-            removed.keys.toSeq.sorted, Some(entrySchema))
-      if (tryPublish(f, ld, entry)) {
-        if (entry.kind == "full" && entry.files.size >= parquetAnchorMinFiles)
-          writeParquetAnchor(spark, dir, entry)
-        // a mapping-dropping overwrite retires the physical names; the
-        // layout props that referenced them follow the rename
-        retiredSchema.foreach(followPropsAfterMappingDrop(spark, dir, _))
-        return v
+        val v = latest.getOrElse(0L) + 1
+        // schema chain: every version records one. A fresh/overwritten
+        // table records the writer's schema; a carrying commit unions it
+        // with (or just carries) the previous version's — except
+        // replaceSchema commits (ALTER DROP/RENAME COLUMN), whose schema
+        // REPLACES the chain's (a union can only widen).
+        val entrySchema: String =
+          if (replaceSchema) {
+            require(carry && incomingSchema.isDefined,
+              "replaceSchema needs a carrying commit with a schema")
+            incomingSchema.get
+          } else if (!carry || latest.isEmpty) incomingSchema.getOrElse(
+            throw new IllegalArgumentException(
+              s"$op on $dir records no schema: every version must record one"))
+          else {
+            val prev = tableSchemaJson(spark, dir, latest.get)
+            incomingSchema.fold(prev)(unionSchemaJson(prev, _))
+          }
+        // an overwrite retires the previous schema's rename mapping; read
+        // it BEFORE publishing, so a pre-schema table refuses untouched
+        val retiredSchema =
+          if (carry || replaceSchema || keepMapping) None
+          else latest.map(tableSchemaJson(spark, dir, _))
+        // overwrite/restore replace the whole list (naturally full), and
+        // every CheckpointInterval-th version anchors the log so a cold
+        // reader's backward fold is bounded; everything else commits the
+        // O(changed-files) delta.
+        val entry =
+          if (!carry || v % CheckpointInterval == 0) {
+            val outFiles = current.filterNot(fe => removed.contains(fe.path)) ++ added
+            LogEntry(v, op, System.currentTimeMillis(), "full", outFiles, Nil,
+              Some(entrySchema))
+          } else
+            LogEntry(v, op, System.currentTimeMillis(), "delta", added,
+              removed.keys.toSeq.sorted, Some(entrySchema))
+        publishing = true
+        if (tryPublish(f, ld, entry)) {
+          // a mapping-dropping overwrite retires the physical names; the
+          // layout props that referenced them follow the rename
+          retiredSchema.foreach(followPropsAfterMappingDrop(spark, dir, _))
+          return v
+        }
+        publishing = false
+        attempts += 1 // lost the slot race; rebase onto the winner and retry
+        if (attempts > 10000) throw new IllegalStateException(
+          s"could not publish a version under $dir after $attempts attempts")
       }
-      attempts += 1 // lost the slot race; rebase onto the winner and retry
-      if (attempts > 10000) throw new IllegalStateException(
-        s"could not publish a version under $dir after $attempts attempts")
+      -1L // unreachable
+    } catch {
+      case e: Throwable if staged && !publishing =>
+        added.foreach(fe => f.delete(new Path(dir, fe.path), false))
+        throw e
     }
-    -1L // unreachable
   }
 
   /** V2 connector write hook: commit externally-staged file entries
@@ -1064,21 +875,6 @@ object SnapshotTable {
     commit(spark, dir, op, added, carry = carry, schemaJson = schemaJson,
       replaceSchema = replaceSchema, keepMapping = keepMapping,
       expectLatest = expectLatest)
-
-  /** Like [[commit]] but deletes the staged `added` files before
-    * rethrowing a conflict, so a retried operation leaves no orphans. */
-  private def commitStaged(spark: SparkSession, dir: String, op: String,
-                           added: Seq[FileEntry],
-                           removed: Map[String, Option[String]],
-                           carry: Boolean,
-                           schemaJson: Option[String] = None): Long =
-    try commit(spark, dir, op, added, removed, carry, schemaJson)
-    catch {
-      case e: CommitConflictException =>
-        val f = fs(spark, new Path(dir))
-        added.foreach(fe => f.delete(new Path(dir, fe.path), false))
-        throw e
-    }
 
   /** Run a rewrite transaction body, recomputing it from the fresh
     * snapshot on write-write conflict (bounded attempts). */
@@ -1405,19 +1201,20 @@ object SnapshotTable {
       case other => throw new IllegalArgumentException(
         s"mode must be overwrite|append, got $other")
     }
+    // appends stage under the table's physical names (mapping from the
+    // recorded schema); overwrites stage the writer's own (logical)
+    // names, so constraints bind against the writer's schema. Read
+    // before staging: a refusal here leaves nothing behind.
+    val known = (if (carry) latestVersion(spark, dir) else None)
+      .map(v => tableSchema(spark, dir, v))
+      .getOrElse(stripMapping(df.schema))
     // overwrite replaces the schema (and any rename mapping with it):
     // its files are written under the writer's own names
     val fresh = stageFiles(spark, df, dir, statsCols, bloomCols,
       applyMapping = carry, bucketize = bucketLayout(spark, dir))
-    // appends stage under the table's physical names (mapping from the
-    // recorded schema); overwrites stage the writer's own (logical)
-    // names, so constraints bind against the writer's schema
-    enforceCheckConstraints(spark, dir, fresh,
-      (if (carry) latestVersion(spark, dir) else None)
-        .map(v => tableSchema(spark, dir, v))
-        .getOrElse(stripMapping(df.schema)))
+    enforceCheckConstraints(spark, dir, fresh, known)
     commit(spark, dir, opTag.getOrElse(mode), fresh, carry = carry,
-      schemaJson = Some(df.schema.json))
+      schemaJson = Some(df.schema.json), staged = true)
   }
 
   /** CHECK-constraint gate over STAGED (not yet committed) files —
@@ -1472,14 +1269,20 @@ object SnapshotTable {
                  checks: Seq[graft.operators.Expectations.Check],
                  statsCols: Seq[String] = Nil,
                  opTag: Option[String] = None): Long = {
+    val carry = mode match {
+      case "overwrite" => false
+      case "append" => true
+      case other => throw new IllegalArgumentException(
+        s"mode must be overwrite|append, got $other")
+    }
     val fresh = stageFiles(spark, df, dir, statsCols,
-      applyMapping = mode == "append", bucketize = bucketLayout(spark, dir))
+      applyMapping = carry, bucketize = bucketLayout(spark, dir))
     if (fresh.nonEmpty) {
       // staged files carry PHYSICAL names on a mapped table; the
       // declarative checks are written over logical names
       val raw = spark.read.parquet(fresh.map(fe => resolvePath(dir, fe.path)): _*)
       val staged =
-        if (mode != "append") raw
+        if (!carry) raw
         else latestVersion(spark, dir).map(v => tableSchema(spark, dir, v))
           .filter(hasMapping)
           .map(s => raw.select(raw.columns.map { c =>
@@ -1499,14 +1302,8 @@ object SnapshotTable {
               .mkString(", "))
       }
     }
-    val carry = mode match {
-      case "overwrite" => false
-      case "append" => true
-      case other => throw new IllegalArgumentException(
-        s"mode must be overwrite|append, got $other")
-    }
     commit(spark, dir, opTag.getOrElse(s"gated-$mode"), fresh, carry = carry,
-      schemaJson = Some(df.schema.json))
+      schemaJson = Some(df.schema.json), staged = true)
   }
 
   /** The file NAME a deletion vector keys a row by (staged names are
@@ -1801,10 +1598,10 @@ object SnapshotTable {
     }
     val fresh = stageFiles(spark, merged, dir, statsCols,
       bucketize = bucketLayout(spark, dir))
-    commitStaged(spark, dir, opTag.getOrElse("merge"), fresh,
+    commit(spark, dir, opTag.getOrElse("merge"), fresh,
       removed = readSetOf(rewrite), carry = true,
       // evolution: union the new columns into the recorded schema
-      schemaJson = Some(merged.schema.json))
+      schemaJson = Some(merged.schema.json), staged = true)
   }
 
   /** DELETE WHERE: copy-on-write at FILE granularity. Touch detection
@@ -1846,14 +1643,13 @@ object SnapshotTable {
       .filter(!coalesce(predicate, lit(false)))
     val fresh = stageFiles(spark, kept, dir, statsCols,
       bucketize = bucketLayout(spark, dir))
-    commitStaged(spark, dir, "delete", fresh,
-      removed = readSetOf(rewrite), carry = true)
+    commit(spark, dir, "delete", fresh,
+      removed = readSetOf(rewrite), carry = true, staged = true)
   }
 
   /** Publish `df` as ONE parquet file at `dir/relPath` (temp dir +
     * rename of the sole part file, so readers see a complete file or
-    * nothing). Unlike the parquet-anchor writer this THROWS on
-    * failure — a deletion vector is load-bearing, not derived. */
+    * nothing). Throws on failure — a deletion vector is load-bearing. */
   private def writeSingleParquet(spark: SparkSession, dir: String,
                                  df: DataFrame, relPath: String): Unit = {
     val tmp = new Path(dir, s".dv-${java.util.UUID.randomUUID}")
@@ -2685,8 +2481,8 @@ object SnapshotTable {
                                schemaJson: Option[String]): Long =
     retryOnConflict(s"equality delete on $dir") {
       // nothing to refute/mask (empty or all-null key batch, or every
-      // file refuted): the co-committed adds still publish. Plain
-      // commit, NOT commitStaged: a slot-race conflict must leave the
+      // file refuted): the co-committed adds still publish. Not
+      // `staged`: a slot-race conflict must leave the
       // staged files on disk for the retry (the V2 write's abort owns
       // terminal cleanup).
       def addsOnly(v: Long): Long =
@@ -3454,8 +3250,8 @@ object SnapshotTable {
               bucket = bucket, bucketN = bucketN,
               sortedBy = key.map(physicalFor(known, _))))
         }
-        commitStaged(spark, dir, "purge", fresh,
-          removed = readSetOf(dvd), carry = true)
+        commit(spark, dir, "purge", fresh,
+          removed = readSetOf(dvd), carry = true, staged = true)
       }
     }
 
@@ -3527,8 +3323,8 @@ object SnapshotTable {
             .filter(df.columns.contains)
           val fresh = stageFiles(spark, df, dir, csv("statsCols"),
             csv("bloomCols"), bucketize = Some((c, n)))
-          commitStaged(spark, dir, "rebucket-heal", fresh,
-            removed = readSetOf(broken), carry = true)
+          commit(spark, dir, "rebucket-heal", fresh,
+            removed = readSetOf(broken), carry = true, staged = true)
           broken.size
         }
       }
@@ -3616,8 +3412,8 @@ object SnapshotTable {
           csv("bloomCols").filter(df.columns.contains)).map(_.copy(
           bucket = bucket, bucketN = bucketN))
       }
-      commitStaged(spark, dir, "recluster", fresh,
-        removed = readSetOf(decayed.flatMap(_._2)), carry = true)
+      commit(spark, dir, "recluster", fresh,
+        removed = readSetOf(decayed.flatMap(_._2)), carry = true, staged = true)
       decayed.map(_._2.size).sum
     }
   }
@@ -3751,28 +3547,32 @@ object SnapshotTable {
               s"could not publish vacuum checkpoint for version $boundary of $dir")
           f.delete(tmp, false) // no-op when rename consumed it
           require(f.exists(ckpt), s"vacuum checkpoint vanished under $dir")
-          if (m.files.size >= parquetAnchorMinFiles)
-            writeParquetAnchor(spark, dir,
-              LogEntry(m.version, m.op, m.ts, "full", m.files, Nil))
         }
       }
-      expired.foreach { v =>
-        f.delete(new Path(logDir(dir), manifestName(v)), false)
-        f.delete(new Path(logDir(dir), ckptName(v)), false) // below the boundary
-        f.delete(new Path(logDir(dir), parquetAnchorName(v)), false)
-        f.delete(new Path(logDir(dir), f"v$v%010d.lock"), false) // pre-OCC tables
-      }
     }
+    // One listing serves expiry and the temp reclaim. Every `_log` name
+    // of an expired version N starts with `v<N>.`: its commit file, a
+    // checkpoint below the boundary, and what older layouts left beside
+    // them (parquet checkpoints, pre-OCC `.lock` files). Commit files go
+    // last, so a crash part-way leaves N listed for the next vacuum.
+    val gone = expired.toSet
+    val (expiredNames, others) = f.listStatus(logDir(dir)).toSeq.partition(
+      _.getPath.getName match {
+        case VersionFileRe(v) => gone(v.toLong)
+        case _ => false
+      })
+    val (commits, sideFiles) =
+      expiredNames.partition(st => ManifestRe.matches(st.getPath.getName))
+    (sideFiles ++ commits).foreach(st => f.delete(st.getPath, false))
     // reclaim publish temps left by crashed writers — same age gate: a
     // LIVE writer between write and link would otherwise lose its slot
     // spuriously (tryPublish treats the vanished temp as a lost race,
     // which is safe but needless churn)
-    f.listStatus(logDir(dir)).toSeq
-      .filter(_.getModificationTime <= horizon)
-      .map(_.getPath.getName)
-      .filter(n => (n.startsWith(".tmp-") && n.endsWith(".json")) ||
-        n.startsWith(".ckpt-pq-")) // crashed parquet-anchor temp dirs
-      .foreach(n => f.delete(new Path(logDir(dir), n), true))
+    others.filter(_.getModificationTime <= horizon)
+      .map(_.getPath)
+      .filter(p => (p.getName.startsWith(".tmp-") && p.getName.endsWith(".json")) ||
+        p.getName.startsWith(".ckpt-pq-")) // crashed parquet-checkpoint temp dirs
+      .foreach(f.delete(_, true))
     // crashed stage/dv-sidecar temp dirs (and fast-forward intent
     // temps — the published marker is _ff_intent.json, never swept;
     // only orphaned `.tmp-ff-*` from a crash mid-marker-write) live
@@ -4486,8 +4286,8 @@ object SnapshotTable {
         bucket = bucket, bucketN = bucketN,
         sortedBy = key.map(physicalFor(known, _))))
     }
-    commitStaged(spark, dir, "compact", fresh,
-      removed = readSetOf(groups.flatMap(_._2)), carry = true)
+    commit(spark, dir, "compact", fresh,
+      removed = readSetOf(groups.flatMap(_._2)), carry = true, staged = true)
   }
 
   /** CDC: the row-level change feed between two versions, computed
@@ -4574,9 +4374,18 @@ object SnapshotTable {
         val post = align(post0, pre0)
         val pre = align(pre0, post0).select(post.columns.map(col): _*)
         val cols = post.columns.toSeq
-        Some(post.exceptAll(pre).withColumn("change_type", lit("upsert"))
-          .unionAll(pre.exceptAll(post).withColumn("change_type", lit("delete")))
-          .select((cols :+ "change_type").map(col): _*))
+        // EXCEPT ALL refuses map columns: diff each top-level map as its
+        // key-sorted entry array, then rebuild the map
+        val maps = post.schema.fields.collect {
+          case f if f.dataType.isInstanceOf[org.apache.spark.sql.types.MapType] => f.name
+        }.toSet
+        def entries(df: DataFrame) = df.select(cols.map(c =>
+          if (maps(c)) array_sort(map_entries(col(c))).as(c) else col(c)): _*)
+        val (postE, preE) = (entries(post), entries(pre))
+        Some(postE.exceptAll(preE).withColumn("change_type", lit("upsert"))
+          .unionAll(preE.exceptAll(postE).withColumn("change_type", lit("delete")))
+          .select(cols.map(c => if (maps(c)) map_from_entries(col(c)).as(c) else col(c)) :+
+            col("change_type"): _*))
       }
     // fast-path delta legs: one masked read per distinct (newRefs,
     // oldRefs) GROUP (one delete epoch attaches the same ref to many

@@ -33,9 +33,8 @@ import graft.sources.SnapshotTable
   * directory. The rows are computed DRIVER-SIDE from the commit log —
   * metadata-only, O(#versions) / O(#files), no data file opened — and
   * served through a single-partition V2 scan. That bound is the same
-  * one every manifest read already accepts (and the parquet-anchor
-  * path keeps it cheap at depth); a metadata table is by definition
-  * manifest-sized, not data-sized. */
+  * one every manifest read already accepts; a metadata table is by
+  * definition manifest-sized, not data-sized. */
 object MetadataTables {
 
   val Names: Set[String] = Set("history", "files", "changes", "refs",

@@ -118,8 +118,9 @@ object ApplyChanges {
     * (delete published, append lost until replay) is gone outright
     * with the fusion. Pending refs
     * accumulate per epoch until `purge_deletes`/`compact`/`maintain`
-    * folds them; run the fold on a maintenance cadence — EqProbe
-    * prices both sides of the trade. */
+    * folds them; run the fold on a maintenance cadence — the
+    * `eq_delete` entries of SCALE_r15/r16.json price both sides of the
+    * trade, and etlbench's `cdc_epochs` folds every 10th epoch. */
   def applyBatchEq(batch: DataFrame, dir: String, key: String,
                    statsCols: Seq[String] = Nil): Unit =
     applyBatchEqKeys(batch, dir, Seq(key), statsCols)

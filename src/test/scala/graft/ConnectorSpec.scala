@@ -490,11 +490,14 @@ class ConnectorSpec extends SparkTestBase {
     SnapshotTable.write(spark, spark.range(0, 5).select($"id", lit("a").as("s")),
       dir, "overwrite")
     val v = SnapshotTable.latestVersion(spark, dir).get
+    def dataFiles = new java.io.File(dir, "data").list().toSet
+    val before = dataFiles
     val ex = intercept[IllegalArgumentException](SnapshotTable.write(spark,
       spark.range(5, 7).select($"id".cast("string").as("id"), lit("b").as("s")),
       dir, "append"))
     assert(ex.getMessage.contains("'id'"), ex.getMessage)
     assert(SnapshotTable.latestVersion(spark, dir).contains(v))
+    assert(dataFiles == before, "the refused append's staged files must go")
     assert(SnapshotTable.scan(spark, dir).select($"id").as[Long].collect()
       .sorted.toSeq == (0L until 5L))
   }

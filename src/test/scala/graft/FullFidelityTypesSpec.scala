@@ -87,9 +87,9 @@ class FullFidelityTypesSpec extends SparkTestBase {
     assert(net(feedOf(dir), cols) == want.map(_ -> 1).toMap)
   }
 
-  test("the change feed equals changes() version by version over decimal/struct/array<struct>") {
+  test("the change feed equals changes() version by version over decimal/struct/map/array<struct>") {
     val dir = Files.createTempDirectory("graft-fullfeed").toString
-    val cols = Seq("id", "d", "st", "arr")
+    val cols = Seq("id", "d", "st", "mp", "arr")
     SnapshotTable.write(spark, gen(0, 400).select(cols.map(col): _*)
       .repartition(2), dir, "overwrite")
     SnapshotTable.deleteVectors(spark, dir, $"st.a" === 1)
