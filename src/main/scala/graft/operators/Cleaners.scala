@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 import graft.functions.{Dates, Luggage, Normalize}
 import graft.schema.FlightVocab._
@@ -50,35 +51,32 @@ object Cleaners {
     * cabin-class whitespace strip -> luggage recompose -> date/year
     * derivation from the first-leg departure time -> ensure key columns
     * -> ensure metadata. `nowEpoch` parameterizes the reference's
-    * `time.time()` fill for determinism. */
+    * `time.time()` fill for determinism. Two projections after the
+    * rename: the value transforms, then the pads and defaults. */
   def cleanCola(raw: DataFrame, nowEpoch: Double = 0d): DataFrame = {
-    var df = Conform.renameColumns(raw, ColaRenames)
+    val renamed = Conform.renameColumns(raw, ColaRenames)
+    val has = renamed.columns.toSet
     // F11 (`cola_transformer.py:232-245`): strip literal spaces in 艙等 cols
-    df.columns.filter(_.contains("艙等")).foreach { c =>
-      df = df.withColumn(c, Normalize.normalizeCabinClass(col(c)))
-    }
+    val cabins = renamed.columns.toSeq.filter(_.contains("艙等"))
+      .map(c => c -> Normalize.normalizeCabinClass(col(c)))
     // F5 (`cola_transformer.py:247-269`): luggage recompose
-    df.columns.filter(_.contains("行李")).foreach { c =>
-      df = df.withColumn(c, Luggage.recomposeLuggage(col(c)))
-    }
+    val luggage = renamed.columns.toSeq.filter(_.contains("行李"))
+      .map(c => c -> Luggage.recomposeLuggage(col(c)))
     // F6/F7/F8 (`cola_transformer.py:211-228`): dates from leg-1 times
-    if (df.columns.contains(depDepTime(1))) {
-      df = df
-        .withColumn(DepartureDate,
-          Dates.isoSliceToMmDd(Dates.toDateYyyySlashMmSlashDd(col(depDepTime(1)))))
-        .withColumn(DepartureYear, Dates.yearPrefix(col(depDepTime(1))))
-    }
-    if (df.columns.contains(retDepTime(1))) {
-      df = df
-        .withColumn(ReturnDate,
-          Dates.isoSliceToMmDd(Dates.toDateYyyySlashMmSlashDd(col(retDepTime(1)))))
-        .withColumn(ReturnYear, Dates.yearPrefix(col(retDepTime(1))))
-    }
-    // P3 (`cola_transformer.py:271-287`)
-    df = Conform.ensureColumns(df, FlightKeyCols ++ Seq(DepartureDate, ReturnDate))
-    // P4 (`cola_transformer.py:289-300`)
-    df = Conform.ensureWithDefault(df, CreationTime, lit(nowEpoch))
-    Conform.ensureWithDefault(df, Kp, lit(""))
+    def dates(time: String, date: String, year: String) =
+      if (!has(time)) Nil
+      else Seq(
+        date -> Dates.isoSliceToMmDd(Dates.toDateYyyySlashMmSlashDd(col(time))),
+        year -> Dates.yearPrefix(col(time)))
+    val cleaned = Conform.project(renamed, cabins ++ luggage ++
+      dates(depDepTime(1), DepartureDate, DepartureYear) ++
+      dates(retDepTime(1), ReturnDate, ReturnYear))
+    // P3 (`cola_transformer.py:271-287`) + P4 (`cola_transformer.py:289-300`)
+    Conform.project(cleaned,
+      Conform.nullPads(cleaned,
+        (FlightKeyCols ++ Seq(DepartureDate, ReturnDate)).map(_ -> StringType)) ++
+        Seq(Conform.withDefault(cleaned, CreationTime, lit(nowEpoch)),
+          Conform.withDefault(cleaned, Kp, lit(""))))
   }
 
   /** P7 (`cola_transformer.py:170-201`): split each composite
@@ -91,47 +89,45 @@ object Cleaners {
     * with no data-dependent schema decision — the same plan shape at
     * any scale. */
   def splitFlightAndClass(df: DataFrame): DataFrame = {
-    val composites = df.columns.filter(c =>
+    val composites = df.columns.toSeq.filter(c =>
       c.startsWith("去程_航班號") || c.startsWith("回程_航班號"))
-    composites.foldLeft(df) { (acc, c) =>
+    val parts = composites.flatMap { c =>
       val leg = c.takeRight(1)
       val prefix = c.dropRight(1).replace("航班號", "")
-      val parts = split(col(c), " ", 2)
-      acc
-        .withColumn(s"${prefix}航班編號$leg", trim(get(parts, lit(0))))
-        .withColumn(s"${prefix}艙等$leg", get(parts, lit(1)))
-        .drop(c)
+      val pieces = split(col(c), " ", 2)
+      Seq(s"${prefix}航班編號$leg" -> trim(get(pieces, lit(0))),
+        s"${prefix}艙等$leg" -> get(pieces, lit(1)))
     }
+    Conform.project(df, parts, drop = composites.toSet)
   }
 
+  private def flightCols(df: DataFrame): Seq[String] =
+    (Legs.map(depFlight) ++ Legs.map(retFlight)).filter(df.columns.contains)
+
+  /** F10 (`set_transformer.py:85-92`) over every flight-number column. */
+  private def normalizedFlights(df: DataFrame): Seq[(String, Column)] =
+    flightCols(df).map(c => c -> Normalize.normalizeFlightNumber(col(c)))
+
   /** Competitor cleaning chain (`set_transformer.py:13-26` + 4 clones):
-    * rename -> flight-number normalize + invalid-row drop (F10/F-C) ->
-    * ISO date slice to MM/DD (F7). */
+    * rename -> flight-number normalize (F10) and ISO date slice to
+    * MM/DD (F7) in one projection -> invalid-row drop (F-C). */
   def cleanCompetitor(raw: DataFrame, priceCol: String, taxCol: String): DataFrame = {
-    var df = Conform.renameColumns(raw, competitorRenames(priceCol, taxCol))
-    val flightCols = (Legs.map(depFlight) ++ Legs.map(retFlight)).filter(df.columns.contains)
-    // F10 (`set_transformer.py:85-92`)
-    flightCols.foreach { c =>
-      df = df.withColumn(c, Normalize.normalizeFlightNumber(col(c)))
-    }
+    val renamed = Conform.renameColumns(raw, competitorRenames(priceCol, taxCol))
+    // F7 (`set_transformer.py:60-66`; guarded like the foreign variant)
+    val dates = Seq(DepartureDate, ReturnDate).filter(renamed.columns.contains)
+      .map(c => c -> Dates.isoSliceToMmDd(col(c)))
+    val df = Conform.project(renamed, normalizedFlights(renamed) ++ dates)
     // F-C (`set_transformer.py:94-109`); the reference logs each dropped
     // row — distributed engines expose the reject side as a branch
     // instead (see `invalidRows`).
-    if (flightCols.nonEmpty)
-      df = df.filter(Normalize.allFlightNumbersValid(flightCols.map(col)))
-    // F7 (`set_transformer.py:60-66`; guarded like the foreign variant)
-    Seq(DepartureDate, ReturnDate).filter(df.columns.contains).foreach { c =>
-      df = df.withColumn(c, Dates.isoSliceToMmDd(col(c)))
-    }
-    df
+    val flights = flightCols(df)
+    if (flights.isEmpty) df
+    else df.filter(Normalize.allFlightNumbersValid(flights.map(col)))
   }
 
   /** The complement of F-C's keep-filter — the reference logs these rows
     * (`set_transformer.py:103-107`); at scale they go to a reject sink. */
-  def invalidRows(df: DataFrame): DataFrame = {
-    val flightCols = (Legs.map(depFlight) ++ Legs.map(retFlight)).filter(df.columns.contains)
-    val normalized = flightCols.foldLeft(df)((acc, c) =>
-      acc.withColumn(c, Normalize.normalizeFlightNumber(col(c))))
-    normalized.filter(!Normalize.allFlightNumbersValid(flightCols.map(col)))
-  }
+  def invalidRows(df: DataFrame): DataFrame =
+    Conform.project(df, normalizedFlights(df))
+      .filter(!Normalize.allFlightNumbersValid(flightCols(df).map(col)))
 }

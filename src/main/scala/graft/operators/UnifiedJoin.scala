@@ -28,20 +28,21 @@ import graft.schema.FlightVocab._
 object UnifiedJoin {
 
   /** J2: canonicalize the 14 join keys on one frame
-    * (`unified_transformer.py:216-258`). Adds any missing key column. */
-  def normalizeForJoin(df0: DataFrame): DataFrame = {
-    var df = Conform.ensureColumns(df0, JoinKeys)
-    JoinKeys.foreach { k =>
-      val base = Normalize.normalizeKey(col(k))
+    * (`unified_transformer.py:216-258`), in one projection. A missing
+    * key column enters as a typed null, normalized like the rest. */
+  def normalizeForJoin(df: DataFrame): DataFrame = {
+    val present = df.columns.toSet
+    Conform.project(df, JoinKeys.map { k =>
+      val base = Normalize.normalizeKey(
+        if (present(k)) col(k) else lit(null).cast(StringType))
       val v =
         if (FlightNumberKeyCols.contains(k) || CabinKeyCols.contains(k))
           regexp_replace(base, "\\s+", "")
         else if (k == DepartureDate || k == ReturnDate)
           Normalize.normalizeDateKeyMMDD(base)
         else base
-      df = df.withColumn(k, v)
-    }
-    df
+      k -> v
+    })
   }
 
   /** J1: cola ⟕ set ⟕ lion ⟕ eztravel ⟕ foreign-eztravel ⟕ rich on the
@@ -63,9 +64,10 @@ object UnifiedJoin {
   /** F9: `出發日期 = 出發年份 + "/" + MM/DD` then drop the year columns
     * (`unified_transformer.py:518-537`). */
   def handleDate(df: DataFrame): DataFrame =
-    df.withColumn(DepartureDate, Dates.attachYear(col(DepartureYear), col(DepartureDate)))
-      .withColumn(ReturnDate, Dates.attachYear(col(ReturnYear), col(ReturnDate)))
-      .drop(DepartureYear, ReturnYear)
+    Conform.project(df, Seq(
+        DepartureDate -> Dates.attachYear(col(DepartureYear), col(DepartureDate)),
+        ReturnDate -> Dates.attachYear(col(ReturnYear), col(ReturnDate))),
+      drop = Set(DepartureYear, ReturnYear))
 
   /** P5: the wide English projection (`unified_transformer.py:290-503`).
     * One `select` of aliased expressions — a single codegen'd stage. */

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Deterministic raw flight-price sources synthesized from the testdata
@@ -14,11 +14,12 @@ import org.apache.spark.sql.functions._
   * internal whitespace and casing in flight numbers, unpadded 2-digit
   * tails, raw datetime strings, invalid flight codes (dropped by F-C),
   * absent key columns (null-padded by P3), and luggage/duration strings.
+  *
+  * Every source is a projection of one `lineitem` frame the caller
+  * reads once ([[graft.FlightPipeline.run]]), so a refresh pays one
+  * source read, not one per source.
   */
 object FlightSynth {
-
-  private def base(spark: SparkSession, sfDir: String): DataFrame =
-    Tables.computeTable(spark, sfDir, "lineitem")
 
   // shared key ingredients (cola and competitors must agree post-cleaning)
   private def dep1 = concat(lit("CI"), (col("l_partkey") % 900 + 100).cast("string"))
@@ -29,8 +30,8 @@ object FlightSynth {
   private def retDateIso = date_format(date_add(col("l_shipdate"), 7), "yyyy-MM-dd")
 
   /** Primary source (raw cola vocabulary, `cola_transformer.py:121-168`). */
-  def cola(spark: SparkSession, sfDir: String): DataFrame =
-    base(spark, sfDir).select(
+  def cola(lineitem: DataFrame): DataFrame =
+    lineitem.select(
       dep1.as("去程航班編號1"),
       // internal space + unpadded handled by J2's whitespace strip; the
       // zero pad is pre-applied here because cola (unlike competitors)
@@ -86,14 +87,14 @@ object FlightSynth {
     * `invalidEvery` (when > 0) poisons `去程航班編號1` on matching rows
     * so F-C provably drops them. Leg-3 columns are deliberately absent —
     * P3 must null-pad them. */
-  def competitor(spark: SparkSession, sfDir: String, keyFilter: Column,
+  def competitor(lineitem: DataFrame, keyFilter: Column,
                  priceFactor: Double, taxFactor: Double,
                  invalidEvery: Int = 0): DataFrame = {
     val fn1 =
       if (invalidEvery > 0)
         when(col("l_orderkey") % invalidEvery === 0, lit("BAD*1")).otherwise(dep1)
       else dep1
-    base(spark, sfDir).filter(keyFilter).select(
+    lineitem.filter(keyFilter).select(
       depDateIso.as("去程日期"),
       retDateIso.as("回程日期"),
       fn1.as("去程航班編號1"),
@@ -108,14 +109,14 @@ object FlightSynth {
       floor(col("l_extendedprice") * col("l_tax") * taxFactor).as("稅金"))
   }
 
-  def set(spark: SparkSession, sfDir: String): DataFrame =
-    competitor(spark, sfDir, col("l_orderkey") % 2 === 0, 0.97, 0.95, invalidEvery = 11)
-  def lion(spark: SparkSession, sfDir: String): DataFrame =
-    competitor(spark, sfDir, col("l_orderkey") % 3 === 0, 0.99, 0.90)
-  def eztravel(spark: SparkSession, sfDir: String): DataFrame =
-    competitor(spark, sfDir, col("l_orderkey") % 5 === 0, 1.02, 1.00)
-  def foreignEztravel(spark: SparkSession, sfDir: String): DataFrame =
-    competitor(spark, sfDir, col("l_orderkey") % 5 === 3, 0.95, 0.85)
-  def rich(spark: SparkSession, sfDir: String): DataFrame =
-    competitor(spark, sfDir, col("l_orderkey") % 7 === 0, 1.05, 1.10)
+  def set(lineitem: DataFrame): DataFrame =
+    competitor(lineitem, col("l_orderkey") % 2 === 0, 0.97, 0.95, invalidEvery = 11)
+  def lion(lineitem: DataFrame): DataFrame =
+    competitor(lineitem, col("l_orderkey") % 3 === 0, 0.99, 0.90)
+  def eztravel(lineitem: DataFrame): DataFrame =
+    competitor(lineitem, col("l_orderkey") % 5 === 0, 1.02, 1.00)
+  def foreignEztravel(lineitem: DataFrame): DataFrame =
+    competitor(lineitem, col("l_orderkey") % 5 === 3, 0.95, 0.85)
+  def rich(lineitem: DataFrame): DataFrame =
+    competitor(lineitem, col("l_orderkey") % 7 === 0, 1.05, 1.10)
 }

@@ -710,7 +710,9 @@ object SnapshotTable {
     * keep their order (they are the files read first), new-only
     * fields append — the order a merged footer schema has. A same-name
     * type conflict throws, naming the column: no recorded schema
-    * could describe both the old files and the new ones. A new field
+    * could describe both the old files and the new ones. Types equal
+    * up to nested nullability are no conflict: the recorded type takes
+    * the wider nullability ([[widenNullability]]). A new field
     * whose name collides with a RENAMED column's physical name throws
     * too: files still carry data under that physical name, so the
     * "new" column would silently resurrect the renamed column's old
@@ -720,13 +722,16 @@ object SnapshotTable {
     val prev = DataType.fromJson(prevJson).asInstanceOf[StructType]
     val next = DataType.fromJson(newJson).asInstanceOf[StructType]
     val prevByName = prev.fields.map(f => f.name -> f.dataType).toMap
+    val nextByName = next.fields.map(f => f.name -> f.dataType).toMap
     val conflicts = next.fields.toSeq.flatMap(f =>
-      prevByName.get(f.name).filter(_ != f.dataType).map(t =>
+      prevByName.get(f.name).filter(widenNullability(_, f.dataType).isEmpty).map(t =>
         s"'${f.name}' is ${t.simpleString} in the table but " +
           s"${f.dataType.simpleString} in this write"))
     if (conflicts.nonEmpty) throw new IllegalArgumentException(
       s"schema conflict: column ${conflicts.mkString("; ")} — add an " +
         "explicit CAST, or overwrite the table")
+    val kept = prev.fields.map(f => nextByName.get(f.name)
+      .fold(f)(t => f.copy(dataType = widenNullability(f.dataType, t).get)))
     val newFields = next.fields.filterNot(f => prevByName.contains(f.name))
     val prevPhysical = prev.fields.map(physicalName).toSet -- prevByName.keySet
     val clash = newFields.map(_.name).filter(prevPhysical.contains)
@@ -735,7 +740,33 @@ object SnapshotTable {
         "PHYSICAL name of a renamed column and existing files still " +
         "carry its data — pick a different name (or add it via ALTER " +
         "TABLE, which assigns a fresh physical name)")
-    StructType(prev.fields ++ newFields).json
+    StructType(kept ++ newFields).json
+  }
+
+  /** `prev` widened to admit `next`'s nulls when the two are the same
+    * type up to nullability (an UPDATE's `struct(lit(99), …)` image
+    * over a table whose struct fields are declared non-null); None on
+    * a real type conflict. Nullability only ever widens, so a read
+    * never promises more than any file delivers. */
+  private def widenNullability(prev: org.apache.spark.sql.types.DataType,
+                               next: org.apache.spark.sql.types.DataType)
+      : Option[org.apache.spark.sql.types.DataType] = {
+    import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
+    (prev, next) match {
+      case (ArrayType(p, pNull), ArrayType(n, nNull)) =>
+        widenNullability(p, n).map(ArrayType(_, pNull || nNull))
+      case (MapType(pk, pv, pNull), MapType(nk, nv, nNull)) =>
+        for (k <- widenNullability(pk, nk); v <- widenNullability(pv, nv))
+          yield MapType(k, v, pNull || nNull)
+      case (StructType(pf), StructType(nf)) if pf.length == nf.length =>
+        val fields = pf.zip(nf).map { case (a, b) =>
+          if (a.name != b.name) None
+          else widenNullability(a.dataType, b.dataType)
+            .map(t => a.copy(dataType = t, nullable = a.nullable || b.nullable))
+        }
+        if (fields.forall(_.isDefined)) Some(StructType(fields.map(_.get))) else None
+      case _ => Some(prev).filter(_ == next)
+    }
   }
 
   /** Rebase-validate-publish commit (see protocol in the object doc).
@@ -2703,6 +2734,29 @@ object SnapshotTable {
       } finally keyDf.unpersist()
     }
 
+  /** `values` (column name → value over `rows`), each value whose type
+    * is a lossless widening of its column's recorded type (Spark's
+    * up-cast: int into bigint, float into double, a decimal that fits)
+    * cast to that type — the store assignment `UPDATE … SET v = 1`
+    * needs on a bigint column. Any other mismatch is left for the
+    * schema union to refuse. */
+  private def upcastAssignments(known: org.apache.spark.sql.types.StructType,
+                                rows: DataFrame,
+                                values: Seq[(String, org.apache.spark.sql.Column)])
+      : Seq[(String, org.apache.spark.sql.Column)] = {
+    import org.apache.spark.sql.catalyst.expressions.Cast
+    val types = rows.select(values.map { case (c, e) => e.as(c) }: _*)
+      .schema.fields.map(_.dataType)
+    val recorded = known.fields.map(f => f.name -> f.dataType).toMap
+    values.zip(types).map { case ((c, e), t) =>
+      recorded.get(c) match {
+        case Some(k) if widenNullability(k, t).isEmpty && Cast.canUpCast(t, k) =>
+          c -> e.cast(k)
+        case _ => c -> e
+      }
+    }
+  }
+
   /** UPDATE WHERE via deletion vectors (merge-on-read): matched rows'
     * positions join the consolidated vector and their TRANSFORMED
     * images land in freshly appended files — one commit, no data file
@@ -2738,6 +2792,12 @@ object SnapshotTable {
             .limit(0)
         else readFiles(spark, dir, candidates, v, keepPos = true,
           knownSchema = known)
+      val values = upcastAssignments(known, matched0, assignments).toMap
+      def postImages(rows: DataFrame): DataFrame =
+        rows.select(cols.map(c => values.get(c).map(_.as(c)).getOrElse(col(c))): _*)
+      // an assignment whose type conflicts with its column refuses
+      // here, before anything is staged
+      unionSchemaJson(known.json, postImages(matched0).schema.json)
       stageDvSidecarFrom(spark, dir, m, matched0.filter(predicate)
         .select(col("__graft_file").as("file"),
           col("__graft_pos").as("pos"))) match {
@@ -2746,12 +2806,10 @@ object SnapshotTable {
           val f = fs(spark, new Path(dir))
           try {
             // second predicate-pruned pass stages the post-images
-            val updated = readFiles(spark, dir,
+            val updated = postImages(readFiles(spark, dir,
               if (candidates.isEmpty) m.files else candidates, v,
               knownSchema = known)
-              .filter(predicate)
-              .select(cols.map(c =>
-                assign.get(c).map(_.as(c)).getOrElse(col(c))): _*)
+              .filter(predicate))
             val fresh = stageFiles(spark, updated, dir, statsCols,
               bucketize = bucketLayout(spark, dir))
             // UPDATE post-images are new content: the table's CHECK
@@ -2760,9 +2818,10 @@ object SnapshotTable {
             val newPaths = entries.map(_.path).toSet
             try commit(spark, dir, "update-dv", entries ++ fresh,
               removed = readSetOf(m.files.filter(fe => newPaths.contains(fe.path))),
-              carry = true)
+              carry = true, schemaJson = Some(updated.schema.json))
             catch {
-              case e: CommitConflictException =>
+              // a conflict or a schema refusal: nothing was published
+              case e @ (_: CommitConflictException | _: IllegalArgumentException) =>
                 fresh.foreach(fe => f.delete(new Path(dir, fe.path), false))
                 throw e
             }
@@ -2885,28 +2944,35 @@ object SnapshotTable {
           s"source row(s) share a $keyCol value; a matched target row " +
           "must have exactly one source image — deduplicate the source " +
           "(e.g. keep-latest by a version column) before merging")
+      val known = tableSchema(spark, dir, v)
+      val images = updates.select(upcastAssignments(known, updates,
+        cols.map(c => c -> col(c))).map { case (c, e) => e.as(c) }: _*)
+      // a source column whose type conflicts with the table's refuses
+      // here, before anything is staged
+      unionSchemaJson(known.json, images.schema.json)
       val keys = updates.select(col(keyCol)).distinct()
-      val matched = matchedPositions(spark, dir, m, keyCol, keys,
-        tableSchema(spark, dir, v))
+      val matched = matchedPositions(spark, dir, m, keyCol, keys, known)
       val staged = stageDvSidecarFrom(spark, dir, m, matched)
       val f = fs(spark, new Path(dir))
       try {
-        val fresh = stageFiles(spark, updates.select(cols.map(col): _*),
+        val fresh = stageFiles(spark, images,
           dir, statsCols, bucketize = bucketLayout(spark, dir))
         // MERGE post-images are new content: constraints gate them
-        enforceCheckConstraints(spark, dir, fresh,
-          tableSchema(spark, dir, v))
+        enforceCheckConstraints(spark, dir, fresh, known)
+        val schemaJson = Some(images.schema.json)
         staged match {
           case None => // pure insert: nothing matched, plain append
             if (fresh.isEmpty) v
-            else commit(spark, dir, "merge-dv", fresh, carry = true)
+            else commit(spark, dir, "merge-dv", fresh, carry = true,
+              schemaJson = schemaJson, staged = true)
           case Some((name, entries)) =>
             val newPaths = entries.map(_.path).toSet
             try commit(spark, dir, "merge-dv", entries ++ fresh,
               removed = readSetOf(m.files.filter(fe => newPaths.contains(fe.path))),
-              carry = true)
+              carry = true, schemaJson = schemaJson)
             catch {
-              case e: CommitConflictException =>
+              // a conflict or a schema refusal: nothing was published
+              case e @ (_: CommitConflictException | _: IllegalArgumentException) =>
                 fresh.foreach(fe => f.delete(new Path(dir, fe.path), false))
                 throw e
             }

@@ -50,19 +50,27 @@ object Tables {
     * I/O as shuffle spill), so every later scan of it parallelizes,
     * pushdown included. Hash-repartition, not round-robin: round-robin
     * locally sorts the whole frame first (sortBeforeRepartition).
+    *
+    * The memo is consulted before the source is read, so a staged table
+    * costs no schema inference on later calls. Only staged copies are
+    * memoized: a plain scan caches its file listing, and a later call
+    * must see files added to the source since.
     */
   def computeTable(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val df = table(spark, sfDir, name)
-    val target = spark.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= target) df
-    else staged.getOrElseUpdate((spark.sparkContext.applicationId, sfDir, name), {
-      val dir = new java.io.File(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft-staged/${spark.sparkContext.applicationId}/" +
-          s"${new java.io.File(sfDir).getName}-$name").getAbsolutePath
-      df.repartition(target, xxhash64(df.columns.toIndexedSeq.map(col): _*))
-        .write.mode("overwrite").parquet(dir)
-      spark.read.parquet(dir)
+    val key = (spark.sparkContext.applicationId, sfDir, name)
+    staged.getOrElse(key, {
+      val df = table(spark, sfDir, name)
+      val target = spark.sparkContext.defaultParallelism
+      if (df.rdd.getNumPartitions >= target) df
+      else staged.getOrElseUpdate(key, {
+        val dir = new java.io.File(
+          sys.props.getOrElse("java.io.tmpdir", "/tmp"),
+          s"graft-staged/${spark.sparkContext.applicationId}/" +
+            s"${new java.io.File(sfDir).getName}-$name").getAbsolutePath
+        df.repartition(target, xxhash64(df.columns.toIndexedSeq.map(col): _*))
+          .write.mode("overwrite").parquet(dir)
+        spark.read.parquet(dir)
+      })
     })
   }
 

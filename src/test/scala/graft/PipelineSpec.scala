@@ -76,6 +76,35 @@ class PipelineSpec extends SparkTestBase {
     assert(ci.select("creation_time").collect()(0).getDouble(0) == 2.0)
   }
 
+  test("building FlightPipeline.run starts at most one Spark job") {
+    val sfDir = java.nio.file.Files.createTempDirectory("graft-pipeline").toString
+    spark.range(0, 400).select(
+        ($"id" / 4).cast("long").as("l_orderkey"), ($"id" % 4 + 1).as("l_linenumber"),
+        ($"id" * 7 % 1000).as("l_partkey"), ($"id" * 3 % 100).as("l_suppkey"),
+        ($"id" * 1.5 + 100).as("l_extendedprice"), lit(0.05).as("l_tax"),
+        date_add(lit("2024-01-01").cast("date"), ($"id" % 300).cast("int"))
+          .as("l_shipdate"))
+      .repartition(4).write.parquet(s"$sfDir/lineitem.parquet")
+    // four files on four cores: the plain (unstaged, unmemoized) read
+    assert(spark.read.parquet(s"$sfDir/lineitem.parquet").rdd.getNumPartitions >=
+      spark.sparkContext.defaultParallelism)
+    val drain = () => org.apache.spark.sql.graftbridge.Bridge
+      .drainListenerBus(spark.sparkContext)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    drain()
+    spark.sparkContext.addSparkListener(listener)
+    val out =
+      try { val df = graft.FlightPipeline.run(spark, sfDir); drain(); df }
+      finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get() <= 1, s"building the plan ran ${jobs.get()} jobs")
+    assert(out.columns.length == 94)
+    assert(out.count() > 0)
+  }
+
   test("projection derives airline/date/transfer fields") {
     val row = unified.filter($"departure_flight_number_1" === "CI073")
       .select("departure_airline_1", "departure_date", "return_date",

@@ -17,6 +17,28 @@ class SinksSpec extends SparkTestBase {
   private def readIds(dir: String): Set[Long] =
     spark.read.parquet(dir).select("id").as[Long].collect().toSet
 
+  /** Spark jobs `body` starts, counted by a listener after draining the
+    * bus. */
+  private def jobsOf(body: => Unit): Int = {
+    val drain = () => org.apache.spark.sql.graftbridge.Bridge
+      .drainListenerBus(spark.sparkContext)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    drain()
+    spark.sparkContext.addSparkListener(listener)
+    try { body; drain() }
+    finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
+  }
+
+  /** Every file under `dir` (checksums included) by name, with its bytes. */
+  private def fileBytes(dir: String): Map[String, Seq[Byte]] =
+    new java.io.File(dir).listFiles().filter(_.isFile)
+      .map(f => f.getName -> Files.readAllBytes(f.toPath).toSeq).toMap
+
   test("S5 truncate-and-load replaces content and keeps a backup") {
     val root = freshRoot()
     val v1 = Seq(1L, 2L, 3L).toDF("id")
@@ -86,6 +108,71 @@ class SinksSpec extends SparkTestBase {
     assert(readIds(s"$root/t") == Set(1L, 3L, 5L))
     assert(obs.get("rejected").asInstanceOf[Long] == 2L)
     assert(obs.get("input_rows").asInstanceOf[Long] == 5L)
+  }
+
+  test("a refresh runs only its write job; its backup is a byte copy") {
+    val root = freshRoot()
+    // a shuffle in the frame: the write runs more than one job under AQE
+    val frame = spark.range(0, 2000, 1, 4)
+      .groupBy(($"id" % 100).as("id")).agg(count(lit(1)).as("n"))
+    Sinks.truncateAndLoad(spark, frame, s"$root/t", s"$root/bk", "t", 1000L)
+    val preLoad = fileBytes(s"$root/t")
+    val plain = jobsOf(frame.write.parquet(s"$root/plain"))
+    val refresh = jobsOf(
+      assert(Sinks.truncateAndLoad(spark, frame, s"$root/t", s"$root/bk", "t", 2000L) == 100))
+    assert(refresh == plain, s"refresh ran $refresh jobs, a plain write $plain")
+    val backups = Sinks.listBackups(spark, s"$root/bk", "t")
+    assert(backups.size == 1)
+    val backup = fileBytes(s"$root/bk/${backups.head}")
+    assert(backup.keySet == preLoad.keySet)
+    assert(preLoad.keys.exists(_.startsWith("part-")))
+    preLoad.foreach { case (name, bytes) => assert(backup(name) == bytes, name) }
+  }
+
+  test("a torn backup copy is never restored; retention reclaims it") {
+    val root = freshRoot()
+    Sinks.truncateAndLoad(spark, Seq(1L, 2L).toDF("id"), s"$root/t", s"$root/bk", "t", 1000L)
+    Sinks.truncateAndLoad(spark, Seq(3L).toDF("id"), s"$root/t", s"$root/bk", "t", 2000L)
+    // a copy that crashed before its publish rename, newer than the
+    // good backup and holding other rows
+    val torn = s"$root/bk/.tmp-backup_t_${"%013d".format(9000L)}"
+    Seq(99L).toDF("id").write.parquet(torn)
+    assert(Sinks.listBackups(spark, s"$root/bk", "t") == Seq("backup_t_0000000002000"))
+    assert(Sinks.restoreFromBackup(spark, s"$root/t", s"$root/bk", "t") == 2)
+    assert(readIds(s"$root/t") == Set(1L, 2L))
+    assert(new java.io.File(root).list().toSet == Set("t", "bk"))
+    assert(Sinks.cleanupOldBackups(spark, s"$root/bk", "t").isEmpty)
+    assert(!new java.io.File(torn).exists(), "retention must reclaim the torn copy")
+    assert(Sinks.listBackups(spark, s"$root/bk", "t") == Seq("backup_t_0000000002000"))
+  }
+
+  test("backups of a table whose name extends another's are never mixed up") {
+    val root = freshRoot()
+    (1 to 2).foreach { i =>
+      Sinks.truncateAndLoad(spark, Seq(i.toLong).toDF("id"), s"$root/t", s"$root/bk", "t",
+        i * 1000L, maxBackups = 1)
+      Sinks.truncateAndLoad(spark, Seq(10L * i, 10L * i + 1).toDF("id"), s"$root/t_x",
+        s"$root/bk", "t_x", i * 1000L, maxBackups = 1)
+    }
+    Sinks.truncateAndLoad(spark, Seq(3L).toDF("id"), s"$root/t", s"$root/bk", "t", 3000L,
+      maxBackups = 1)
+    assert(Sinks.listBackups(spark, s"$root/bk", "t") == Seq("backup_t_0000000003000"))
+    assert(Sinks.listBackups(spark, s"$root/bk", "t_x") == Seq("backup_t_x_0000000002000"),
+      "retention of t must leave t_x's backups alone")
+    assert(Sinks.restoreFromBackup(spark, s"$root/t", s"$root/bk", "t") == 1)
+    assert(readIds(s"$root/t") == Set(2L))
+  }
+
+  test("loading an empty frame returns 0 and leaves a readable empty table") {
+    val root = freshRoot()
+    assert(Sinks.truncateAndLoad(spark, Seq.empty[Long].toDF("id"),
+      s"$root/t", s"$root/bk", "t", 1000L) == 0)
+    assert(spark.read.parquet(s"$root/t").count() == 0)
+    assert(spark.read.parquet(s"$root/t").columns.toSeq == Seq("id"))
+    assert(Sinks.truncateAndLoad(spark, spark.range(10).toDF().filter($"id" < 0),
+      s"$root/t", s"$root/bk", "t", 2000L) == 0)
+    assert(readIds(s"$root/t").isEmpty)
+    assert(Sinks.appendLoad(spark, spark.range(5).toDF().filter($"id" < 0), s"$root/a") == 0)
   }
 
   test("S4 append-load verifies the read-back count") {

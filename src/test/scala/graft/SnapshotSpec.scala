@@ -839,6 +839,35 @@ class SnapshotSpec extends SparkTestBase {
     }
   }
 
+  test("dv-update and dv-merge refuse a post-image whose type conflicts, staging nothing") {
+    val dir = freshDir()
+    SnapshotTable.write(spark,
+      spark.range(0, 50).select($"id", ($"id" * 10).as("v")).repartition(2),
+      dir, "overwrite", Seq("id"))
+    val v = SnapshotTable.latestVersion(spark, dir).get
+    val before = fsList(dir)
+    def rows = SnapshotTable.scan(spark, dir).select($"id", $"v").as[(Long, Long)]
+      .collect().toSet
+    val expected = (0L until 50L).map(i => (i, i * 10)).toSet
+    val up = intercept[IllegalArgumentException](
+      SnapshotTable.updateVectors(spark, dir, $"id" < 10, Seq("v" -> lit("x"))))
+    assert(up.getMessage.contains("'v'"), up.getMessage)
+    val merge = intercept[IllegalArgumentException](
+      SnapshotTable.mergeVectors(spark, dir,
+        Seq((3L, "x"), (70L, "y")).toDF("id", "v"), "id"))
+    assert(merge.getMessage.contains("'v'"), merge.getMessage)
+    assert(SnapshotTable.latestVersion(spark, dir).contains(v))
+    assert(fsList(dir) == before, "a refused dv DML must leave data/ as it was")
+    assert(rows == expected)
+    // an int value widens into the bigint column (store assignment)
+    SnapshotTable.updateVectors(spark, dir, $"id" === 1L, Seq("v" -> lit(7)))
+    SnapshotTable.mergeVectors(spark, dir,
+      Seq((2L, 8), (70L, 9)).toDF("id", "v"), "id")
+    assert(SnapshotTable.scan(spark, dir).schema("v").dataType ==
+      org.apache.spark.sql.types.LongType)
+    assert(rows == expected - ((1L, 10L)) - ((2L, 20L)) ++ Set((1L, 7L), (2L, 8L), (70L, 9L)))
+  }
+
   test("deletion vectors: incremental view over a dv change feed == rebuild") {
     import graft.operators.IncrementalView
     val dir = freshDir()
