@@ -234,15 +234,20 @@ object ScaleBench {
     * spread over EVERY file:
     *   - copy-on-write [[graft.sources.SnapshotTable.delete]] must
     *     rewrite all 16 files — bytes written ≈ the whole table;
-    *   - [[graft.sources.SnapshotTable.deleteVectors]] writes one
-    *     (file, pos) sidecar — bytes written ≈ KBs — and leaves every
-    *     data file untouched.
+    *   - [[graft.sources.SnapshotTable.deleteVectors]] writes one DV
+    *     file of per-file bitmaps — bytes written ≈ KBs — and leaves
+    *     every data file untouched.
     * Also timed: the masked scan vs the plain scan (the in-reader
     * position mask's read-side toll), and the purge that folds the
     * vector in. At 100 TB the bytes column is the whole story: a
     * GDPR-style removal of a few thousand rows must not rewrite
-    * terabytes. */
-  private def deletionVectorFamily(spark: SparkSession): String = {
+    * terabytes.
+    *
+    * The accumulation curve times a 1-row delete on tables with 0%,
+    * 25% and 50% of their rows already deleted by vector: a commit
+    * rewrites only the touched file's vector, so its cost must stay
+    * flat as deletions accumulate elsewhere. */
+  private[graft] def deletionVectorFamily(spark: SparkSession): String = {
     import org.apache.spark.sql.functions._
     import graft.sources.SnapshotTable
     val rows = sys.env.getOrElse("SPARK_GRAFT_DV_ROWS", "2000000").toLong
@@ -266,16 +271,15 @@ object ScaleBench {
         dir, "overwrite", Seq("id"))
       dir
     }
+    // bytes of the data and DV files version vTo references and
+    // vFrom does not
     def newBytes(dir: String, vFrom: Long, vTo: Long): Long = {
       val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
       val before = SnapshotTable.readManifest(spark, dir, vFrom).files
-        .map(_.path).toSet
-      val m = SnapshotTable.readManifest(spark, dir, vTo)
-      val dataNew = m.files.filterNot(fe => before.contains(fe.path))
-        .map(fe => fs.getFileStatus(new Path(dir, fe.path)).getLen).sum
-      val dvNew = m.files.flatMap(_.dv.map(_._1)).distinct
+        .flatMap(SnapshotTable.refsOf).toSet
+      SnapshotTable.readManifest(spark, dir, vTo).files
+        .flatMap(SnapshotTable.refsOf).distinct.filterNot(before)
         .map(p => fs.getFileStatus(new Path(dir, p)).getLen).sum
-      dataNew + dvNew
     }
     val pred = col("id") % every === 7L
 
@@ -294,7 +298,7 @@ object ScaleBench {
     val vDv = SnapshotTable.latestVersion(spark, dvDir).get
     val dvBytes = newBytes(dvDir, vDv - 1, vDv)
     val deleted = SnapshotTable.readManifest(spark, dvDir, vDv).files
-      .flatMap(_.dv.map(_._2)).sum
+      .flatMap(_.dv.map(_.rows)).sum
     val maskedScanSec = timeScanWarm(SnapshotTable.scan(spark, dvDir).count())
     val purgeSec = timeSec(SnapshotTable.purgeDeletes(spark, dvDir, Seq("id")))
 
@@ -307,6 +311,18 @@ object ScaleBench {
     val singleDvScanSec = timeScanWarm(SnapshotTable.scan(spark, oneDir).count())
 
     val fs = new Path(cowDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // accumulation curve: one untimed 1-row delete, then the timed one
+    // (odd ids, never pre-deleted)
+    val curve = Seq(0, 25, 50).map { pct =>
+      val accDir = build(s"acc$pct")
+      if (pct > 0) SnapshotTable.deleteVectors(spark, accDir, col("id") % (100 / pct) === 0L)
+      SnapshotTable.deleteVectors(spark, accDir, col("id") === 1L)
+      val sec = timeSec(SnapshotTable.deleteVectors(spark, accDir, col("id") === 3L))
+      val v = SnapshotTable.latestVersion(spark, accDir).get
+      val bytes = newBytes(accDir, v - 1, v)
+      fs.delete(new Path(accDir), true)
+      s"""{"pre_deleted_pct":$pct,"sec":$sec,"bytes_written":$bytes}"""
+    }.mkString("[", ",", "]")
     fs.delete(new Path(cowDir), true)
     fs.delete(new Path(dvDir), true)
     fs.delete(new Path(oneDir), true)
@@ -315,7 +331,7 @@ object ScaleBench {
       s""""dv":{"sec":$dvSec,"files_rewritten":0,"bytes_written":$dvBytes},""" +
       s""""scan":{"plain_sec":$plainScanSec,"masked_sec":$maskedScanSec,""" +
       s""""masked_single_file_sec":$singleDvScanSec},""" +
-      s""""purge_sec":$purgeSec}"""
+      s""""purge_sec":$purgeSec,"accumulation":$curve}"""
   }
 
   /** Upsert family (r11 wave 4): a CDC epoch's cost against a GROWING

@@ -947,14 +947,14 @@ object ParityQueries {
         |ORDER BY o_orderkey""".stripMargin),
 
     // Snapshot table, DELETION-VECTOR leg (merge-on-read DELETE):
-    // two stacked dv-deletes commit tiny (file, pos) sidecars instead
+    // two stacked dv-deletes commit per-file bitmaps instead
     // of rewriting any data file — the cost class a 100 TB table
     // needs for scattered small deletes (GDPR removals, retractions)
     // — then purgeDeletes folds the vectors into rewritten files.
     // The same rows must come back from BOTH read paths: the masked
     // merge-on-read scan ('mor') and the post-purge materialized scan
     // ('purged'). SnapshotSpec asserts the layout effects (data files
-    // byte-untouched, one consolidated sidecar, vacuum behavior);
+    // byte-untouched, per-file vectors, vacuum behavior);
     // this query hash-gates the semantics against SQL DELETE.
     "q5Y_snapshot_dv_delete" -> QueryDef(
       (s, dir) => {
@@ -989,7 +989,7 @@ object ParityQueries {
     // rows' positions join the deletion vector and their transformed
     // images append as fresh files — one commit, zero data files
     // rewritten — then a dv-DELETE stacks on top (the two vector ops
-    // consolidate into one sidecar). The oracle is the plain SQL
+    // OR into the touched files' bitmaps). The oracle is the plain SQL
     // UPDATE-then-DELETE read. SnapshotSpec asserts the layout
     // effects (original files byte-untouched, updates appended).
     "q5Z_snapshot_dv_update" -> QueryDef(
@@ -2156,7 +2156,7 @@ object ParityQueries {
         require(m.files.size < m0.files.size,
           s"retention delete dropped no file whole " +
             s"(${m0.files.size} -> ${m.files.size})")
-        val dvRows = m.files.flatMap(_.dv.map(_._2)).sum
+        val dvRows = m.files.flatMap(_.dv.map(_.rows)).sum
         require(dvRows <= m0.files.map(_.rows).max,
           s"dv rows $dvRows exceed one boundary file — " +
             "the delete scanned more than the boundary")
@@ -2214,7 +2214,7 @@ object ParityQueries {
           graft.sources.SnapshotTable.latestVersion(s, t7).get)
         require(m.files.size < m0.files.size,
           "string retention delete dropped no file whole")
-        require(m.files.flatMap(_.dv.map(_._2)).sum <= m0.files.map(_.rows).max,
+        require(m.files.flatMap(_.dv.map(_.rows)).sum <= m0.files.map(_.rows).max,
           "string retention delete scanned past the boundary file")
         graft.sources.SnapshotTable.scan(s, t7)
           .groupBy((col("o_custkey") % 40).as("slot"))

@@ -4,6 +4,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.roaringbitmap.RoaringBitmap
 
 /** A minimal transactional table format over parquet — the "Delta
   * gives this for free" note of SURVEY §2.1 made concrete without any
@@ -96,9 +97,9 @@ object SnapshotTable {
     * Long), an optional per-column bloom filter ([[BloomBits]] bits
     * as longs) for point-lookup skipping on NON-integral keys — the
     * skipping surface (min,max) stats cannot give a string column —
-    * and an optional DELETION VECTOR reference `dv`: (relative path
-    * of a sidecar parquet of (file, pos) deleted row positions,
-    * number of this file's rows it deletes). A file with a dv is
+    * and an optional DELETION VECTOR pointer `dv` ([[Dv]]: this
+    * file's Roaring bitmap of deleted row positions inside a per-commit
+    * DV file, and how many rows it deletes). A file with a dv is
     * read merge-on-read: its physical bytes are untouched, readers
     * subtract the dv positions ([[deleteVectors]]). Stats and blooms
     * stay those of the PHYSICAL file — a superset of the live rows,
@@ -131,7 +132,7 @@ object SnapshotTable {
   final case class FileEntry(path: String, rows: Long,
                              stats: Map[String, (Long, Long)],
                              bloom: Map[String, Seq[Long]] = Map.empty,
-                             dv: Option[(String, Long)] = None,
+                             dv: Option[Dv] = None,
                              bucket: Option[Int] = None,
                              sortedBy: Option[String] = None,
                              bucketN: Option[Int] = None,
@@ -144,7 +145,7 @@ object SnapshotTable {
       * the matched-row count is unknown until read or fold time — the
       * metadata-count pushdown refuses such files and statistics
       * overestimate, the safe direction. */
-    def liveRows: Long = rows - dv.map(_._2).getOrElse(0L)
+    def liveRows: Long = rows - dv.map(_.rows).getOrElse(0L)
 
     /** True when this file's recorded bucket id is trustworthy under a
       * DECLARED count of `n`: the id is in range AND the file records
@@ -158,6 +159,23 @@ object SnapshotTable {
       * check and degrade to no-claim — conservative, never wrong. */
     def bucketedUnder(n: Int): Boolean =
       bucket.exists(b => b >= 0 && b < n) && bucketN.contains(n)
+  }
+
+  /** A file's DELETION VECTOR pointer: the portable Roaring bitmap of
+    * its deleted row positions is the `size` bytes at byte `offset` of
+    * the DV file `path` (table-root-relative like data files, absolute
+    * on shallow clones and branches), and holds `rows` positions
+    * ([[DeletionVectors]] is the format). A DV commit writes one DV
+    * file with the vectors of the files it touched; every other entry
+    * keeps its pointer, so one DV file may back entries of many
+    * versions. Two entries hold the same deletions exactly when their
+    * whole pointers are equal.
+    *
+    * An entry parsed without an offset points at a retired
+    * consolidated (file, pos) sidecar ([[legacy]], offset -1): reads
+    * and writes refuse it until [[upgrade]] converts the table. */
+  final case class Dv(path: String, offset: Long, size: Int, rows: Long) {
+    def legacy: Boolean = offset < 0
   }
 
   /** `ts` is the publish wall-clock in epoch millis (0 for manifests
@@ -317,8 +335,10 @@ object SnapshotTable {
         }
         sb.append("}")
       }
-      fe.dv.foreach { case (p, n) =>
-        sb.append(s""","dv":{"path":"$p","n":$n}""")
+      fe.dv.foreach { d =>
+        if (d.legacy) sb.append(s""","dv":{"path":"${d.path}","n":${d.rows}}""")
+        else sb.append(s""","dv":{"path":"${d.path}","off":${d.offset},""" +
+          s""""len":${d.size},"n":${d.rows}}""")
       }
       if (fe.noNulls.nonEmpty)
         sb.append(s""","nn":[${fe.noNulls.sorted.map(c => s"\"$c\"").mkString(",")}]""")
@@ -375,7 +395,10 @@ object SnapshotTable {
       val dvn = fe.path("dv") // absent on pre-deletion-vector manifests
       val dv =
         if (dvn.isMissingNode) None
-        else Some((dvn.get("path").asText, dvn.get("n").asLong))
+        else if (dvn.path("off").isMissingNode) // a retired sidecar ref
+          Some(Dv(dvn.get("path").asText, -1L, -1, dvn.get("n").asLong))
+        else Some(Dv(dvn.get("path").asText, dvn.get("off").asLong,
+          dvn.get("len").asInt, dvn.get("n").asLong))
       val bn2 = fe.path("bucket") // absent on pre-bucketing manifests
       val bucket = if (bn2.isMissingNode) None else Some(bn2.asInt)
       val bn3 = fe.path("bucketN") // absent on pre-bucket-count manifests
@@ -597,25 +620,53 @@ object SnapshotTable {
     org.apache.spark.sql.types.StructType(st.fields.map(_.copy(nullable = true)))
   }
 
-  /** UPGRADE a table written before every commit recorded its schema:
-    * one mergeSchema footer pass over the latest version's files
-    * yields the schema, and the same file entries — deletion vectors
-    * and equality-delete refs untouched — re-commit as one full
-    * "upgrade" version that records it. Older versions keep refusing
-    * reads. A no-op returning the latest version when that version
-    * already records a schema. */
+  /** UPGRADE a table to the current on-disk format, as one full
+    * "upgrade" version over the latest version's entries:
+    *  - a version that records no schema gets one from one
+    *    mergeSchema footer pass over its files;
+    *  - entries pointing at retired consolidated (file, pos) sidecars
+    *    get per-file bitmaps: each sidecar's rows are read once, and
+    *    one new DV file holds every converted vector.
+    * Equality-delete refs and current vectors are untouched. Older
+    * versions keep refusing reads. A no-op returning the latest
+    * version when it is already current. */
   def upgrade(spark: SparkSession, dir: String): Long = {
     val v = latestVersion(spark, dir).getOrElse(
       throw new IllegalStateException(s"no committed version under $dir"))
-    if (recordedSchemaJson(spark, dir, v).isDefined) return v
     val files = readManifest(spark, dir, v).files
+    val recorded = recordedSchemaJson(spark, dir, v)
+    val legacy = files.filter(_.dv.exists(_.legacy))
+    if (recorded.isDefined && legacy.isEmpty) return v
     // no files, no footers: the empty version records no columns
-    val schema =
-      if (files.isEmpty) new org.apache.spark.sql.types.StructType()
+    val schemaJson = recorded.getOrElse(
+      if (files.isEmpty) new org.apache.spark.sql.types.StructType().json
       else spark.read.option("mergeSchema", "true")
-        .parquet(files.map(fe => resolvePath(dir, fe.path)): _*).schema
-    commit(spark, dir, "upgrade", files, schemaJson = Some(schema.json),
-      keepMapping = true, expectLatest = Some(v))
+        .parquet(files.map(fe => resolvePath(dir, fe.path)): _*).schema.json)
+    val converted = convertLegacyVectors(spark, dir, legacy)
+    commit(spark, dir, "upgrade",
+      files.map(fe => converted.getOrElse(fe.path, fe)),
+      schemaJson = Some(schemaJson), keepMapping = true, expectLatest = Some(v))
+  }
+
+  /** `legacy` entries with their retired sidecar pointers replaced by
+    * bitmaps in one new DV file, keyed by entry path. Each sidecar is
+    * read once, for the files that point at it; a sidecar whose rows
+    * disagree with the manifest's count refuses. */
+  private def convertLegacyVectors(spark: SparkSession, dir: String,
+                                   legacy: Seq[FileEntry]): Map[String, FileEntry] = {
+    if (legacy.isEmpty) return Map.empty
+    val vectors = legacy.groupBy(_.dv.get.path).toSeq.flatMap { case (sidecar, fes) =>
+      val (byFile, _) = partialVectors(spark.read.parquet(resolvePath(dir, sidecar))
+        .filter(col("file").isin(fes.map(fe => fileKey(fe.path)): _*)))
+      fes.map { fe =>
+        val b = byFile.getOrElse(fileKey(fe.path), new RoaringBitmap())
+        if (b.getLongCardinality != fe.dv.get.rows) throw new IllegalStateException(
+          s"sidecar $sidecar holds ${b.getLongCardinality} positions of " +
+            s"${fe.path}; the manifest records ${fe.dv.get.rows}")
+        fe -> b
+      }
+    }
+    publishVectors(spark, dir, vectors)._2.map(fe => fe.path -> fe).toMap
   }
 
   /** Column mapping (RENAME COLUMN support): a renamed column's
@@ -838,6 +889,11 @@ object SnapshotTable {
             s"write-write conflict under $dir: concurrent commit changed " +
               s"${gone.mkString(", ")} after this $op read them")
         }
+        // a version never carries a retired sidecar pointer forward:
+        // only upgrade, which converts every one, commits on such a table
+        (current.filterNot(fe => removed.contains(fe.path)) ++ added)
+          .find(_.dv.exists(_.legacy))
+          .foreach(fe => throw DeletionVectors.legacyRefusal(dir, fe.path))
         val v = latest.getOrElse(0L) + 1
         // schema chain: every version records one. A fresh/overwritten
         // table records the writer's schema; a carrying commit unions it
@@ -1351,14 +1407,20 @@ object SnapshotTable {
   private[graft] def resolvePath(dir: String, p: String): String =
     if (p.startsWith("/") || p.contains(":/")) p else s"$dir/$p"
 
-  /** A file's CONTENT-CHANGE token: the deletion-vector ref plus the
-    * equality-delete ref set. Two manifest entries for the same path
-    * are the "same rows" exactly when their tokens match — the unit
-    * the commit conflict check compares, so a concurrent dv attach OR
-    * eq-delete attach on a file this transaction read aborts it. */
-  private def changeToken(fe: FileEntry): Option[String] =
+  /** Every file an entry references: its data file, DV file and
+    * equality-delete sidecars. */
+  private[graft] def refsOf(fe: FileEntry): Seq[String] =
+    (fe.path +: fe.dv.map(_.path).toSeq) ++ fe.eqDv
+
+  /** A file's CONTENT-CHANGE token: the whole deletion-vector pointer
+    * plus the equality-delete ref set. Two manifest entries for the
+    * same path are the "same rows" exactly when their tokens match —
+    * the unit the commit conflict check compares, so a concurrent dv
+    * attach OR eq-delete attach on a file this transaction read
+    * aborts it. */
+  private[graft] def changeToken(fe: FileEntry): Option[String] =
     if (fe.dv.isEmpty && fe.eqDv.isEmpty) None
-    else Some(fe.dv.map(_._1).getOrElse("") +
+    else Some(fe.dv.fold("")(d => s"${d.path}@${d.offset}+${d.size}#${d.rows}") +
       fe.eqDv.sorted.mkString("#", "#", ""))
 
   /** A rewrite transaction's file-level read set: each file it read,
@@ -1680,22 +1742,13 @@ object SnapshotTable {
 
   /** Publish `df` as ONE parquet file at `dir/relPath` (temp dir +
     * rename of the sole part file, so readers see a complete file or
-    * nothing). Throws on failure — a deletion vector is load-bearing. */
+    * nothing). Throws on failure — an equality-delete sidecar is
+    * load-bearing. */
   private def writeSingleParquet(spark: SparkSession, dir: String,
                                  df: DataFrame, relPath: String): Unit = {
     val tmp = new Path(dir, s".dv-${java.util.UUID.randomUUID}")
     val f = fs(spark, tmp)
-    // ~128 KB row groups (vs the 128 MB default — roughly 40k encoded
-    // (file, pos) rows each): the dv sidecar is read by per-FILE
-    // maskers with a pushed `file = basename` predicate, and row-group
-    // stats can only prune what row-group boundaries expose — a single
-    // monolithic group would make the sorted layout unprunable. The
-    // per-group footer overhead is trivial against the sidecar's size,
-    // and data files are untouched (this writer publishes sidecars
-    // only).
-    df.coalesce(1).write.mode("overwrite")
-      .option("parquet.block.size", (1 << 17).toString)
-      .parquet(tmp.toString)
+    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val part = f.listStatus(tmp).map(_.getPath)
       .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
       .getOrElse(throw new IllegalStateException(s"no part file under $tmp"))
@@ -1761,13 +1814,12 @@ object SnapshotTable {
 
   /** DELETE WHERE via DELETION VECTORS (merge-on-read): instead of
     * rewriting every file that contains a matching row ([[delete]]'s
-    * copy-on-write), commit a tiny sidecar parquet of (file, pos)
-    * row positions and leave the data files untouched. The
+    * copy-on-write), commit a Roaring bitmap of deleted row positions
+    * per touched file and leave the data files untouched. The
     * connector's readers subtract the positions in-reader, as a
     * per-batch position mask ([[readFiles]]). This is the Delta/Iceberg
-    * deletion-vector /
-    * positional-delete design, and it changes the cost class of
-    * small deletes at scale: removing 0.01% of rows scattered over a
+    * deletion-vector / positional-delete design, and it changes the
+    * cost class of small deletes at scale: removing 0.01% of rows scattered over a
     * 100 TB table costs O(matched rows) bytes written instead of
     * rewriting every touched multi-GB file (GDPR-style row removal,
     * late-arriving retractions, per-document takedowns).
@@ -1778,148 +1830,115 @@ object SnapshotTable {
     * its read set, so a concurrent rewrite of one of them aborts and
     * retries from the fresh snapshot.
     *
-    * Each dv commit CONSOLIDATES all live deletion vectors into one
-    * new sidecar (prior vectors' rows are carried over), so a
-    * version references at most one dv file and read-side masking is
-    * a single tiny scan. Consolidation prices the commit at
-    * O(total deleted rows); when that stops being small relative to
-    * the data — every reader loads its file's positions — run
-    * [[purgeDeletes]] (or [[compact]], which purges as it packs) to
-    * fold the vectors into the files. */
+    * A dv commit writes ONE new DV file holding the vectors of the
+    * files it touched — each the file's prior vector ORed with the
+    * fresh positions ([[stageVectors]]); every other file keeps its
+    * pointer. The commit costs O(touched files' vectors), never
+    * O(all deleted rows), and a reader loads only its own file's
+    * vector with one range read. When deleted rows stop being small
+    * relative to the data, run [[purgeDeletes]] (or [[compact]],
+    * which purges as it packs) to fold the vectors into the files. */
   def deleteVectors(spark: SparkSession, dir: String,
                     predicate: org.apache.spark.sql.Column): Long =
     retryOnConflict(s"dv-delete from $dir") {
       deleteVectorsOnce(spark, dir, predicate)
     }
 
-  /** Stage the consolidated deletion-vector sidecar for the given
-    * `matched` (file, pos) position rows against snapshot `m`:
-    * publishes a new sidecar holding the matched positions plus every
-    * prior vector's still-live rows, and returns (sidecar path,
-    * dv-carrying replacement entries). None — with the sidecar
-    * already cleaned up — when nothing new matched. `matched` must be
-    * derived from a keepPos masked read of `m`, which makes it
-    * disjoint from already-deleted positions by construction.
-    * Each position is written once. With `failOnDuplicate`, a position
-    * `matched` holds twice (one target row, two source images) is a
-    * MERGE cardinality error; a duplicate only the prior vectors hold
-    * (a historical sidecar) is not. */
-  private def stageDvSidecarFrom(spark: SparkSession, dir: String, m: Manifest,
-                                 matched: DataFrame,
-                                 failOnDuplicate: Boolean = false):
+  /** Stage the deletion vectors of the `matched` (file, pos) position
+    * rows against snapshot `m`: one new DV file holding, for each
+    * touched file, its prior vector ORed with the fresh positions.
+    * Returns (DV file path, the touched files' replacement entries);
+    * None, with nothing written, when nothing matched. Untouched files
+    * keep their pointers, so the commit's read set is the touched
+    * files only.
+    *
+    * One pass, no shuffle: every task ORs its positions into partial
+    * bitmaps per file ([[partialVectors]]), and the driver unions the
+    * partials. A position seen twice — twice in one task, or in two
+    * tasks' partials of one file — is a MERGE cardinality error under
+    * `failOnDuplicate` (one target row, two source images), wherever
+    * the two images landed. `matched` must come from a keepPos masked
+    * read of `m`, which makes it disjoint from the prior vectors; a
+    * fresh position already in a prior vector refuses loudly. */
+  private[graft] def stageVectors(spark: SparkSession, dir: String, m: Manifest,
+                                  matched: DataFrame,
+                                  failOnDuplicate: Boolean = false):
       Option[(String, Seq[FileEntry])] = {
-    import spark.implicits._
-    val oldDvPaths = m.files.flatMap(_.dv.map(_._1)).distinct
-    val prior =
-      if (oldDvPaths.isEmpty) matched.limit(0)
-      else {
-        // prior sidecars may carry rows for files rewritten since
-        // (their names are no longer live) — drop those here so the
-        // consolidated vector never grows dead weight
-        val live = m.files.map(fe => fileKey(fe.path)).toDF("file")
-        spark.read.parquet(oldDvPaths.map(p => resolvePath(dir, p)): _*)
-          .select(col("file"), col("pos"))
-          .join(broadcast(live), Seq("file"), "left_semi")
-      }
-    val name = s"data/dv-${java.util.UUID.randomUUID.toString.take(8)}.parquet"
-    // sorted by (file, pos) into small row groups: a reader masking ONE
-    // file pushes `file = <basename>` and parquet's row-group stats +
-    // dictionary filters prune the shared sidecar to that file's run —
-    // per-task sidecar decode stays O(own positions), not O(all
-    // deleted positions) (the K×D amplification a consolidated sidecar
-    // would otherwise cost across K dv-carrying files)
-    //
-    // Round-18 job fusion (guide §1.2): the single sorted writer task
-    // streams every (file, pos) row anyway, so the per-file counts
-    // (previously a read-back job over the published sidecar) and the
-    // MERGE cardinality check (previously its own groupBy-count job in
-    // mergeClauses) both ride the write as accumulators — duplicates
-    // are ADJACENT in the sort, so detection is one comparison per
-    // row. The counts accumulator collapses through toMap, so a rare
-    // duplicated successful attempt (speculation) cannot double-count;
-    // the dup and fresh counters are only ever read as "> 0".
-    val dupAcc = spark.sparkContext.longAccumulator("graft.dv.dupPositions")
-    val freshAcc = spark.sparkContext.longAccumulator("graft.dv.freshPositions")
-    val countsAcc = spark.sparkContext
-      .collectionAccumulator[(String, Long)]("graft.dv.fileCounts")
-    // rows are tagged fresh (matched now) or prior before the union, so
-    // a duplicate run knows whether this statement took part in it
-    val sortedChecked = matched.withColumn("__fresh", lit(true))
-      .unionByName(prior.withColumn("__fresh", lit(false)))
-      .repartition(1).sortWithinPartitions("file", "pos")
-      .as[(String, Long, Boolean)]
+    val (fresh, dup) = partialVectors(matched)
+    if (fresh.isEmpty) return None
+    if (dup && failOnDuplicate) throw new IllegalArgumentException(
+      "MERGE cardinality violation: a matched target row has more " +
+        "than one source image; deduplicate the source (e.g. " +
+        "keep-latest by a version column) before merging")
+    val byKey = m.files.map(fe => fileKey(fe.path) -> fe).toMap
+    val touched = fresh.toSeq.sortBy(_._1).map { case (file, b) =>
+      byKey.getOrElse(file, throw new IllegalStateException(
+        s"matched positions name $file, which version ${m.version} of " +
+          s"$dir does not hold")) -> b
+    }
+    // the touched files' prior vectors, one open per prior DV file
+    val withPrior = touched.filter(_._1.dv.isDefined)
+    val priors = DeletionVectors.readAll(spark.sparkContext.hadoopConfiguration,
+      withPrior.flatMap { case (fe, _) =>
+        graft.sources.connector.SnapshotPartitions.resolvedDv(dir, fe) })
+    withPrior.zip(priors).foreach { case ((fe, b), prior) =>
+      if (RoaringBitmap.intersects(prior, b)) throw new IllegalStateException(
+        s"fresh deletion-vector positions of ${fe.path} are already " +
+          "deleted by its prior vector: the position scan was not masked")
+      b.or(prior)
+    }
+    touched.foreach { case (fe, b) =>
+      require(b.getLongCardinality <= fe.rows,
+        s"dv rows ${b.getLongCardinality} exceed file rows ${fe.rows} (${fe.path})")
+    }
+    Some(publishVectors(spark, dir, touched))
+  }
+
+  /** Write `vectors` (run-optimized) as one new DV file under `dir` and
+    * return its path and the entries re-pointed at their vectors. */
+  private def publishVectors(spark: SparkSession, dir: String,
+                             vectors: Seq[(FileEntry, RoaringBitmap)])
+      : (String, Seq[FileEntry]) = {
+    vectors.foreach(_._2.runOptimize())
+    val name = s"data/dv-${java.util.UUID.randomUUID}.bin"
+    val ptrs = DeletionVectors.write(fs(spark, new Path(dir)), dir, name,
+      vectors.map(_._2))
+    (name, vectors.zip(ptrs).map { case ((fe, b), (off, size)) =>
+      fe.copy(dv = Some(Dv(name, off, size, b.getLongCardinality)))
+    })
+  }
+
+  /** The positions of a (file, pos) frame as one bitmap per file,
+    * built by per-task partial bitmaps that the driver ORs; the flag
+    * says some position occurred twice. */
+  private def partialVectors(matched: DataFrame)
+      : (Map[String, RoaringBitmap], Boolean) = {
+    import matched.sparkSession.implicits._
+    val partials = matched.select(col("file"), col("pos")).as[(String, Long)]
       .mapPartitions { it =>
-        var prevF: String = null
-        var prevP = Long.MinValue
-        var runFresh = false // the current (file, pos) run holds a fresh row
-        var fileRows = 0L
-        val written = it.flatMap { case (f0, p0, fresh) =>
-          if (f0 == prevF && p0 == prevP) { // a repeat: written once
-            if (fresh || runFresh) dupAcc.add(1)
-            if (fresh && !runFresh) freshAcc.add(1)
-            runFresh ||= fresh
-            Iterator.empty
-          } else {
-            if (f0 != prevF) {
-              if (prevF != null) countsAcc.add((prevF, fileRows))
-              fileRows = 0
-            }
-            fileRows += 1
-            if (fresh) freshAcc.add(1)
-            runFresh = fresh
-            prevF = f0; prevP = p0
-            Iterator.single((f0, p0))
-          }
+        // per file: the partial bitmap and its in-task repeats
+        val byFile = new java.util.HashMap[String, (RoaringBitmap, Array[Long])]()
+        it.foreach { case (file, pos) =>
+          val acc = byFile.computeIfAbsent(file,
+            _ => (new RoaringBitmap(), Array(0L)))
+          if (!acc._1.checkedAdd(DeletionVectors.member(pos, file))) acc._2(0) += 1
         }
-        written ++ {
-          if (prevF != null) countsAcc.add((prevF, fileRows))
-          Iterator.empty
+        import scala.jdk.CollectionConverters._
+        byFile.asScala.iterator.map { case (file, (b, repeats)) =>
+          (file, DeletionVectors.serialize(b), repeats(0))
         }
+      }.collect()
+    var dup = false
+    val out = partials.groupBy(_._1).map { case (file, ps) =>
+      val acc = new RoaringBitmap()
+      ps.foreach { case (_, bytes, repeats) =>
+        val b = DeletionVectors.deserialize(bytes)
+        if (repeats > 0 || RoaringBitmap.intersects(acc, b)) dup = true
+        acc.or(b)
       }
-      .toDF("file", "pos")
-    writeSingleParquet(spark, dir, sortedChecked, name)
-    val f = fs(spark, new Path(dir))
-    if (failOnDuplicate && dupAcc.value > 0) {
-      f.delete(new Path(dir, name), false)
-      throw new IllegalArgumentException(
-        "MERGE cardinality violation: a matched target row has more " +
-          "than one source image; deduplicate the source (e.g. " +
-          "keep-latest by a version column) before merging")
+      file -> acc
     }
-    val counts: Map[String, Long] = {
-      import scala.jdk.CollectionConverters._
-      countsAcc.value.asScala.toMap
-    }
-    // Fail-loud fusion pin (round-19, the round-18 advisor's edge):
-    // the adjacency dup detection and the per-file counts above are
-    // correct ONLY because the write is one sorted task (duplicated
-    // successful attempts collapse through toMap; a file split across
-    // tasks would split its run). Verify the fused bookkeeping against
-    // the published sidecar's own footer row count — one driver
-    // metadata read per dv commit — so a future layout change breaks
-    // HERE instead of silently under-counting the manifest.
-    val writtenRows = readFooterStats(spark.sparkContext.hadoopConfiguration,
-      new Path(dir, name), Nil, Nil).rows
-    if (counts.values.sum != writtenRows) {
-      f.delete(new Path(dir, name), false)
-      throw new IllegalStateException(
-        s"dv sidecar bookkeeping diverged: accumulator counted " +
-          s"${counts.values.sum} rows, the published sidecar holds " +
-          s"$writtenRows — the single-sorted-task write invariant broke")
-    }
-    // counted, not inferred from totals: a prior duplicate written once
-    // would otherwise hide one new match
-    if (freshAcc.value == 0) { // nothing newly matched
-      f.delete(new Path(dir, name), false)
-      return None
-    }
-    val touched = m.files.filter(fe => counts.contains(fileKey(fe.path)))
-    val entries = touched.map { fe =>
-      val n = counts(fileKey(fe.path))
-      require(n <= fe.rows, s"dv rows $n exceed file rows ${fe.rows} (${fe.path})")
-      fe.copy(dv = Some((name, n)))
-    }
-    Some((name, entries))
+    (out, dup)
   }
 
   /** Interval proofs for a DELETE predicate against one file's
@@ -2260,7 +2279,7 @@ object SnapshotTable {
     * dropped from the manifest whole (a day-clustered restatement
     * prunes almost everything metadata-only), files whose stats
     * REFUTE the predicate never open, and only boundary files scan
-    * into the consolidated deletion vector. Spark's
+    * into their files' deletion vectors. Spark's
     * OverwriteByExpression contract: the inserted rows are NOT
     * validated against the predicate (unlike Delta's opt-in
     * constraint check) — the caller owns that invariant. */
@@ -2333,15 +2352,11 @@ object SnapshotTable {
       else commit(spark, dir, s"$opName-prune", alsoAdd,
         removed = readSetOf(dropped), carry = true, schemaJson = schemaJson)
     if (candidates.isEmpty) return pruneOnly()
-    // the consolidation manifest is every SURVIVING file (rest, not
-    // candidates): prior sidecar rows of scan-skipped files must carry
-    // into the new vector so a version keeps referencing ONE sidecar;
-    // dropped files' prior rows vanish with their files
     val matched = readFiles(spark, dir, candidates, v, keepPos = true,
       knownSchema = known)
       .filter(predicate)
       .select(col("__graft_file").as("file"), col("__graft_pos").as("pos"))
-    stageDvSidecarFrom(spark, dir, m.copy(files = rest), matched) match {
+    stageVectors(spark, dir, m, matched) match {
       case None => pruneOnly()
       case Some((name, entries)) =>
         val newPaths = entries.map(_.path).toSet
@@ -2758,7 +2773,7 @@ object SnapshotTable {
   }
 
   /** UPDATE WHERE via deletion vectors (merge-on-read): matched rows'
-    * positions join the consolidated vector and their TRANSFORMED
+    * positions join their files' vectors and their TRANSFORMED
     * images land in freshly appended files — one commit, no data file
     * rewritten. `assignments` maps column name → new-value expression
     * (evaluated against the matched rows; unlisted columns carry
@@ -2781,8 +2796,7 @@ object SnapshotTable {
       require(unknown.isEmpty, s"assignments for missing columns $unknown")
       // stats-refuted files skip BOTH scans: an UPDATE WHERE day =
       // yesterday on a day-clustered table reads only the files whose
-      // range admits the day, not the table (the prior-dv
-      // consolidation still spans every live file)
+      // range admits the day, not the table
       val uexpr = org.apache.spark.sql.graftbridge.Bridge
         .catalystExpression(predicate)
       val candidates = m.files.filterNot(refutesAllRows(uexpr, _, known))
@@ -2798,7 +2812,7 @@ object SnapshotTable {
       // an assignment whose type conflicts with its column refuses
       // here, before anything is staged
       unionSchemaJson(known.json, postImages(matched0).schema.json)
-      stageDvSidecarFrom(spark, dir, m, matched0.filter(predicate)
+      stageVectors(spark, dir, m, matched0.filter(predicate)
         .select(col("__graft_file").as("file"),
           col("__graft_pos").as("pos"))) match {
         case None => v
@@ -2836,7 +2850,7 @@ object SnapshotTable {
   /** MERGE (upsert by key) via DELETION VECTORS — the merge-on-read
     * form of [[merge]], completing the DML triad next to
     * [[deleteVectors]]/[[updateVectors]]: matched target rows'
-    * positions join the consolidated vector and EVERY update row
+    * positions join their files' vectors and EVERY update row
     * (replacements and brand-new keys alike) lands in freshly
     * appended files — one commit, zero data files rewritten.
     * Whole-row-replace semantics identical to [[merge]] without
@@ -2924,7 +2938,7 @@ object SnapshotTable {
       // dv-delete the target once and insert BOTH images — silent
       // duplicate-key rows. Delta and ANSI MERGE raise here; so do we.
       //
-      // Deliberately NOT fused into the sidecar write's adjacency
+      // Deliberately NOT fused into the vector build's duplicate
       // detection (round-19, closing the round-18 question): this
       // upsert's contract is source-key uniqueness, and the write-job
       // detector only sees POSITIONS — a duplicate source key that
@@ -2952,7 +2966,7 @@ object SnapshotTable {
       unionSchemaJson(known.json, images.schema.json)
       val keys = updates.select(col(keyCol)).distinct()
       val matched = matchedPositions(spark, dir, m, keyCol, keys, known)
-      val staged = stageDvSidecarFrom(spark, dir, m, matched)
+      val staged = stageVectors(spark, dir, m, matched)
       val f = fs(spark, new Path(dir))
       try {
         val fresh = stageFiles(spark, images,
@@ -3009,7 +3023,7 @@ object SnapshotTable {
     * conditional WHEN clauses, partial-row MATCHED updates, MATCHED
     * DELETE, and NOT MATCHED BY SOURCE — generalizing the whole-row
     * upsert of [[mergeVectors]]. Every touched target row's position
-    * joins the consolidated vector; every surviving post-image
+    * joins its file's vector; every surviving post-image
     * (updated rows + inserts) lands in freshly appended files — one
     * commit, zero data files rewritten, O(affected rows) bytes.
     *
@@ -3174,14 +3188,11 @@ object SnapshotTable {
           .select(col("__e_file").as("file"), col("__e_pos").as("pos"))
         // Delta/ANSI cardinality: >1 source row modifying one target
         // row is ambiguous (which image wins?) — raise, don't guess.
-        // Detection rides the sidecar write's sorted single task
-        // (duplicates are adjacent there), replacing what used to be
-        // a separate groupBy-count job per merge (round-18). Only a
-        // duplicate run holding a FRESH position is a violation: the
-        // scan masks dv-deleted rows, so fresh positions never meet
-        // prior ones, and a duplicate inside a historical sidecar is
-        // written once, not raised.
-        val staged = stageDvSidecarFrom(spark, dir, m, positions,
+        // Detection rides the vector build: a position repeated in
+        // one task's partial bitmap, or shared by two tasks' partials
+        // of one file, is the violation. The scan masks dv-deleted
+        // rows, so fresh positions never meet prior ones.
+        val staged = stageVectors(spark, dir, m, positions,
           failOnDuplicate = matched.nonEmpty)
         val f = fs(spark, new Path(dir))
         try {
@@ -3227,9 +3238,9 @@ object SnapshotTable {
     * table — the V2 streaming sink's upsert path: its tasks streamed
     * the epoch's rows into `staged` while computing stats/blooms, so
     * the merge costs no second write job. Same dv algebra: matched
-    * target positions join the consolidated vector, `staged` commits
+    * target positions join their files' vectors, `staged` commits
     * as the post-image, one version, zero data files rewritten. On an
-    * OCC conflict only the sidecar is discarded — the staged files
+    * OCC conflict only the DV file is discarded — the staged files
     * are the caller's (the sink deletes them via abort) and the retry
     * recomputes the vector against the new snapshot and recommits the
     * same files. An empty table commits `staged` as the first version
@@ -3254,7 +3265,7 @@ object SnapshotTable {
           val keys = readPlain(spark, dir, staged, known)
             .select(col(keyCol)).distinct()
           val matched = matchedPositions(spark, dir, m, keyCol, keys, known)
-          stageDvSidecarFrom(spark, dir, m, matched) match {
+          stageVectors(spark, dir, m, matched) match {
             case None => // pure insert epoch
               commit(spark, dir, opTag, staged, carry = true,
                 schemaJson = schemaJson)
@@ -3275,8 +3286,8 @@ object SnapshotTable {
 
   /** Fold every live deletion vector and pending equality delete into
     * its files: masked files are rewritten with only their live rows,
-    * the new entries reference no vector or eq ref, and the sidecars
-    * become vacuum-reclaimable. Delta's `REORG TABLE ... APPLY (PURGE)`.
+    * the new entries reference no vector or eq ref, and the DV files
+    * and sidecars become vacuum-reclaimable. Delta's `REORG TABLE ... APPLY (PURGE)`.
     * The fold reads through the V2 connector's in-reader mask — one
     * scan per bucket group, one key-set broadcast, whatever the number
     * of ref groups. A no-op (no version burned) when nothing is
@@ -3559,10 +3570,10 @@ object SnapshotTable {
     def planSweep(tagged: Set[Long]) = {
       val pinned = below.filter(tagged)
       val kept = pinned ++ kept0
-      // Deletion-vector and equality-delete sidecars are referenced
-      // data like any file.
+      // DV files and equality-delete sidecars are referenced data like
+      // any file; a DV file lives while any kept entry points into it.
       val referenced = kept.flatMap(readManifest(spark, dir, _).files
-        .flatMap(fe => (fe.path +: fe.dv.map(_._1).toSeq) ++ fe.eqDv)).toSet
+        .flatMap(refsOf)).toSet
       (pinned, below.filterNot(tagged), referenced ++ ffIntentPaths())
     }
     val tagged0 = listTags(spark, dir).map(_.version).toSet
@@ -3639,7 +3650,7 @@ object SnapshotTable {
       .filter(p => (p.getName.startsWith(".tmp-") && p.getName.endsWith(".json")) ||
         p.getName.startsWith(".ckpt-pq-")) // crashed parquet-checkpoint temp dirs
       .foreach(f.delete(_, true))
-    // crashed stage/dv-sidecar temp dirs (and fast-forward intent
+    // crashed stage/DV-file temp dirs (and fast-forward intent
     // temps — the published marker is _ff_intent.json, never swept;
     // only orphaned `.tmp-ff-*` from a crash mid-marker-write) live
     // under the table root
@@ -3856,7 +3867,7 @@ object SnapshotTable {
         def absolutize(p: String) = if (isAbs(p)) p else s"$srcRoot/$p"
         m.files.map(fe => fe.copy(
           path = absolutize(fe.path),
-          dv = fe.dv.map { case (p, n) => (absolutize(p), n) },
+          dv = fe.dv.map(d => d.copy(path = absolutize(d.path))),
           eqDv = fe.eqDv.map(absolutize)))
       } else {
         val dstFs = fs(spark, new Path(dstDir))
@@ -3867,7 +3878,7 @@ object SnapshotTable {
         // two chained roots happen to share a basename
         val taken = scala.collection.mutable.Set[String]()
         val relOf = m.files.flatMap(fe =>
-          (fe.path +: fe.dv.map(_._1).toSeq) ++ fe.eqDv)
+          refsOf(fe))
           .distinct.map { p =>
             val want = if (isAbs(p)) s"data/${new Path(p).getName}" else p
             var (cand, i) = (want, 0)
@@ -3882,7 +3893,7 @@ object SnapshotTable {
         }
         m.files.map(fe => fe.copy(
           path = relOf(fe.path),
-          dv = fe.dv.map { case (p, n) => (relOf(p), n) },
+          dv = fe.dv.map(d => d.copy(path = relOf(d.path))),
           eqDv = fe.eqDv.map(relOf)))
       }
     if (!deep) {
@@ -3904,7 +3915,7 @@ object SnapshotTable {
       // borrowed set, so dropping the INTERMEDIATE clone's pin can
       // never dangle this one. Versions scan is metadata-only.
       val foreign = m.files.flatMap(fe =>
-        (fe.path +: fe.dv.map(_._1).toSeq) ++ fe.eqDv)
+        refsOf(fe))
         .filter(isAbs)
       foreign.groupBy { p =>
         val i = p.lastIndexOf("/data/")
@@ -3916,7 +3927,7 @@ object SnapshotTable {
         val need = refs.toSet
         val cover = versions(spark, root).reverse.find { rv =>
           val have = readManifest(spark, root, rv).files
-            .flatMap(fe => (fe.path +: fe.dv.map(_._1).toSeq) ++ fe.eqDv)
+            .flatMap(fe => refsOf(fe))
             .map(p => if (isAbs(p)) p else s"$rootQual/$p").toSet
           need.subsetOf(have)
         }.getOrElse(throw new IllegalStateException(
@@ -4062,8 +4073,8 @@ object SnapshotTable {
     val mm = readManifest(spark, dir, newV)
     val bEntries = mm.files.map(fe => fe.copy(
       path = if (isAbs(fe.path)) fe.path else s"$mainRoot/${fe.path}",
-      dv = fe.dv.map { case (p, n) =>
-        (if (isAbs(p)) p else s"$mainRoot/$p", n) },
+      dv = fe.dv.map(d =>
+        d.copy(path = if (isAbs(d.path)) d.path else s"$mainRoot/${d.path}")),
       eqDv = fe.eqDv.map(p => if (isAbs(p)) p else s"$mainRoot/$p")))
     commit(spark, bdir, "fast_forward", bEntries, carry = false,
       schemaJson = Some(schemaJson), keepMapping = true)
@@ -4115,7 +4126,7 @@ object SnapshotTable {
       val m = readManifest(spark, dir, base + 1)
       m.op == "fast_forward" &&
         m.files.flatMap(fe =>
-          (fe.path +: fe.dv.map(_._1).toSeq) ++ fe.eqDv).toSet == expectPaths
+          refsOf(fe)).toSet == expectPaths
     }
     if (landed) {
       repointBranch(spark, dir, bdir, base + 1,
@@ -4217,7 +4228,7 @@ object SnapshotTable {
       })
     val entries = bm.files.map(fe => fe.copy(
       path = toMain(fe.path),
-      dv = fe.dv.map { case (p, n) => (toMain(p), n) },
+      dv = fe.dv.map(d => d.copy(path = toMain(d.path))),
       eqDv = fe.eqDv.map(toMain)))
     // intent marker BEFORE the first rename (temp + atomic rename, so
     // a marker that exists is complete; a corrupt one means no move
@@ -4225,7 +4236,7 @@ object SnapshotTable {
     val marker = new Path(bdir, FfIntentName)
     locally {
       val paths = entries.flatMap(fe =>
-        (fe.path +: fe.dv.map(_._1).toSeq) ++ fe.eqDv).distinct
+        refsOf(fe)).distinct
       val sb = new StringBuilder
       sb.append(s"""{"base":$base,"paths":[""")
       sb.append(paths.map(p => s""""${jsonEscape(p)}"""").mkString(","))
@@ -4385,7 +4396,7 @@ object SnapshotTable {
     // so the programmatic feed silently skipped equality deletes that
     // the SQL `.changes` surface emitted — caught by the q7N
     // index-maintenance oracle.)
-    def key(fe: FileEntry) = (fe.path, fe.dv.map(_._1), fe.eqDv.sorted)
+    def key(fe: FileEntry) = (fe.path, fe.dv, fe.eqDv.sorted)
     import graft.sources.connector.SnapshotPartitions.EqSidecars
     def keySigsOf(refs: Seq[String]): Set[Seq[String]] =
       refs.map(p => EqSidecars.load(resolvePath(dir, p)).colNames).toSet
@@ -4395,9 +4406,9 @@ object SnapshotTable {
     // COMPOSITE-key delta would need per-row tuple semantics across
     // its semi-joins, so both keep the general diff (whose reads mask
     // composite refs as tuples in the connector's readers).
-    val fromByPathDv = from.files.map(fe => (fe.path, fe.dv.map(_._1)) -> fe).toMap
+    val fromByPathDv = from.files.map(fe => (fe.path, fe.dv) -> fe).toMap
     val (eqPairs, _) = to.files.flatMap { cur =>
-      fromByPathDv.get((cur.path, cur.dv.map(_._1)))
+      fromByPathDv.get((cur.path, cur.dv))
         .filter(old => old.eqDv != cur.eqDv &&
           old.eqDv.toSet.subsetOf(cur.eqDv.toSet) &&
           old.copy(eqDv = Nil) == cur.copy(eqDv = Nil))
@@ -4676,7 +4687,7 @@ object SnapshotTable {
       throw new IllegalStateException(s"cannot maintain empty table $dir"))
     val m0 = readManifest(spark, dir, v0)
     val physical = m0.files.map(_.rows).sum
-    val deleted = m0.files.flatMap(_.dv.map(_._2)).sum
+    val deleted = m0.files.flatMap(_.dv.map(_.rows)).sum
     val purged = physical > 0 &&
       deleted.toDouble / physical > policy.maxDeletedRatio
     if (purged) purgeDeletes(spark, dir, policy.statsCols)

@@ -36,7 +36,7 @@ import graft.sources.SnapshotTable.FileEntry
   *  - a file whose DELETION VECTOR changed replays exactly the
   *    newly-deleted positions as deletes (and any restored positions
   *    as upserts) — the reader loads the pre- and post-version
-  *    sidecars side by side and keeps the set difference;
+  *    bitmaps and keeps their `andNot`;
   *  - versions whose op is CONTENT-NEUTRAL by contract (compact,
   *    purge, rebucket, rebucket-heal) are skipped outright: their file
   *    churn is layout, not data — without this a compaction would
@@ -90,13 +90,10 @@ object ChangesTable {
           // fresh-key deltas by construction.
           def whole(fe: FileEntry) = SnapshotPartitions.partitionFor(dir, fe)
           def part(file: SnapshotFilePartition, tpe: String,
-                   keepFrom: Option[String] = None,
-                   keepMinus: Option[String] = None,
+                   keepFrom: Option[SnapshotTable.Dv] = None,
+                   keepMinus: Option[SnapshotTable.Dv] = None,
                    eqKeep: Option[EqSidecar] = None) =
-            ChangeFilePartition(file,
-              keepFrom.map(p => SnapshotTable.resolvePath(dir, p)),
-              keepMinus.map(p => SnapshotTable.resolvePath(dir, p)), tpe, v,
-              eqKeep)
+            ChangeFilePartition(file, keepFrom, keepMinus, tpe, v, eqKeep)
           m.files.filterNot(fe => prevByPath.contains(fe.path)).foreach(fe =>
             out += part(whole(fe), "upsert"))
           prev.filterNot(fe => curByPath.contains(fe.path)).foreach(fe =>
@@ -106,14 +103,16 @@ object ChangesTable {
           // re-emit — they were deleted then, not now)
           m.files.foreach { cur =>
             prevByPath.get(cur.path).foreach { old =>
-              if (old.dv.map(_._1) != cur.dv.map(_._1)) {
-                val unvectored = whole(old).copy(dvUri = None)
-                if (cur.dv.isDefined) // newly-deleted = curDv \ oldDv
+              if (old.dv != cur.dv) {
+                val oldDv = SnapshotPartitions.resolvedDv(dir, old)
+                val curDv = SnapshotPartitions.resolvedDv(dir, cur)
+                val unvectored = whole(old).copy(dv = None)
+                if (curDv.isDefined) // newly-deleted = curDv \ oldDv
                   out += part(unvectored, "delete",
-                    keepFrom = cur.dv.map(_._1), keepMinus = old.dv.map(_._1))
-                if (old.dv.isDefined) // restored = oldDv \ curDv
+                    keepFrom = curDv, keepMinus = oldDv)
+                if (oldDv.isDefined) // restored = oldDv \ curDv
                   out += part(unvectored, "upsert",
-                    keepFrom = old.dv.map(_._1), keepMinus = cur.dv.map(_._1))
+                    keepFrom = oldDv, keepMinus = curDv)
               }
               // same path, new equality-delete refs: the commit deleted
               // the rows matching the NEW keys (minus keys already
@@ -154,12 +153,12 @@ object ChangesTable {
   * the pending equality-delete refs to SKIP, exactly as a table scan's
   * partition does (key sets resolve executor-side — off the batch
   * feed's one broadcast, or loaded per partition in the streaming
-  * factory — never the task closure); `keepFromUri` minus
-  * `keepMinusUri` (vector sidecars) and `eqKeep` (a commit's fresh
+  * factory — never the task closure); `keepFrom` minus `keepMinus`
+  * (deletion-vector pointers) and `eqKeep` (a commit's fresh
   * keys) narrow the replay to just the rows a commit changed. */
 final case class ChangeFilePartition(file: SnapshotFilePartition,
-                                     keepFromUri: Option[String],
-                                     keepMinusUri: Option[String],
+                                     keepFrom: Option[SnapshotTable.Dv],
+                                     keepMinus: Option[SnapshotTable.Dv],
                                      changeType: String, version: Long,
                                      eqKeep: Option[EqSidecar] = None)
   extends InputPartition
@@ -396,13 +395,11 @@ final class ChangesReaderFactory(physSchema: StructType,
 
   override def createColumnarReader(p: InputPartition): PartitionReader[ColumnarBatch] = {
     val c = p.asInstanceOf[ChangeFilePartition]
-    val keep = c.keepFromUri.map { u =>
+    val keep = c.keepFrom.map { from =>
       val conf = SnapshotPartitions.hadoopConf(sessionConf)
-      val s = SnapshotPartitions.positionsOf(conf, Some(u), c.file.baseName)
-      c.keepMinusUri.foreach { m =>
-        s.removeAll(SnapshotPartitions.positionsOf(conf, Some(m), c.file.baseName))
-      }
-      s
+      val b = graft.sources.DeletionVectors.read(conf, from)
+      c.keepMinus.fold(b)(m =>
+        org.roaringbitmap.RoaringBitmap.andNot(b, graft.sources.DeletionVectors.read(conf, m)))
     }
     new SnapshotColumnarFileReader(c.file, physSchema, sessionConf, Nil,
       SnapshotPartitions.EqSidecars.resolve(c.file.eqDvUris, eqBc, sessionConf),

@@ -25,9 +25,11 @@ import graft.sources.SnapshotTable
   *  - `compact(table, small_rows, target_rows)` — bin-pack small
   *    files (content-neutral).
   *  - `purge_deletes(table)` — fold deletion vectors into files.
-  *  - `upgrade(table)` — record the schema of a table written before
-  *    every commit recorded one ([[SnapshotTable.upgrade]]); returns
-  *    the version that records it (a no-op on a current table).
+  *  - `upgrade(table)` — bring a table to the current on-disk format
+  *    ([[SnapshotTable.upgrade]]): record the schema of a table written
+  *    before every commit recorded one, and convert retired (file, pos)
+  *    deletion-vector sidecars to per-file bitmaps; returns the
+  *    upgraded version (a no-op on a current table).
   *  - `rebucket(table)` — rewrite through the declared bucket layout
   *    (restores storage-partitioned-join capability after unbucketed
   *    writes; folds deletion vectors in).

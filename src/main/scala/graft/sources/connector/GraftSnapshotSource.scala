@@ -166,6 +166,9 @@ object GraftSnapshotSource {
       .orElse(SnapshotTable.latestVersion(spark, dir))
       .getOrElse(throw new IllegalStateException(s"no committed version under $dir"))
     val m = SnapshotTable.readManifest(spark, dir, v)
+    // metadata-only answers (counts) must refuse a retired vector too
+    m.files.find(_.dv.exists(_.legacy)).foreach(fe =>
+      throw graft.sources.DeletionVectors.legacyRefusal(dir, fe.path))
     Option(options.get(FileSubsetOption)) match {
       case None => m
       case Some(s) =>
@@ -258,8 +261,8 @@ final class SnapshotV2Table(schema: StructType, dir: String,
     (cluster ++ bucket).toArray
   }
 
-  /** SQL `DELETE FROM … WHERE …` lands as deletion vectors: a tiny
-    * (file, pos) sidecar commit, zero data files rewritten — the
+  /** SQL `DELETE FROM … WHERE …` lands as deletion vectors: a commit
+    * of the touched files' bitmaps, zero data files rewritten — the
     * merge-on-read cost class every 100 TB GDPR/retraction delete
     * needs.
     *

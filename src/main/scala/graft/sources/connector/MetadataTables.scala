@@ -214,7 +214,7 @@ object MetadataTables {
       val m = SnapshotTable.readManifest(spark, dir, v)
       new GenericInternalRow(Array[Any](
         v, UTF8String.fromString(m.op), m.ts * 1000L, m.totalRows,
-        m.files.length, m.files.flatMap(_.dv.map(_._2)).sum))
+        m.files.length, m.files.flatMap(_.dv.map(_.rows)).sum))
         : InternalRow
     }
     new SnapshotMetaTable(s"graft_snapshot($dir).history", schema, rows)
@@ -247,8 +247,8 @@ object MetadataTables {
       val statKeys = fe.stats.keys.toSeq.sorted
       new GenericInternalRow(Array[Any](
         UTF8String.fromString(fe.path), fe.rows, fe.liveRows,
-        fe.dv.map(d => UTF8String.fromString(d._1)).orNull,
-        fe.dv.map(_._2).getOrElse(0L),
+        fe.dv.map(d => UTF8String.fromString(d.path)).orNull,
+        fe.dv.map(_.rows).getOrElse(0L),
         new ArrayBasedMapData(
           new GenericArrayData(statKeys.map(UTF8String.fromString).toArray[Any]),
           new GenericArrayData(statKeys.map(k => new GenericArrayData(

@@ -12,6 +12,7 @@ import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarArray, ColumnarBatch, ColumnarMap}
 import org.apache.spark.unsafe.types.UTF8String
+import org.roaringbitmap.RoaringBitmap
 
 /** The V2 connector's one file reader — table scans, micro-batch
   * streams and the change feed all read through it: one
@@ -20,37 +21,39 @@ import org.apache.spark.unsafe.types.UTF8String
   * column type Spark's parquet reader decodes (decimal, struct, map,
   * nested arrays, variant, every timestamp encoding) reads here, with
   * the file's deletion vector applied IN-READER as a per-batch
-  * position mask — O(batch) bookkeeping instead of a per-query
-  * broadcast anti-join build, the real-format "position bitmap skip"
-  * shape (cf. Delta deletion vectors, Iceberg positional deletes, both
-  * of which filter inside the vectorized batch).
+  * position mask (the shape of Delta deletion vectors and Iceberg
+  * positional deletes, both of which filter inside the vectorized
+  * batch).
+  *
+  * The deletion vector is this file's own Roaring bitmap: the reader
+  * loads it with one range read of the DV file its pointer names
+  * ([[graft.sources.DeletionVectors.read]], which refuses on a CRC or
+  * cardinality mismatch), before the first batch.
   *
   * Schema evolution rides Spark's own clipping: the requested Spark
   * schema goes in via `ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA`,
   * and columns a file predates surface as constant-null vectors (or
   * their exists-default) — the same semantics as a merged footer schema.
   *
-  * Masking strategy per batch of `n` rows: if no deleted position
-  * falls in the batch's row-index range the batch passes through with
-  * only the generated index column stripped (zero copy, the
-  * overwhelmingly common case — dv sidecars are tiny relative to
-  * data); otherwise the live row indices become an `int[]` map and
-  * each column is wrapped in a delegating [[ColumnVector]] that
-  * redirects `get*(i)` through the map — still zero data copied,
-  * O(deleted-in-batch) extra work. Positions come from Spark's own
-  * row-index generator (see `needPos` below), so they stay exact
-  * under the row-group/page skipping the pushed FilterPredicates buy
-  * (round-13; previously the dv leg read every row group because a
-  * running position counter demanded sequential reads).
+  * Masking strategy per batch of `n` rows: if the bitmap holds no
+  * position in the batch's row-index span (`rangeCardinality`, the
+  * common case) the batch passes through with only the generated index
+  * column stripped, zero copy; otherwise each row probes
+  * `bitmap.contains` on its unboxed int position, the live row indices
+  * become an `int[]` map, and each column is wrapped in a delegating
+  * [[ColumnVector]] that redirects `get*(i)` through the map — still
+  * zero data copied. Positions come from Spark's own row-index
+  * generator (see `needPos` below), so they stay exact under the
+  * row-group/page skipping the pushed FilterPredicates buy.
   *
-  * Pending EQUALITY deletes mask here too (round-16): key columns join
-  * the requested schema, each row's vector value probes a typed key
-  * set, and the same live-index map carries both verdicts.
+  * Pending EQUALITY deletes mask here too: key columns join the
+  * requested schema, each row's vector value probes a typed key set,
+  * and the same live-index map carries both verdicts.
   *
   * The change feed narrows the same mask with two KEEP predicates:
-  * `keep` emits only the listed positions (a vector delta between two
-  * versions), `eqKeep` only the rows matching one sidecar's keys (a
-  * commit's fresh equality deletes).
+  * `keep` emits only the positions in a bitmap (a vector delta between
+  * two versions), `eqKeep` only the rows matching one sidecar's keys
+  * (a commit's fresh equality deletes).
   *
   * Requested metadata columns (`meta`) trail the data columns: `_pos`
   * is the generated row-index vector (masked like any column), `_file`
@@ -64,7 +67,7 @@ private final class SnapshotColumnarFileReader(p: SnapshotFilePartition,
                                                filters: Seq[Filter],
                                                eq: Seq[EqSidecar] = Nil,
                                                meta: Seq[String] = Nil,
-                                               keep: Option[java.util.HashSet[java.lang.Long]] = None,
+                                               keep: Option[RoaringBitmap] = None,
                                                eqKeep: Option[EqSidecar] = None,
                                                extra: Seq[(DataType, Any)] = Nil)
   extends org.apache.spark.sql.connector.read.PartitionReader[ColumnarBatch] {
@@ -72,9 +75,9 @@ private final class SnapshotColumnarFileReader(p: SnapshotFilePartition,
   private val conf = SnapshotPartitions.hadoopConf(sessionConf)
   private val path = new Path(p.fileUri)
 
-  /** Deleted row positions of THIS file (shared-sidecar entries for
-    * other files are filtered out). */
-  private val deleted = SnapshotPartitions.positionsOf(conf, p.dvUri, p.baseName)
+  /** Deleted row positions of THIS file; null without a vector. */
+  private val deleted: RoaringBitmap =
+    p.dv.map(graft.sources.DeletionVectors.read(conf, _)).orNull
 
   /** Equality-delete key columns (pending deletes and the feed's keep
     * sidecar) not already in the output projection are APPENDED to
@@ -106,7 +109,7 @@ private final class SnapshotColumnarFileReader(p: SnapshotFilePartition,
     * skipping. The column is generated, not read — zero extra I/O —
     * and is stripped before the batch leaves this reader unless the
     * scan asked for `_pos`. */
-  private val posMask = !deleted.isEmpty || keep.isDefined
+  private val posMask = (deleted != null && !deleted.isEmpty) || keep.isDefined
   private val needPos = posMask || meta.contains(SnapshotV2Table.PosCol)
   private val posIdx = schema.length + eqAppend.length
   private val requested: StructType = {
@@ -351,9 +354,19 @@ private final class SnapshotColumnarFileReader(p: SnapshotFilePartition,
     true
   }
 
+  private val keepSet = keep.orNull
+
   private def mask(raw: ColumnarBatch, n: Int): ColumnarBatch = {
-    if (!needMask) return emit(raw, identity, n)
+    if (!needMask || n == 0) return emit(raw, identity, n)
     val pos = if (posMask) raw.column(posIdx) else null // generated row index
+    // positions ascend within a batch: a vector with no member in the
+    // batch's span masks nothing, and its per-row probe is skipped
+    val (lo, hi) = if (posMask) (pos.getLong(0), pos.getLong(n - 1) + 1) else (0L, 0L)
+    val del = deleted != null && deleted.rangeCardinality(lo, hi) != 0
+    if (keepSet != null && keepSet.rangeCardinality(lo, hi) == 0)
+      return emit(raw, identity, 0) // nothing in the batch is kept
+    if (!del && keepSet == null && eqChecks.length == 0 && keepCheck == null)
+      return emit(raw, identity, n)
     var j = 0
     while (j < eqChecks.length) { eqChecks(j).bind(raw); j += 1 }
     if (keepCheck != null) keepCheck.bind(raw)
@@ -361,7 +374,8 @@ private final class SnapshotColumnarFileReader(p: SnapshotFilePartition,
     val map = new Array[Int](n)
     var i = 0
     while (i < n) {
-      val dead = (posMask && !livePos(pos.getLong(i))) ||
+      val dead = (del && deleted.contains(pos.getLong(i).toInt)) ||
+        (keepSet != null && !keepSet.contains(pos.getLong(i).toInt)) ||
         (eqChecks.length != 0 && eqDeletes(i)) ||
         (keepCheck != null && !keepCheck.matches(i))
       if (!dead) { map(live) = i; live += 1 }
@@ -371,10 +385,6 @@ private final class SnapshotColumnarFileReader(p: SnapshotFilePartition,
     // a fully-deleted batch legally emits 0 rows; consumers skip it
     else emit(raw, new PositionMaskedColumnVector(_, map, live), live)
   }
-
-  private val keepSet = keep.orNull
-  private def livePos(pos: Long): Boolean =
-    !deleted.contains(pos) && (keepSet == null || keepSet.contains(pos))
 
   /** The output batch: the data columns and `_pos` seen through
     * `view`, `_file` and the `extra` values as constants — appended

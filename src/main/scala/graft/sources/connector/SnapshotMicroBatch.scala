@@ -147,13 +147,10 @@ final class SnapshotMicroBatchStream(dir: String, schema: StructType,
           s"version $earliest of $dir (vacuumed past the checkpoint); " +
           "exactly-once resume is impossible — restart from a fresh " +
           "checkpoint or consume SnapshotTable.changes")
-    // the change token pairs the dv ref with the equality-delete ref
-    // set: EITHER kind of in-place delete breaks the append-only
-    // contract the same way
-    def token(fe: graft.sources.SnapshotTable.FileEntry): Option[String] =
-      if (fe.dv.isEmpty && fe.eqDv.isEmpty) None
-      else Some(fe.dv.map(_._1).getOrElse("") +
-        fe.eqDv.sorted.mkString("#", "#", ""))
+    // the change token pairs the whole dv pointer with the
+    // equality-delete ref set: EITHER kind of in-place delete breaks
+    // the append-only contract the same way
+    def token(fe: SnapshotTable.FileEntry) = SnapshotTable.changeToken(fe)
     val base: Map[String, Option[String]] =
       if (a < earliest) Map.empty
       else SnapshotTable.readManifest(spark, dir, a).files

@@ -1,18 +1,12 @@
 package graft.sources.connector
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.filter2.compat.FilterCompat
-import org.apache.parquet.filter2.predicate.FilterApi
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.io.api.Binary
-import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
 
 import graft.sources.SnapshotTable
 import org.apache.spark.broadcast.Broadcast
@@ -31,14 +25,15 @@ import graft.sources.SnapshotTable.FileEntry
   * only `_file`/`_pos`, or none at all for a row count). Column
   * pruning reaches the parquet layer as the requested Spark schema;
   * columns a file predates (schema evolution) surface as null or their
-  * exists-default; deletion-vector positions and pending equality
-  * deletes mask in-reader. Scale shape: partitions = files, no
-  * shuffle, dv sidecars are tiny and loaded per file (positions of
-  * DELETED rows only). parquet-hadoop record assembly survives only
-  * to decode those sidecars ([[SnapshotPartitions.positionsOf]],
-  * [[SnapshotPartitions.EqSidecars.loadLocal]]).
+  * exists-default; deletion vectors and pending equality deletes mask
+  * in-reader. Scale shape: partitions = files, no shuffle; a file's
+  * deletion vector is its own Roaring bitmap, loaded by its reader
+  * with one range read of the DV file its [[SnapshotTable.Dv]] pointer
+  * names. parquet-hadoop record assembly survives only to decode
+  * equality-delete sidecars ([[SnapshotPartitions.EqSidecars.loadLocal]]).
   */
-/** `eqDvUris`: pending EQUALITY-delete sidecars (resolved URIs). The
+/** `dv`: the file's deletion-vector pointer, its path resolved.
+  * `eqDvUris`: pending EQUALITY-delete sidecars (resolved URIs). The
   * partition carries only the REFERENCES — the key sets themselves
   * ride one torrent broadcast per scan ([[SnapshotPartitions.EqSidecars
   * .broadcastFor]]), so task closures stay O(refs) however many keys
@@ -46,7 +41,7 @@ import graft.sources.SnapshotTable.FileEntry
   * closure-embedded keys were megabytes per task). Readers mask rows
   * whose key-column value is in the merged set. */
 final case class SnapshotFilePartition(fileUri: String, baseName: String,
-                                       rows: Long, dvUri: Option[String],
+                                       rows: Long, dv: Option[SnapshotTable.Dv],
                                        eqDvUris: Seq[String] = Nil)
   extends InputPartition
 
@@ -278,9 +273,16 @@ private[graft] object SnapshotPartitions {
 
   def partitionFor(dir: String, fe: FileEntry): SnapshotFilePartition =
     SnapshotFilePartition(SnapshotTable.resolvePath(dir, fe.path),
-      new Path(fe.path).getName, fe.rows,
-      fe.dv.map(d => SnapshotTable.resolvePath(dir, d._1)),
+      new Path(fe.path).getName, fe.rows, resolvedDv(dir, fe),
       fe.eqDv.map(p => SnapshotTable.resolvePath(dir, p)))
+
+  /** `fe`'s deletion-vector pointer with its path resolved; refuses a
+    * retired sidecar pointer. */
+  def resolvedDv(dir: String, fe: FileEntry): Option[SnapshotTable.Dv] =
+    fe.dv.map { d =>
+      if (d.legacy) throw graft.sources.DeletionVectors.legacyRefusal(dir, fe.path)
+      d.copy(path = SnapshotTable.resolvePath(dir, d.path))
+    }
 
   /** Per-file pending-key budget: readers materialize the merged key
     * set per (file, query), so an unbounded accumulation would OOM at
@@ -560,63 +562,8 @@ private[graft] object SnapshotPartitions {
         .broadcast(uris.distinct.map(u => u -> load(u)).toMap))
   }
 
-  /** Sidecar rows DECODED by [[positionsOf]] since the last
-    * reset — single-JVM telemetry for specs/probes pinning that a
-    * shared sidecar prunes to ~each task's own positions (local[n]
-    * runs executors in-process, so the adder sees every task). */
-  private[graft] val sidecarRowsDecoded = new java.util.concurrent.atomic.LongAdder
   /** Data rows decoded by the columnar readers since the last reset —
     * pins that pushed FilterPredicates actually prune row groups /
     * pages inside dv-carrying files. */
   private[graft] val columnarRowsDecoded = new java.util.concurrent.atomic.LongAdder
-  private[graft] def resetSidecarTelemetry(): Unit = {
-    sidecarRowsDecoded.reset()
-    columnarRowsDecoded.reset()
-  }
-
-  /** The deleted row positions of file `baseName`, loaded from the dv
-    * sidecar `dvUri` (a reader's own vector, or — for the change feed —
-    * a file's pre- or post-version vector). Sidecars are SHARED across
-    * a version's files (one consolidated vector per commit), so the
-    * load pushes a `file = <basename>` parquet predicate: the
-    * stage-time (file, pos) sort + 128 KB row groups
-    * (writeSingleParquet's parquet.block.size — ~40k encoded
-    * (file,pos) rows per group) let row-group stats and dictionary
-    * filters prune the shared sidecar to this file's run, keeping the
-    * per-task decode O(own positions) instead of O(all deleted
-    * positions) — across K dv-carrying files that is the difference
-    * between O(D) and O(K×D) total sidecar work. Record-level
-    * filtering drops any residual same-row-group strangers; the
-    * basename check in the loop stays as a cheap invariant (legacy
-    * pre-sort sidecars prune nothing and still read correctly). */
-  def positionsOf(conf: Configuration, dvUri: Option[String],
-                  baseName: String): java.util.HashSet[java.lang.Long] = {
-    val set = new java.util.HashSet[java.lang.Long]()
-    dvUri.foreach { dv =>
-      val path = new Path(dv)
-      val fileSchema = {
-        val pfr = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
-        try pfr.getFileMetaData.getSchema finally pfr.close()
-      }
-      val projection = new MessageType(fileSchema.getName,
-        Seq("file", "pos").map(c =>
-          fileSchema.getType(fileSchema.getFieldIndex(c))).toList.asJava)
-      val c = new Configuration(conf)
-      c.set(ReadSupport.PARQUET_READ_SCHEMA, projection.toString)
-      val onlyThisFile = FilterCompat.get(FilterApi.eq(
-        FilterApi.binaryColumn("file"), Binary.fromString(baseName)))
-      val r = ParquetReader.builder(new GroupReadSupport(), path)
-        .withConf(c).withFilter(onlyThisFile).build()
-      try {
-        var g = r.read()
-        while (g != null) {
-          sidecarRowsDecoded.increment()
-          if (g.getBinary("file", 0).toStringUsingUTF8 == baseName)
-            set.add(g.getLong("pos", 0))
-          g = r.read()
-        }
-      } finally r.close()
-    }
-    set
-  }
 }

@@ -125,7 +125,7 @@ class ConcurrencyStormSpec extends SparkTestBase {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     versions.foreach { v =>
       SnapshotTable.readManifest(spark, dir, v).files.foreach { fe =>
-        ((fe.path +: fe.dv.map(_._1).toSeq) ++ fe.eqDv).foreach { p =>
+        ((fe.path +: fe.dv.map(_.path).toSeq) ++ fe.eqDv).foreach { p =>
           assert(f.exists(new org.apache.hadoop.fs.Path(
             SnapshotTable.resolvePath(dir, p))),
             s"version $v references missing file $p")

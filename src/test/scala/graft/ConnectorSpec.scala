@@ -35,6 +35,54 @@ class ConnectorSpec extends SparkTestBase {
     scans.head.asInstanceOf[SnapshotScan]
   }
 
+  /** Turn `dir`'s first version into the retired deletion-vector
+    * shape by hand, as an older writer left it: `rows` (data-file
+    * basename, position) as one plain-Spark (file, pos) parquet
+    * sidecar, and a new full log entry whose files point at it with
+    * the old `{"path", "n"}` dv JSON. Returns that entry's version. */
+  private def legacyDv(dir: String, rows: Seq[(String, Long)]): Long = {
+    import org.apache.hadoop.fs.Path
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = new Path(dir, s".legacy-dv-${java.util.UUID.randomUUID}")
+    rows.toDF("file", "pos").coalesce(1).write.parquet(tmp.toString)
+    val part = fs.listStatus(tmp).map(_.getPath)
+      .find(_.getName.endsWith(".parquet")).get
+    val rel = s"data/dv-legacy-${java.util.UUID.randomUUID}.parquet"
+    assert(fs.rename(part, new Path(dir, rel)))
+    fs.delete(tmp, true)
+    val log = java.nio.file.Paths.get(dir, "_log")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val node = mapper.readTree(Files.readAllBytes(log.resolve(f"v${1}%010d.json")))
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    assert(node.get("kind").asText == "full")
+    node.put("version", 2L).put("op", "delete-dv")
+    val counts = rows.distinct.groupBy(_._1).map { case (f, ps) => f -> ps.size.toLong }
+    node.get("files").elements().forEachRemaining { f =>
+      counts.get(new Path(f.get("path").asText).getName).foreach(n =>
+        f.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+          .putObject("dv").put("path", rel).put("n", n))
+    }
+    Files.write(log.resolve(f"v${2}%010d.json"), mapper.writeValueAsBytes(node))
+    SnapshotTable.invalidateResolveCache()
+    2L
+  }
+
+  /** Spark's own (data-file basename, row index) of `df`'s rows over
+    * `dir`'s version-1 files. */
+  private def positionsOf(dir: String, pred: org.apache.spark.sql.Column)
+      : Seq[(String, Long)] =
+    spark.read.parquet(SnapshotTable.readManifest(spark, dir, 1).files
+      .map(fe => SnapshotTable.resolvePath(dir, fe.path)): _*)
+      .filter(pred)
+      .select(element_at(split($"_metadata.file_path", "/"), -1),
+        $"_metadata.row_index").as[(String, Long)].collect().toSeq
+
+  private def refusesNamingUpgrade(body: => Any): Unit = {
+    val ex = intercept[Exception](body)
+    assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("upgrade")), ex)
+  }
+
   /** A LEGACY append: a plain parquet file committed with no bucket
     * tag — what a pre-bucketing writer (or a foreign engine sharing
     * the format) produces. Every in-repo write path now stages
@@ -1086,69 +1134,161 @@ class ConnectorSpec extends SparkTestBase {
       .as[Long].head == 2L)
   }
 
-  test("shared dv sidecar prunes to each task's own positions") {
-    import graft.sources.connector.SnapshotPartitions
+  test("a DV commit rewrites only the touched files' pointers") {
     val dir = freshDir()
     SnapshotTable.write(spark,
-      spark.range(0, 400000).toDF("id").withColumn("v", $"id" % 1000)
+      spark.range(0, 16000).toDF("id").withColumn("v", $"id" % 1000)
         .repartitionByRange(16, $"id"),
       dir, "overwrite", Seq("id"))
-    // one commit, one CONSOLIDATED sidecar carrying positions for all
-    // 16 files — the shape where per-task full-sidecar decode was K×D
     SnapshotTable.deleteVectors(spark, dir, $"id" % 100 === 7)
-    val m = SnapshotTable.readManifest(spark, dir,
+    val m1 = SnapshotTable.readManifest(spark, dir,
       SnapshotTable.latestVersion(spark, dir).get)
-    assert(m.files.count(_.dv.isDefined) == 16)
-    val deleted = m.files.flatMap(_.dv.map(_._2)).sum
-    assert(deleted == 4000L)
-    SnapshotPartitions.resetSidecarTelemetry()
-    // a residual filter defeats the metadata-only count, so the scan
-    // actually opens the 16 dv-masking readers
-    assert(load(dir).filter($"v" >= 0).count() == 400000 - deleted)
-    // the pushed `file = basename` predicate hands each task ONLY its
-    // own run: total decoded ≈ D, where the unfiltered loop decoded
-    // K×D (16× here) — the scale cliff the predicate retires
-    val decoded = SnapshotPartitions.sidecarRowsDecoded.sum()
-    assert(decoded == deleted, s"decoded $decoded sidecar rows for $deleted")
-
-    // a big consolidated sidecar lands in many ~1 MB row groups and
-    // the (file, pos) sort gives them disjoint file runs — row-group
-    // stats exclude most groups for any one basename
-    SnapshotTable.deleteVectors(spark, dir, $"id" % 2 === 0)
-    val m2 = SnapshotTable.readManifest(spark, dir,
-      SnapshotTable.latestVersion(spark, dir).get)
-    val sidecars = m2.files.flatMap(_.dv.map(_._1)).distinct
-    assert(sidecars.size == 1, "dv commits consolidate to one sidecar")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val pfr = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(s"$dir/${sidecars.head}"), conf))
-    try {
-      val blocks = pfr.getFooter.getBlocks
-      assert(blocks.size() > 1,
-        s"expected multiple ~1MB row groups, got ${blocks.size()}")
-      import scala.jdk.CollectionConverters._
-      val cmp = org.apache.parquet.schema.PrimitiveComparator
-        .UNSIGNED_LEXICOGRAPHICAL_BINARY_COMPARATOR
-      def admits(base: String): Int = blocks.asScala.count { b =>
-        val st = b.getColumns.asScala
-          .find(_.getPath.toDotString == "file").get.getStatistics
-        val bin = org.apache.parquet.io.api.Binary.fromString(base)
-        val mn = st.genericGetMin.asInstanceOf[org.apache.parquet.io.api.Binary]
-        val mx = st.genericGetMax.asInstanceOf[org.apache.parquet.io.api.Binary]
-        cmp.compare(mn, bin) <= 0 && cmp.compare(mx, bin) >= 0
-      }
-      val bases = m2.files.flatMap(fe =>
-        fe.dv.map(_ => new org.apache.hadoop.fs.Path(fe.path).getName))
-      val admitted = bases.map(admits).sum
-      assert(admitted < bases.size * blocks.size(),
-        s"sorted layout should exclude some (file, row-group) pairs: " +
-          s"$admitted of ${bases.size * blocks.size()}")
-    } finally pfr.close()
-    // content unchanged by the layout work
+    assert(m1.files.size == 16 && m1.files.forall(_.dv.isDefined))
+    // ids below 2000 live in the first two of the 16 range files
+    val v2 = SnapshotTable.deleteVectors(spark, dir, $"id" < 2000 && $"id" % 10 === 3)
+    val m2 = SnapshotTable.readManifest(spark, dir, v2)
+    val before = m1.files.map(fe => fe.path -> fe.dv).toMap
+    val (changed, same) = m2.files.partition(fe => before(fe.path) != fe.dv)
+    assert(changed.size == 2 && same.size == 14,
+      s"${changed.size} pointers changed, ${same.size} kept")
+    // the new DV file holds exactly the two touched vectors: the
+    // format byte, then each vector and its 4-byte CRC
+    val dvFile = changed.head.dv.get.path
+    assert(changed.forall(_.dv.get.path == dvFile))
+    assert(m2.files.count(_.dv.exists(_.path == dvFile)) == 2)
+    val len = new org.apache.hadoop.fs.Path(s"$dir/$dvFile")
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(new org.apache.hadoop.fs.Path(s"$dir/$dvFile")).getLen
+    assert(len == 1 + changed.map(_.dv.get.size + 4).sum)
+    // each touched vector is its prior deletions plus the fresh ones
+    assert(changed.map(fe => fe.dv.get.rows - before(fe.path).get.rows).sum == 200)
     assert(load(dir).count() ==
-      spark.range(0, 400000).filter($"id" % 100 =!= 7 && $"id" % 2 =!= 0)
-        .count())
+      spark.range(0, 16000).filter(!($"id" % 100 === 7) &&
+        !($"id" < 2000 && $"id" % 10 === 3)).count())
+  }
+
+  test("a retired (file, pos) sidecar refuses reads and writes until upgrade converts it") {
+    val dir = freshDir()
+    val base = spark.range(0, 400).select($"id", ($"id" * 3).as("v"))
+    SnapshotTable.write(spark, base.repartitionByRange(4, $"id"), dir,
+      "overwrite", Seq("id"))
+    val v2 = legacyDv(dir, positionsOf(dir, $"id" % 7 === 3))
+    refusesNamingUpgrade(load(dir).count())
+    refusesNamingUpgrade(SnapshotTable.scan(spark, dir).count())
+    refusesNamingUpgrade(SnapshotTable.deleteVectors(spark, dir, $"id" === 1))
+    refusesNamingUpgrade(SnapshotTable.write(spark, base.limit(1), dir, "append"))
+    assert(SnapshotTable.latestVersion(spark, dir).contains(v2))
+    // one upgrade version: every vector becomes a bitmap in one DV file
+    val v3 = SnapshotTable.upgrade(spark, dir)
+    assert(v3 == v2 + 1)
+    val dvs = SnapshotTable.readManifest(spark, dir, v3).files.flatMap(_.dv)
+    assert(dvs.size == 4 && dvs.forall(!_.legacy) && dvs.map(_.path).distinct.size == 1)
+    val model = base.filter(!($"id" % 7 === 3)).as[(Long, Long)].collect().sorted.toSeq
+    assert(SnapshotTable.scan(spark, dir).as[(Long, Long)].collect().sorted.toSeq == model)
+    assert(load(dir).as[(Long, Long)].collect().sorted.toSeq == model)
+    // a second upgrade adds no version; DML works again
+    assert(SnapshotTable.upgrade(spark, dir) == v3)
+    SnapshotTable.deleteVectors(spark, dir, $"id" === 1)
+    assert(load(dir).count() == model.size - 1)
+  }
+
+  test("a DV file lives while any kept entry points into it; clones and branches read it") {
+    val dir = freshDir()
+    val base = spark.range(0, 8000).select($"id", ($"id" % 10).as("d"))
+    SnapshotTable.write(spark, base.repartitionByRange(8, $"id"), dir,
+      "overwrite", Seq("id"))
+    // ids i*1000 .. i*1000+999 live in range file i
+    val pA = $"id" < 4000 && $"d" === 1 // files 0-3
+    val pF = $"id".between(6000, 6999) && $"d" === 5 // file 6, on a branch
+    val pB = $"id" >= 4000 && $"d" === 2 // files 4-7
+    val pC = $"id".between(4000, 4999) && $"d" === 3 // file 4
+    val pD = $"id".between(4000, 4999) && $"d" === 4 // file 4 again
+    def ids(df: DataFrame) = df.select("id").as[Long].collect().sorted.toSeq
+    def model(ps: org.apache.spark.sql.Column*) = ids(base.filter(!ps.reduce(_ || _)))
+    def dvFiles(v: Long) = SnapshotTable.readManifest(spark, dir, v).files
+      .flatMap(_.dv.map(_.path)).toSet
+    def exists(rel: String) = new java.io.File(s"$dir/$rel").exists
+    val v2 = SnapshotTable.deleteVectors(spark, dir, pA)
+    // a shallow and a deep clone and a branch, between the DV commits
+    val shallow = s"${freshDir()}/t"
+    val deep = s"${freshDir()}/t"
+    SnapshotTable.cloneTable(spark, dir, shallow)
+    SnapshotTable.cloneTable(spark, dir, deep, deep = true)
+    SnapshotTable.createBranch(spark, dir, "dev")
+    val bdir = SnapshotTable.branchDir(dir, "dev")
+    SnapshotTable.deleteVectors(spark, bdir, pF)
+    assert(ids(SnapshotTable.scan(spark, bdir)) == model(pA, pF))
+    // main takes the branch's vector; the branch re-points at main
+    SnapshotTable.fastForward(spark, dir, "dev")
+    assert(ids(SnapshotTable.scan(spark, dir)) == model(pA, pF))
+    assert(ids(SnapshotTable.scan(spark, bdir)) == model(pA, pF))
+    val v4 = SnapshotTable.deleteVectors(spark, dir, pB)
+    SnapshotTable.createTag(spark, dir, "mid", Some(v4))
+    val v5 = SnapshotTable.deleteVectors(spark, dir, pC)
+    val v6 = SnapshotTable.deleteVectors(spark, dir, pD)
+    val fileA = dvFiles(v2)
+    val fileC = dvFiles(v5) -- dvFiles(v4)
+    assert(fileA.size == 1 && fileC.size == 1)
+    // files 0-3 still point into the first commit's DV file; only v5
+    // pointed into C's
+    assert(fileA.subsetOf(dvFiles(v6)) && !fileC.subsetOf(dvFiles(v6)))
+    SnapshotTable.vacuum(spark, dir, keepVersions = 1, minAgeMs = 0L)
+    assert(fileA.forall(exists), "a DV file that kept entries point into was vacuumed")
+    assert((dvFiles(v4) ++ dvFiles(v6)).forall(exists))
+    assert(!fileC.exists(exists), "an unreferenced DV file survived vacuum")
+    assert(ids(SnapshotTable.scan(spark, dir)) == model(pA, pF, pB, pC, pD))
+    assert(ids(spark.read.format("graft_snapshot").option("versionAsOf", "mid")
+      .load(dir)) == model(pA, pF, pB))
+    assert(ids(SnapshotTable.scan(spark, shallow)) == model(pA))
+    assert(ids(SnapshotTable.scan(spark, deep)) == model(pA))
+  }
+
+  test("a DV file with one flipped byte refuses the read") {
+    val dir = freshDir()
+    SnapshotTable.write(spark, spark.range(0, 1000).toDF("id").coalesce(1),
+      dir, "overwrite")
+    val v = SnapshotTable.deleteVectors(spark, dir, $"id" % 10 === 1)
+    val dv = SnapshotTable.readManifest(spark, dir, v).files.head.dv.get
+    val f = new java.io.File(s"$dir/${dv.path}")
+    // the local filesystem's own checksum file would refuse first
+    new java.io.File(f.getParent, s".${f.getName}.crc").delete()
+    val raf = new java.io.RandomAccessFile(f, "rw")
+    try {
+      val at = dv.offset + dv.size / 2
+      raf.seek(at)
+      val b = raf.read()
+      raf.seek(at)
+      raf.write(b ^ 0x10)
+    } finally raf.close()
+    // collect, not count: a count is answered from the manifest
+    val ex = intercept[Exception](load(dir).collect())
+    assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("CRC32")), ex)
+  }
+
+  test("fresh positions a prior vector already holds refuse; duplicates across tasks raise") {
+    val dir = freshDir()
+    SnapshotTable.write(spark, spark.range(0, 100).toDF("id").coalesce(1),
+      dir, "overwrite")
+    val v = SnapshotTable.deleteVectors(spark, dir, $"id" < 10)
+    val m = SnapshotTable.readManifest(spark, dir, v)
+    val file = new org.apache.hadoop.fs.Path(m.files.head.path).getName
+    val e = intercept[IllegalStateException](SnapshotTable.stageVectors(spark,
+      dir, m, Seq((file, 5L), (file, 50L)).toDF("file", "pos")))
+    assert(e.getMessage.contains("already deleted"))
+    // one target row, two source images, each in its own task
+    val twoTasks = spark.createDataFrame(spark.sparkContext
+      .parallelize(Seq((file, 50L), (file, 50L)), 2)).toDF("file", "pos")
+    assert(twoTasks.rdd.glom().collect().map(_.length).toSeq == Seq(1, 1))
+    val dup = intercept[IllegalArgumentException](SnapshotTable.stageVectors(
+      spark, dir, m, twoTasks, failOnDuplicate = true))
+    assert(dup.getMessage.contains("cardinality"))
+    // the same duplicate inside one task raises too
+    intercept[IllegalArgumentException](SnapshotTable.stageVectors(
+      spark, dir, m, twoTasks.coalesce(1), failOnDuplicate = true))
+    // nothing was published by the refusals
+    assert(SnapshotTable.latestVersion(spark, dir).contains(v))
+    assert(SnapshotTable.scan(spark, dir).count() == 90)
   }
 
   test("pushed predicates prune pages inside a dv-carrying file; mask stays exact") {
@@ -1163,7 +1303,7 @@ class ConnectorSpec extends SparkTestBase {
         .repartitionByRange(1, $"id"),
       dir, "overwrite", Seq("id"))
     SnapshotTable.deleteVectors(spark, dir, $"id" % 100000 === 7) // 5 rows
-    SnapshotPartitions.resetSidecarTelemetry()
+    SnapshotPartitions.columnarRowsDecoded.reset()
     val top = load(dir).filter($"id" >= 499000).select("id", "pay").collect()
     assert(top.length == 1000 && top.forall(_.getLong(0) >= 499000))
     val decoded = SnapshotPartitions.columnarRowsDecoded.sum()
@@ -1377,20 +1517,11 @@ class ConnectorSpec extends SparkTestBase {
     val v1 = SnapshotTable.latestVersion(spark, dir).get
     val fe = SnapshotTable.readManifest(spark, dir, v1).files.head
     val base = new org.apache.hadoop.fs.Path(fe.path).getName
-    // a hand-written sidecar (an older or external writer) holding
-    // position 2 twice; one file, so position = id
-    val fsPath = new org.apache.hadoop.fs.Path(dir)
-    val fs = fsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = s"$dir/.handmade-dv"
-    Seq((base, 2L), (base, 2L), (base, 5L)).toDF("file", "pos").coalesce(1)
-      .write.parquet(tmp)
-    val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp)).map(_.getPath)
-      .find(_.getName.endsWith(".parquet")).get
-    val rel = "data/dv-handmade.parquet"
-    assert(fs.rename(part, new org.apache.hadoop.fs.Path(dir, rel)))
-    SnapshotTable.commitAdded(spark, dir, "delete-dv",
-      Seq(fe.copy(dv = Some((rel, 2L)))), carry = false,
-      schemaJson = Some(SnapshotTable.tableSchema(spark, dir, v1).json))
+    // a hand-written sidecar of the retired format (an older or
+    // external writer) holding position 2 twice; one file, so
+    // position = id. upgrade converts it to a bitmap
+    legacyDv(dir, Seq((base, 2L), (base, 2L), (base, 5L)))
+    SnapshotTable.upgrade(spark, dir)
     assert(SnapshotTable.scan(spark, dir).count() == 8)
     def update(src: DataFrame): Long =
       SnapshotTable.mergeClauses(spark, dir, src, "id", $"k",
@@ -1403,9 +1534,10 @@ class ConnectorSpec extends SparkTestBase {
       SnapshotTable.latestVersion(spark, dir).get)
     val dv = m.files.find(_.path == fe.path).flatMap(_.dv).get
     // ...and writes each deleted position once: 2, 5 and 7
-    assert(dv._2 == 3L)
-    assert(spark.read.parquet(s"$dir/${dv._1}").as[(String, Long)].collect()
-      .sortBy(_._2).toSeq == Seq((base, 2L), (base, 5L), (base, 7L)))
+    assert(dv.rows == 3L)
+    assert(graft.sources.DeletionVectors.read(spark.sparkContext.hadoopConfiguration,
+      dv.copy(path = SnapshotTable.resolvePath(dir, dv.path))).toArray.toSeq ==
+      Seq(2, 5, 7))
     assert(SnapshotTable.scan(spark, dir).as[(Long, Long)].collect()
       .sortBy(_._1).toSeq ==
       Seq(0L, 1L, 3L, 4L, 6L, 7L, 8L, 9L).map(i => (i, if (i == 7) 700L else i * 10)))

@@ -70,7 +70,7 @@ class DeletePruneSpec extends SparkTestBase {
     assert(load(dir).filter($"id" <= 430).count() == 0)
     // dv rows == only the boundary files' matched rows, not the
     // dropped span (which left as whole files)
-    val dvRows = after.files.flatMap(_.dv.map(_._2)).sum
+    val dvRows = after.files.flatMap(_.dv.map(_.rows)).sum
     assert(dvRows < before.files.map(_.rows).min * 2,
       s"boundary dv unexpectedly large: $dvRows rows")
   }

@@ -703,7 +703,7 @@ class SnapshotSpec extends SparkTestBase {
     val m = SnapshotTable.readManifest(spark, dir, v2)
     assert(m.files.map(_.path).toSet ==
       SnapshotTable.readManifest(spark, dir, v1).files.map(_.path).toSet)
-    assert(m.files.flatMap(_.dv.map(_._2)).sum == 81)
+    assert(m.files.flatMap(_.dv.map(_.rows)).sum == 81)
     assert(m.totalRows == 8000 - 81)
     // time travel unaffected; no-match dv-delete burns no version
     assert(SnapshotTable.scan(spark, dir, Some(v1)).count() == 8000)
@@ -722,7 +722,7 @@ class SnapshotSpec extends SparkTestBase {
     SnapshotTable.deleteVectors(spark, dir, $"x" === 3)
     val v3 = SnapshotTable.deleteVectors(spark, dir, $"x" === 5)
     val m = SnapshotTable.readManifest(spark, dir, v3)
-    val dvPaths = m.files.flatMap(_.dv.map(_._1)).distinct
+    val dvPaths = m.files.flatMap(_.dv.map(_.path)).distinct
     assert(dvPaths.size == 1, s"stacked dvs must consolidate, got $dvPaths")
     val cur = SnapshotTable.scan(spark, dir)
     assert(cur.filter($"x" === 3 || $"x" === 5).count() == 0)
@@ -819,7 +819,7 @@ class SnapshotSpec extends SparkTestBase {
     // files plus one dv sidecar — nothing rewritten
     assert(dataBefore.subsetOf(fsList(dir)))
     val m = SnapshotTable.readManifest(spark, dir, v2)
-    assert(m.files.flatMap(_.dv.map(_._2)).sum == 500)
+    assert(m.files.flatMap(_.dv.map(_.rows)).sum == 500)
     assert(m.files.count(_.dv.isEmpty) >= 1, "appended post-image files expected")
     val cur = SnapshotTable.scan(spark, dir)
     assert(cur.count() == 5000)
@@ -914,8 +914,8 @@ class SnapshotSpec extends SparkTestBase {
     // the later commit consolidated both deletions into one sidecar
     val m = SnapshotTable.readManifest(spark, dir,
       SnapshotTable.latestVersion(spark, dir).get)
-    assert(m.files.flatMap(_.dv.map(_._1)).distinct.size == 1)
-    assert(m.files.flatMap(_.dv.map(_._2)).sum == 600)
+    assert(m.files.flatMap(_.dv.map(_.path)).distinct.size == 1)
+    assert(m.files.flatMap(_.dv.map(_.rows)).sum == 600)
   }
 
   test("deletion vectors: dv-merge upserts without rewriting files") {
@@ -933,7 +933,7 @@ class SnapshotSpec extends SparkTestBase {
     // originals untouched; updates appended; one dv sidecar
     assert(dataBefore.subsetOf(fsList(dir)))
     val m = SnapshotTable.readManifest(spark, dir, v2)
-    assert(m.files.flatMap(_.dv.map(_._2)).sum == 200)
+    assert(m.files.flatMap(_.dv.map(_.rows)).sum == 200)
     val cur = SnapshotTable.scan(spark, dir)
     assert(cur.count() == 4100)
     assert(cur.filter($"x" === -1).count() == 200)
@@ -955,7 +955,7 @@ class SnapshotSpec extends SparkTestBase {
       spark.range(5000, 5010).select($"id", lit(-3L).as("x")), "id", Seq("id"))
     assert(v3 == v2 + 1)
     assert(SnapshotTable.readManifest(spark, dir, v3)
-      .files.flatMap(_.dv.map(_._2)).sum == 200, "pure insert must not grow the vector")
+      .files.flatMap(_.dv.map(_.rows)).sum == 200, "pure insert must not grow the vector")
     assert(SnapshotTable.scan(spark, dir).count() == 4110)
   }
 
@@ -990,7 +990,7 @@ class SnapshotSpec extends SparkTestBase {
       } finally spark.sparkContext.removeSparkListener(listener)
     updates.unpersist()
     val m2 = SnapshotTable.readManifest(spark, dir, v2)
-    assert(m2.files.flatMap(_.dv.map(_._2)).sum == 10)
+    assert(m2.files.flatMap(_.dv.map(_.rows)).sum == 10)
     assert(SnapshotTable.scan(spark, dir).count() == 4005)
     // one candidate file (1000 rows) + the staged write-back of the
     // 15 update rows; an unpruned scan would be ≥ 4000
@@ -1002,7 +1002,7 @@ class SnapshotSpec extends SparkTestBase {
       spark.range(20000, 20005).select($"id", lit(-3L).as("x")),
       "id", Seq("id"))
     assert(SnapshotTable.readManifest(spark, dir, v3)
-      .files.flatMap(_.dv.map(_._2)).sum == 10)
+      .files.flatMap(_.dv.map(_.rows)).sum == 10)
   }
 
   test("deletion vectors: restore to a dv version revives the mask") {
@@ -1040,14 +1040,10 @@ class SnapshotSpec extends SparkTestBase {
     assert(cur.count() == 300 && cur.filter($"x" === 1).count() == 0)
   }
 
-  test("dv sidecar bookkeeping: fused per-file counts match the published sidecar") {
-    // round-19 pin of the round-18 fusion: the manifest's per-file dv
-    // counts and the duplicate detection ride the ONE sorted writer
-    // task as accumulators (adjacency-based), an invariant the engine
-    // now also self-checks against the sidecar footer on every dv
-    // commit. This spec pins the observable half: after consolidation
-    // across two dv epochs, each file's recorded count equals its true
-    // deleted-row count and the sidecar holds exactly their sum.
+  test("dv bookkeeping: per-file vectors match the deleted rows' positions") {
+    // the manifest's per-file dv counts and the bitmaps they point at
+    // must both equal each file's true deleted positions, across two
+    // dv epochs over files whose id ranges all overlap
     val dir = freshDir()
     SnapshotTable.write(spark,
       spark.range(0, 3000).select($"id", ($"id" % 3).as("x"))
@@ -1055,25 +1051,27 @@ class SnapshotSpec extends SparkTestBase {
       dir, "overwrite", Seq("id"))
     SnapshotTable.deleteVectors(spark, dir, $"id" < 100)
     SnapshotTable.deleteVectors(spark, dir,
-      $"id" >= 200 && $"id" < 250) // consolidates the prior vector
+      $"id" >= 200 && $"id" < 250) // ORs into the prior vectors
     val m = SnapshotTable.readManifest(spark, dir,
       SnapshotTable.latestVersion(spark, dir).get)
-    val dvPaths = m.files.flatMap(_.dv.map(_._1)).distinct
-    assert(dvPaths.size == 1, s"one consolidated sidecar, got $dvPaths")
-    val sidecar = spark.read.parquet(
-      SnapshotTable.resolvePath(dir, dvPaths.head))
-    // per file: recorded count == the sidecar's rows for that file ==
-    // the file's true matched rows (150 deleted ids overall)
-    val byFile = sidecar.groupBy($"file").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    // Spark's own (file, row index) of every deleted id
+    val truth = spark.read.parquet(
+      m.files.map(fe => SnapshotTable.resolvePath(dir, fe.path)): _*)
+      .filter($"id" < 100 || ($"id" >= 200 && $"id" < 250))
+      .select(element_at(split($"_metadata.file_path", "/"), -1),
+        $"_metadata.row_index").as[(String, Long)].collect()
+      .groupBy(_._1).map { case (f, ps) => f -> ps.map(_._2.toInt).sorted.toSeq }
+    val conf = spark.sparkContext.hadoopConfiguration
     m.files.foreach { fe =>
       val base = new org.apache.hadoop.fs.Path(fe.path).getName
-      assert(fe.dv.map(_._2).getOrElse(0L) == byFile.getOrElse(base, 0L),
-        s"per-file dv count mismatch for ${fe.path}: " +
-          s"manifest=${fe.dv}, sidecar=${byFile.get(base)}")
+      val positions = fe.dv.map(d => graft.sources.DeletionVectors.read(conf,
+        d.copy(path = SnapshotTable.resolvePath(dir, d.path))).toArray.toSeq)
+        .getOrElse(Nil)
+      assert(positions == truth.getOrElse(base, Nil),
+        s"dv positions of ${fe.path} differ from its deleted rows")
+      assert(fe.dv.map(_.rows).getOrElse(0L) == positions.size)
     }
-    assert(m.files.flatMap(_.dv.map(_._2)).sum == 150L)
-    assert(sidecar.count() == 150L)
+    assert(m.files.flatMap(_.dv.map(_.rows)).sum == 150L)
     assert(SnapshotTable.scan(spark, dir).count() == 2850L)
   }
 }
