@@ -1819,10 +1819,10 @@ object SnapshotTable {
     * connector's readers subtract the positions in-reader, as a
     * per-batch position mask ([[readFiles]]). This is the Delta/Iceberg
     * deletion-vector / positional-delete design, and it changes the
-    * cost class of small deletes at scale: removing 0.01% of rows scattered over a
-    * 100 TB table costs O(matched rows) bytes written instead of
-    * rewriting every touched multi-GB file (GDPR-style row removal,
-    * late-arriving retractions, per-document takedowns).
+    * cost class of small deletes at scale: removing 0.01% of rows
+    * scattered over a 100 TB table costs O(matched rows) bytes written
+    * instead of rewriting every touched multi-GB file (GDPR-style row
+    * removal, late-arriving retractions, per-document takedowns).
     *
     * Semantics match [[delete]] exactly: rows where the predicate is
     * TRUE are removed; NULL-evaluating rows are kept. The commit is

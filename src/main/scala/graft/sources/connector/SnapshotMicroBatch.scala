@@ -150,11 +150,10 @@ final class SnapshotMicroBatchStream(dir: String, schema: StructType,
     // the change token pairs the whole dv pointer with the
     // equality-delete ref set: EITHER kind of in-place delete breaks
     // the append-only contract the same way
-    def token(fe: SnapshotTable.FileEntry) = SnapshotTable.changeToken(fe)
     val base: Map[String, Option[String]] =
       if (a < earliest) Map.empty
       else SnapshotTable.readManifest(spark, dir, a).files
-        .map(fe => fe.path -> token(fe)).toMap
+        .map(fe => fe.path -> SnapshotTable.changeToken(fe)).toMap
     val afterByPath = after.files.map(fe => fe.path -> fe).toMap
     val removed = base.keysIterator.filterNot(afterByPath.contains).toSeq
     if (removed.nonEmpty && !ignoreDeletes) throw new IllegalStateException(
@@ -163,7 +162,7 @@ final class SnapshotMicroBatchStream(dir: String, schema: StructType,
         "restart from a fresh checkpoint, set ignoreDeletes=true to " +
         "tail past deletes, or consume SnapshotTable.changes")
     val dvChanged = base.collect {
-      case (path, tok) if afterByPath.get(path).exists(token(_) != tok) =>
+      case (path, tok) if afterByPath.get(path).exists(SnapshotTable.changeToken(_) != tok) =>
         path
     }
     if (dvChanged.nonEmpty && !ignoreDeletes) throw new IllegalStateException(

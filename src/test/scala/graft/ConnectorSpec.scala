@@ -1286,6 +1286,11 @@ class ConnectorSpec extends SparkTestBase {
     // the same duplicate inside one task raises too
     intercept[IllegalArgumentException](SnapshotTable.stageVectors(
       spark, dir, m, twoTasks.coalesce(1), failOnDuplicate = true))
+    // a position an int cannot key refuses
+    val far = intercept[Exception](SnapshotTable.stageVectors(spark, dir, m,
+      Seq((file, 1L << 31)).toDF("file", "pos")))
+    assert(Iterator.iterate[Throwable](far)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("2^31")), far)
     // nothing was published by the refusals
     assert(SnapshotTable.latestVersion(spark, dir).contains(v))
     assert(SnapshotTable.scan(spark, dir).count() == 90)
