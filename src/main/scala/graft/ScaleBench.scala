@@ -233,7 +233,9 @@ object ScaleBench {
     * range-partitioned files), one predicate matching ~0.01% of rows
     * spread over EVERY file:
     *   - copy-on-write [[graft.sources.SnapshotTable.delete]] must
-    *     rewrite all 16 files — bytes written ≈ the whole table;
+    *     rewrite all 16 files — bytes written ≈ the whole table, and
+    *     `cow.files_rewritten` counts the files it replaced (its
+    *     output may pack them into fewer);
     *   - [[graft.sources.SnapshotTable.deleteVectors]] writes one DV
     *     file of per-file bitmaps — bytes written ≈ KBs — and leaves
     *     every data file untouched.
@@ -287,9 +289,10 @@ object ScaleBench {
     val cowSec = timeSec(SnapshotTable.delete(spark, cowDir, pred, Seq("id")))
     val vCow = SnapshotTable.latestVersion(spark, cowDir).get
     val cowBytes = newBytes(cowDir, vCow - 1, vCow)
-    val cowRewrites = SnapshotTable.readManifest(spark, cowDir, vCow).files
+    // the files the rewrite REPLACED (not the ones it wrote)
+    val cowRewrites = SnapshotTable.readManifest(spark, cowDir, vCow - 1).files
       .map(_.path).toSet
-      .diff(SnapshotTable.readManifest(spark, cowDir, vCow - 1).files.map(_.path).toSet)
+      .diff(SnapshotTable.readManifest(spark, cowDir, vCow).files.map(_.path).toSet)
       .size
 
     val dvDir = build("dv")

@@ -21,7 +21,7 @@ import graft.sources.connector.SnapshotV2Table
   * sidecar commit, zero data files rewritten — so instead of adopting
   * the heavyweight protocol this post-hoc resolution rule translates
   * the logical command onto the existing merge-on-read ops
-  * ([[SnapshotTable.updateVectors]] / [[SnapshotTable.mergeVectors]]),
+  * ([[SnapshotTable.updateVectors]] / [[SnapshotTable.mergeClauses]]),
   * the same route Delta takes with its PreprocessTableUpdate /
   * PreprocessTableMerge analyzer rules. The rule fires after
   * resolution and before CheckAnalysis (which would otherwise reject
@@ -54,14 +54,13 @@ import graft.sources.connector.SnapshotV2Table
   *    target columns only). `WITH SCHEMA EVOLUTION` (Delta's
   *    autoMerge shape) widens the table with the source columns the
   *    clauses actually assign — untouched rows read them null, the
-  *    commit unions the schema. The canonical whole-row upsert
-  *    (`UPDATE SET * … INSERT *`, unconditional) keeps its dedicated
-  *    fast path ([[SnapshotTable.mergeVectors]]: the source IS the
-  *    post-image, no outer join); every other shape lowers onto
+  *    commit unions the schema. Every shape, the whole-row upsert
+  *    (`UPDATE SET * … INSERT *`) included, lowers onto
   *    [[SnapshotTable.mergeClauses]] (one stats-pruned outer join →
-  *    O(affected)-row effect frame → one dv commit). Still outside
-  *    the surface, loudly: non-equi ON conditions, subqueries,
-  *    nondeterminism.
+  *    O(affected)-row effect frame → one dv commit), so two unmatched
+  *    source rows sharing a key each insert, in every shape. Still
+  *    outside the surface, loudly: non-equi ON conditions,
+  *    subqueries, nondeterminism.
   *
   * Reference behavior this extends: the reference's loader only ever
   * truncate-and-loads (etl/loader.py); row-level SQL DML is part of
@@ -85,19 +84,7 @@ case class SnapshotRowLevelSql(session: SparkSession)
           if m.targetTable.resolved && m.sourceTable.resolved =>
         snapshotDir(m.targetTable) match {
           case None => m
-          case Some(dir) =>
-            // canonical whole-row upsert keeps its dedicated physical
-            // path; any other supported shape — including WITH SCHEMA
-            // EVOLUTION — lowers onto the general clause merge (which
-            // throws its own loud errors for the genuinely
-            // inexpressible remainder)
-            if (m.withSchemaEvolution) translateMergeGeneral(dir, m)
-            else
-              try translateMerge(dir, m)
-              catch {
-                case _: UnsupportedOperationException =>
-                  translateMergeGeneral(dir, m)
-              }
+          case Some(dir) => translateMergeGeneral(dir, m)
         }
     }
 
@@ -150,125 +137,8 @@ case class SnapshotRowLevelSql(session: SparkSession)
     requireTranslatable(bound, where)
   }
 
-  private def translateMerge(dir: String, m: MergeIntoTable): LogicalPlan = {
-    def unsupported(what: String): Nothing =
-      throw new UnsupportedOperationException(
-        s"MERGE INTO snapshot table: $what is outside the deletion-vector " +
-          "upsert shape (WHEN MATCHED THEN UPDATE SET * " +
-          "WHEN NOT MATCHED THEN INSERT *)")
-    if (m.withSchemaEvolution) unsupported("WITH SCHEMA EVOLUTION")
-    if (m.notMatchedBySourceActions.nonEmpty)
-      unsupported("WHEN NOT MATCHED BY SOURCE")
-    val target = m.targetTable
-    val source = m.sourceTable
-    val both = Seq(target, source)
-    val targetCols: Seq[Attribute] = {
-      def out(p: LogicalPlan): Seq[Attribute] = p match {
-        case SubqueryAlias(_, c) => out(c)
-        case other => other.output
-      }
-      out(target)
-    }
-
-    /** `SET *` / `INSERT *`: target column ← same-named source column. */
-    def starAssignments(what: String): Seq[(String, Expression)] = {
-      val resolver = session.sessionState.conf.resolver
-      targetCols.map { c =>
-        val hit = source.output.filter(a => resolver(a.name, c.name))
-        if (hit.length != 1)
-          unsupported(s"$what * with no unambiguous source column " +
-            s"named ${c.name}")
-        c.name -> hit.head
-      }
-    }
-    def explicitAssignments(as: Seq[Assignment],
-                            what: String): Seq[(String, Expression)] =
-      as.map { a =>
-        val name = bind(a.key, Seq(target), s"$what assignment key") match {
-          case ar: AttributeReference => ar.name
-          case other => unsupported(
-            s"assignment to a non-column (${other.sql})")
-        }
-        name -> bind(a.value, both, s"$what assignment to $name")
-      }
-
-    val updAssigns = m.matchedActions match {
-      case Seq(UpdateStarAction(None)) => starAssignments("UPDATE SET")
-      case Seq(UpdateStarAction(Some(_))) =>
-        unsupported("a conditional WHEN MATCHED clause")
-      case Seq(UpdateAction(None, as, _)) => explicitAssignments(as, "UPDATE")
-      case Seq(UpdateAction(Some(_), _, _)) =>
-        unsupported("a conditional WHEN MATCHED clause")
-      case other =>
-        unsupported(s"matched actions ${other.map(_.getClass.getSimpleName)}")
-    }
-    val insAssigns = m.notMatchedActions match {
-      case Seq(InsertStarAction(None)) => starAssignments("INSERT")
-      case Seq(InsertStarAction(Some(_))) =>
-        unsupported("a conditional WHEN NOT MATCHED clause")
-      case Seq(InsertAction(None, as)) => explicitAssignments(as, "INSERT")
-      case Seq(InsertAction(Some(_), _)) =>
-        unsupported("a conditional WHEN NOT MATCHED clause")
-      case other =>
-        unsupported(s"not-matched actions ${other.map(_.getClass.getSimpleName)}")
-    }
-    def byName(named: Seq[(String, Expression)],
-               what: String): Map[String, Expression] = {
-      val map = named.toMap
-      val missing = targetCols.map(_.name).filterNot(map.contains)
-      if (missing.nonEmpty)
-        unsupported(s"$what assigning only a subset of columns " +
-          s"(missing ${missing.mkString(", ")})")
-      map
-    }
-    val ins = byName(insAssigns, "INSERT")
-    val upd = byName(updAssigns, "UPDATE")
-    targetCols.foreach { c =>
-      if (!upd(c.name).semanticEquals(ins(c.name)))
-        unsupported(s"UPDATE and INSERT images differing on ${c.name} " +
-          "(deletion-vector merge replaces whole rows)")
-    }
-    val sourceRefs = source.outputSet
-    ins.valuesIterator.foreach { e =>
-      if (!e.references.subsetOf(sourceRefs))
-        unsupported(s"an insert value referencing target columns (${e.sql})")
-    }
-    val targetRefs = target.outputSet
-    val (keyCol, srcKey) =
-      bind(m.mergeCondition, both, "ON condition") match {
-        case EqualTo(l: AttributeReference, r)
-            if targetRefs.contains(l) && r.references.subsetOf(sourceRefs) =>
-          (l.name, r)
-        case EqualTo(l, r: AttributeReference)
-            if targetRefs.contains(r) && l.references.subsetOf(sourceRefs) =>
-          (r.name, l)
-        case other =>
-          unsupported(s"merge condition ${other.sql} (need target.key = " +
-            "<source expression>)")
-      }
-    if (!srcKey.semanticEquals(ins(keyCol)))
-      unsupported(s"merge key $keyCol whose inserted value differs from " +
-        "the ON condition's source side (matching would diverge from " +
-        "insertion)")
-    // table-schema order; value types must match the column, modulo a
-    // lossless upcast (lossy casts must be written explicitly — the
-    // same type-exactness the positional INSERT path pins)
-    val columns = targetCols.map { c =>
-      val e = ins(c.name)
-      val v =
-        if (e.dataType == c.dataType) e
-        else if (Cast.canUpCast(e.dataType, c.dataType)) Cast(e, c.dataType)
-        else unsupported(s"assigning ${e.dataType.simpleString} to " +
-          s"${c.name}: ${c.dataType.simpleString} (write the cast " +
-          "explicitly)")
-      c.name -> v
-    }
-    MergeSnapshotCommand(dir, source, columns, keyCol)
-  }
-
-  /** The general clause surface: lowers onto
-    * [[SnapshotTable.mergeClauses]]'s outer-join + effect-frame dv
-    * path. Names bind here exactly as in the canonical translator
+  /** Every MERGE lowers onto [[SnapshotTable.mergeClauses]]'s
+    * outer-join + effect-frame dv path. Names bind through [[bind]]
     * (ACCEPT_ANY_SCHEMA leaves the statement unresolved); bound
     * target references rewrite to their table column names and bound
     * source references to positional `__merge_src_<i>` aliases — the
@@ -320,11 +190,11 @@ case class SnapshotRowLevelSql(session: SparkSession)
             case None => UnresolvedAttribute.quoted(a.name)
           }
       })
-    /** Lossless-upcast-only typing, the same gate as the canonical
-      * path (the physical layer casts to the column type regardless —
-      * this check is what makes a LOSSY implicit cast loud). An
-      * evolution column's type IS the source's, recorded on first
-      * assignment. */
+    /** Lossless-upcast-only typing, the gate the positional INSERT
+      * path pins too (the physical layer casts to the column type
+      * regardless — this check is what makes a LOSSY implicit cast
+      * loud). An evolution column's type IS the source's, recorded on
+      * first assignment. */
     def typed(e: Expression, colName: String, what: String): Expression =
       targetByName.get(colName) match {
         case Some(c) =>
@@ -479,29 +349,6 @@ case class UpdateSnapshotCommand(dir: String,
       assignments.map { case (n, e) =>
         n -> Bridge.column(unresolve(e))
       })
-    Seq.empty
-  }
-}
-
-/** Whole-row upsert `MERGE INTO` → [[SnapshotTable.mergeVectors]]:
-  * matched target positions join the deletion vector, every source row
-  * lands in fresh files — O(|source| + matched) bytes, zero data files
-  * rewritten; the 100 TB trickle-upsert cost class. */
-case class MergeSnapshotCommand(dir: String, source: LogicalPlan,
-                                columns: Seq[(String, Expression)],
-                                keyCol: String)
-  extends LeafRunnableCommand {
-
-  override def innerChildren: Seq[LogicalPlan] = Seq(source)
-
-  override def run(spark: SparkSession): Seq[Row] = {
-    // the column expressions were bound against `source` itself, so
-    // wrapping that plan keeps every reference valid — no re-resolution
-    val src = Bridge.ofRows(spark, source)
-    val updates = src.select(columns.map { case (n, e) =>
-      Bridge.column(e).as(n)
-    }: _*)
-    SnapshotTable.mergeVectors(spark, dir, updates, keyCol)
     Seq.empty
   }
 }

@@ -1366,8 +1366,8 @@ object ParityQueries {
 
     // SQL row-level DML over the catalog: UPDATE lands as a deletion
     // vector + fresh post-image files (updateVectors), MERGE INTO as
-    // the dv upsert (mergeVectors) — both one-commit, zero data files
-    // rewritten, via the post-hoc translation rule in SnapshotDml
+    // the clause merge (mergeClauses) — both one-commit, zero data
+    // files rewritten, via the post-hoc translation rule in SnapshotDml
     // (Spark itself would reject both statements for a table without
     // SupportsRowLevelOperations). The oracle replays the image
     // algebra: update rewrites matched rows in place; merge replaces

@@ -838,10 +838,11 @@ object SnapshotTable {
     * [[CommitConflictException]]; returns the committed version.
     * Every entry records a schema: a commit with none to record, or
     * whose union with the previous one conflicts, refuses.
-    * `staged`: the caller staged `added` for this commit alone, so a
-    * refusal raised before the publish attempt deletes them (no
-    * version references them); nothing is deleted once a publish may
-    * have won. */
+    * `owned`: the paths (relative to `dir`) this txn alone wrote for
+    * this commit — its staged data files, its DV file — so a refusal
+    * raised before the publish attempt deletes them (no version
+    * references them); nothing is deleted once a publish may have
+    * won, and files a caller staged and owns are never listed. */
   private def commit(spark: SparkSession, dir: String, op: String,
                      added: Seq[FileEntry],
                      removed: Map[String, Option[String]] = Map.empty,
@@ -850,7 +851,7 @@ object SnapshotTable {
                      replaceSchema: Boolean = false,
                      keepMapping: Boolean = false,
                      expectLatest: Option[Long] = None,
-                     staged: Boolean = false): Long = {
+                     owned: Seq[String] = Nil): Long = {
     val ld = logDir(dir)
     val f = fs(spark, ld)
     f.mkdirs(ld)
@@ -943,8 +944,8 @@ object SnapshotTable {
       }
       -1L // unreachable
     } catch {
-      case e: Throwable if staged && !publishing =>
-        added.foreach(fe => f.delete(new Path(dir, fe.path), false))
+      case e: Throwable if !publishing =>
+        owned.foreach(p => f.delete(new Path(dir, p), false))
         throw e
     }
   }
@@ -1301,7 +1302,7 @@ object SnapshotTable {
       applyMapping = carry, bucketize = bucketLayout(spark, dir))
     enforceCheckConstraints(spark, dir, fresh, known)
     commit(spark, dir, opTag.getOrElse(mode), fresh, carry = carry,
-      schemaJson = Some(df.schema.json), staged = true)
+      schemaJson = Some(df.schema.json), owned = fresh.map(_.path))
   }
 
   /** CHECK-constraint gate over STAGED (not yet committed) files —
@@ -1390,7 +1391,7 @@ object SnapshotTable {
       }
     }
     commit(spark, dir, opTag.getOrElse(s"gated-$mode"), fresh, carry = carry,
-      schemaJson = Some(df.schema.json), staged = true)
+      schemaJson = Some(df.schema.json), owned = fresh.map(_.path))
   }
 
   /** The file NAME a deletion vector keys a row by (staged names are
@@ -1694,7 +1695,7 @@ object SnapshotTable {
     commit(spark, dir, opTag.getOrElse("merge"), fresh,
       removed = readSetOf(rewrite), carry = true,
       // evolution: union the new columns into the recorded schema
-      schemaJson = Some(merged.schema.json), staged = true)
+      schemaJson = Some(merged.schema.json), owned = fresh.map(_.path))
   }
 
   /** DELETE WHERE: copy-on-write at FILE granularity. Touch detection
@@ -1737,7 +1738,7 @@ object SnapshotTable {
     val fresh = stageFiles(spark, kept, dir, statsCols,
       bucketize = bucketLayout(spark, dir))
     commit(spark, dir, "delete", fresh,
-      removed = readSetOf(rewrite), carry = true, staged = true)
+      removed = readSetOf(rewrite), carry = true, owned = fresh.map(_.path))
   }
 
   /** Publish `df` as ONE parquet file at `dir/relPath` (temp dir +
@@ -1840,8 +1841,101 @@ object SnapshotTable {
     * which purges as it packs) to fold the vectors into the files. */
   def deleteVectors(spark: SparkSession, dir: String,
                     predicate: org.apache.spark.sql.Column): Long =
-    retryOnConflict(s"dv-delete from $dir") {
-      deleteVectorsOnce(spark, dir, predicate)
+    deleteVectorsWith(spark, dir, predicate)
+
+  /** What one merge-on-read DML transaction does to the snapshot
+    * [[dvTransaction]] resolved:
+    *  - `positions`: the (file, pos) rows that join their files'
+    *    vectors (None: no file needs a position scan);
+    *  - `postImage`: rows staged as fresh files — only when some
+    *    position matched, unless `inserts` says they may replace
+    *    nothing (MERGE's NOT MATCHED rows);
+    *  - `callerFiles`: files the caller staged and owns, committed
+    *    with the vectors and never deleted here;
+    *  - `dropped`: files removed whole, their stats proving every row
+    *    deleted;
+    *  - `alwaysCommit`: commit even when no vector, file or drop
+    *    changes (a schema-widening MERGE, a streaming epoch's tag);
+    *  - `prunedOp`: the op name when no vector was written;
+    *  - `cached`: a frame the plan persisted, released after the
+    *    commit. */
+  private final case class DvTxn(
+      op: String,
+      positions: Option[DataFrame],
+      failOnDuplicate: Boolean = false,
+      postImage: Option[DataFrame] = None,
+      inserts: Boolean = false,
+      statsCols: Seq[String] = Nil,
+      callerFiles: Seq[FileEntry] = Nil,
+      dropped: Seq[FileEntry] = Nil,
+      schemaJson: Option[String] = None,
+      alwaysCommit: Boolean = false,
+      prunedOp: Option[String] = None,
+      cached: Option[DataFrame] = None)
+
+  /** The one merge-on-read DML transaction: delete, update, MERGE and
+    * the streaming upsert are its instances. Inside [[retryOnConflict]]
+    * it resolves the newest version, its manifest and its recorded
+    * schema once and hands them to `plan`, then
+    *  1. [[stageVectors]] writes one DV file for the plan's positions;
+    *  2. the post-image stages through [[stageFiles]] under the
+    *     declared [[bucketLayout]] and passes the table's CHECK
+    *     constraints ([[enforceCheckConstraints]]);
+    *  3. one [[commit]] publishes the re-pointed entries, the fresh
+    *     files and the caller's files, with the touched files (and
+    *     the dropped ones) as its read set.
+    * A transaction that changes nothing returns the resolved version
+    * and commits nothing; with no post-image it reads neither the
+    * layout nor the props file.
+    *
+    * Clean-up has one rule: the DV file and the fresh files — the
+    * paths this transaction alone wrote — are deleted exactly when
+    * the failure comes before a publish attempt. Once a publish may
+    * have won (a throw after the log entry was linked), nothing is
+    * deleted, since the version may reference them; [[vacuum]]
+    * reclaims any that no version ended up referencing. The caller's
+    * files are never deleted. */
+  private def dvTransaction(spark: SparkSession, dir: String, what: String)
+                           (plan: (Manifest, org.apache.spark.sql.types.StructType) => DvTxn)
+      : Long =
+    retryOnConflict(s"dv $what $dir") {
+      val v = latestVersion(spark, dir).getOrElse(
+        throw new IllegalStateException(s"cannot $what empty table $dir"))
+      val m = readManifest(spark, dir, v)
+      val known = tableSchema(spark, dir, v)
+      val txn = plan(m, known)
+      try {
+        var owned = Seq.empty[String]
+        val (vectors, fresh) =
+          try {
+            val vectors = txn.positions.flatMap(
+              stageVectors(spark, dir, m, _, txn.failOnDuplicate))
+            owned ++= vectors.map(_._1)
+            val fresh = txn.postImage.filter(_ => vectors.isDefined || txn.inserts)
+              .fold(Seq.empty[FileEntry])(stageFiles(spark, _, dir, txn.statsCols,
+                bucketize = bucketLayout(spark, dir)))
+            owned ++= fresh.map(_.path)
+            // post-images are new content: constraints gate them like an INSERT
+            enforceCheckConstraints(spark, dir, fresh, known)
+            (vectors, fresh)
+          } catch {
+            case t: Throwable =>
+              val f = fs(spark, new Path(dir))
+              owned.foreach(p => f.delete(new Path(dir, p), false))
+              throw t
+          }
+        val entries = vectors.fold(Seq.empty[FileEntry])(_._2)
+        if (entries.isEmpty && fresh.isEmpty && txn.callerFiles.isEmpty &&
+          txn.dropped.isEmpty && !txn.alwaysCommit) v
+        else {
+          val touched = entries.map(_.path).toSet
+          commit(spark, dir,
+            if (vectors.isEmpty) txn.prunedOp.getOrElse(txn.op) else txn.op,
+            entries ++ fresh ++ txn.callerFiles,
+            removed = readSetOf(m.files.filter(fe => touched(fe.path)) ++ txn.dropped),
+            carry = true, schemaJson = txn.schemaJson, owned = owned)
+        }
+      } finally txn.cached.foreach(_.unpersist())
     }
 
   /** Stage the deletion vectors of the `matched` (file, pos) position
@@ -2316,61 +2410,39 @@ object SnapshotTable {
       case None => // first commit: nothing to replace
         commitAdded(spark, dir, "overwrite", added, carry = false,
           schemaJson = Some(schemaJson))
-      case Some(_) => retryOnConflict(s"replace-where on $dir") {
-        deleteVectorsOnce(spark, dir, predicate, alsoAdd = added,
+      case Some(_) =>
+        deleteVectorsWith(spark, dir, predicate, alsoAdd = added,
           opName = "replace-where", schemaJson = Some(schemaJson))
-      }
     }
   }
 
-  private def deleteVectorsOnce(spark: SparkSession, dir: String,
+  /** [[deleteVectors]], committing the caller's `alsoAdd` files in the
+    * same version (replace-where's inserted batch). */
+  private def deleteVectorsWith(spark: SparkSession, dir: String,
                                 predicate: org.apache.spark.sql.Column,
                                 alsoAdd: Seq[FileEntry] = Nil,
                                 opName: String = "delete",
-                                schemaJson: Option[String] = None): Long = {
-    val v = latestVersion(spark, dir).getOrElse(
-      throw new IllegalStateException(s"cannot delete from empty table $dir"))
-    val m = readManifest(spark, dir, v)
-    val known = tableSchema(spark, dir, v)
-    val expr = org.apache.spark.sql.graftbridge.Bridge.catalystExpression(predicate)
-    def allRows(e: org.apache.spark.sql.catalyst.expressions.Expression,
-                fe: FileEntry): Boolean = provesAllRows(e, fe, known)
-    def noRows(e: org.apache.spark.sql.catalyst.expressions.Expression,
-               fe: FileEntry): Boolean = refutesAllRows(e, fe, known)
-    // METADATA-ONLY fast path: a file whose stats PROVE every row
-    // matches is removed from the manifest whole — no scan, no
-    // sidecar, no bytes. A retention delete (`WHERE day < cutoff`) on
-    // a day-clustered 100 TB table drops almost every matched file
-    // this way and dv-scans only the boundary files; the change feed
-    // still replays the removed files' live rows as deletes (removed
-    // file → delete rows is already its contract). Files whose stats
-    // REFUTE the predicate skip the scan entirely.
-    val (dropped, rest) = m.files.partition(fe => allRows(expr, fe))
-    val candidates = rest.filterNot(fe => noRows(expr, fe))
-    def pruneOnly(): Long =
-      if (dropped.isEmpty && alsoAdd.isEmpty) v
-      else commit(spark, dir, s"$opName-prune", alsoAdd,
-        removed = readSetOf(dropped), carry = true, schemaJson = schemaJson)
-    if (candidates.isEmpty) return pruneOnly()
-    val matched = readFiles(spark, dir, candidates, v, keepPos = true,
-      knownSchema = known)
-      .filter(predicate)
-      .select(col("__graft_file").as("file"), col("__graft_pos").as("pos"))
-    stageVectors(spark, dir, m, matched) match {
-      case None => pruneOnly()
-      case Some((name, entries)) =>
-        val newPaths = entries.map(_.path).toSet
-        try commit(spark, dir, s"$opName-dv", entries ++ alsoAdd,
-          removed = readSetOf(
-            rest.filter(fe => newPaths.contains(fe.path)) ++ dropped),
-          carry = true, schemaJson = schemaJson)
-        catch {
-          case e: CommitConflictException =>
-            fs(spark, new Path(dir)).delete(new Path(dir, name), false)
-            throw e
-        }
+                                schemaJson: Option[String] = None): Long =
+    dvTransaction(spark, dir, "delete from") { (m, known) =>
+      val expr = org.apache.spark.sql.graftbridge.Bridge.catalystExpression(predicate)
+      // METADATA-ONLY fast path: a file whose stats PROVE every row
+      // matches is removed from the manifest whole — no scan, no
+      // vector, no bytes. A retention delete (`WHERE day < cutoff`) on
+      // a day-clustered 100 TB table drops almost every matched file
+      // this way and dv-scans only the boundary files; the change feed
+      // still replays the removed files' live rows as deletes (removed
+      // file → delete rows is already its contract). Files whose stats
+      // REFUTE the predicate skip the scan entirely.
+      val (dropped, rest) = m.files.partition(provesAllRows(expr, _, known))
+      val candidates = rest.filterNot(refutesAllRows(expr, _, known))
+      DvTxn(s"$opName-dv",
+        positions = Some(candidates).filter(_.nonEmpty).map(cs =>
+          readFiles(spark, dir, cs, m.version, keepPos = true, knownSchema = known)
+            .filter(predicate)
+            .select(col("__graft_file").as("file"), col("__graft_pos").as("pos"))),
+        callerFiles = alsoAdd, dropped = dropped, schemaJson = schemaJson,
+        prunedOp = Some(s"$opName-prune"))
     }
-  }
 
   /** EQUALITY DELETE: commit the KEY VALUES, not positions — the
     * Iceberg-v2 equality-delete cost class for high-churn CDC ingest
@@ -2785,14 +2857,9 @@ object SnapshotTable {
                     predicate: org.apache.spark.sql.Column,
                     assignments: Seq[(String, org.apache.spark.sql.Column)],
                     statsCols: Seq[String] = Nil): Long =
-    retryOnConflict(s"dv-update of $dir") {
-      val v = latestVersion(spark, dir).getOrElse(
-        throw new IllegalStateException(s"cannot update empty table $dir"))
-      val m = readManifest(spark, dir, v)
-      val known = tableSchema(spark, dir, v)
-      val cols = scan(spark, dir, Some(v)).columns.toSeq
-      val assign = assignments.toMap
-      val unknown = assign.keySet -- cols.toSet
+    dvTransaction(spark, dir, "update") { (m, known) =>
+      val cols = known.fieldNames.toSeq
+      val unknown = assignments.map(_._1).toSet -- cols.toSet
       require(unknown.isEmpty, s"assignments for missing columns $unknown")
       // stats-refuted files skip BOTH scans: an UPDATE WHERE day =
       // yesterday on a day-clustered table reads only the files whose
@@ -2802,9 +2869,9 @@ object SnapshotTable {
       val candidates = m.files.filterNot(refutesAllRows(uexpr, _, known))
       val matched0 =
         if (candidates.isEmpty)
-          readFiles(spark, dir, m.files, v, keepPos = true, knownSchema = known)
+          readFiles(spark, dir, m.files, m.version, keepPos = true, knownSchema = known)
             .limit(0)
-        else readFiles(spark, dir, candidates, v, keepPos = true,
+        else readFiles(spark, dir, candidates, m.version, keepPos = true,
           knownSchema = known)
       val values = upcastAssignments(known, matched0, assignments).toMap
       def postImages(rows: DataFrame): DataFrame =
@@ -2812,53 +2879,17 @@ object SnapshotTable {
       // an assignment whose type conflicts with its column refuses
       // here, before anything is staged
       unionSchemaJson(known.json, postImages(matched0).schema.json)
-      stageVectors(spark, dir, m, matched0.filter(predicate)
-        .select(col("__graft_file").as("file"),
-          col("__graft_pos").as("pos"))) match {
-        case None => v
-        case Some((name, entries)) =>
-          val f = fs(spark, new Path(dir))
-          try {
-            // second predicate-pruned pass stages the post-images
-            val updated = postImages(readFiles(spark, dir,
-              if (candidates.isEmpty) m.files else candidates, v,
-              knownSchema = known)
-              .filter(predicate))
-            val fresh = stageFiles(spark, updated, dir, statsCols,
-              bucketize = bucketLayout(spark, dir))
-            // UPDATE post-images are new content: the table's CHECK
-            // constraints gate them exactly like an INSERT
-            enforceCheckConstraints(spark, dir, fresh, known)
-            val newPaths = entries.map(_.path).toSet
-            try commit(spark, dir, "update-dv", entries ++ fresh,
-              removed = readSetOf(m.files.filter(fe => newPaths.contains(fe.path))),
-              carry = true, schemaJson = Some(updated.schema.json))
-            catch {
-              // a conflict or a schema refusal: nothing was published
-              case e @ (_: CommitConflictException | _: IllegalArgumentException) =>
-                fresh.foreach(fe => f.delete(new Path(dir, fe.path), false))
-                throw e
-            }
-          } catch {
-            case t: Throwable =>
-              f.delete(new Path(dir, name), false)
-              throw t
-          }
-      }
+      // a second predicate-pruned pass stages the post-images
+      val updated = postImages(readFiles(spark, dir,
+        if (candidates.isEmpty) m.files else candidates, m.version,
+        knownSchema = known).filter(predicate))
+      DvTxn("update-dv",
+        positions = Some(matched0.filter(predicate)
+          .select(col("__graft_file").as("file"), col("__graft_pos").as("pos"))),
+        postImage = Some(updated), statsCols = statsCols,
+        schemaJson = Some(updated.schema.json))
     }
 
-  /** MERGE (upsert by key) via DELETION VECTORS — the merge-on-read
-    * form of [[merge]], completing the DML triad next to
-    * [[deleteVectors]]/[[updateVectors]]: matched target rows'
-    * positions join their files' vectors and EVERY update row
-    * (replacements and brand-new keys alike) lands in freshly
-    * appended files — one commit, zero data files rewritten.
-    * Whole-row-replace semantics identical to [[merge]] without
-    * schema evolution. Cost class: O(|updates| + matched positions)
-    * bytes, vs the COW merge's rewrite of every file whose key range
-    * an update touches — the shape of trickle upserts against a
-    * 100 TB table. Read amplification accrues like any vector;
-    * [[purgeDeletes]]/[[compact]] are the maintenance valve. */
   /** Files whose rows could match any of `keys` on `keyCol`, by the
     * manifest's per-file (min,max): the matched-position scan of a dv
     * merge reads ONLY these. Files without stats for `keyCol` are
@@ -2903,100 +2934,68 @@ object SnapshotTable {
     }
   }
 
-  /** (file, pos) of the live rows of `m` whose `keyCol` is in `keys`,
-    * reading only the stats-candidate files (an empty candidate set —
-    * every key outside every file's range — short-circuits to an
-    * empty frame: nothing to mask). `known` (the version's recorded
-    * schema) routes the masked read through column mapping and
-    * resolves the physical stats key. */
-  private def matchedPositions(spark: SparkSession, dir: String, m: Manifest,
-                               keyCol: String, keys: DataFrame,
-                               known: org.apache.spark.sql.types.StructType)
-      : DataFrame = {
-    import spark.implicits._
-    val cand = candidateFiles(spark, m, keyCol, keys,
-      statsKey = Some(physicalFor(known, keyCol)))
-    if (cand.isEmpty) Seq.empty[(String, Long)].toDF("file", "pos")
-    else readFiles(spark, dir, cand, m.version, keepPos = true,
-      knownSchema = known)
-      .join(keys, Seq(keyCol), "left_semi")
-      .select(col("__graft_file").as("file"), col("__graft_pos").as("pos"))
-  }
-
+  /** MERGE (upsert by key) via DELETION VECTORS — the merge-on-read
+    * form of [[merge]], completing the DML triad next to
+    * [[deleteVectors]]/[[updateVectors]]: matched target rows'
+    * positions join their files' vectors and EVERY update row
+    * (replacements and brand-new keys alike) lands in freshly
+    * appended files — one commit, zero data files rewritten.
+    * Whole-row-replace semantics identical to [[merge]] without
+    * schema evolution. Cost class: O(|updates| + matched positions)
+    * bytes, vs the COW merge's rewrite of every file whose key range
+    * an update touches — the shape of trickle upserts against a
+    * 100 TB table. Read amplification accrues like any vector;
+    * [[purgeDeletes]]/[[compact]] are the maintenance valve.
+    *
+    * The whole-row instance of [[mergeClauses]]: `WHEN MATCHED UPDATE
+    * SET * / WHEN NOT MATCHED INSERT *` over `updates` renamed out of
+    * the table's namespace. Three refusals run first, before anything
+    * is staged: `updates` must carry exactly the table's columns, no
+    * two of its rows may share a key, and no column's type may
+    * conflict with the table's (lossless widenings cast). */
   def mergeVectors(spark: SparkSession, dir: String, updates: DataFrame,
-                   keyCol: String, statsCols: Seq[String] = Nil): Long =
-    retryOnConflict(s"dv-merge into $dir") {
-      val v = latestVersion(spark, dir).getOrElse(
-        throw new IllegalStateException(s"cannot merge into empty table $dir"))
-      val m = readManifest(spark, dir, v)
-      val cols = scan(spark, dir, Some(v)).columns.toSeq
-      require(updates.columns.toSeq == cols,
-        s"updates schema ${updates.columns.toSeq} != table schema $cols")
-      require(updates.columns.contains(keyCol), s"updates lack merge key $keyCol")
-      // standard MERGE cardinality rule: a matched target row must have
-      // exactly one source image. Two source rows sharing a key would
-      // dv-delete the target once and insert BOTH images — silent
-      // duplicate-key rows. Delta and ANSI MERGE raise here; so do we.
-      //
-      // Deliberately NOT fused into the vector build's duplicate
-      // detection (round-19, closing the round-18 question): this
-      // upsert's contract is source-key uniqueness, and the write-job
-      // detector only sees POSITIONS — a duplicate source key that
-      // matches no target row never reaches it, so fusing would let
-      // that duplicate silently insert BOTH images (duplicate-key rows
-      // that double-match the NEXT merge). One O(batch) aggregate over
-      // the source epoch is the price of raising on every duplicate,
-      // matched or not. (mergeClauses differs by design: its insert
-      // clauses legally fire per duplicate source row, so only matched
-      // duplicates are violations there — exactly what its fused
-      // position-adjacency check sees.)
-      val Array(total, distinct) = updates
-        .agg(count(col(keyCol)), count_distinct(col(keyCol)))
-        .head().toSeq.map(_.asInstanceOf[Long]).toArray
-      if (total != distinct) throw new IllegalArgumentException(
-        s"MERGE cardinality violation: ${total - distinct} duplicate " +
-          s"source row(s) share a $keyCol value; a matched target row " +
-          "must have exactly one source image — deduplicate the source " +
-          "(e.g. keep-latest by a version column) before merging")
-      val known = tableSchema(spark, dir, v)
-      val images = updates.select(upcastAssignments(known, updates,
-        cols.map(c => c -> col(c))).map { case (c, e) => e.as(c) }: _*)
-      // a source column whose type conflicts with the table's refuses
-      // here, before anything is staged
-      unionSchemaJson(known.json, images.schema.json)
-      val keys = updates.select(col(keyCol)).distinct()
-      val matched = matchedPositions(spark, dir, m, keyCol, keys, known)
-      val staged = stageVectors(spark, dir, m, matched)
-      val f = fs(spark, new Path(dir))
-      try {
-        val fresh = stageFiles(spark, images,
-          dir, statsCols, bucketize = bucketLayout(spark, dir))
-        // MERGE post-images are new content: constraints gate them
-        enforceCheckConstraints(spark, dir, fresh, known)
-        val schemaJson = Some(images.schema.json)
-        staged match {
-          case None => // pure insert: nothing matched, plain append
-            if (fresh.isEmpty) v
-            else commit(spark, dir, "merge-dv", fresh, carry = true,
-              schemaJson = schemaJson, staged = true)
-          case Some((name, entries)) =>
-            val newPaths = entries.map(_.path).toSet
-            try commit(spark, dir, "merge-dv", entries ++ fresh,
-              removed = readSetOf(m.files.filter(fe => newPaths.contains(fe.path))),
-              carry = true, schemaJson = schemaJson)
-            catch {
-              // a conflict or a schema refusal: nothing was published
-              case e @ (_: CommitConflictException | _: IllegalArgumentException) =>
-                fresh.foreach(fe => f.delete(new Path(dir, fe.path), false))
-                throw e
-            }
-        }
-      } catch {
-        case t: Throwable =>
-          staged.foreach { case (name, _) => f.delete(new Path(dir, name), false) }
-          throw t
-      }
-    }
+                   keyCol: String, statsCols: Seq[String] = Nil): Long = {
+    val v = latestVersion(spark, dir).getOrElse(
+      throw new IllegalStateException(s"cannot merge into empty table $dir"))
+    val known = tableSchema(spark, dir, v)
+    val cols = known.fieldNames.toSeq
+    require(updates.columns.toSeq == cols,
+      s"updates schema ${updates.columns.toSeq} != table schema $cols")
+    require(updates.columns.contains(keyCol), s"updates lack merge key $keyCol")
+    // standard MERGE cardinality rule: a matched target row must have
+    // exactly one source image. Two source rows sharing a key would
+    // dv-delete the target once and insert BOTH images — silent
+    // duplicate-key rows. Delta and ANSI MERGE raise here; so do we.
+    //
+    // Deliberately NOT left to the vector build's duplicate detection:
+    // this upsert's contract is source-key uniqueness, and the vector
+    // build only sees POSITIONS — a duplicate source key that matches
+    // no target row never reaches it, so it would insert BOTH images
+    // (duplicate-key rows that double-match the NEXT merge). One
+    // O(batch) aggregate over the source epoch is the price of raising
+    // on every duplicate, matched or not. (General clause MERGE
+    // differs by design: its insert clauses legally fire per duplicate
+    // source row, so only matched duplicates are violations there.)
+    val Array(total, distinct) = updates
+      .agg(count(col(keyCol)), count_distinct(col(keyCol)))
+      .head().toSeq.map(_.asInstanceOf[Long]).toArray
+    if (total != distinct) throw new IllegalArgumentException(
+      s"MERGE cardinality violation: ${total - distinct} duplicate " +
+        s"source row(s) share a $keyCol value; a matched target row " +
+        "must have exactly one source image — deduplicate the source " +
+        "(e.g. keep-latest by a version column) before merging")
+    val images = updates.select(upcastAssignments(known, updates,
+      cols.map(c => c -> col(c))).map { case (c, e) => e.as(c) }: _*)
+    // a source column whose type conflicts with the table's refuses
+    // here, before anything is staged
+    unionSchemaJson(known.json, images.schema.json)
+    val src = cols.indices.map(i => s"__merge_src_$i")
+    val all = cols.zip(src.map(col))
+    mergeClauses(spark, dir, images.toDF(src: _*), keyCol,
+      col(src(cols.indexOf(keyCol))),
+      matched = Seq(MergeWhenClause(None, MergeRowAction.Update(all))),
+      notMatched = Seq(MergeInsertClause(None, all)), statsCols = statsCols)
+  }
 
   /** What a matched (or not-matched-by-source) MERGE clause does to
     * the target row it selected. */
@@ -3021,8 +3020,8 @@ object SnapshotTable {
 
   /** The FULL MERGE clause surface over deletion vectors — multiple
     * conditional WHEN clauses, partial-row MATCHED updates, MATCHED
-    * DELETE, and NOT MATCHED BY SOURCE — generalizing the whole-row
-    * upsert of [[mergeVectors]]. Every touched target row's position
+    * DELETE, and NOT MATCHED BY SOURCE; [[mergeVectors]] is its
+    * whole-row upsert instance. Every touched target row's position
     * joins its file's vector; every surviving post-image
     * (updated rows + inserts) lands in freshly appended files — one
     * commit, zero data files rewritten, O(affected rows) bytes.
@@ -3051,8 +3050,9 @@ object SnapshotTable {
     * live row, so they read the full file list by nature. The join
     * output is projected to an O(affected)-row effect frame
     * (position, op kind, post-image) and persisted, so the join runs
-    * once; the corpus itself never shuffles when the source
-    * broadcasts (the common CDC shape). */
+    * once; without an insert clause the join is a left outer one, and
+    * the corpus never shuffles when the source broadcasts. One
+    * [[dvTransaction]] stages and commits the effect. */
   def mergeClauses(spark: SparkSession, dir: String, source: DataFrame,
                    keyCol: String,
                    sourceKey: org.apache.spark.sql.Column,
@@ -3062,15 +3062,12 @@ object SnapshotTable {
                    statsCols: Seq[String] = Nil,
                    extraColumns: Seq[org.apache.spark.sql.types.StructField] = Nil)
       : Long =
-    retryOnConflict(s"dv-merge-clauses into $dir") {
+    dvTransaction(spark, dir, "merge into") { (m, known) =>
       import org.apache.spark.sql.Column
       import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
       require(matched.nonEmpty || notMatched.nonEmpty ||
         notMatchedBySource.nonEmpty, "MERGE needs at least one clause")
-      val v = latestVersion(spark, dir).getOrElse(
-        throw new IllegalStateException(s"cannot merge into empty table $dir"))
-      val m = readManifest(spark, dir, v)
-      val known = tableSchema(spark, dir, v) // recorded (mapping-carrying)
+      val v = m.version
       val baseSchema = scan(spark, dir, Some(v)).schema
       // WITH SCHEMA EVOLUTION: `extraColumns` WIDEN the table — images
       // carry them, untouched rows read them as null (the same
@@ -3183,65 +3180,35 @@ object SnapshotTable {
         .select((Seq(col("__graft_file").as("__e_file"),
           col("__graft_pos").as("__e_pos"), col("__kind")) ++ images): _*)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val positions = effect.filter(col("__kind") < 3)
-          .select(col("__e_file").as("file"), col("__e_pos").as("pos"))
+      DvTxn("merge-dv",
+        positions = Some(effect.filter(col("__kind") < 3)
+          .select(col("__e_file").as("file"), col("__e_pos").as("pos"))),
         // Delta/ANSI cardinality: >1 source row modifying one target
         // row is ambiguous (which image wins?) — raise, don't guess.
-        // Detection rides the vector build: a position repeated in
-        // one task's partial bitmap, or shared by two tasks' partials
-        // of one file, is the violation. The scan masks dv-deleted
-        // rows, so fresh positions never meet prior ones.
-        val staged = stageVectors(spark, dir, m, positions,
-          failOnDuplicate = matched.nonEmpty)
-        val f = fs(spark, new Path(dir))
-        try {
-          val post = effect.filter(col("__kind") >= 2).select(cols.map(col): _*)
-          val fresh = stageFiles(spark, post, dir, statsCols,
-            bucketize = bucketLayout(spark, dir))
-          // clause-form MERGE post-images (updates + inserts) are new
-          // content: constraints gate them
-          enforceCheckConstraints(spark, dir, fresh, known)
-          // a widening merge records the UNION schema even when the
-          // effect set is empty-of-images (schema evolution is part of
-          // the statement's contract)
-          val schemaJson =
-            if (extraColumns.isEmpty) None else Some(logicalSchema.json)
-          staged match {
-            case None =>
-              if (fresh.isEmpty && extraColumns.isEmpty) v
-              else commit(spark, dir, "merge-dv", fresh, carry = true,
-                schemaJson = schemaJson)
-            case Some((name, entries)) =>
-              val newPaths = entries.map(_.path).toSet
-              try commit(spark, dir, "merge-dv", entries ++ fresh,
-                removed = readSetOf(
-                  m.files.filter(fe => newPaths.contains(fe.path))),
-                carry = true, schemaJson = schemaJson)
-              catch {
-                case e: CommitConflictException =>
-                  fresh.foreach(fe => f.delete(new Path(dir, fe.path), false))
-                  throw e
-              }
-          }
-        } catch {
-          case t: Throwable =>
-            staged.foreach { case (name, _) =>
-              f.delete(new Path(dir, name), false)
-            }
-            throw t
-        }
-      } finally effect.unpersist()
+        // Detection rides the vector build: a position repeated in one
+        // task's partial bitmap, or shared by two tasks' partials of
+        // one file, is the violation. The scan masks dv-deleted rows,
+        // so fresh positions never meet prior ones.
+        failOnDuplicate = matched.nonEmpty,
+        postImage = Some(effect.filter(col("__kind") >= 2).select(cols.map(col): _*)),
+        inserts = notMatched.nonEmpty, statsCols = statsCols,
+        // a widening merge records the UNION schema even when the
+        // effect set is empty-of-images (schema evolution is part of
+        // the statement's contract)
+        schemaJson = Some(logicalSchema.json).filter(_ => extraColumns.nonEmpty),
+        alwaysCommit = extraColumns.nonEmpty, cached = Some(effect))
     }
 
   /** [[mergeVectors]] for rows ALREADY staged as data files under the
     * table — the V2 streaming sink's upsert path: its tasks streamed
     * the epoch's rows into `staged` while computing stats/blooms, so
-    * the merge costs no second write job. Same dv algebra: matched
-    * target positions join their files' vectors, `staged` commits
-    * as the post-image, one version, zero data files rewritten. On an
-    * OCC conflict only the DV file is discarded — the staged files
-    * are the caller's (the sink deletes them via abort) and the retry
+    * the merge costs no second write job. Same dv algebra: the live
+    * rows of the stats-candidate files whose key a staged row carries
+    * join their files' vectors, `staged` commits as the post-image,
+    * one version, zero data files rewritten. Its post-image is already
+    * written, so it is a [[dvTransaction]] with `staged` as the
+    * caller's files: a failure discards only the DV file (the sink
+    * deletes the staged files via abort), and a conflict's retry
     * recomputes the vector against the new snapshot and recommits the
     * same files. An empty table commits `staged` as the first version
     * (pure insert). */
@@ -3249,39 +3216,21 @@ object SnapshotTable {
                                  staged: Seq[FileEntry], keyCol: String,
                                  opTag: String,
                                  schemaJson: Option[String]): Long =
-    retryOnConflict(s"staged dv-merge into $dir") {
-      latestVersion(spark, dir) match {
-        case None =>
-          commit(spark, dir, opTag, staged, carry = false,
-            schemaJson = schemaJson)
-        case Some(v) =>
-          val m = readManifest(spark, dir, v)
-          val known = tableSchema(spark, dir, v)
-          val cols = scan(spark, dir, Some(v)).columns.toSeq
-          require(cols.contains(keyCol),
-            s"table $dir lacks merge key $keyCol")
-          // staged files carry physical names on a mapped table — the
-          // knownSchema read aliases them back to logical
-          val keys = readPlain(spark, dir, staged, known)
-            .select(col(keyCol)).distinct()
-          val matched = matchedPositions(spark, dir, m, keyCol, keys, known)
-          stageVectors(spark, dir, m, matched) match {
-            case None => // pure insert epoch
-              commit(spark, dir, opTag, staged, carry = true,
-                schemaJson = schemaJson)
-            case Some((name, entries)) =>
-              val newPaths = entries.map(_.path).toSet
-              try commit(spark, dir, opTag, entries ++ staged,
-                removed = readSetOf(
-                  m.files.filter(fe => newPaths.contains(fe.path))),
-                carry = true, schemaJson = schemaJson)
-              catch {
-                case t: Throwable =>
-                  fs(spark, new Path(dir)).delete(new Path(dir, name), false)
-                  throw t
-              }
-          }
-      }
+    if (latestVersion(spark, dir).isEmpty)
+      commit(spark, dir, opTag, staged, schemaJson = schemaJson)
+    else dvTransaction(spark, dir, "merge into") { (m, known) =>
+      require(known.fieldNames.contains(keyCol), s"table $dir lacks merge key $keyCol")
+      // staged files carry physical names on a mapped table — the
+      // knownSchema read aliases them back to logical
+      val keys = readPlain(spark, dir, staged, known).select(col(keyCol)).distinct()
+      val candidates = candidateFiles(spark, m, keyCol, keys,
+        statsKey = Some(physicalFor(known, keyCol)))
+      DvTxn(opTag,
+        positions = Some(candidates).filter(_.nonEmpty).map(cs =>
+          readFiles(spark, dir, cs, m.version, keepPos = true, knownSchema = known)
+            .join(keys, Seq(keyCol), "left_semi")
+            .select(col("__graft_file").as("file"), col("__graft_pos").as("pos"))),
+        callerFiles = staged, schemaJson = schemaJson, alwaysCommit = true)
     }
 
   /** Fold every live deletion vector and pending equality delete into
@@ -3328,7 +3277,7 @@ object SnapshotTable {
               sortedBy = key.map(physicalFor(known, _))))
         }
         commit(spark, dir, "purge", fresh,
-          removed = readSetOf(dvd), carry = true, staged = true)
+          removed = readSetOf(dvd), carry = true, owned = fresh.map(_.path))
       }
     }
 
@@ -3401,7 +3350,8 @@ object SnapshotTable {
           val fresh = stageFiles(spark, df, dir, csv("statsCols"),
             csv("bloomCols"), bucketize = Some((c, n)))
           commit(spark, dir, "rebucket-heal", fresh,
-            removed = readSetOf(broken), carry = true, staged = true)
+            removed = readSetOf(broken), carry = true,
+            owned = fresh.map(_.path))
           broken.size
         }
       }
@@ -3490,7 +3440,8 @@ object SnapshotTable {
           bucket = bucket, bucketN = bucketN))
       }
       commit(spark, dir, "recluster", fresh,
-        removed = readSetOf(decayed.flatMap(_._2)), carry = true, staged = true)
+        removed = readSetOf(decayed.flatMap(_._2)), carry = true,
+        owned = fresh.map(_.path))
       decayed.map(_._2.size).sum
     }
   }
@@ -4364,7 +4315,8 @@ object SnapshotTable {
         sortedBy = key.map(physicalFor(known, _))))
     }
     commit(spark, dir, "compact", fresh,
-      removed = readSetOf(groups.flatMap(_._2)), carry = true, staged = true)
+      removed = readSetOf(groups.flatMap(_._2)), carry = true,
+      owned = fresh.map(_.path))
   }
 
   /** CDC: the row-level change feed between two versions, computed

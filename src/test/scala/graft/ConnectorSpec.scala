@@ -1071,6 +1071,65 @@ class ConnectorSpec extends SparkTestBase {
       .as[Long].head == 2L)
   }
 
+  test("SQL MERGE UPDATE SET * / INSERT * commits what mergeVectors commits") {
+    val root = Files.createTempDirectory("graft-cat12").toString
+    spark.conf.set("spark.sql.catalog.graftcat12",
+      classOf[graft.sources.connector.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graftcat12.root", root)
+    SnapshotTable.write(spark, spark.range(0, 4000)
+      .select($"id", ($"id" % 97).as("v")).repartitionByRange(8, $"id"),
+      s"$root/a", "overwrite", Seq("id"))
+    SnapshotTable.cloneTable(spark, s"$root/a", s"$root/b", deep = true)
+    // matches every 7th id below 3000 (some files untouched), inserts
+    // 4000..4049
+    val updates = spark.range(0, 3000).filter($"id" % 7 === 0)
+      .union(spark.range(4000, 4050)).select($"id", ($"id" * 10).as("v"))
+    SnapshotTable.mergeVectors(spark, s"$root/a", updates, "id")
+    updates.createOrReplaceTempView("merge_equiv_src")
+    spark.sql("""MERGE INTO graftcat12.b AS tgt USING merge_equiv_src AS src
+                |ON tgt.id = src.id
+                |WHEN MATCHED THEN UPDATE SET *
+                |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    // per data file (named by its smallest id): the vector's cardinality
+    def vectors(t: String): Map[Long, Long] = {
+      val m = SnapshotTable.readManifest(spark, s"$root/$t",
+        SnapshotTable.latestVersion(spark, s"$root/$t").get)
+      assert(m.op == "merge-dv")
+      m.files.filter(_.dv.isDefined)
+        .map(fe => fe.stats("id")._1 -> fe.dv.get.rows).toMap
+    }
+    assert(vectors("a").nonEmpty && vectors("a") == vectors("b"))
+    assert(vectors("a").values.sum == 429L)
+    def rows(t: String) = SnapshotTable.scan(spark, s"$root/$t")
+      .as[(Long, Long)].collect().sorted.toSeq
+    assert(rows("a") == rows("b"))
+    assert(rows("a").size == 4050)
+  }
+
+  test("SQL MERGE UPDATE SET * / INSERT * inserts each unmatched duplicate; mergeVectors refuses") {
+    val root = Files.createTempDirectory("graft-cat13").toString
+    spark.conf.set("spark.sql.catalog.graftcat13",
+      classOf[graft.sources.connector.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graftcat13.root", root)
+    val dir = s"$root/t"
+    SnapshotTable.write(spark,
+      spark.range(0, 10).select($"id", $"id".as("v")), dir, "overwrite")
+    val dupes = Seq((3L, 30L), (100L, 1L), (100L, 2L)).toDF("id", "v")
+    val e = intercept[IllegalArgumentException](
+      SnapshotTable.mergeVectors(spark, dir, dupes, "id"))
+    assert(e.getMessage.contains("cardinality"))
+    assert(SnapshotTable.latestVersion(spark, dir).contains(1L))
+    // the SQL shape lowers like every other MERGE: the two unmatched
+    // rows of key 100 each insert
+    dupes.createOrReplaceTempView("merge_dupes_src")
+    spark.sql("""MERGE INTO graftcat13.t AS tgt USING merge_dupes_src AS src
+                |ON tgt.id = src.id
+                |WHEN MATCHED THEN UPDATE SET *
+                |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    assert(SnapshotTable.scan(spark, dir).filter($"id" === 3 || $"id" === 100)
+      .as[(Long, Long)].collect().sorted.toSeq == Seq((3L, 30L), (100L, 1L), (100L, 2L)))
+  }
+
   test("general MERGE: conditional, partial, DELETE, NOT MATCHED BY SOURCE") {
     val root = Files.createTempDirectory("graft-cat9").toString
     spark.conf.set("spark.sql.catalog.graftcat9",
@@ -1137,8 +1196,9 @@ class ConnectorSpec extends SparkTestBase {
   test("a DV commit rewrites only the touched files' pointers") {
     val dir = freshDir()
     SnapshotTable.write(spark,
-      spark.range(0, 16000).toDF("id").withColumn("v", $"id" % 1000)
-        .repartitionByRange(16, $"id"),
+      // 16 slices of 1000 consecutive ids: a sampled range partition
+      // moves its bounds with the RDD ids the JVM handed out before
+      spark.range(0, 16000, 1, 16).toDF("id").withColumn("v", $"id" % 1000),
       dir, "overwrite", Seq("id"))
     SnapshotTable.deleteVectors(spark, dir, $"id" % 100 === 7)
     val m1 = SnapshotTable.readManifest(spark, dir,
@@ -1190,6 +1250,25 @@ class ConnectorSpec extends SparkTestBase {
     assert(SnapshotTable.upgrade(spark, dir) == v3)
     SnapshotTable.deleteVectors(spark, dir, $"id" === 1)
     assert(load(dir).count() == model.size - 1)
+  }
+
+  test("a refused insert-only clause MERGE leaves no staged file in data/") {
+    import SnapshotTable.MergeInsertClause
+    val dir = freshDir()
+    val base = spark.range(0, 400).select($"id", ($"id" * 3).as("v"))
+    SnapshotTable.write(spark, base.repartitionByRange(4, $"id"), dir,
+      "overwrite", Seq("id"))
+    val v2 = legacyDv(dir, positionsOf(dir, $"id" % 7 === 3))
+    def dataFiles = new java.io.File(s"$dir/data").list().toSet
+    val before = dataFiles
+    // keys past every file's range: nothing is scanned, the inserts
+    // stage, and the commit refuses the retired sidecar
+    refusesNamingUpgrade(SnapshotTable.mergeClauses(spark, dir,
+      spark.range(1000, 1010).select($"id".as("k"), ($"id" * 3).as("nv")),
+      "id", $"k", matched = Nil,
+      notMatched = Seq(MergeInsertClause(None, Seq("id" -> $"k", "v" -> $"nv")))))
+    assert(SnapshotTable.latestVersion(spark, dir).contains(v2))
+    assert(dataFiles == before, s"left behind: ${dataFiles -- before}")
   }
 
   test("a DV file lives while any kept entry points into it; clones and branches read it") {
