@@ -81,7 +81,7 @@ object ScaleBench {
     * appends are the one-time cost (~minutes of scheduler latency,
     * zero data volume). */
   private def snapshotLogDepth(spark: SparkSession): String = {
-    import graft.sources.SnapshotTable
+    import graft.sources.{SnapshotLog, SnapshotTable}
     val depth = sys.env.getOrElse("SPARK_GRAFT_LOG_DEPTH", "1000").toInt
     val base = "/tmp/graft-scale/logdepth"
     val deepDir = s"$base/deep"
@@ -89,7 +89,7 @@ object ScaleBench {
     val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
     def build(dir: String, commits: Int, filesPer: Int): Unit =
-      if (!fs.exists(new Path(dir, "_log"))) {
+      if (!SnapshotLog.hasLog(fs, new Path(dir))) {
         (1 to commits).foreach { i =>
           val df = spark.range((i - 1) * filesPer * 10L, i.toLong * filesPer * 10L)
             .toDF("id").withColumn("batch", lit(i))
@@ -111,8 +111,7 @@ object ScaleBench {
         deepDir, "append")
     }
     val vDeep = SnapshotTable.latestVersion(spark, deepDir).get
-    val deltaBytes = fs.getFileStatus(
-      new Path(s"$deepDir/_log", f"v$vDeep%010d.json")).getLen
+    val deltaBytes = SnapshotLog.entryBytes(spark, deepDir, vDeep)
     val filesDeep = SnapshotTable.readManifest(spark, deepDir, vDeep).files.size
 
     val vShallow = SnapshotTable.latestVersion(spark, shallowDir).get
@@ -164,7 +163,7 @@ object ScaleBench {
     *     connector's vectorized file reader — the connector is the
     *     planning/declarative surface, not the bulk-throughput path. */
   private def connectorFamily(spark: SparkSession): String = {
-    import graft.sources.SnapshotTable
+    import graft.sources.{SnapshotLog, SnapshotTable}
     import graft.sources.connector.ScanTelemetry
     val nFiles = sys.env.getOrElse("SPARK_GRAFT_CONN_FILES", "2048").toInt
     val rows = nFiles * 1000L
@@ -175,7 +174,7 @@ object ScaleBench {
     def timeSec(body: => Unit): Double = {
       val t0 = System.nanoTime(); body; (System.nanoTime() - t0) / 1e9
     }
-    if (!fs.exists(new Path(dir, "_log")))
+    if (!SnapshotLog.hasLog(fs, new Path(dir)))
       SnapshotTable.write(spark,
         spark.range(0, rows).toDF("id").withColumn("v", col("id") % 97)
           .repartitionByRange(nFiles, col("id")),

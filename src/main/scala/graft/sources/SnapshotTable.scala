@@ -1,6 +1,5 @@
 package graft.sources
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -15,74 +14,14 @@ import org.roaringbitmap.RoaringBitmap
   * 100 TB deployment actually wants — snapshot isolation, time
   * travel, O(changed-files) MERGE, and stats-based data skipping.
   *
-  * Layout (all paths relative to the table root):
-  * {{{
-  *   _log/v0000000042.json   one manifest per committed version
-  *   _log/v0000000042.lock   claim marker (commit protocol, below)
-  *   data/<nonce>-p0042.parquet   immutable data files
-  * }}}
-  *
-  * A manifest lists the data files that ARE the table at that version,
-  * each with a row count and optional per-column (min,max) stats for
-  * integral columns. Data files are never mutated or renamed after
-  * commit; every write produces new files plus a new manifest that
-  * references old files by name. Readers resolve the newest manifest
-  * (or an explicit `version`) and read exactly its file list — a
-  * half-finished write is invisible because its manifest doesn't
-  * exist yet.
-  *
-  * Commit protocol (optimistic concurrency, no coordinator):
-  *  1. stage the txn's new data files (no manifest references them
-  *     yet, so they are invisible);
-  *  2. read the newest manifest `v`; REBASE the txn onto it — the
-  *     output file list is `v`'s files minus the files this txn
-  *     rewrites plus the staged files — and VALIDATE: every file the
-  *     txn rewrote must still be live in `v`. If a concurrent commit
-  *     already removed one (both txns rewrote the same file), the
-  *     write-write conflict throws [[CommitConflictException]] and the
-  *     operation recomputes from the new snapshot;
-  *  3. publish at `v+1` by writing the manifest bytes to a temp name
-  *     and atomically linking/renaming them onto `v<v+1>.json`
-  *     (create-exclusive — exactly one writer can own a version).
-  *     Losing the race loops back to 2 against the new snapshot.
-  * A writer crashing before step 3 leaves only unreferenced staged
-  * files — reclaimed by [[vacuum]] once older than its retention
-  * horizon (age is what distinguishes them from a LIVE txn's staged
-  * files, which are also unreferenced until publish) — and can never
-  * corrupt the table.
-  * Because the rebase recomputes the carried list each attempt, pure
-  * appends never conflict and never drop a concurrent commit's files;
-  * rewrites (merge/delete/compact) conflict exactly when their
-  * file-level read sets overlap — the same file-granular isolation
-  * Delta calls WriteSerializable. On an object store without atomic
-  * create-exclusive, step 3 swaps for a DynamoDB/etcd conditional put
-  * — the file layout and reader are unchanged (same contract Delta
-  * documents for S3).
-  *
-  * Scale notes: manifests are O(#files), not O(rows); stats make MERGE
-  * rewrite only the files whose key range the batch touches
-  * (copy-on-write at file granularity) and let point/range reads skip
-  * files entirely. The one driver-side structure is the file list —
-  * bounded by #files, the same budget every table format spends.
-  *
-  * Delta log: a commit file is either a FULL entry (the complete file
-  * list — an anchor) or a DELTA entry (`add` + `remove` relative to
-  * the previous version). Overwrite/restore are naturally full;
-  * appends/merges/deletes/compacts write deltas, so the per-commit
-  * write cost is O(changed files), not O(#files) — at 100 TB a
-  * streaming sink's per-micro-batch append serializes a handful of
-  * entries, not millions. Every [[CheckpointInterval]]-th version
-  * commits full regardless, bounding a reader's backward fold; a
-  * bounded cache of resolved manifests (validated against the commit
-  * file's (mtime, len), so a recreated table at the same path misses)
-  * makes warm resolution O(changed) too. [[vacuum]] first promotes the
-  * retention boundary to a side checkpoint (`v*.ckpt.json`, written
-  * temp-then-rename and verified before anything is deleted), then
-  * drops the expired commit files — so expired versions disappear
-  * exactly as before while every surviving version stays resolvable.
-  * Pre-delta-log manifests carry no `kind` field and read as full.
+  * This object holds the table's operations: writes, DML, deletion
+  * vectors and equality deletes, maintenance, refs and branches. The
+  * on-disk log they commit through — layout, entry codec, resolution,
+  * the commit protocol and expiry — is [[SnapshotLog]].
   */
 object SnapshotTable {
+  import SnapshotLog.{commit, jsonEscape, readBytes, tableSchemaJson,
+    unionSchemaJson, widenNullability}
 
   /** Write-write conflict: a concurrent commit removed a file this
     * transaction had read and rewritten. The rewrite's output is based
@@ -235,390 +174,30 @@ object SnapshotTable {
     None
   }
 
-  /** JSON string escaping for manifest-embedded DATA values (zone-map
-    * bounds carry arbitrary user text; paths/column names never
-    * needed this). */
-  private def jsonEscape(v: String): String = v.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
   private def fs(spark: SparkSession, p: Path): FileSystem =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def logDir(dir: String) = new Path(dir, "_log")
   private def dataDir(dir: String) = new Path(dir, "data")
-  private def manifestName(v: Long) = f"v$v%010d.json"
-  private def ckptName(v: Long) = f"v$v%010d.ckpt.json"
 
-  private val ManifestRe = "v(\\d{10})\\.json".r
-  private val VersionFileRe = "v(\\d{10})\\..*".r
-
-  /** Every this-many versions a commit writes a full entry even when a
-    * delta would do — the anchor that bounds a cold reader's backward
-    * fold (Delta Lake's checkpoint interval default, for the same
-    * reason). */
-  val CheckpointInterval = 10
-
-  /** Schemes whose `rename` is known atomic-and-fails-if-present
-    * (the property [[tryPublish]]'s non-`file` branch depends on). */
-  private val AtomicRenameSchemes = Set("hdfs", "viewfs", "webhdfs")
-
-  /** Versions with a committed manifest, ascending. */
-  def versions(spark: SparkSession, dir: String): Seq[Long] = {
-    val ld = logDir(dir)
-    val f = fs(spark, ld)
-    if (!f.exists(ld)) return Nil
-    f.listStatus(ld).toSeq.map(_.getPath.getName).collect {
-      case ManifestRe(v) => v.toLong
-    }.sorted
-  }
+  /** Versions with a committed entry, ascending. */
+  def versions(spark: SparkSession, dir: String): Seq[Long] =
+    SnapshotLog.versions(spark, dir)
 
   def latestVersion(spark: SparkSession, dir: String): Option[Long] =
-    versions(spark, dir).lastOption
+    SnapshotLog.latestVersion(spark, dir)
 
-  // --- log entry ser/de (schema is ours, so a hand-written emitter +
-  // --- jackson tree reader keeps it dependency-light and explicit) ---
+  /** `version`'s resolved manifest ([[SnapshotLog.readManifest]]). */
+  def readManifest(spark: SparkSession, dir: String, version: Long): Manifest =
+    SnapshotLog.readManifest(spark, dir, version)
 
-  /** One commit file. `kind` "full": `files` IS the table. `kind`
-    * "delta": the table is the previous version's list minus `remove`
-    * plus `files`.
-    *
-    * `schema` is the TABLE's logical schema (Spark StructType JSON)
-    * as of this version — recorded on every commit like Delta's
-    * metaData action, so readers plan without a footer pass over the
-    * file list (at 2k files that pass costs seconds of driver time
-    * PER QUERY). Append commits store the union of the previous
-    * schema and the batch's (evolution); a same-name type conflict
-    * refuses the commit. It is an Option only because
-    * [[readManifest]] still parses entries written before schemas
-    * were recorded: [[tableSchemaJson]] refuses such a version, and
-    * [[upgrade]] re-commits the latest one with its footers' schema. */
-  private[graft] final case class LogEntry(version: Long, op: String, ts: Long,
-                                           kind: String, files: Seq[FileEntry],
-                                           remove: Seq[String],
-                                           schema: Option[String] = None)
-
-  private def renderFiles(sb: StringBuilder, files: Seq[FileEntry]): Unit = {
-    sb.append('[')
-    files.zipWithIndex.foreach { case (fe, i) =>
-      if (i > 0) sb.append(',')
-      sb.append(s"""{"path":"${fe.path}","rows":${fe.rows},"stats":{""")
-      fe.stats.toSeq.sortBy(_._1).zipWithIndex.foreach { case ((c, (lo, hi)), j) =>
-        if (j > 0) sb.append(',')
-        sb.append(s""""$c":[$lo,$hi]""")
-      }
-      sb.append("}")
-      if (fe.strStats.nonEmpty) {
-        sb.append(""","sstats":{""")
-        fe.strStats.toSeq.sortBy(_._1).zipWithIndex.foreach { case ((c, (lo, hi)), j) =>
-          if (j > 0) sb.append(',')
-          sb.append(s""""$c":["${jsonEscape(lo)}","${jsonEscape(hi)}"]""")
-        }
-        sb.append("}")
-      }
-      if (fe.bloom.nonEmpty) {
-        sb.append(""","bloom":{""")
-        fe.bloom.toSeq.sortBy(_._1).zipWithIndex.foreach { case ((c, ws), j) =>
-          if (j > 0) sb.append(',')
-          sb.append(s""""$c":[${ws.mkString(",")}]""")
-        }
-        sb.append("}")
-      }
-      if (fe.ndv.nonEmpty) {
-        sb.append(""","ndv":{""")
-        fe.ndv.toSeq.sortBy(_._1).zipWithIndex.foreach { case ((c, ks), j) =>
-          if (j > 0) sb.append(',')
-          sb.append(s""""$c":[${ks.mkString(",")}]""")
-        }
-        sb.append("}")
-      }
-      fe.dv.foreach { d =>
-        if (d.legacy) sb.append(s""","dv":{"path":"${d.path}","n":${d.rows}}""")
-        else sb.append(s""","dv":{"path":"${d.path}","off":${d.offset},""" +
-          s""""len":${d.size},"n":${d.rows}}""")
-      }
-      if (fe.noNulls.nonEmpty)
-        sb.append(s""","nn":[${fe.noNulls.sorted.map(c => s"\"$c\"").mkString(",")}]""")
-      if (fe.eqDv.nonEmpty)
-        sb.append(s""","eq":[${fe.eqDv.map(p => s"\"$p\"").mkString(",")}]""")
-      fe.bucket.foreach(b => sb.append(s""","bucket":$b"""))
-      fe.bucketN.foreach(n => sb.append(s""","bucketN":$n"""))
-      fe.sortedBy.foreach(c => sb.append(s""","sortedBy":"$c""""))
-      sb.append("}")
-    }
-    sb.append(']')
-  }
-
-  private def renderEntry(e: LogEntry): String = {
-    val sb = new StringBuilder
-    sb.append(s"""{"version":${e.version},"op":"${e.op}","ts":${e.ts},""")
-    sb.append(s""""kind":"${e.kind}",""")
-    if (e.kind == "delta") {
-      sb.append(""""remove":[""")
-      sb.append(e.remove.map(p => s""""$p"""").mkString(","))
-      sb.append("],")
-    }
-    // StructType.json is itself valid JSON — embedded raw
-    e.schema.foreach(s => sb.append(s""""schema":$s,"""))
-    sb.append(""""files":""")
-    renderFiles(sb, e.files)
-    sb.append('}')
-    sb.toString
-  }
-
-  private def parseFiles(node: com.fasterxml.jackson.databind.JsonNode): Seq[FileEntry] = {
-    val files = node.elements()
-    val out = Seq.newBuilder[FileEntry]
-    while (files.hasNext) {
-      val fe = files.next()
-      val stats = Map.newBuilder[String, (Long, Long)]
-      val it = fe.get("stats").properties().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        stats += e.getKey -> (e.getValue.get(0).asLong, e.getValue.get(1).asLong)
-      }
-      val bloom = Map.newBuilder[String, Seq[Long]]
-      val bn = fe.path("bloom") // absent on pre-bloom manifests
-      if (!bn.isMissingNode) {
-        val bit = bn.properties().iterator()
-        while (bit.hasNext) {
-          val e = bit.next()
-          val ws = Vector.newBuilder[Long]
-          val vs = e.getValue.elements()
-          while (vs.hasNext) ws += vs.next().asLong
-          bloom += e.getKey -> ws.result()
-        }
-      }
-      val dvn = fe.path("dv") // absent on pre-deletion-vector manifests
-      val dv =
-        if (dvn.isMissingNode) None
-        else if (dvn.path("off").isMissingNode) // a retired sidecar ref
-          Some(Dv(dvn.get("path").asText, -1L, -1, dvn.get("n").asLong))
-        else Some(Dv(dvn.get("path").asText, dvn.get("off").asLong,
-          dvn.get("len").asInt, dvn.get("n").asLong))
-      val bn2 = fe.path("bucket") // absent on pre-bucketing manifests
-      val bucket = if (bn2.isMissingNode) None else Some(bn2.asInt)
-      val bn3 = fe.path("bucketN") // absent on pre-bucket-count manifests
-      val bucketN = if (bn3.isMissingNode) None else Some(bn3.asInt)
-      val sn2 = fe.path("sortedBy") // absent on pre-sort-metadata manifests
-      val sortedBy = if (sn2.isMissingNode) None else Some(sn2.asText)
-      val nn = fe.path("nn") // absent on pre-noNulls manifests
-      val noNulls =
-        if (nn.isMissingNode) Nil
-        else {
-          val b = Vector.newBuilder[String]
-          val it2 = nn.elements()
-          while (it2.hasNext) b += it2.next().asText
-          b.result()
-        }
-      val ss = fe.path("sstats") // absent on pre-strStats manifests
-      val strStats = Map.newBuilder[String, (String, String)]
-      if (!ss.isMissingNode) {
-        val sit = ss.properties().iterator()
-        while (sit.hasNext) {
-          val e = sit.next()
-          strStats += e.getKey -> (e.getValue.get(0).asText, e.getValue.get(1).asText)
-        }
-      }
-      val nv = fe.path("ndv") // absent on pre-NDV-sketch manifests
-      val ndv = Map.newBuilder[String, Seq[Long]]
-      if (!nv.isMissingNode) {
-        val nit = nv.properties().iterator()
-        while (nit.hasNext) {
-          val e = nit.next()
-          val ks = Vector.newBuilder[Long]
-          val vs = e.getValue.elements()
-          while (vs.hasNext) ks += vs.next().asLong
-          ndv += e.getKey -> ks.result()
-        }
-      }
-      val eqn = fe.path("eq") // absent on pre-equality-delete manifests
-      val eqDv =
-        if (eqn.isMissingNode) Nil
-        else {
-          val b = Vector.newBuilder[String]
-          val it3 = eqn.elements()
-          while (it3.hasNext) b += it3.next().asText
-          b.result()
-        }
-      out += FileEntry(fe.get("path").asText, fe.get("rows").asLong,
-        stats.result(), bloom.result(), dv, bucket, sortedBy, bucketN,
-        noNulls, strStats.result(), ndv.result(), eqDv)
-    }
-    out.result()
-  }
-
-  private def readBytes(f: FileSystem, p: Path): Array[Byte] = {
-    val bytes = new Array[Byte](f.getFileStatus(p).getLen.toInt)
-    val in = f.open(p)
-    try in.readFully(0, bytes) finally in.close()
-    bytes
-  }
-
-  private def parseEntry(bytes: Array[Byte]): LogEntry = {
-    val root = new ObjectMapper().readTree(bytes)
-    val remove = Seq.newBuilder[String]
-    val rn = root.path("remove")
-    if (!rn.isMissingNode) {
-      val it = rn.elements()
-      while (it.hasNext) remove += it.next().asText
-    }
-    val sn = root.path("schema") // absent on pre-schema manifests
-    LogEntry(root.get("version").asLong, root.get("op").asText,
-      root.path("ts").asLong(0L), // absent on pre-ts manifests
-      // absent only on pre-delta-log chains, which [[upgrade]] reads
-      // through readManifest
-      root.path("kind").asText("full"),
-      parseFiles(root.get("files")), remove.result(),
-      if (sn.isMissingNode) None else Some(sn.toString))
-  }
-
-  // --- manifest resolution: fold the delta log into the file list ---
-
-  /** Bounded LRU of resolved manifests keyed by (table dir, version),
-    * validated against the commit file's (mtime, len): a version's
-    * resolved content is immutable once published, but a table dir
-    * deleted and recreated at the same path (tests) restarts the log —
-    * the fresh commit file's stamp misses and the entry recomputes.
-    * Accessed under its own lock; values are immutable. */
-  private val resolveCacheMax = 64
-  private val resolveCache =
-    new java.util.LinkedHashMap[(String, Long), (Long, Long, Manifest)](
-      resolveCacheMax, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, Long), (Long, Long, Manifest)]): Boolean =
-        size > resolveCacheMax
-    }
-
-  /** Test hook: force the next resolutions cold (the cache is
-    * otherwise correct by construction — commit files are immutable —
-    * so production code never needs this). */
-  private[graft] def invalidateResolveCache(): Unit =
-    resolveCache.synchronized(resolveCache.clear())
-
-  /** The resolved manifest of `version`: walks backward through delta
-    * entries to the nearest full anchor (a full commit, or a vacuum
-    * checkpoint at this version) and folds forward. Warm calls are
-    * O(1) via the cache; cold calls read at most
-    * [[CheckpointInterval]] delta entries plus one anchor. */
-  def readManifest(spark: SparkSession, dir: String, version: Long): Manifest = {
-    val p = new Path(logDir(dir), manifestName(version))
-    val f = fs(spark, p)
-    require(f.exists(p), s"no version $version under $dir")
-    val st = f.getFileStatus(p)
-    val key = (dir, version)
-    resolveCache.synchronized {
-      val hit = resolveCache.get(key)
-      if (hit != null && hit._1 == st.getModificationTime && hit._2 == st.getLen)
-        return hit._3
-    }
-    val m: Manifest = parseEntry(readBytes(f, p)) match {
-      case entry if entry.kind == "full" =>
-        Manifest(entry.version, entry.op, entry.files, entry.ts)
-      case entry if entry.kind == "delta" =>
-        val ckpt = new Path(logDir(dir), ckptName(version))
-        if (f.exists(ckpt)) { // vacuum promoted this version to an anchor
-          val full = parseEntry(readBytes(f, ckpt))
-          Manifest(entry.version, entry.op, full.files, entry.ts)
-        } else {
-          val base: Seq[FileEntry] =
-            if (version <= 1) Nil // delta against an empty table
-            else readManifest(spark, dir, version - 1).files
-          val gone = entry.remove.toSet
-          Manifest(entry.version, entry.op,
-            base.filterNot(fe => gone.contains(fe.path)) ++ entry.files, entry.ts)
-        }
-      case entry => throw new IllegalStateException(
-        s"unknown log entry kind '${entry.kind}' at version $version of $dir")
-    }
-    resolveCache.synchronized {
-      resolveCache.put(key, (st.getModificationTime, st.getLen, m))
-    }
-    m
-  }
-
-  /** Atomically publish `m` at its version slot; false if the slot is
-    * already owned. Fully writes the bytes to a temp name first, then
-    * create-exclusive-links them onto the final name, so readers see a
-    * complete manifest or nothing and exactly one writer owns a
-    * version. Hadoop's rename is atomic-and-fails-if-present on HDFS
-    * (server-side) but NOT on the local filesystem — RawLocalFileSystem
-    * delegates to POSIX rename(2), which silently overwrites. For
-    * `file:` URIs we use NIO `Files.createLink` (link(2) fails EEXIST —
-    * a single atomic syscall) instead. */
-  private def tryPublish(f: FileSystem, ld: Path, m: LogEntry): Boolean = {
-    val tmp = new Path(ld, s".tmp-${java.util.UUID.randomUUID}.json")
-    val out = f.create(tmp, true)
-    try out.write(renderEntry(m).getBytes("UTF-8")) finally out.close()
-    val target = new Path(ld, manifestName(m.version))
-    val won =
-      if (f.getScheme == "file") {
-        try {
-          java.nio.file.Files.createLink(
-            java.nio.file.Paths.get(target.toUri.getPath),
-            java.nio.file.Paths.get(tmp.toUri.getPath))
-          true
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException => false
-          // a concurrent vacuum may reclaim the temp between write and
-          // link; losing the slot (and retrying) is the safe reading
-          case _: java.nio.file.NoSuchFileException => false
-        }
-      } else {
-        // rename-fails-if-present is an HDFS server-side guarantee, NOT
-        // part of the general FileSystem contract — on s3a/gs/abfs a
-        // rename may overwrite or be non-atomic, silently clobbering a
-        // committed manifest (a lost version). Refuse schemes we can't
-        // vouch for; the object-store path is the documented
-        // conditional-put escape hatch in the protocol doc above.
-        if (!AtomicRenameSchemes.contains(f.getScheme))
-          throw new UnsupportedOperationException(
-            s"scheme '${f.getScheme}' lacks an atomic fail-if-present " +
-              "rename; commit needs a conditional put (see protocol doc)")
-        // cheap pre-check: lose the slot without burning a server-side
-        // rename when the version is already visibly owned
-        if (f.exists(target)) false
-        else try f.rename(tmp, target) catch { case _: java.io.IOException => false }
-      }
-    if (f.getScheme == "file" || !won) f.delete(tmp, false)
-    won
-  }
-
-  /** `version`'s commit entry's schema field, as written (None on an
-    * entry that predates recorded schemas). */
-  private def recordedSchemaJson(spark: SparkSession, dir: String,
-                                 version: Long): Option[String] = {
-    val p = new Path(logDir(dir), manifestName(version))
-    val f = fs(spark, p)
-    require(f.exists(p), s"no version $version under $dir")
-    parseEntry(readBytes(f, p)).schema
-  }
-
-  /** The table schema recorded in `version`'s commit entry. One
-    * small-file read — NO footer pass, no manifest resolution. A
-    * version written before every commit recorded its schema refuses,
-    * naming [[upgrade]]. */
-  private[graft] def tableSchemaJson(spark: SparkSession, dir: String,
-                                     version: Long): String =
-    recordedSchemaJson(spark, dir, version).getOrElse(
-      throw new IllegalStateException(
-        s"version $version of $dir records no schema (it predates " +
-          "schema-recording commits): run CALL <catalog>.system.upgrade(" +
-          "'<table>') or SnapshotTable.upgrade(spark, dir) once, then retry"))
-
-  /** [[tableSchemaJson]] as a StructType, every field forced nullable
-    * (schema evolution surfaces missing columns as null, and reads
-    * must never promise more than the files deliver). */
+  /** `version`'s recorded schema ([[SnapshotLog.tableSchema]]). */
   private[graft] def tableSchema(spark: SparkSession, dir: String,
-                                 version: Long): org.apache.spark.sql.types.StructType = {
-    val st = org.apache.spark.sql.types.DataType.fromJson(
-      tableSchemaJson(spark, dir, version))
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    org.apache.spark.sql.types.StructType(st.fields.map(_.copy(nullable = true)))
-  }
+                                 version: Long): org.apache.spark.sql.types.StructType =
+    SnapshotLog.tableSchema(spark, dir, version)
+
+  /** Test hook: force the next resolutions cold. */
+  private[graft] def invalidateResolveCache(): Unit =
+    SnapshotLog.invalidateResolveCache()
 
   /** UPGRADE a table to the current on-disk format, as one full
     * "upgrade" version over the latest version's entries:
@@ -634,7 +213,7 @@ object SnapshotTable {
     val v = latestVersion(spark, dir).getOrElse(
       throw new IllegalStateException(s"no committed version under $dir"))
     val files = readManifest(spark, dir, v).files
-    val recorded = recordedSchemaJson(spark, dir, v)
+    val recorded = SnapshotLog.entry(spark, dir, v).schema
     val legacy = files.filter(_.dv.exists(_.legacy))
     if (recorded.isDefined && legacy.isEmpty) return v
     // no files, no footers: the empty version records no columns
@@ -719,250 +298,6 @@ object SnapshotTable {
       else f.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
         .withMetadata(f.metadata).remove(PhysicalNameKey).build())
     })
-
-  private def stripMappingJson(j: String): String = {
-    val st = org.apache.spark.sql.types.DataType.fromJson(j)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val out = stripMapping(st)
-    if (out eq st) j else out.json
-  }
-
-  /** Layout TBLPROPERTIES that NAME columns; when an overwrite drops a
-    * rename mapping, these must follow the rename or they dangle. */
-  private val NamedLayoutProps =
-    Seq("bucketBy", "clusterBy", "statsCols", "bloomCols")
-
-  /** After a mapping-DROPPING commit (overwrite/truncate: files now
-    * carry logical names, the recorded schema has no mapping), rewrite
-    * any layout property that still names a column by its retired
-    * PHYSICAL name to the current logical one — otherwise the declared
-    * bucket/cluster/stats layout silently stops applying to every
-    * later write (and `bucketLayout` would resolve to None). */
-  private def followPropsAfterMappingDrop(
-      spark: SparkSession, dir: String, prevSchemaJson: String): Unit = {
-    import org.apache.spark.sql.types.{DataType, StructType}
-    val prev = DataType.fromJson(prevSchemaJson).asInstanceOf[StructType]
-    if (!hasMapping(prev)) return
-    val logicalFor: Map[String, String] = prev.fields
-      .map(f => physicalName(f) -> f.name).filter(p => p._1 != p._2).toMap
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val props = graft.sources.connector.GraftTableProps.read(hconf, dir)
-    val updated = props.map {
-      case (k, v) if NamedLayoutProps.contains(k) =>
-        k -> v.split(",").map(_.trim).filter(_.nonEmpty)
-          .map(c => logicalFor.getOrElse(c, c)).mkString(",")
-      case kv => kv
-    }
-    if (updated != props)
-      graft.sources.connector.GraftTableProps.write(hconf, dir, updated)
-  }
-
-  /** Union-by-name for append-time schema evolution: previous fields
-    * keep their order (they are the files read first), new-only
-    * fields append — the order a merged footer schema has. A same-name
-    * type conflict throws, naming the column: no recorded schema
-    * could describe both the old files and the new ones. Types equal
-    * up to nested nullability are no conflict: the recorded type takes
-    * the wider nullability ([[widenNullability]]). A new field
-    * whose name collides with a RENAMED column's physical name throws
-    * too: files still carry data under that physical name, so the
-    * "new" column would silently resurrect the renamed column's old
-    * values in every pre-rename file. */
-  private def unionSchemaJson(prevJson: String, newJson: String): String = {
-    import org.apache.spark.sql.types.{DataType, StructType}
-    val prev = DataType.fromJson(prevJson).asInstanceOf[StructType]
-    val next = DataType.fromJson(newJson).asInstanceOf[StructType]
-    val prevByName = prev.fields.map(f => f.name -> f.dataType).toMap
-    val nextByName = next.fields.map(f => f.name -> f.dataType).toMap
-    val conflicts = next.fields.toSeq.flatMap(f =>
-      prevByName.get(f.name).filter(widenNullability(_, f.dataType).isEmpty).map(t =>
-        s"'${f.name}' is ${t.simpleString} in the table but " +
-          s"${f.dataType.simpleString} in this write"))
-    if (conflicts.nonEmpty) throw new IllegalArgumentException(
-      s"schema conflict: column ${conflicts.mkString("; ")} — add an " +
-        "explicit CAST, or overwrite the table")
-    val kept = prev.fields.map(f => nextByName.get(f.name)
-      .fold(f)(t => f.copy(dataType = widenNullability(f.dataType, t).get)))
-    val newFields = next.fields.filterNot(f => prevByName.contains(f.name))
-    val prevPhysical = prev.fields.map(physicalName).toSet -- prevByName.keySet
-    val clash = newFields.map(_.name).filter(prevPhysical.contains)
-    if (clash.nonEmpty) throw new IllegalArgumentException(
-      s"cannot add column(s) ${clash.mkString(", ")}: the name is the " +
-        "PHYSICAL name of a renamed column and existing files still " +
-        "carry its data — pick a different name (or add it via ALTER " +
-        "TABLE, which assigns a fresh physical name)")
-    StructType(kept ++ newFields).json
-  }
-
-  /** `prev` widened to admit `next`'s nulls when the two are the same
-    * type up to nullability (an UPDATE's `struct(lit(99), …)` image
-    * over a table whose struct fields are declared non-null); None on
-    * a real type conflict. Nullability only ever widens, so a read
-    * never promises more than any file delivers. */
-  private def widenNullability(prev: org.apache.spark.sql.types.DataType,
-                               next: org.apache.spark.sql.types.DataType)
-      : Option[org.apache.spark.sql.types.DataType] = {
-    import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
-    (prev, next) match {
-      case (ArrayType(p, pNull), ArrayType(n, nNull)) =>
-        widenNullability(p, n).map(ArrayType(_, pNull || nNull))
-      case (MapType(pk, pv, pNull), MapType(nk, nv, nNull)) =>
-        for (k <- widenNullability(pk, nk); v <- widenNullability(pv, nv))
-          yield MapType(k, v, pNull || nNull)
-      case (StructType(pf), StructType(nf)) if pf.length == nf.length =>
-        val fields = pf.zip(nf).map { case (a, b) =>
-          if (a.name != b.name) None
-          else widenNullability(a.dataType, b.dataType)
-            .map(t => a.copy(dataType = t, nullable = a.nullable || b.nullable))
-        }
-        if (fields.forall(_.isDefined)) Some(StructType(fields.map(_.get))) else None
-      case _ => Some(prev).filter(_ == next)
-    }
-  }
-
-  /** Rebase-validate-publish commit (see protocol in the object doc).
-    * `added` are the txn's staged files; `removed` is the txn's
-    * file-level READ SET — each live file whose content the txn read
-    * and replaced, mapped to the deletion-vector ref the txn SAW on
-    * it (None = no vector; empty map for appends); `carry` says
-    * whether the rest of the current snapshot flows into the new
-    * manifest (false for overwrite/restore, which replace the whole
-    * list). Each attempt rebases onto the CURRENT newest manifest, so
-    * concurrent commits to disjoint files interleave losslessly. A
-    * conflict is a read-set entry whose file is now GONE from the
-    * snapshot **or carries a different dv ref** than the txn read —
-    * the dv check matters because a deletion-vector commit changes a
-    * file's logical content while keeping its path, so a path-only
-    * check would let a concurrent rewrite/dv-commit silently drop
-    * those deletions (a lost update). Throws
-    * [[CommitConflictException]]; returns the committed version.
-    * Every entry records a schema: a commit with none to record, or
-    * whose union with the previous one conflicts, refuses.
-    * `owned`: the paths (relative to `dir`) this txn alone wrote for
-    * this commit — its staged data files, its DV file — so a refusal
-    * raised before the publish attempt deletes them (no version
-    * references them); nothing is deleted once a publish may have
-    * won, and files a caller staged and owns are never listed. */
-  private def commit(spark: SparkSession, dir: String, op: String,
-                     added: Seq[FileEntry],
-                     removed: Map[String, Option[String]] = Map.empty,
-                     carry: Boolean = false,
-                     schemaJson: Option[String] = None,
-                     replaceSchema: Boolean = false,
-                     keepMapping: Boolean = false,
-                     expectLatest: Option[Long] = None,
-                     owned: Seq[String] = Nil): Long = {
-    val ld = logDir(dir)
-    val f = fs(spark, ld)
-    f.mkdirs(ld)
-    // writer-provided schemas never carry a rename mapping (see
-    // [[stripMapping]]); only replaceSchema (ALTER RENAME declares the
-    // mapping) and keepMapping (restore/truncate re-record a CHAIN
-    // schema whose files really are physical-named) pass it through
-    val incomingSchema: Option[String] =
-      if (replaceSchema || keepMapping) schemaJson
-      else schemaJson.map(stripMappingJson)
-    var publishing = false // past this point a publish may have won
-    try {
-      var attempts = 0
-      while (true) {
-        val latest = latestVersion(spark, dir)
-        // linear-history guard (fast-forward, staged REPLACE): the
-        // commit must land DIRECTLY on `expectLatest` — losing the slot
-        // race means someone advanced the table first, and replacing
-        // their state would silently drop their commit. Conflict, never
-        // clobber. `-1` encodes "expect NO version yet" (atomic CTAS:
-        // a concurrent creation must conflict, not be overwritten).
-        expectLatest.foreach(e => if (latest.getOrElse(-1L) != e)
-          throw new CommitConflictException(
-            s"$op expected $dir at version ${if (e < 0) "<none>" else e} " +
-              s"but found ${latest.getOrElse(-1L)}: a concurrent commit " +
-              "advanced the table"))
-        val current: Seq[FileEntry] =
-          if (carry) latest.map(readManifest(spark, dir, _).files).getOrElse(Nil)
-          else Nil
-        if (removed.nonEmpty) {
-          val currentDv = current.map(fe => fe.path -> changeToken(fe)).toMap
-          val gone = removed.filter { case (p, sawDv) =>
-            !currentDv.get(p).contains(sawDv)
-          }.keys
-          if (gone.nonEmpty) throw new CommitConflictException(
-            s"write-write conflict under $dir: concurrent commit changed " +
-              s"${gone.mkString(", ")} after this $op read them")
-        }
-        // a version never carries a retired sidecar pointer forward:
-        // only upgrade, which converts every one, commits on such a table
-        (current.filterNot(fe => removed.contains(fe.path)) ++ added)
-          .find(_.dv.exists(_.legacy))
-          .foreach(fe => throw DeletionVectors.legacyRefusal(dir, fe.path))
-        val v = latest.getOrElse(0L) + 1
-        // schema chain: every version records one. A fresh/overwritten
-        // table records the writer's schema; a carrying commit unions it
-        // with (or just carries) the previous version's — except
-        // replaceSchema commits (ALTER DROP/RENAME COLUMN), whose schema
-        // REPLACES the chain's (a union can only widen).
-        val entrySchema: String =
-          if (replaceSchema) {
-            require(carry && incomingSchema.isDefined,
-              "replaceSchema needs a carrying commit with a schema")
-            incomingSchema.get
-          } else if (!carry || latest.isEmpty) incomingSchema.getOrElse(
-            throw new IllegalArgumentException(
-              s"$op on $dir records no schema: every version must record one"))
-          else {
-            val prev = tableSchemaJson(spark, dir, latest.get)
-            incomingSchema.fold(prev)(unionSchemaJson(prev, _))
-          }
-        // an overwrite retires the previous schema's rename mapping; read
-        // it BEFORE publishing, so a pre-schema table refuses untouched
-        val retiredSchema =
-          if (carry || replaceSchema || keepMapping) None
-          else latest.map(tableSchemaJson(spark, dir, _))
-        // overwrite/restore replace the whole list (naturally full), and
-        // every CheckpointInterval-th version anchors the log so a cold
-        // reader's backward fold is bounded; everything else commits the
-        // O(changed-files) delta.
-        val entry =
-          if (!carry || v % CheckpointInterval == 0) {
-            val outFiles = current.filterNot(fe => removed.contains(fe.path)) ++ added
-            LogEntry(v, op, System.currentTimeMillis(), "full", outFiles, Nil,
-              Some(entrySchema))
-          } else
-            LogEntry(v, op, System.currentTimeMillis(), "delta", added,
-              removed.keys.toSeq.sorted, Some(entrySchema))
-        publishing = true
-        if (tryPublish(f, ld, entry)) {
-          // a mapping-dropping overwrite retires the physical names; the
-          // layout props that referenced them follow the rename
-          retiredSchema.foreach(followPropsAfterMappingDrop(spark, dir, _))
-          return v
-        }
-        publishing = false
-        attempts += 1 // lost the slot race; rebase onto the winner and retry
-        if (attempts > 10000) throw new IllegalStateException(
-          s"could not publish a version under $dir after $attempts attempts")
-      }
-      -1L // unreachable
-    } catch {
-      case e: Throwable if !publishing =>
-        owned.foreach(p => f.delete(new Path(dir, p), false))
-        throw e
-    }
-  }
-
-  /** V2 connector write hook: commit externally-staged file entries
-    * whose stats the connector's executor-side writers computed WHILE
-    * writing (no post-hoc stats job — the one cost [[stageFiles]]
-    * pays). Appends carry and never conflict; overwrite replaces. */
-  private[graft] def commitAdded(spark: SparkSession, dir: String, op: String,
-                                 added: Seq[FileEntry], carry: Boolean,
-                                 schemaJson: Option[String] = None,
-                                 replaceSchema: Boolean = false,
-                                 keepMapping: Boolean = false,
-                                 expectLatest: Option[Long] = None): Long =
-    commit(spark, dir, op, added, carry = carry, schemaJson = schemaJson,
-      replaceSchema = replaceSchema, keepMapping = keepMapping,
-      expectLatest = expectLatest)
 
   /** Run a rewrite transaction body, recomputing it from the fresh
     * snapshot on write-write conflict (bounded attempts). */
@@ -1906,24 +1241,18 @@ object SnapshotTable {
       val txn = plan(m, known)
       try {
         var owned = Seq.empty[String]
-        val (vectors, fresh) =
-          try {
-            val vectors = txn.positions.flatMap(
-              stageVectors(spark, dir, m, _, txn.failOnDuplicate))
-            owned ++= vectors.map(_._1)
-            val fresh = txn.postImage.filter(_ => vectors.isDefined || txn.inserts)
-              .fold(Seq.empty[FileEntry])(stageFiles(spark, _, dir, txn.statsCols,
-                bucketize = bucketLayout(spark, dir)))
-            owned ++= fresh.map(_.path)
-            // post-images are new content: constraints gate them like an INSERT
-            enforceCheckConstraints(spark, dir, fresh, known)
-            (vectors, fresh)
-          } catch {
-            case t: Throwable =>
-              val f = fs(spark, new Path(dir))
-              owned.foreach(p => f.delete(new Path(dir, p), false))
-              throw t
-          }
+        val (vectors, fresh) = deletingOnFailure(spark, dir, owned) {
+          val vectors = txn.positions.flatMap(
+            stageVectors(spark, dir, m, _, txn.failOnDuplicate))
+          owned ++= vectors.map(_._1)
+          val fresh = txn.postImage.filter(_ => vectors.isDefined || txn.inserts)
+            .fold(Seq.empty[FileEntry])(stageFiles(spark, _, dir, txn.statsCols,
+              bucketize = bucketLayout(spark, dir)))
+          owned ++= fresh.map(_.path)
+          // post-images are new content: constraints gate them like an INSERT
+          enforceCheckConstraints(spark, dir, fresh, known)
+          (vectors, fresh)
+        }
         val entries = vectors.fold(Seq.empty[FileEntry])(_._2)
         if (entries.isEmpty && fresh.isEmpty && txn.callerFiles.isEmpty &&
           txn.dropped.isEmpty && !txn.alwaysCommit) v
@@ -1936,6 +1265,19 @@ object SnapshotTable {
             carry = true, schemaJson = txn.schemaJson, owned = owned)
         }
       } finally txn.cached.foreach(_.unpersist())
+    }
+
+  /** Run `body`; when it throws, delete `owned` — the paths (relative
+    * to `dir`) the transaction alone has written so far — and rethrow.
+    * With [[commit]]'s own `owned` rule this deletes a transaction's
+    * files exactly when the failure comes before a publish attempt. */
+  private def deletingOnFailure[T](spark: SparkSession, dir: String, owned: => Seq[String])
+                                  (body: => T): T =
+    try body catch {
+      case t: Throwable =>
+        val f = fs(spark, new Path(dir))
+        owned.foreach(p => f.delete(new Path(dir, p), false))
+        throw t
     }
 
   /** Stage the deletion vectors of the `matched` (file, pos) position
@@ -2408,8 +1750,7 @@ object SnapshotTable {
     }
     latestVersion(spark, dir) match {
       case None => // first commit: nothing to replace
-        commitAdded(spark, dir, "overwrite", added, carry = false,
-          schemaJson = Some(schemaJson))
+        commit(spark, dir, "overwrite", added, schemaJson = Some(schemaJson))
       case Some(_) =>
         deleteVectorsWith(spark, dir, predicate, alsoAdd = added,
           opName = "replace-where", schemaJson = Some(schemaJson))
@@ -2503,8 +1844,7 @@ object SnapshotTable {
     * reads, sequencing, the masking budget — are [[deleteByKey]]'s. */
   def deleteByKeys(spark: SparkSession, dir: String, keyCols: Seq[String],
                    keys: DataFrame): Long =
-    deleteByKeysCore(spark, dir, keyCols, keys, alsoAdd = Nil,
-      op = "delete-eq", schemaJson = None)
+    deleteByKeysCore(spark, dir, keyCols, keys, op = "delete-eq", schemaJson = None)
 
   /** [[deleteByKeys]] PLUS an atomically co-committed APPEND of
     * `appends` — the eq-CDC epoch primitive (round-19, guide §1.2):
@@ -2532,16 +1872,12 @@ object SnapshotTable {
                              keyCols: Seq[String], keys: DataFrame,
                              appends: DataFrame,
                              statsCols: Seq[String] = Nil,
-                             rebalance: Boolean = true): Long = {
-    val fresh = stageFiles(spark, appends, dir, statsCols,
-      applyMapping = true, bucketize = bucketLayout(spark, dir),
-      rebalance = rebalance)
-    enforceCheckConstraints(spark, dir, fresh,
-      tableSchema(spark, dir, latestVersion(spark, dir).getOrElse(
-        throw new IllegalStateException(s"cannot delete from empty table $dir"))))
-    deleteByKeysCore(spark, dir, keyCols, keys, alsoAdd = fresh,
-      op = "cdc-eq", schemaJson = Some(appends.schema.json))
-  }
+                             rebalance: Boolean = true): Long =
+    deleteByKeysCore(spark, dir, keyCols, keys, op = "cdc-eq",
+      schemaJson = Some(appends.schema.json),
+      stageAppend = () => stageFiles(spark, appends, dir, statsCols,
+        applyMapping = true, bucketize = bucketLayout(spark, dir),
+        rebalance = rebalance))
 
   /** Dynamic partition overwrite (`INSERT OVERWRITE` under
     * `partitionOverwriteMode=dynamic`, `df.writeTo(t)
@@ -2574,8 +1910,7 @@ object SnapshotTable {
       keyCols: Seq[String], physKeyCols: Seq[String],
       schemaJson: Option[String]): Long = {
     if (keyCols.isEmpty || latestVersion(spark, dir).isEmpty)
-      return commitAdded(spark, dir, "overwrite", added, carry = false,
-        schemaJson = schemaJson)
+      return commit(spark, dir, "overwrite", added, schemaJson = schemaJson)
     if (added.isEmpty) // empty query output replaces no partitions
       return latestVersion(spark, dir).get
     // distinct identity tuples of the incoming batch, read back off
@@ -2585,28 +1920,28 @@ object SnapshotTable {
       .select(physKeyCols.zip(keyCols).map { case (p, l) =>
         col(s"`$p`").as(l) }: _*)
       .distinct()
-    deleteByKeysCore(spark, dir, keyCols, keys, alsoAdd = added,
-      op = "overwrite-dynamic", schemaJson = schemaJson)
+    deleteByKeysCore(spark, dir, keyCols, keys, op = "overwrite-dynamic",
+      schemaJson = schemaJson, alsoAdd = added)
   }
 
-  /** [[deleteByKeys]] with an optional atomically-co-committed set of
-    * staged files (`alsoAdd`) — dynamic partition overwrite is
-    * "delete the incoming tuples + append the incoming files" as ONE
-    * commit, so a crash can never leave the delete without the data. */
+  /** [[deleteByKeys]] with files co-committed in the same version, so
+    * a crash can never leave the delete without the data:
+    *  - `alsoAdd`: files the caller staged and owns (dynamic partition
+    *    overwrite is "delete the incoming tuples + append the incoming
+    *    files"); never deleted here, the V2 write's abort owns them;
+    *  - `stageAppend`: this transaction's own append, staged inside
+    *    each attempt after the key checks.
+    * Clean-up is [[dvTransaction]]'s one rule: the key sidecar and the
+    * staged append, the paths this attempt alone wrote, are deleted
+    * exactly when the failure comes before a publish attempt. A
+    * refusal leaves `data/` as it found it, and a conflict's retry
+    * stages afresh. */
   private def deleteByKeysCore(spark: SparkSession, dir: String,
                                keyCols: Seq[String], keys: DataFrame,
-                               alsoAdd: Seq[FileEntry], op: String,
-                               schemaJson: Option[String]): Long =
+                               op: String, schemaJson: Option[String],
+                               alsoAdd: Seq[FileEntry] = Nil,
+                               stageAppend: () => Seq[FileEntry] = () => Nil): Long =
     retryOnConflict(s"equality delete on $dir") {
-      // nothing to refute/mask (empty or all-null key batch, or every
-      // file refuted): the co-committed adds still publish. Not
-      // `staged`: a slot-race conflict must leave the
-      // staged files on disk for the retry (the V2 write's abort owns
-      // terminal cleanup).
-      def addsOnly(v: Long): Long =
-        if (alsoAdd.isEmpty) v
-        else commit(spark, dir, op, alsoAdd, removed = Map.empty,
-          carry = true, schemaJson = schemaJson)
       require(keyCols.nonEmpty, "deleteByKeys needs at least one key column")
       require(keyCols.distinct == keyCols,
         s"duplicate key columns in ${keyCols.mkString(",")}")
@@ -2614,6 +1949,26 @@ object SnapshotTable {
         throw new IllegalStateException(s"cannot delete from empty table $dir"))
       val m = readManifest(spark, dir, v)
       val known = tableSchema(spark, dir, v)
+      var owned = Seq.empty[String]
+      // one commit for the co-committed files and, when `sidecar` is
+      // set, the key refs attached to `affected`; with nothing to
+      // refute or mask (empty or all-null key batch, or every file
+      // refuted) the adds still publish
+      def publish(affected: Seq[FileEntry], sidecar: Option[String]): Long = {
+        val fresh = deletingOnFailure(spark, dir, owned) {
+          val staged = stageAppend()
+          owned ++= staged.map(_.path)
+          // appended rows are new content: constraints gate them like an INSERT
+          enforceCheckConstraints(spark, dir, staged, known)
+          staged
+        }
+        val updated = sidecar.fold(Seq.empty[FileEntry])(rel =>
+          affected.map(fe => fe.copy(eqDv = (fe.eqDv :+ rel).distinct)))
+        if (updated.isEmpty && alsoAdd.isEmpty && fresh.isEmpty) v
+        else commit(spark, dir, op, updated ++ alsoAdd ++ fresh,
+          removed = readSetOf(affected), carry = true, schemaJson = schemaJson,
+          owned = owned)
+      }
       require(keys.columns.length == keyCols.length,
         s"deleteByKeys wants a ${keyCols.length}-column key frame for " +
           s"${keyCols.mkString(",")}, got ${keys.columns.toSeq}")
@@ -2664,7 +2019,7 @@ object SnapshotTable {
       val isString = members.map(_._2 == org.apache.spark.sql.types.StringType)
       try {
       val typedRows = keyDf.limit(1025).collect()
-      if (typedRows.isEmpty) return addsOnly(v) // empty batch
+      if (typedRows.isEmpty) return publish(Nil, None) // empty batch
       // driver-side canonical forms replicate the CAST-to-string the
       // old collect ran: integrals print decimal digits, dates ISO
       // yyyy-MM-dd — both are the Java toString forms
@@ -2760,7 +2115,7 @@ object SnapshotTable {
                 fileMayContain(fe, physCols(i), t(i)))))
         rangeHit && bloomHit
       }
-      if (affected.isEmpty) return addsOnly(v)
+      if (affected.isEmpty) return publish(Nil, None)
       // attach-time pending-key budget: readers materialize each
       // file's MERGED key set, capped at MaxPendingKeys — enforce the
       // bound where it accumulates (here) instead of surfacing it as
@@ -2781,43 +2136,39 @@ object SnapshotTable {
       }
       val nonce = java.util.UUID.randomUUID.toString.take(8)
       val rel = s"data/$nonce-eq.parquet"
+      owned :+= rel
       // a small batch's distinct tuples are already ON the driver
       // (typedRows) — write the sidecar directly, zero Spark jobs;
       // wide batches keep the distributed single-file write
-      if (smallKeys.isDefined) {
-        writeDriverSidecar(spark, dir, rel, keyDf.schema, typedRows.toSeq)
-        // seed the reader-side sidecar cache with what we just wrote
-        // (round-18): canonical forms replicate EqSidecars.load —
-        // integrals/strings via toString (== the string cast), dates
-        // as DAYS-SINCE-EPOCH digits (== the datediff canonical);
-        // typedRows are distinct + null-free already (keyDf), every
-        // member passed the key-type whitelist above, and
-        // messageTypeFor round-trips each of those types, so the seeded
-        // (name, dtype-json) columns equal the read-back schema's.
-        val fields = keyDf.schema.fields
-        def canon(x: Any): String = x match {
-          case d: java.sql.Date => d.toLocalDate.toEpochDay.toString
-          case d: java.time.LocalDate => d.toEpochDay.toString
-          case other => other.toString
+      deletingOnFailure(spark, dir, owned) {
+        if (smallKeys.isDefined) {
+          writeDriverSidecar(spark, dir, rel, keyDf.schema, typedRows.toSeq)
+          // seed the reader-side sidecar cache with what we just wrote
+          // (round-18): canonical forms replicate EqSidecars.load —
+          // integrals/strings via toString (== the string cast), dates
+          // as DAYS-SINCE-EPOCH digits (== the datediff canonical);
+          // typedRows are distinct + null-free already (keyDf), every
+          // member passed the key-type whitelist above, and
+          // messageTypeFor round-trips each of those types, so the seeded
+          // (name, dtype-json) columns equal the read-back schema's.
+          val fields = keyDf.schema.fields
+          def canon(x: Any): String = x match {
+            case d: java.sql.Date => d.toLocalDate.toEpochDay.toString
+            case d: java.time.LocalDate => d.toEpochDay.toString
+            case other => other.toString
+          }
+          val canonKeys = typedRows.toVector.map { r =>
+            val parts = fields.indices.map(i => canon(r.get(i)))
+            if (fields.length == 1) parts.head
+            else graft.sources.connector.EqSidecar.encode(parts)
+          }
+          graft.sources.connector.SnapshotPartitions.EqSidecars.seed(
+            resolvePath(dir, rel),
+            fields.toSeq.map(f => (f.name, f.dataType.json)), canonKeys)
         }
-        val canonKeys = typedRows.toVector.map { r =>
-          val parts = fields.indices.map(i => canon(r.get(i)))
-          if (fields.length == 1) parts.head
-          else graft.sources.connector.EqSidecar.encode(parts)
-        }
-        graft.sources.connector.SnapshotPartitions.EqSidecars.seed(
-          resolvePath(dir, rel),
-          fields.toSeq.map(f => (f.name, f.dataType.json)), canonKeys)
+        else writeSingleParquet(spark, dir, keyDf, rel)
       }
-      else writeSingleParquet(spark, dir, keyDf, rel)
-      val updated = affected.map(fe => fe.copy(eqDv = (fe.eqDv :+ rel).distinct))
-      try commit(spark, dir, op, updated ++ alsoAdd,
-        removed = readSetOf(affected), carry = true, schemaJson = schemaJson)
-      catch {
-        case e: CommitConflictException =>
-          fs(spark, new Path(dir)).delete(new Path(dir, rel), false)
-          throw e
-      }
+      publish(affected, Some(rel))
       } finally keyDf.unpersist()
     }
 
@@ -3068,15 +2419,14 @@ object SnapshotTable {
       require(matched.nonEmpty || notMatched.nonEmpty ||
         notMatchedBySource.nonEmpty, "MERGE needs at least one clause")
       val v = m.version
-      val baseSchema = scan(spark, dir, Some(v)).schema
       // WITH SCHEMA EVOLUTION: `extraColumns` WIDEN the table — images
       // carry them, untouched rows read them as null (the same
       // union-schema contract as append-time evolution), and the
       // commit unions them into the recorded schema
       extraColumns.foreach(f => require(
-        !baseSchema.fieldNames.contains(f.name),
+        !known.fieldNames.contains(f.name),
         s"evolution column '${f.name}' already exists"))
-      val logicalSchema = StructType(baseSchema.fields ++
+      val logicalSchema = StructType(known.fields ++
         extraColumns.map(_.copy(nullable = true)))
       val cols = logicalSchema.fieldNames.toSeq
       require(cols.contains(keyCol), s"table $dir lacks merge key $keyCol")
@@ -3094,10 +2444,8 @@ object SnapshotTable {
         else candidateFiles(spark, m, keyCol,
           source.select(sourceKey.as(keyCol)),
           statsKey = Some(physicalFor(known, keyCol)))
-      val posSchema = StructType(
-        baseSchema.fields.map(_.copy(nullable = true)) ++
-          Seq(StructField("__graft_file", StringType),
-            StructField("__graft_pos", LongType)))
+      val posSchema = StructType(known.fields ++
+        Seq(StructField("__graft_file", StringType), StructField("__graft_pos", LongType)))
       val tgt0 =
         if (candidates.isEmpty)
           spark.createDataFrame(
@@ -3551,56 +2899,9 @@ object SnapshotTable {
       dead = deadUnder(referenced)
     }
     dead.foreach(n => f.delete(new Path(dd, n), false))
-    if (expired.nonEmpty) {
-      // Promote every RETAINED version whose backward delta fold would
-      // walk into the log being dropped — the oldest kept version AND
-      // each pinned tag target scattered below it — to a side
-      // checkpoint first (temp write + rename, existence-verified — a
-      // crash in between leaves the log intact and the next vacuum
-      // retries). Content is deterministic, so a concurrent vacuum
-      // writing the same checkpoint is benign.
-      (pinned :+ kept0.head).distinct.foreach { boundary =>
-        val bPath = new Path(logDir(dir), manifestName(boundary))
-        val bEntry = parseEntry(readBytes(f, bPath))
-        val ckpt = new Path(logDir(dir), ckptName(boundary))
-        if (bEntry.kind == "delta" && !f.exists(ckpt)) {
-          val m = readManifest(spark, dir, boundary)
-          val tmp = new Path(logDir(dir), s".ckpt-${java.util.UUID.randomUUID}.json")
-          val out = f.create(tmp, true)
-          try out.write(renderEntry(
-            LogEntry(m.version, m.op, m.ts, "full", m.files, Nil)).getBytes("UTF-8"))
-          finally out.close()
-          if (!f.rename(tmp, ckpt) && !f.exists(ckpt))
-            throw new IllegalStateException(
-              s"could not publish vacuum checkpoint for version $boundary of $dir")
-          f.delete(tmp, false) // no-op when rename consumed it
-          require(f.exists(ckpt), s"vacuum checkpoint vanished under $dir")
-        }
-      }
-    }
-    // One listing serves expiry and the temp reclaim. Every `_log` name
-    // of an expired version N starts with `v<N>.`: its commit file, a
-    // checkpoint below the boundary, and what older layouts left beside
-    // them (parquet checkpoints, pre-OCC `.lock` files). Commit files go
-    // last, so a crash part-way leaves N listed for the next vacuum.
-    val gone = expired.toSet
-    val (expiredNames, others) = f.listStatus(logDir(dir)).toSeq.partition(
-      _.getPath.getName match {
-        case VersionFileRe(v) => gone(v.toLong)
-        case _ => false
-      })
-    val (commits, sideFiles) =
-      expiredNames.partition(st => ManifestRe.matches(st.getPath.getName))
-    (sideFiles ++ commits).foreach(st => f.delete(st.getPath, false))
-    // reclaim publish temps left by crashed writers — same age gate: a
-    // LIVE writer between write and link would otherwise lose its slot
-    // spuriously (tryPublish treats the vanished temp as a lost race,
-    // which is safe but needless churn)
-    others.filter(_.getModificationTime <= horizon)
-      .map(_.getPath)
-      .filter(p => (p.getName.startsWith(".tmp-") && p.getName.endsWith(".json")) ||
-        p.getName.startsWith(".ckpt-pq-")) // crashed parquet-checkpoint temp dirs
-      .foreach(f.delete(_, true))
+    // the oldest kept version and every pinned tag target below it
+    // anchor the folds that would walk into the expired log
+    SnapshotLog.expire(spark, dir, expired, (pinned :+ kept0.head).distinct, horizon)
     // crashed stage/DV-file temp dirs (and fast-forward intent
     // temps — the published marker is _ff_intent.json, never swept;
     // only orphaned `.tmp-ff-*` from a crash mid-marker-write) live

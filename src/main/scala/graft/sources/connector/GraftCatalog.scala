@@ -10,7 +10,7 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sources.SnapshotTable
+import graft.sources.{SnapshotLog, SnapshotTable}
 
 /** A Spark `TableCatalog` over snapshot tables: full SQL DDL/DML on
   * the table format with zero services — the catalog IS the
@@ -81,10 +81,8 @@ final class GraftCatalog extends TableCatalog with StagingTableCatalog
   private def dirOf(ident: Identifier): String =
     dirOf(ident.namespace.toSeq, ident.name)
 
-  private def isTableDir(p: Path): Boolean = {
-    val fs = p.getFileSystem(hconf)
-    fs.exists(new Path(p, "_log"))
-  }
+  private def isTableDir(p: Path): Boolean =
+    SnapshotLog.hasLog(p.getFileSystem(hconf), p)
 
   private def tableExistsAt(dir: String): Boolean =
     SnapshotTable.latestVersion(spark, dir).isDefined
@@ -316,7 +314,7 @@ final class GraftCatalog extends TableCatalog with StagingTableCatalog
     requireNotReservedAddressing(ident)
     // an EMPTY version 1 carrying the declared schema: immediately
     // readable as an empty typed frame, appendable by INSERT/CTAS
-    SnapshotTable.commitAdded(spark, dir, "create", Nil, carry = false,
+    SnapshotLog.commit(spark, dir, "create", Nil, carry = false,
       schemaJson = Some(schema.json))
     val props = layoutProps(partitions, schema) ++ userProps(properties)
     if (props.nonEmpty) writeProps(dir, props)
@@ -631,7 +629,7 @@ final class GraftCatalog extends TableCatalog with StagingTableCatalog
           "supported: ADD COLUMNS, DROP COLUMN, RENAME COLUMN, " +
             s"SET/UNSET TBLPROPERTIES; got ${other.getClass.getSimpleName}")
       }
-      SnapshotTable.commitAdded(spark, dir, op, Nil, carry = true,
+      SnapshotLog.commit(spark, dir, op, Nil, carry = true,
         schemaJson = Some(StructType(fields.toArray).json),
         replaceSchema = true)
       if (retired != retiredBefore) writeRetired(dir, retired)

@@ -15,7 +15,7 @@ import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sources.SnapshotTable
+import graft.sources.{SnapshotLog, SnapshotTable}
 import graft.sources.SnapshotTable.{FileEntry, Manifest}
 
 /** DataSource V2 connector for [[graft.sources.SnapshotTable]]:
@@ -311,12 +311,12 @@ final class SnapshotV2Table(schema: StructType, dir: String,
   override def truncateTable(): Boolean = {
     val spark = SparkSession.active
     val schemaJson = SnapshotTable.latestVersion(spark, dir)
-      .map(v => SnapshotTable.tableSchemaJson(spark, dir, v))
+      .map(v => SnapshotLog.tableSchemaJson(spark, dir, v))
       .getOrElse(schema.json)
     // keepMapping: truncation removes rows, not the rename history —
     // later appends keep writing the frozen physical names, uniform
     // with any pre-truncate (time-travel-readable) files
-    SnapshotTable.commitAdded(spark, dir, "truncate", Nil, carry = false,
+    SnapshotLog.commit(spark, dir, "truncate", Nil, carry = false,
       schemaJson = Some(schemaJson), keepMapping = true)
     true
   }

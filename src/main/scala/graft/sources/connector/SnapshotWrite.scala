@@ -15,7 +15,7 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.sources.SnapshotTable
+import graft.sources.{SnapshotLog, SnapshotTable}
 import graft.sources.SnapshotTable.FileEntry
 
 /** The V2 WRITE path: `df.write.format("graft_snapshot")
@@ -402,7 +402,7 @@ final class SnapshotStreamingWrite(dir: String, schema: StructType,
       SnapshotWriteSupport.enforceConstraints(dir, entries, physSchema, schema)
       mergeKey match {
       case None =>
-        SnapshotTable.commitAdded(spark, dir, epochTag(epochId), entries,
+        SnapshotLog.commit(spark, dir, epochTag(epochId), entries,
           carry = true, schemaJson = Some(schema.json))
       case Some(k) =>
         // streaming UPSERT: the epoch's staged files are the merge's
@@ -505,7 +505,7 @@ final class SnapshotBatchWrite(dir: String, schema: StructType,
             SnapshotTable.replaceWhere(SparkSession.active, dir, entries,
               cond, schema.json, validate = replaceWhereValidate)
           case (None, None) =>
-            SnapshotTable.commitAdded(SparkSession.active, dir,
+            SnapshotLog.commit(SparkSession.active, dir,
               if (overwrite) "overwrite" else "append", entries,
               carry = !overwrite, schemaJson = Some(schema.json))
         }

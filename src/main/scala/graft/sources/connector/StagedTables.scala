@@ -11,7 +11,7 @@ import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.sources.SnapshotTable
+import graft.sources.{SnapshotLog, SnapshotTable}
 import graft.sources.SnapshotTable.FileEntry
 
 private[connector] object StageMode extends Enumeration {
@@ -127,7 +127,7 @@ private[connector] final class GraftStagedTable(
     // (stale-props window is benign: per-file bucket ids gate every
     // bucketing claim, so a reader racing the swap just plans a
     // shuffle it could have elided).
-    try SnapshotTable.commitAdded(spark, dir,
+    try SnapshotLog.commit(spark, dir,
       if (exists) "replace" else "ctas", pending, carry = false,
       schemaJson = Some(declared.json),
       expectLatest = Some(observed.getOrElse(-1L)))

@@ -101,7 +101,7 @@ class ConnectorSpec extends SparkTestBase {
     fs.mkdirs(new org.apache.hadoop.fs.Path(dir, "data"))
     assert(fs.rename(part, new org.apache.hadoop.fs.Path(dir, rel)))
     fs.delete(tmp, true)
-    SnapshotTable.commitAdded(spark, dir, "append",
+    graft.sources.SnapshotLog.commit(spark, dir, "append",
       Seq(SnapshotTable.FileEntry(rel, df.count(), Map.empty, Map.empty,
         None, None, None, None)), carry = true,
       schemaJson = Some(df.schema.json))
@@ -2603,6 +2603,46 @@ class ConnectorSpec extends SparkTestBase {
         maxDeletedRatio = 0.99, keepVersions = 100, vacuumMinAgeMs = 0L))
     assert(rep2.rebucketedFiles == 0)
     assert(SnapshotTable.latestVersion(spark, dir).get == v)
+  }
+
+  test("MERGE on a renamed column keeps the recorded nullability and mapping") {
+    import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
+    import SnapshotTable.{MergeInsertClause, MergeRowAction, MergeWhenClause}
+    val root = Files.createTempDirectory("graft-rnmg").toString
+    spark.conf.set("spark.sql.catalog.graftrnmg",
+      classOf[graft.sources.connector.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graftrnmg.root", root)
+    val dir = s"$root/t"
+    SnapshotTable.write(spark,
+      spark.range(0, 100).select($"id".as("k"), ($"id" * 2).as("v")).coalesce(2),
+      dir, "overwrite", Seq("k"))
+    spark.sql("ALTER TABLE graftrnmg.t RENAME COLUMN v TO w")
+    // the schema as the newest commit entry records it, nullability included
+    def recorded: StructType = {
+      val v = SnapshotTable.latestVersion(spark, dir).get
+      val entry = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+        Files.readAllBytes(java.nio.file.Paths.get(dir, "_log", f"v$v%010d.json")))
+      DataType.fromJson(entry.get("schema").toString).asInstanceOf[StructType]
+    }
+    val before = recorded
+    assert(before("w").metadata.getString(SnapshotTable.PhysicalNameKey) == "v")
+    def merge(src: Seq[(Long, Long)], extra: Seq[StructField] = Nil): Long =
+      SnapshotTable.mergeClauses(spark, dir, src.toDF("sk", "sw"), "k", $"sk",
+        matched = Seq(MergeWhenClause(None, MergeRowAction.Update(Seq("w" -> $"sw")))),
+        notMatched = Seq(MergeInsertClause(None,
+          Seq("k" -> $"sk", "w" -> $"sw") ++ extra.map(f => f.name -> lit("new")))),
+        extraColumns = extra)
+    merge(Seq((5L, 500L), (1000L, 7L))) // an update and an insert
+    assert(recorded == before)
+    merge(Seq((20000L, 1L))) // outside every file's key range: insert only
+    assert(recorded == before)
+    merge(Seq((6L, 600L)), extra = Seq(StructField("x", StringType)))
+    assert(recorded == StructType(before.fields :+ StructField("x", StringType)))
+    val rows = SnapshotTable.scan(spark, dir).select($"k", $"w")
+      .as[(Long, Long)].collect().toMap
+    assert(rows.size == 102)
+    assert(rows(5L) == 500L && rows(6L) == 600L && rows(1000L) == 7L &&
+      rows(20000L) == 1L && rows(7L) == 14L)
   }
 
   test("rename-mapped table: overwrite drops the mapping without nulling data") {

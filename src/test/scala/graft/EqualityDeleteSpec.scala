@@ -857,7 +857,7 @@ class EqualityDeleteSpec extends SparkTestBase {
     val fe = manifest(dir).files.head
     val refs = Seq(writeHalfCapSidecar(dir, "lo-eq.parquet", 0L),
       writeHalfCapSidecar(dir, "hi-eq.parquet", halfCap.toLong))
-    SnapshotTable.commitAdded(spark, dir, "delete-eq",
+    graft.sources.SnapshotLog.commit(spark, dir, "delete-eq",
       Seq(fe.copy(eqDv = refs)), carry = false,
       schemaJson = Some(SnapshotTable.tableSchema(spark, dir, v).json))
     val ex = intercept[Exception](
@@ -990,4 +990,65 @@ class EqualityDeleteSpec extends SparkTestBase {
     assert(SnapshotTable.scan(spark, dir).as[(Long, Long)].collect().sorted
       .sameElements(before))
   }
+
+  test("a refused eq-CDC epoch leaves the data directory as it found it") {
+    // the key batch matches live rows (so the refusal comes after the
+    // key sidecar is written) and the append's l_quantity is a string
+    // on a bigint table, which only the commit's schema union refuses
+    val dir = freshDir()
+    SnapshotTable.write(spark,
+      spark.range(0, 1000).select($"id".as("l_orderkey"),
+        ($"id" % 50).as("l_quantity")).repartition(4),
+      dir, "overwrite", Seq("l_orderkey"))
+    val before = dataFiles(dir).sorted
+    val ex = intercept[IllegalArgumentException] {
+      SnapshotTable.deleteByKeysWithAppend(spark, dir, Seq("l_orderkey"),
+        spark.range(0, 10).toDF("l_orderkey"),
+        spark.range(0, 10).select($"id".as("l_orderkey"),
+          $"id".cast("string").as("l_quantity")))
+    }
+    assert(ex.getMessage.contains("l_quantity"), ex.getMessage)
+    assert(dataFiles(dir).sorted == before)
+    assert(SnapshotTable.latestVersion(spark, dir).contains(1L))
+    assert(SnapshotTable.scan(spark, dir).count() == 1000L)
+  }
+
+  test("an eq-CDC epoch that loses a commit conflict re-stages its append and publishes it") {
+    import java.util.concurrent.TimeUnit.SECONDS
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val dir = freshDir()
+    SnapshotTable.write(spark,
+      spark.range(0, 1000).select($"id".as("k"), $"id".as("v")).coalesce(1),
+      dir, "overwrite", Seq("k"))
+    // the epoch's first key evaluation waits until a concurrent commit
+    // has changed the one file its keys attach to
+    val gate = udf((k: Long) => { EqualityDeleteSpec.gate(); k })
+    val epoch = Future(SnapshotTable.deleteByKeysWithAppend(spark, dir, Seq("k"),
+      spark.range(0, 10).select(gate($"id").as("k")),
+      spark.range(5000, 5010).select($"id".as("k"), $"id".as("v"))))(ExecutionContext.global)
+    assert(EqualityDeleteSpec.reached.await(60, SECONDS), "the epoch never evaluated its keys")
+    assert(SnapshotTable.deleteVectors(spark, dir, $"k" === 500L) == 2L)
+    EqualityDeleteSpec.go.countDown()
+    assert(Await.result(epoch, 2.minutes) == 3L)
+    val live = SnapshotTable.scan(spark, dir).select($"k").as[Long].collect().toSet
+    assert(live == ((10L until 1000L).toSet - 500L) ++ (5000L until 5010L))
+    // the lost attempt's key sidecar and staged append are gone: data/
+    // holds exactly what the three versions reference
+    val referenced = (1L to 3L).flatMap(v => SnapshotTable.readManifest(spark, dir, v)
+      .files.flatMap(fe => fe.path +: (fe.dv.map(_.path).toSeq ++ fe.eqDv))).toSet
+    assert(dataFiles(dir).map(n => s"data/$n").toSet == referenced)
+  }
+}
+
+object EqualityDeleteSpec {
+  /** A one-shot hold on the first call, released by the test thread. */
+  val reached = new java.util.concurrent.CountDownLatch(1)
+  val go = new java.util.concurrent.CountDownLatch(1)
+  private val first = new java.util.concurrent.atomic.AtomicBoolean(true)
+  def gate(): Unit =
+    if (first.getAndSet(false)) {
+      reached.countDown()
+      go.await(60, java.util.concurrent.TimeUnit.SECONDS)
+    }
 }

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.sources.SnapshotTable
+import graft.sources.{SnapshotLog, SnapshotTable}
 
 /** The transactional snapshot table (SURVEY §2.1 S5-S8 "a table
   * format gives this for free", made concrete): commit atomicity
@@ -564,13 +564,13 @@ class SnapshotSpec extends SparkTestBase {
       override def getScheme: String = "s3a" // not in the whitelist
     }
     f.initialize(new java.net.URI("file:///"), spark.sparkContext.hadoopConfiguration)
-    val m = SnapshotTable.getClass.getDeclaredMethods
+    val m = SnapshotLog.getClass.getDeclaredMethods
       .find(_.getName.endsWith("tryPublish")).get
     m.setAccessible(true)
-    val entry = SnapshotTable.LogEntry(1L, "t", 0L, "full", Nil, Nil)
+    val entry = SnapshotLog.LogEntry(1L, "t", 0L, "full", Nil, Nil)
     val ld = new org.apache.hadoop.fs.Path(freshDir())
     val ex = intercept[java.lang.reflect.InvocationTargetException] {
-      m.invoke(SnapshotTable, f, ld, entry)
+      m.invoke(SnapshotLog, f, ld, entry)
     }
     assert(ex.getCause.isInstanceOf[UnsupportedOperationException],
       s"expected UnsupportedOperationException, got ${ex.getCause}")
@@ -597,7 +597,7 @@ class SnapshotSpec extends SparkTestBase {
         dir, "append", Seq("id"))
     }
     (2 to 13).foreach { v =>
-      val kind = if (v % SnapshotTable.CheckpointInterval == 0) "full" else "delta"
+      val kind = if (v % SnapshotLog.CheckpointInterval == 0) "full" else "delta"
       assert(logJson(dir, v).contains(s""""kind":"$kind""""),
         s"version $v should be $kind")
     }
